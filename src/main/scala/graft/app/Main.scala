@@ -22,7 +22,9 @@ import graft.tables.Tables
  * Flow (new/update paths, omnichannel_to_bq.py:233-304): fetch -> normalize
  * -> sort -> optional preview -> abort-on-empty -> overwrite-load | staged
  * upsert (staging table -> merge -> drop staging, with drop in a finally so
- * a failed merge still cleans up — reference :189-191).
+ * a failed merge still cleans up — reference :189-191). A REST fetch lands
+ * its pages once ([[RestIngest.readJson]]); every later step reads that
+ * snapshot, so each page is requested once per run.
  */
 object Main {
 

@@ -2677,6 +2677,9 @@ object Similarity {
                          maxBucketLoad: Option[Int] = None): DataFrame = {
     require(numTables * numPlanes <= 64,
       "numTables * numPlanes must fit a packed 64-bit signature")
+    // each table's bucket is an INT slice of the signature
+    require(numPlanes >= 1 && numPlanes <= 31,
+      s"numPlanes must be in [1, 31], got $numPlanes")
     require(maxBucketSize.isEmpty || maxBucketLoad.isEmpty,
       "pick one of maxBucketSize (absolute) / maxBucketLoad (relative)")
     // All plane-sign bits packed into ONE BIGINT by the native

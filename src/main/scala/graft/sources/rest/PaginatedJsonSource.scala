@@ -1,5 +1,7 @@
 package graft.sources.rest
 
+import java.net.URLEncoder
+import java.nio.charset.StandardCharsets
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -43,9 +45,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    reader, so the pushdown is exact even against a server (or file
  *    fixture) that ignores the query parameters.
  *
- * URL template slots: `{page}`, `{count}`, `{since}`, `{to}`. `file:` URLs
- * are supported for offline tests; a missing page file reads as an empty
- * page (the filesystem stand-in for the API's empty-array response).
+ * URL template slots: `{page}`, `{count}`, `{since}`, `{to}` (the last two
+ * URL-encoded, as query values). `file:` URLs are supported for offline
+ * tests; a missing page file reads as an empty page (the filesystem
+ * stand-in for the API's empty-array response).
  *
  * Options: `url` (required), `objKey` (default "deals"), `count` (500),
  * `maxRetries` (10), `retryDelayMs` (0), `numPartitions` (4),
@@ -151,11 +154,16 @@ private[rest] case class PageSpec(url: String, objKey: String, count: Int,
                                   timeoutMs: Int, numPartitions: Int,
                                   tsField: Option[String], since: Option[String],
                                   to: Option[String]) extends Serializable {
+  /** The bounds are query values: encoded, since the canonical
+   * `yyyy-MM-dd HH:mm:ss` form carries a space no URL may hold. */
   def pageUrl(page: Long): String = url
     .replace("{page}", page.toString)
     .replace("{count}", count.toString)
-    .replace("{since}", since.getOrElse(""))
-    .replace("{to}", to.getOrElse(""))
+    .replace("{since}", encoded(since))
+    .replace("{to}", encoded(to))
+
+  private def encoded(v: Option[String]): String =
+    v.fold("")(URLEncoder.encode(_, StandardCharsets.UTF_8))
 }
 
 private[rest] class PaginatedJsonScan(tableSchema: StructType, spec: PageSpec)

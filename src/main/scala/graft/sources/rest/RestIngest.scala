@@ -11,6 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * (reference: omnichannel_to_bq.py:48,61; SURVEY.md §2.1-S4). Ragged pages
  * (different key sets per page) land as one wide schema with nulls, which
  * is exactly the reference behavior.
+ *
+ * Fetch once: `readJson` lands the raw `value` rows in one eager local
+ * checkpoint before inference, so every page is requested once — the
+ * reference's single `all_objs` accumulation (omnichannel_to_bq.py:33-61).
+ * Schema inference and every later action on the returned frame (empty
+ * check, sort sampling, preview, writes) read that snapshot, never the
+ * API, so the schema and the rows cannot come from different reads of a
+ * changing source.
  */
 object RestIngest {
 
@@ -20,6 +28,7 @@ object RestIngest {
 
   def readJson(spark: SparkSession, options: Map[String, String]): DataFrame = {
     import spark.implicits._
-    spark.read.json(read(spark, options).as[String])
+    val landed = read(spark, options).localCheckpoint(eager = true)
+    spark.read.json(landed.as[String])
   }
 }

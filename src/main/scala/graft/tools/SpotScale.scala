@@ -30,6 +30,7 @@ object SpotScale {
   private val Offset = 10000000L
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3, "usage: SpotScale <srcDir> <dstDir> <factor>")
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, "factor >= 1")

@@ -3,6 +3,7 @@ package graft.app
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.sources.rest.PageServer
 import graft.tables.Tables
 
 /** End-to-end CLI pipeline runs (SURVEY.md §7.1 minimum slice) over the
@@ -107,6 +108,56 @@ class MainSpec extends SparkSpec {
       Seq(Seq(1L, "a"), Seq(2L, "B"), Seq(3L, "c")))
     assert(!spark.catalog.tableExists("app_up_stg")) // staging cleaned up
     Tables.dropTable(spark, "app_up")
+  }
+
+  test("REST load and upsert request every page once") {
+    def deal(i: Int): String = f"""{"id": $i%d, "v": "v$i%d", """ +
+      f""""created_at": "2024-01-${1 + i % 28}%02d 00:00:00"}"""
+    // 1,010 deals: two full pages of 500 and a short third page
+    val server = new PageServer((page, _) =>
+      ((page - 1) * 500 until math.min(page * 500, 1010)).map(deal))
+    Seq("app_once", "app_once_staging").foreach(Tables.dropTable(spark, _))
+    try {
+      assert(Main.run(spark, Main.parseArgs(Seq("load",
+        "--input", server.url(), "--table", "app_once"))) == 1010L)
+      assert(server.distinctPages >= 3)
+      assert(server.requests == server.distinctPages)
+      server.reset()
+      // upsert of a time range, with the bounds in the URL as well
+      assert(Main.run(spark, Main.parseArgs(Seq("upsert",
+        "--input", server.url("&since={since}&to={to}"),
+        "--table", "app_once", "--key", "id",
+        "--since", "2024-01-10", "--to", "2024-01-20"))) == 1010L)
+      assert(server.distinctPages >= 3)
+      assert(server.requests == server.distinctPages)
+      assert(server.served.forall(
+        _.get("since").contains("2024-01-10 00:00:00")))
+      assert(!spark.catalog.tableExists("app_once_staging"))
+    } finally {
+      server.close()
+      Tables.dropTable(spark, "app_once")
+    }
+  }
+
+  test("a page that changes between reads cannot split schema from rows") {
+    // page 1 answers with column a the first time, column b after that:
+    // schema and rows must both come from the one landed read
+    val server = new PageServer((page, hit) =>
+      if (page != 1) Nil
+      else if (hit == 1)
+        Seq("""{"id": 1, "a": "x", "created_at": "2024-01-01 00:00:00"}""")
+      else Seq("""{"id": 1, "b": "y", "created_at": "2024-01-01 00:00:00"}"""))
+    Tables.dropTable(spark, "app_snap")
+    try {
+      assert(Main.run(spark, Main.Config(action = "load",
+        input = server.url(), table = "app_snap")) == 1L)
+      val out = spark.table("app_snap")
+      assert(!out.columns.contains("b"), out.columns.toSeq)
+      assert(rows(out.select("a")) == Seq(Seq("x")))
+    } finally {
+      server.close()
+      Tables.dropTable(spark, "app_snap")
+    }
   }
 
   test("upsert path recovers an interrupted swap before merging") {

@@ -252,6 +252,19 @@ class SimilaritySpec extends SparkSpec {
     assert(lsh.nonEmpty) // (1,2) at cos 0.8 should survive 8 tables
   }
 
+  test("hyperplaneLshPairs refuses plane counts an INT bucket cannot hold") {
+    // one table keeps each case inside the 64-bit signature budget, so
+    // only the per-table bound can refuse it: 32 planes overflow the INT
+    // bucket, and at 64 the bucket mask (1L << 64) - 1 is 0
+    for (planes <- Seq(0, 32, 64)) {
+      val e = intercept[IllegalArgumentException] {
+        Similarity.hyperplaneLshPairs(emb, numPlanes = planes, numTables = 1,
+          dim = 2)
+      }
+      assert(e.getMessage.contains("numPlanes must be in [1, 31]"))
+    }
+  }
+
   test("annRecall counts hits and divides only when denominators are > 0") {
     import spark.implicits._
     val exact = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L))

@@ -77,6 +77,29 @@ class RestSourceSpec extends SparkSpec {
     assert(rows(df.select("id")).flatten == Seq(2L))
   }
 
+  test("since/to reach the API URL-encoded and decode to the bounds") {
+    val spec = PageSpec(url = "http://h/d?page={page}&since={since}&to={to}",
+      objKey = "deals", count = 500, maxRetries = 1, retryDelayMs = 0,
+      timeoutMs = 1000, numPartitions = 1, tsField = None,
+      since = Some("2024-01-05 00:00:00"), to = None)
+    assert(spec.pageUrl(3) ==
+      "http://h/d?page=3&since=2024-01-05+00%3A00%3A00&to=")
+    val server = new PageServer((page, _) =>
+      if (page == 1) Seq(obj(1, "2024-01-10 00:00:00")) else Nil)
+    try {
+      val df = RestIngest.readJson(spark, Map(
+        "url" -> server.url("&since={since}&to={to}"), "maxRetries" -> "1",
+        "tsField" -> "created_at", "since" -> "2024-01-05 00:00:00",
+        "to" -> "2024-01-15 00:00:00"))
+      assert(rows(df.select("id")).flatten == Seq(1L))
+      assert(server.served.nonEmpty)
+      server.served.foreach { q =>
+        assert(q.get("since").contains("2024-01-05 00:00:00") &&
+          q.get("to").contains("2024-01-15 00:00:00"), q)
+      }
+    } finally server.close()
+  }
+
   test("retrying: succeeds after transient failures, throws on exhaustion") {
     val calls = new AtomicInteger(0)
     val v = PaginatedJsonSource.retrying(5, 0) { () =>
