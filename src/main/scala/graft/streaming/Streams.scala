@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -251,7 +252,6 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          import org.apache.hadoop.fs.Path
           val s = batch.sparkSession
           val mink = graft.functions.MinKLongs.udaf(k)
           val bs = batch
@@ -260,12 +260,7 @@ object Streams {
             .groupBy("grp").agg(mink(col("h")).as("sk"))
           val root = new Path(sketchPath)
           val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val prev =
-            (if (!fs.exists(root)) Seq.empty[Long]
-             else fs.listStatus(root).toSeq.map(_.getPath.getName)
-               .filter(_.startsWith("batch="))
-               .map(_.stripPrefix("batch=").toLong))
-              .filter(_ < batchId)
+          val prev = batchIds(fs, root).filter(_ < batchId)
           val merged = prev.sorted.lastOption match {
             case None => bs
             case Some(p) =>
@@ -350,17 +345,11 @@ object Streams {
                                         bandsPath: String, numHashes: Int,
                                         bands: Int, idCol: String,
                                         currentBatch: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val idx = new Path(indexPath)
     val bnd = new Path(bandsPath)
     val fs = idx.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def batchIds(p: Path): Set[Long] =
-      if (!fs.exists(p)) Set.empty[Long]
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong).toSet
-    val sigBatches = batchIds(idx)
-    val bandBatches = batchIds(bnd)
+    val sigBatches = batchIds(fs, idx).toSet
+    val bandBatches = batchIds(fs, bnd).toSet
     (sigBatches - currentBatch -- bandBatches).foreach { b =>
       Dedup.minhashBandRows(s.read.parquet(s"$indexPath/batch=$b"),
         numHashes, bands, idCol)
@@ -601,7 +590,6 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          import org.apache.hadoop.fs.Path
           val s = batch.sparkSession
           ensureIndexFormat(s, indexPath, s"minhash-v1:n=$n:h=$numHashes",
             "clustersSink")
@@ -622,12 +610,7 @@ object Streams {
           // — replay-safe) as star edges, plus this batch's pair edges
           val root = new Path(labelsPath)
           val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val prevIds =
-            (if (!fs.exists(root)) Seq.empty[Long]
-             else fs.listStatus(root).toSeq.map(_.getPath.getName)
-               .filter(_.startsWith("batch="))
-               .map(_.stripPrefix("batch=").toLong))
-              .filter(_ < batchId)
+          val prevIds = batchIds(fs, root).filter(_ < batchId)
           val prev = prevIds.sorted.lastOption match {
             case None => s.emptyDataFrame
               .select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
@@ -1046,12 +1029,12 @@ object Streams {
    * (distinct-reduced indexes are immune). So compaction records the
    * max folded batch id in a `_compacted_through` marker (written into
    * the new tree BEFORE the atomic swap, so marker and fold appear
-   * together), and [[anomalySink]] consults it via
-   * [[compactedThrough]] to skip re-contributing batches ≤ the marker.
+   * together), and the fold sinks' guard ([[foldSink]]) consults it
+   * via [[compactedThrough]] to skip re-contributing batches ≤ the
+   * marker.
    */
   def compactIndex(spark: SparkSession, indexPath: String)
                   (reduce: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val main = new Path(indexPath)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(indexPath + "__compact_tmp")
@@ -1074,12 +1057,9 @@ object Streams {
     val compacted = reduce(all.drop("batch"))
     compacted.write.mode("overwrite")
       .parquet(new Path(tmp, "batch=-1").toString)
-    // Carry the previous watermark forward: batch=-1 rows from an earlier
-    // compaction fold straight through, so the marker is monotone.
-    val prevMark = compactedThrough(spark, indexPath)
-    val mark = math.max(maxBatch, prevMark)
-    val out = fs.create(new Path(tmp, MarkerFile), true)
-    try out.write(mark.toString.getBytes("UTF-8")) finally out.close()
+    // batch=-1 rows from an earlier compaction fold straight through;
+    // the stamp carries the earlier watermark forward with them
+    stampCompactedThrough(spark, indexPath, tmp, maxBatch)
     // the swap replaces the WHOLE tree: carry the format stamp into the
     // new tree or a compaction would strip it and the next sink open
     // would refuse a perfectly-current index as unstamped
@@ -1100,9 +1080,9 @@ object Streams {
    * Generic compaction for the COUNTER/metadata-fold sinks
    * ([[dsirSink]], [[privacyAuditSink]], [[trendSink]], [[driftSink]] /
    * [[driftByGroupSink]] / [[mixDriftSink]] counts, [[latenessSink]],
-   * [[constraintSink]], [[cardSink]]'s langs leg): without it, every
-   * micro-batch adds a `batch=<id>` dir FOREVER and the per-batch fold
-   * reads O(n_batches) dirs — O(n²) cumulative over a sink's lifetime
+   * [[constraintSink]], [[encodingAuditSink]], [[cardSink]]'s langs
+   * leg): without it, every micro-batch adds a `batch=<id>` dir
+   * FOREVER and the per-batch fold reads O(n_batches) dirs — O(n²) cumulative over a sink's lifetime
    * (a 10 s trigger for a month is ~260k dirs). This folds the whole
    * tree into one `batch=-1` partition via group-by-key partial sums
    * (plus optional max columns for high-watermark fields like
@@ -1110,9 +1090,9 @@ object Streams {
    * marker, and prunes — [[compactIndex]]'s swap protocol verbatim, so
    * crash recovery is "re-run the fold". The sinks keep working
    * unchanged: their folds re-aggregate over `batch=-1` plus the
-   * batches since, and their `compactedThrough` replay guard refuses
-   * any batch id at or below the marker (the summing-index
-   * double-count hazard documented on [[compactIndex]]).
+   * batches since, and [[foldSink]]'s replay guard refuses any batch
+   * id at or below the marker (the summing-index double-count hazard
+   * documented on [[compactIndex]]).
    *
    * Run QUIESCED over a fully-committed checkpoint (stop the stream,
    * processAllAvailable first), like every compaction here.
@@ -1291,15 +1271,11 @@ object Streams {
    */
   def compactSpanIndex(spark: SparkSession, indexPath: String,
                        baseTable: String, numBuckets: Int = 32): Unit = {
-    import org.apache.hadoop.fs.Path
     graft.tables.Tables.recoverSwap(spark, baseTable + "_winhash")
     val main = new Path(indexPath)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(main)) return
-    val batchIds = fs.listStatus(main).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-    if (batchIds.isEmpty) return
+    val ids = batchIds(fs, main)
+    if (ids.isEmpty) return
     val pathH = spark.read.option("basePath", indexPath)
       .parquet(indexPath).select("h", "h2")
     val allH =
@@ -1316,10 +1292,8 @@ object Streams {
       numBuckets)
     graft.tables.Tables.commitSwaps(spark, Seq(baseTable + "_winhash"))
     fs.delete(stage, true)
-    val mark = math.max(batchIds.max, compactedThrough(spark, indexPath))
-    val out = fs.create(new Path(main, MarkerFile), true)
-    try out.write(mark.toString.getBytes("UTF-8")) finally out.close()
-    batchIds.foreach(b => fs.delete(new Path(main, s"batch=$b"), true))
+    stampCompactedThrough(spark, indexPath, main, ids.max)
+    ids.foreach(b => fs.delete(new Path(main, s"batch=$b"), true))
   }
 
   /**
@@ -1397,7 +1371,6 @@ object Streams {
                                        indexPath: String, wins: DataFrame,
                                        bucketedBase: Option[String])
       : DataFrame = {
-    import org.apache.hadoop.fs.Path
     // The audit is only meaningful against a current-format index: an
     // incompatible tree's composites never match the recomputed hashes,
     // so the left_semi would drop everything and an EMPTY result would
@@ -1405,8 +1378,7 @@ object Streams {
     ensureIndexFormat(spark, indexPath, SpanIndexFormat, "verifySpanIndex")
     val main = new Path(indexPath)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(main) && fs.listStatus(main)
-      .exists(_.getPath.getName.startsWith("batch="))
+    val hasBatches = batchIds(fs, main).nonEmpty
     val emptyH = spark.range(0)
       .select(col("id").as("h"), col("id").as("h2"))
     val pathH =
@@ -1435,7 +1407,6 @@ object Streams {
                                    baseTable: String, idCol: String,
                                    pruneBandsTree: Boolean)
                                   (writeIndex: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
     // self-heal first: a crash in a previous fold's staged swap leaves
     // recoverSwap-able states on either bulk table; running recovery at
     // entry makes "crash -> re-run the fold" the complete procedure
@@ -1444,11 +1415,8 @@ object Streams {
     graft.tables.Tables.recoverSwap(spark, baseTable + "_sigs")
     val main = new Path(indexPath)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(main)) return
-    val batchIds = fs.listStatus(main).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-    if (batchIds.isEmpty) return
+    val ids = batchIds(fs, main)
+    if (ids.isEmpty) return
     val pathSigs = spark.read.option("basePath", indexPath)
       .parquet(indexPath).drop("batch").select(col(idCol), col("sig"))
     val allSigs =
@@ -1461,11 +1429,9 @@ object Streams {
     allSigs.distinct().write.parquet(stage.toString)
     writeIndex(spark.read.parquet(stage.toString))
     fs.delete(stage, true)
-    val mark = math.max(batchIds.max, compactedThrough(spark, indexPath))
-    val out = fs.create(new Path(main, MarkerFile), true)
-    try out.write(mark.toString.getBytes("UTF-8")) finally out.close()
+    stampCompactedThrough(spark, indexPath, main, ids.max)
     val bnd = new Path(indexPath + "__bands")
-    batchIds.foreach { b =>
+    ids.foreach { b =>
       fs.delete(new Path(main, s"batch=$b"), true)
       if (pruneBandsTree) fs.delete(new Path(bnd, s"batch=$b"), true)
     }
@@ -1493,7 +1459,6 @@ object Streams {
 
   /** The persisted format stamp of an index tree, if any. */
   def readIndexFormat(spark: SparkSession, indexPath: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(indexPath, FormatFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -1514,7 +1479,6 @@ object Streams {
    */
   def stampIndexFormat(spark: SparkSession, indexPath: String,
                        format: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(indexPath, FormatFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true) // creates parent dirs on a fresh tree
@@ -1532,7 +1496,6 @@ object Streams {
                                            indexPath: String,
                                            expected: String,
                                            opName: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val main = new Path(indexPath)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
     readIndexFormat(spark, indexPath) match {
@@ -1545,9 +1508,7 @@ object Streams {
           "replay the stream through the sink, then audit the residual " +
           "with verifySpanIndex/verifyChunkIndex.")
       case None =>
-        val hasData = fs.exists(main) && fs.listStatus(main)
-          .exists(_.getPath.getName.startsWith("batch="))
-        if (hasData) throw new IllegalStateException(
+        if (batchIds(fs, main).nonEmpty) throw new IllegalStateException(
           s"$opName: index at $indexPath carries batch data but no " +
             s"'$FormatFile' marker — a pre-versioning tree of unknown " +
             "hash format. An old-format index never double-matches under " +
@@ -1568,7 +1529,6 @@ object Streams {
    * to summing indexes on replay.
    */
   def compactedThrough(spark: SparkSession, indexPath: String): Long = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(indexPath, MarkerFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) -1L
@@ -1580,6 +1540,75 @@ object Streams {
     }
   }
 
+  /** Write the [[compactedThrough]] marker into `dir` (the tree about to
+   * become `indexPath`, or `indexPath` itself): the highest folded batch
+   * id, never below the watermark `indexPath` already carries. */
+  private def stampCompactedThrough(spark: SparkSession, indexPath: String,
+                                    dir: Path, folded: Long): Unit = {
+    val mark = math.max(folded, compactedThrough(spark, indexPath))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(dir, MarkerFile), true)
+    try out.write(mark.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Ids of the `batch=<id>` partition dirs directly under `root`; empty
+   * when `root` does not exist. The one reader of that layout. */
+  private def batchIds(fs: FileSystem, root: Path): Seq[Long] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
+
+  /**
+   * The exactly-once protocol every fold sink shares, written once.
+   * Per micro-batch: land `partial(batch)` under
+   * `partialsPath/batch=<id>`, read the whole partials tree back (with
+   * its `batch` partition column) and write `fold(tree, id)` to
+   * `outPath/batch=<id>`.
+   *
+   *   - Idempotency key: both writes OVERWRITE the `batch=<id>` dir, so
+   *     a micro-batch re-run under foreachBatch's at-least-once contract
+   *     rewrites its own output instead of adding to it.
+   *   - Watermark guard ([[isNewBatch]]): a compaction
+   *     ([[compactIndex]], [[compactCounterPartials]],
+   *     [[compactBudgetSelectPartials]]) folds the tree into `batch=-1`
+   *     and records the highest folded id in the `_compacted_through`
+   *     marker. That destroys the key for every folded id: replaying
+   *     one would land a fresh `batch=<id>` beside rows already inside
+   *     `batch=-1`, and a summing tree would count them twice (a fact
+   *     tree would hold them twice). So empty batches and ids at or
+   *     below the marker are skipped.
+   *   - Single delivery: the key is the batch id, not the row. A record
+   *     the SOURCE re-delivers under a new batch id is a new
+   *     contribution, so sinks whose folds sum or rank must be fed each
+   *     record once.
+   */
+  private[streaming] def foldSink(stream: DataFrame, partialsPath: String,
+                                  outPath: String, checkpointDir: String)
+                                 (partial: DataFrame => DataFrame)
+                                 (fold: (DataFrame, Long) => DataFrame)
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (isNewBatch(batch, batchId, partialsPath)) {
+          partial(batch).write.mode("overwrite")
+            .parquet(s"$partialsPath/batch=$batchId")
+          val tree = batch.sparkSession.read
+            .option("basePath", partialsPath).parquet(partialsPath)
+          fold(tree, batchId).write.mode("overwrite")
+            .parquet(s"$outPath/batch=$batchId")
+        }
+      }
+      .start()
+
+  /** [[foldSink]]'s replay guard, shared with the sinks that keep their
+   * own foreachBatch: the batch is non-empty and its id is above the
+   * `_compacted_through` marker under `markerPath`. */
+  private def isNewBatch(batch: DataFrame, batchId: Long,
+                         markerPath: String): Boolean =
+    !batch.isEmpty && batchId > compactedThrough(batch.sparkSession, markerPath)
+
   /**
    * Streaming volume-anomaly monitor — the streaming twin of
    * [[graft.operators.Sessions.countAnomaly]] for a live ingest: each
@@ -1590,16 +1619,9 @@ object Streams {
    * day and the day's verdict is recomputed against the same baseline
    * rule as batch).
    *
-   * Exactly-once under foreachBatch's at-least-once contract: the
-   * batch's count contribution and its verdict rows both land in
-   * `batch=<id>` partitions in overwrite mode, so a replayed
-   * micro-batch rewrites itself and never double-counts (the
-   * [[nearDupSink]] index-partition protocol). Because this index SUMS
-   * (unlike the distinct-reduced signature indexes), a replay arriving
-   * after [[compactIndex]] folded its partition into `batch=-1` would
-   * double-count — so each batch first checks the
-   * [[compactedThrough]] watermark and skips batches ≤ it. Consumers
-   * aggregate `countsPath` by (day, event_type) and read verdicts as
+   * The counts index sums, so it relies on [[foldSink]]'s watermark
+   * guard after a [[compactIndex]] fold. Consumers aggregate
+   * `countsPath` by (day, event_type) and read verdicts as
    * last-batch-wins per day.
    *
    * Scale: the index holds (day, type, n) rows — days × types per
@@ -1610,31 +1632,16 @@ object Streams {
                   checkpointDir: String, baselineDays: Int = 7,
                   sigmas: Int = 3, typeCol: String = "event_type",
                   tsCol: String = "ts"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, countsPath)) {
-          val s = batch.sparkSession
-          batch
-            .groupBy(to_date(col(tsCol)).as("day"), col(typeCol))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
-          val touched = s.read.parquet(s"$countsPath/batch=$batchId")
-            .select(col("day")).distinct()
-          val totals = s.read
-            .option("basePath", countsPath).parquet(countsPath)
-            .groupBy("day", typeCol)
-            .agg(sum("n").cast("long").as("n_events"))
-          Sessions.countAnomalyFromTotals(totals, baselineDays, sigmas,
-            typeCol)
-            .join(touched, Seq("day"), "leftsemi")
-            .write.mode("overwrite").parquet(s"$anomPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, countsPath, anomPath, checkpointDir)(
+      _.groupBy(to_date(col(tsCol)).as("day"), col(typeCol))
+        .agg(count(lit(1)).as("n"))) { (tree, batchId) =>
+      val touched = tree.filter(col("batch") === batchId)
+        .select(col("day")).distinct()
+      val totals = tree.groupBy("day", typeCol)
+        .agg(sum("n").cast("long").as("n_events"))
+      Sessions.countAnomalyFromTotals(totals, baselineDays, sigmas, typeCol)
+        .join(touched, Seq("day"), "leftsemi")
+    }
 
   /**
    * Streaming distribution-drift monitor — the streaming twin of
@@ -1652,12 +1659,7 @@ object Streams {
    * [[graft.operators.Curation.ksDrift]] over the concatenated input
    * (StreamLaws asserts final-verdict equality for arbitrary splits).
    *
-   * Exactly-once under foreachBatch's at-least-once contract: counts
-   * and verdicts both land in `batch=<id>` partitions in overwrite
-   * mode, so a replayed micro-batch rewrites itself; this counts index
-   * SUMS (like [[anomalySink]]'s), so batches at or below the
-   * [[compactedThrough]] watermark are skipped after a
-   * [[compactIndex]] fold.
+   * The counts index sums; replays follow [[foldSink]].
    *
    * Scale: per batch, one batch-sized aggregate plus a
    * value-space-sized (not corpus-sized) merge against the reference
@@ -1667,25 +1669,12 @@ object Streams {
                 countsPath: String, driftPath: String,
                 checkpointDir: String,
                 valueCol: String = "value"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, countsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Curation.valueCounts(batch, valueCol)
-            .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
-          val observed = s.read
-            .option("basePath", countsPath).parquet(countsPath)
-            .groupBy("v").agg(sum("n").cast("long").as("n"))
-          graft.operators.Curation.ksDriftFromCounts(
-            s.read.parquet(refCountsPath), observed)
-            .write.mode("overwrite").parquet(s"$driftPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, countsPath, driftPath, checkpointDir)(
+      Curation.valueCounts(_, valueCol)) { (tree, _) =>
+      val observed = tree.groupBy("v").agg(sum("n").cast("long").as("n"))
+      Curation.ksDriftFromCounts(
+        tree.sparkSession.read.parquet(refCountsPath), observed)
+    }
 
   /**
    * Per-group streaming drift monitor — [[driftSink]] sliced by a group
@@ -1695,8 +1684,7 @@ object Streams {
    * reference, and one KS verdict row PER GROUP writes under
    * `driftPath/batch=<id>` — the shape that catches one upstream feed
    * going bad while the corpus-wide statistic still looks healthy.
-   * Same idempotent batch-partition protocol and [[compactedThrough]]
-   * watermark as [[driftSink]]; same null-drop contract as
+   * Replays follow [[foldSink]]; same null-drop contract as
    * [[graft.operators.Curation.valueCounts]].
    *
    * Scale: per batch, one batch-sized aggregate plus a
@@ -1709,38 +1697,24 @@ object Streams {
                        checkpointDir: String,
                        valueCol: String = "value",
                        grpCol: String = "source"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, countsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Curation
-            .valueCountsByGroup(batch, valueCol, grpCol)
-            .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
-          val observed = s.read
-            .option("basePath", countsPath).parquet(countsPath)
-            .groupBy(grpCol, "v").agg(sum("n").cast("long").as("n"))
-          graft.operators.Curation.ksDriftByGroupFromCounts(
-            s.read.parquet(refCountsPath), observed, grpCol)
-            .write.mode("overwrite").parquet(s"$driftPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, countsPath, driftPath, checkpointDir)(
+      Curation.valueCountsByGroup(_, valueCol, grpCol)) { (tree, _) =>
+      val observed = tree.groupBy(grpCol, "v")
+        .agg(sum("n").cast("long").as("n"))
+      Curation.ksDriftByGroupFromCounts(
+        tree.sparkSession.read.parquet(refCountsPath), observed, grpCol)
+    }
 
   /**
    * Streaming DSIR profile maintenance — [[graft.operators.Curation
    * .dsirWeights]]'s distribution half as a live sink: the stream
    * carries documents tagged `corpus ∈ {raw, target}`, each micro-batch
    * lands its per-corpus bucket-count partials under
-   * `partialsPath/batch=<id>` (bucket counts are plain sums —
-   * additive, replay-idempotent under the batch-partition +
-   * [[compactedThrough]] watermark protocol), and the cumulative
-   * per-bucket LLR table — recomputed from folded counts with the same
-   * micro-floored arithmetic as the batch operator, never averaged —
-   * rewrites to `llrPath/batch=<id>`. Downstream selection reads the
+   * `partialsPath/batch=<id>` (bucket counts are plain sums; replays
+   * follow [[foldSink]]), and the cumulative per-bucket LLR table —
+   * recomputed from folded counts with the same micro-floored
+   * arithmetic as the batch operator, never averaged — rewrites to
+   * `llrPath/batch=<id>`. Downstream selection reads the
    * newest LLR table and scores candidate documents with one broadcast
    * join; as the target domain's sample grows, the selection
    * distribution sharpens within a batch of landing.
@@ -1753,31 +1727,19 @@ object Streams {
                checkpointDir: String, buckets: Int = 1024,
                corpusCol: String = "corpus",
                textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          Seq("raw", "target").map { c =>
-            graft.operators.Curation.dsirBucketCounts(
-              batch.filter(col(corpusCol) === c), buckets, textCol)
-              .withColumn("corpus", lit(c))
-          }.reduce(_ unionByName _)
-            .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-          val all = s.read
-            .option("basePath", partialsPath).parquet(partialsPath)
-            .groupBy("corpus", "b").agg(sum("n").as("n"))
-          graft.operators.Curation.dsirLlrFromCounts(
-            all.filter(col("corpus") === "raw").select("b", "n"),
-            all.filter(col("corpus") === "target").select("b", "n"),
-            buckets)
-            .write.mode("overwrite").parquet(s"$llrPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, llrPath, checkpointDir) { batch =>
+      Seq("raw", "target").map { c =>
+        Curation.dsirBucketCounts(
+          batch.filter(col(corpusCol) === c), buckets, textCol)
+          .withColumn("corpus", lit(c))
+      }.reduce(_ unionByName _)
+    } { (tree, _) =>
+      val all = tree.groupBy("corpus", "b").agg(sum("n").as("n"))
+      Curation.dsirLlrFromCounts(
+        all.filter(col("corpus") === "raw").select("b", "n"),
+        all.filter(col("corpus") === "target").select("b", "n"),
+        buckets)
+    }
 
   /**
    * Streaming ranking-quality monitor — [[graft.operators.Similarity
@@ -1794,12 +1756,10 @@ object Streams {
    *
    * State is top-k rows per (query, side) — OUTPUT-bounded, tiny next
    * to the corpora that produced them, the same order as the frames
-   * [[graft.operators.Similarity.rankingEval]] already joins. Same
-   * idempotent batch-partition + [[compactedThrough]] watermark
-   * protocol as every fold sink here; compact the tree on cadence with
+   * [[graft.operators.Similarity.rankingEval]] already joins. Replays
+   * follow [[foldSink]]; compact the tree on cadence with
    * `compactIndex(spark, partialsPath)(identity)` (rows are facts, not
-   * sums — the fold is small-file hygiene, and the watermark guard
-   * makes a replayed folded batch refuse rather than double its rows).
+   * sums — the fold is small-file hygiene).
    *
    * Scale: per batch, one tree fold of (k × queries-seen × 2) rows +
    * the batch operator's output-bounded joins — corpora are never read.
@@ -1811,28 +1771,15 @@ object Streams {
                       neighborCol: String = "neighbor_id",
                       rankCol: String = "rank"): StreamingQuery = {
     require(k >= 1, s"k must be >= 1, got $k")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          batch.select(col(sideCol), col(queryCol), col(neighborCol),
-              col(rankCol).cast("long").as(rankCol))
-            .write.mode("overwrite")
-            .parquet(s"$partialsPath/batch=$batchId")
-          val all = s.read.option("basePath", partialsPath)
-            .parquet(partialsPath).drop("batch")
-          graft.operators.Similarity.rankingEval(
-              all.filter(col(sideCol) === "truth").drop(sideCol),
-              all.filter(col(sideCol) === "candidate").drop(sideCol),
-              k, queryCol, neighborCol, rankCol)
-            .write.mode("overwrite").parquet(s"$evalPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, evalPath, checkpointDir)(
+      _.select(col(sideCol), col(queryCol), col(neighborCol),
+        col(rankCol).cast("long").as(rankCol))) { (tree, _) =>
+      val all = tree.drop("batch")
+      graft.operators.Similarity.rankingEval(
+        all.filter(col(sideCol) === "truth").drop(sideCol),
+        all.filter(col(sideCol) === "candidate").drop(sideCol),
+        k, queryCol, neighborCol, rankCol)
+    }
   }
 
   /**
@@ -1952,9 +1899,10 @@ object Streams {
    * .scd2Lookup]]'s streaming twin: each micro-batch of facts joins
    * the SCD2 dimension version that was valid AT EACH FACT'S OWN event
    * time (never today's attributes — the anti-leakage feature-store
-   * join), landing under `outPath/batch=<id>`. Replay-idempotent
-   * under the batch-partition + [[compactedThrough]] watermark
-   * protocol: a replayed batch rewrites its own directory.
+   * join), landing under `outPath/batch=<id>`. There is no partials
+   * tree, so the sink keeps its own foreachBatch, but a replayed batch
+   * rewrites its own directory and [[foldSink]]'s guard
+   * ([[isNewBatch]], marker under `outPath`) applies.
    *
    * The dimension is read AS OF each batch's processing — facts enrich
    * against the versions the dimension held when the batch landed,
@@ -1980,8 +1928,7 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, outPath)) {
+        if (isNewBatch(batch, batchId, outPath)) {
           val horizon = Option(
             batch.agg(min(col(factTs))).head().getTimestamp(0))
           graft.tables.Tables.scd2Lookup(batch.sparkSession, batch,
@@ -1996,79 +1943,48 @@ object Streams {
    * Streaming bounded-state uniform sample — [[graft.operators
    * .Relational.hashSample]]'s streaming twin: each micro-batch lands
    * its OWN k-smallest-hash rows under `partialsPath/batch=<id>`
-   * (k rows per batch — bounded, replay-idempotent under the
-   * batch-partition + watermark protocol), and the cumulative sample —
-   * the k smallest over all batch partials, EXACTLY the batch sample
-   * of the concatenated input by the min-k merge property — rewrites
-   * to `samplePath/batch=<id>`. The always-fresh debugging/telemetry
+   * (k rows per batch — bounded; replays follow [[foldSink]]), and the
+   * cumulative sample — the k smallest over all batch partials,
+   * EXACTLY the batch sample of the concatenated input by the min-k
+   * merge property — rewrites to `samplePath/batch=<id>`. The always-fresh debugging/telemetry
    * sample every pipeline wants, at k rows per batch of state instead
    * of a growing reservoir.
    */
   def sampleSink(stream: DataFrame, partialsPath: String,
                  samplePath: String, checkpointDir: String,
                  idCol: String = "doc_id", k: Int = 50): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Relational.hashSample(batch, idCol, k)
-            .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-          val all = s.read
-            .option("basePath", partialsPath).parquet(partialsPath)
-            .drop("batch")
-          all.orderBy(col("sample_hash"), col(idCol)).limit(k)
-            .write.mode("overwrite").parquet(s"$samplePath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, samplePath, checkpointDir)(
+      Relational.hashSample(_, idCol, k))(
+      (tree, _) => tree.drop("batch")
+        .orderBy(col("sample_hash"), col(idCol)).limit(k))
 
   /**
    * Streaming metric-TREND monitor — [[graft.operators.Relational
    * .groupedTrend]]'s streaming twin: the five moment sums are plain
    * sums, so each micro-batch lands its [[graft.operators.Relational
-   * .trendPartials]] under `partialsPath/batch=<id>` (additive,
-   * replay-idempotent under the batch-partition + watermark protocol)
-   * and the cumulative per-group OLS slope — recomputed from folded
-   * sums with the same exact DECIMAL arithmetic, never averaged across
-   * batches — rewrites to `auditPath/batch=<id>`. A metric that starts
+   * .trendPartials]] under `partialsPath/batch=<id>` (additive;
+   * replays follow [[foldSink]]) and the cumulative per-group OLS
+   * slope — recomputed from folded sums with the same exact DECIMAL
+   * arithmetic, never averaged across batches — rewrites to
+   * `auditPath/batch=<id>`. A metric that starts
    * drifting bends the cumulative slope within a batch of landing.
    */
   def trendSink(stream: DataFrame, partialsPath: String,
                 auditPath: String, checkpointDir: String,
                 grpCol: String = "event_type", xCol: String = "x_s",
                 yCol: String = "v_milli"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Relational
-            .trendPartials(batch, grpCol, xCol, yCol)
-            .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-          graft.operators.Relational.trendFromPartials(
-            s.read.option("basePath", partialsPath).parquet(partialsPath),
-            grpCol)
-            .write.mode("overwrite").parquet(s"$auditPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, auditPath, checkpointDir)(
+      Relational.trendPartials(_, grpCol, xCol, yCol))(
+      (tree, _) => Relational.trendFromPartials(tree, grpCol))
 
   /**
    * Streaming feed-freshness monitor — [[graft.operators.Sessions
    * .latenessAudit]]'s streaming twin: each micro-batch lands its
    * per-source (n, max_ts_us) partials under `partialsPath/batch=<id>`
    * (count is a sum, newest-event is a max — both associative, so the
-   * fold is exact for any batch split and replay-idempotent under the
-   * overwrite + [[compactedThrough]] watermark protocol), and the
-   * cumulative audit — lag against the corpus-wide newest — rewrites
-   * to `auditPath/batch=<id>`. A feed that stops sending shows a
+   * fold is exact for any batch split; replays follow [[foldSink]]),
+   * and the cumulative audit — lag against the corpus-wide newest —
+   * rewrites to `auditPath/batch=<id>`. A feed that stops sending shows a
    * growing lag within one batch of everyone else advancing.
    *
    * Scale: per batch, one batch-sized aggregate; the fold reads
@@ -2078,69 +1994,42 @@ object Streams {
                    auditPath: String, checkpointDir: String,
                    grpCol: String = "event_type",
                    tsCol: String = "ts"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          batch.groupBy(grpCol)
-            .agg(count(lit(1)).as("n"),
-              max(unix_micros(col(tsCol))).as("max_ts_us"))
-            .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-          val folded = s.read
-            .option("basePath", partialsPath).parquet(partialsPath)
-            .groupBy(grpCol)
-            .agg(sum("n").cast("long").as("n"),
-              max("max_ts_us").cast("long").as("max_ts_us"))
-          val top = folded.agg(max(col("max_ts_us")).as("__top"))
-          folded.crossJoin(broadcast(top))
-            .select(col(grpCol), col("n"), col("max_ts_us"),
-              (col("__top") - col("max_ts_us")).as("lag_us"))
-            .write.mode("overwrite").parquet(s"$auditPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, auditPath, checkpointDir)(
+      _.groupBy(grpCol).agg(count(lit(1)).as("n"),
+        max(unix_micros(col(tsCol))).as("max_ts_us"))) { (tree, _) =>
+      val folded = tree.groupBy(grpCol)
+        .agg(sum("n").cast("long").as("n"),
+          max("max_ts_us").cast("long").as("max_ts_us"))
+      val top = folded.agg(max(col("max_ts_us")).as("__top"))
+      folded.crossJoin(broadcast(top))
+        .select(col(grpCol), col("n"), col("max_ts_us"),
+          (col("__top") - col("max_ts_us")).as("lag_us"))
+    }
 
   /**
    * Streaming CHECK-constraint monitor — [[graft.operators.Relational
    * .constraintAudit]]'s streaming twin: per batch, the per-constraint
-   * violation counters (pure sums — additive, replay-idempotent under
-   * the batch-partition protocol) land under `partialsPath/batch=<id>`
-   * and the cumulative audit — with `violations_permille` recomputed
-   * from folded totals, never averaged across batches — rewrites to
-   * `auditPath/batch=<id>`. The bad-deploy alarm: an upstream change
+   * violation counters (pure sums; replays follow [[foldSink]]) land
+   * under `partialsPath/batch=<id>` and the cumulative audit — with
+   * `violations_permille` recomputed from folded totals, never averaged
+   * across batches — rewrites to `auditPath/batch=<id>`. The bad-deploy alarm: an upstream change
    * that starts violating an expectation moves the cumulative permille
    * within one batch.
    */
   def constraintSink(stream: DataFrame, partialsPath: String,
                      auditPath: String, checkpointDir: String,
                      constraints: Seq[(String, String)]): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Relational.constraintAudit(batch, constraints)
-            .select("constraint", "n_rows", "n_violations")
-            .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-          s.read.option("basePath", partialsPath).parquet(partialsPath)
-            .groupBy("constraint")
-            .agg(sum("n_rows").cast("long").as("n_rows"),
-              sum("n_violations").cast("long").as("n_violations"))
-            .select(col("constraint"), col("n_rows"), col("n_violations"),
-              when(col("n_rows") > 0,
-                expr("n_violations * 1000 DIV n_rows"))
-                .as("violations_permille"))
-            .write.mode("overwrite").parquet(s"$auditPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, auditPath, checkpointDir)(
+      Relational.constraintAudit(_, constraints)
+        .select("constraint", "n_rows", "n_violations")) { (tree, _) =>
+      tree.groupBy("constraint")
+        .agg(sum("n_rows").cast("long").as("n_rows"),
+          sum("n_violations").cast("long").as("n_violations"))
+        .select(col("constraint"), col("n_rows"), col("n_violations"),
+          when(col("n_rows") > 0,
+            expr("n_violations * 1000 DIV n_rows"))
+            .as("violations_permille"))
+    }
 
   /**
    * Streaming category-MIX drift monitor — [[driftSink]]'s categorical
@@ -2150,8 +2039,7 @@ object Streams {
    * against a persisted [[graft.operators.Curation.catCounts]]
    * reference, and one chi-square verdict row writes under
    * `driftPath/batch=<id>` — the language/source-mix alarm KS cannot
-   * express (no ordered domain). Same idempotent batch-partition
-   * protocol and [[compactedThrough]] watermark as [[driftSink]]; same
+   * express (no ordered domain). Replays follow [[foldSink]]; same
    * null-drop contract as [[graft.operators.Curation.catCounts]].
    *
    * Scale: per batch, one batch-sized aggregate + a category-space
@@ -2161,42 +2049,29 @@ object Streams {
                    countsPath: String, driftPath: String,
                    checkpointDir: String,
                    catCol: String = "lang"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, countsPath)) {
-          val s = batch.sparkSession
-          graft.operators.Curation.catCounts(batch, catCol)
-            .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
-          val observed = s.read
-            .option("basePath", countsPath).parquet(countsPath)
-            .groupBy("cat").agg(sum("n").cast("long").as("n"))
-          graft.operators.Curation.chi2DriftFromCounts(
-            s.read.parquet(refCountsPath), observed)
-            .write.mode("overwrite").parquet(s"$driftPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, countsPath, driftPath, checkpointDir)(
+      Curation.catCounts(_, catCol)) { (tree, _) =>
+      val observed = tree.groupBy("cat").agg(sum("n").cast("long").as("n"))
+      Curation.chi2DriftFromCounts(
+        tree.sparkSession.read.parquet(refCountsPath), observed)
+    }
 
   /**
    * Streaming materialized-rollup sink — the streaming twin of
    * [[graft.tables.Tables.writeAggTable]]/[[graft.tables.Tables
    * .refreshAggTable]]: each micro-batch lands its additive partials
-   * under `partialsPath/batch=<id>` (overwrite mode + the
-   * [[compactedThrough]] watermark make replayed batches idempotent —
-   * this IS the transactional delta consumption the batch refresh
-   * documents as caller responsibility), then the SERVED rollup table
+   * under `partialsPath/batch=<id>`, then the SERVED rollup table
    * rebuilds from the key-cardinality partial tree via the staged
    * bucketed swap, so readers always see a complete consistent
    * generation. Per-batch cost: one batch-sized aggregate + a
    * partials-sized merge — base fact rows are never rescanned. Compact
    * the partial tree on a cadence (quiesced) with
-   * [[compactIndex]]`(partialsPath)(additive groupBy-sum reduce)`; the
-   * summing replay hazard compactIndex documents is exactly what the
-   * watermark guard here closes.
+   * [[compactIndex]]`(partialsPath)(additive groupBy-sum reduce)`.
+   *
+   * Replays follow [[foldSink]] (overwrite + the [[isNewBatch]] guard)
+   * — this IS the transactional delta consumption the batch refresh
+   * documents as caller responsibility. The sink ends in a table swap,
+   * not a `batch=<id>` write, so it keeps its own foreachBatch.
    */
   def rollupSink(stream: DataFrame, table: String, partialsPath: String,
                  checkpointDir: String, keyCols: Seq[String],
@@ -2205,8 +2080,7 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
+        if (isNewBatch(batch, batchId, partialsPath)) {
           val s = batch.sparkSession
           graft.tables.Tables.aggPartials(batch, keyCols, sumCols)
             .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
@@ -2233,7 +2107,8 @@ object Streams {
    * across batches — writes to `auditPath/batch=<id>`. This is the
    * transcoding-break ALARM shape: an upstream encoding break shows up
    * as a non-ASCII/replacement-char jump in the affected source within
-   * one batch of landing. Idempotent batch-partition protocol.
+   * one batch of landing. The partials sum; replays follow
+   * [[foldSink]].
    *
    * Scale: per batch, one batch-sized narrow projection + aggregate;
    * the fold reads (sources × batches) counter rows, never text.
@@ -2242,32 +2117,20 @@ object Streams {
                         auditPath: String, checkpointDir: String,
                         srcCol: String = "source",
                         textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.operators.TextAnalysis.encodingAudit(batch, srcCol, textCol)
-            .drop("ascii_permille")
-            .write.mode("overwrite")
-            .parquet(s"$partialsPath/batch=$batchId")
-          s.read.option("basePath", partialsPath).parquet(partialsPath)
-            .groupBy(srcCol)
-            .agg(sum("n_docs").cast("long").as("n_docs"),
-              sum("n_chars").cast("long").as("n_chars"),
-              sum("non_ascii_docs").cast("long").as("non_ascii_docs"),
-              sum("non_ascii_chars").cast("long").as("non_ascii_chars"),
-              sum("replacement_chars").cast("long").as("replacement_chars"),
-              sum("control_chars").cast("long").as("control_chars"))
-            .withColumn("ascii_permille",
-              when(col("n_chars") > 0,
-                expr("(n_chars - non_ascii_chars) * 1000 DIV n_chars")))
-            .write.mode("overwrite").parquet(s"$auditPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, auditPath, checkpointDir)(
+      TextAnalysis.encodingAudit(_, srcCol, textCol)
+        .drop("ascii_permille")) { (tree, _) =>
+      tree.groupBy(srcCol)
+        .agg(sum("n_docs").cast("long").as("n_docs"),
+          sum("n_chars").cast("long").as("n_chars"),
+          sum("non_ascii_docs").cast("long").as("non_ascii_docs"),
+          sum("non_ascii_chars").cast("long").as("non_ascii_chars"),
+          sum("replacement_chars").cast("long").as("replacement_chars"),
+          sum("control_chars").cast("long").as("control_chars"))
+        .withColumn("ascii_permille",
+          when(col("n_chars") > 0,
+            expr("(n_chars - non_ascii_chars) * 1000 DIV n_chars")))
+    }
 
   /**
    * Streaming privacy gate — maintain the combined k-anonymity /
@@ -2282,8 +2145,7 @@ object Streams {
    * The verdict is the one the batch audits would emit over the
    * concatenated input for ANY batch split (StreamLaws pins it — all
    * arithmetic is the same integer/DECIMAL math, folded counts in place
-   * of grouped rows). Idempotent batch-partition protocol: a replayed
-   * batch overwrites its own partial dir, so counts never double.
+   * of grouped rows). The partials sum; replays follow [[foldSink]].
    *
    * This is the monitor a release pipeline wants: the k/l/t gate stays
    * current per micro-batch, and a breach (a quasi-identifier
@@ -2296,28 +2158,13 @@ object Streams {
                        quasiCols: Seq[String], sensitiveCol: String,
                        k: Long, l: Long, tMicro: Long): StreamingQuery = {
     require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          batch.groupBy((quasiCols :+ sensitiveCol).map(col): _*)
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite")
-            .parquet(s"$partialsPath/batch=$batchId")
-          val folded = s.read.option("basePath", partialsPath)
-            .parquet(partialsPath)
-            .groupBy((quasiCols :+ sensitiveCol).map(col): _*)
-            .agg(sum(col("n")).as("n"))
-          graft.operators.Curation.privacyAuditFromCounts(folded,
-              quasiCols, sensitiveCol, "n", k, l, tMicro)
-            .write.mode("overwrite").parquet(s"$auditPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    val classCols = (quasiCols :+ sensitiveCol).map(col)
+    foldSink(stream, partialsPath, auditPath, checkpointDir)(
+      _.groupBy(classCols: _*).agg(count(lit(1)).as("n"))) { (tree, _) =>
+      Curation.privacyAuditFromCounts(
+        tree.groupBy(classCols: _*).agg(sum(col("n")).as("n")),
+        quasiCols, sensitiveCol, "n", k, l, tMicro)
+    }
   }
 
   /**
@@ -2333,10 +2180,9 @@ object Streams {
    * one-shot [[graft.operators.Curation.budgetSelect]] over everything
    * seen (StreamLaws pins it for any batch split).
    *
-   * Idempotent batch-partition protocol (replays rewrite their own
-   * partial dir); doc ids must be unique across batches — a
-   * re-delivered id under a NEW batch id would double-count, the same
-   * single-delivery contract every metadata-fold sink here carries.
+   * Replays follow [[foldSink]], including its single-delivery
+   * contract: doc ids must be unique across batches — a re-delivered
+   * id under a NEW batch id would double-count.
    *
    * Scale: state is 3 scalars per document seen — the same order as a
    * dedup signature index; the per-batch recompute is one window pass
@@ -2346,9 +2192,9 @@ object Streams {
    * burst pays the folded metadata's serialized per-group sort EVERY
    * micro-batch — exactly the shape [[graft.operators.Curation
    * .budgetSelect]]'s `preThin` bounds — so the flag threads through
-   * (with its round-17 self-gate, leaving it on costs small batches
-   * nothing; the `preThin = plain` ScalaCheck law guarantees the
-   * sink's output is unchanged either way).
+   * (its self-gate makes leaving it on cost small batches nothing; the
+   * `preThin = plain` ScalaCheck law guarantees the sink's output is
+   * unchanged either way).
    */
   def budgetSelectSink(stream: DataFrame, partialsPath: String,
                        outPath: String, checkpointDir: String,
@@ -2358,27 +2204,10 @@ object Streams {
                        preThin: Boolean = false,
                        preThinMinRows: Long = 0L): StreamingQuery = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty &&
-            batchId > compactedThrough(batch.sparkSession, partialsPath)) {
-          val s = batch.sparkSession
-          batch.select(col(groupCol), col(idCol), col(orderCol),
-              col(costCol))
-            .write.mode("overwrite")
-            .parquet(s"$partialsPath/batch=$batchId")
-          graft.operators.Curation.budgetSelect(
-              s.read.option("basePath", partialsPath)
-                .parquet(partialsPath).drop("batch"),
-              groupCol, orderCol, costCol, budget, idCol,
-              preThin, preThinMinRows)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          ()
-        }
-      }
-      .start()
+    foldSink(stream, partialsPath, outPath, checkpointDir)(
+      _.select(col(groupCol), col(idCol), col(orderCol), col(costCol)))(
+      (tree, _) => Curation.budgetSelect(tree.drop("batch"), groupCol,
+        orderCol, costCol, budget, idCol, preThin, preThinMinRows))
   }
 
   /**
@@ -2401,8 +2230,10 @@ object Streams {
    * unbounded distinct state, precisely what this sink refuses to hold.
    *
    * Emits per batch: (n_docs, n_tokens, vocab_estimate,
-   * distinct_texts_estimate, lang_counts). Idempotent batch-partition
-   * protocol (replays rewrite their own dirs), same as every sink here.
+   * distinct_texts_estimate, lang_counts). It writes three partial legs,
+   * so it keeps its own foreachBatch, but replays follow [[foldSink]]:
+   * every dir is overwritten per batch id, and the [[isNewBatch]]
+   * guard reads the marker of the summing `langs` leg.
    *
    * Scale: per batch, one batch-sized aggregate per partial; the card
    * re-derive reads (languages × batches) + (k × batches) rows — never
@@ -2419,8 +2250,7 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // replay guard on the langs leg (the summing leg — see
         // compactCardPartials): a folded batch must not re-contribute
-        if (!batch.isEmpty && batchId > compactedThrough(
-            batch.sparkSession, s"$partialsPath/langs")) {
+        if (isNewBatch(batch, batchId, s"$partialsPath/langs")) {
           val s = batch.sparkSession
           val mink = graft.functions.MinKLongs.udaf(k)
           batch
@@ -2570,7 +2400,6 @@ object Streams {
    * the delta root. */
   private def writeRoutingGenMarker(
       spark: SparkSession, deltaPath: String, gen: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(deltaPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
@@ -2582,18 +2411,15 @@ object Streams {
   /** Whether the delta tree holds any unfolded `batch=<id>` dirs. */
   private def deltaBatchDirsExist(
       spark: SparkSession, deltaPath: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(deltaPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && fs.listStatus(root).exists(
-      _.getPath.getName.startsWith("batch="))
+    batchIds(fs, root).nonEmpty
   }
 
   /** The delta tree's recorded routing generation, if any sink stamped
    * one. */
   private[graft] def readRoutingGenMarker(
       spark: SparkSession, deltaPath: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(deltaPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) None
@@ -2629,15 +2455,12 @@ object Streams {
   def compactIvfDelta(spark: SparkSession, deltaPath: String,
                       baseTable: String, numBuckets: Int = 8,
                       idCol: String = "vec_id"): Unit = {
-    import org.apache.hadoop.fs.Path
     graft.tables.Tables.recoverSwap(spark, baseTable + "_cells")
     graft.tables.Tables.recoverSwap(spark, baseTable + "_centroids")
     val root = new Path(deltaPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val batchIds = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-    if (batchIds.isEmpty) return
+    val ids = batchIds(fs, root)
+    if (ids.isEmpty) return
     // generation guard: delta cell ids are meaningful only under the
     // routing table that assigned them. A fold after a rebuild would
     // merge assignments from a dead generation into the new bulk —
@@ -2684,7 +2507,7 @@ object Streams {
     graft.tables.Tables.stageBucketedSwap(all, baseTable + "_cells",
       "cell", numBuckets)
     graft.tables.Tables.commitSwaps(spark, Seq(baseTable + "_cells"))
-    batchIds.foreach(b => fs.delete(new Path(root, b), true))
+    ids.foreach(b => fs.delete(new Path(root, s"batch=$b"), true))
   }
 
   /**
@@ -2759,15 +2582,12 @@ object Streams {
   def compactPqDelta(spark: SparkSession, deltaPath: String,
                      baseTable: String, numBuckets: Int = 8,
                      idCol: String = "vec_id"): Unit = {
-    import org.apache.hadoop.fs.Path
     graft.tables.Tables.recoverSwap(spark, baseTable + "_pqcodes")
     graft.tables.Tables.recoverSwap(spark, baseTable + "_pqmeta")
     val root = new Path(deltaPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val batchIds = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-    if (batchIds.isEmpty) return
+    val ids = batchIds(fs, root)
+    if (ids.isEmpty) return
     // same None-case rule as compactIvfDelta: a marker-less tree with
     // batch dirs has an UNKNOWN assigning generation — folding it could
     // bake dead-generation codes into the bulk permanently
@@ -2802,6 +2622,6 @@ object Streams {
     graft.tables.Tables.stageBucketedSwap(all, baseTable + "_pqcodes",
       "cell", numBuckets)
     graft.tables.Tables.commitSwaps(spark, Seq(baseTable + "_pqcodes"))
-    batchIds.foreach(b => fs.delete(new Path(root, b), true))
+    ids.foreach(b => fs.delete(new Path(root, s"batch=$b"), true))
   }
 }

@@ -18,6 +18,14 @@ import org.scalatest.funsuite.AnyFunSuite
  * at zero CPU). The creating thread must materialize its own
  * checkpoint, so only the eager forms — `localCheckpoint()` /
  * `localCheckpoint(true, …)` — are legal in `src/main`.
+ *
+ * Law 2: **the fold replay guard is written once**. The streaming fold
+ * sinks share one exactly-once protocol (`Streams.foldSink`): overwrite
+ * `batch=<id>` dirs, and refuse ids at or below the `_compacted_through`
+ * marker. A sink that re-types that skeleton by hand can drop the guard,
+ * and then a replayed folded batch double-counts a summing tree. So the
+ * guard comparison may appear once in `src/main`, and `Streams.scala`
+ * may parse `batch=<id>` dir names only inside `batchIds`.
  */
 class RepoLawsSpec extends AnyFunSuite {
 
@@ -39,5 +47,31 @@ class RepoLawsSpec extends AnyFunSuite {
       "lazy localCheckpoint found — the first materialization can land on a " +
         "broadcast-exchange thread and deadlock the driver (see RepoLawsSpec " +
         "scaladoc). Use the eager form:\n" + offenders.mkString("\n"))
+  }
+
+  test("the fold replay guard is written once") {
+    val guards = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("batchId > compactedThrough")
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(guards.size <= 1,
+      "the compactedThrough replay guard is copied — route the sink " +
+        "through Streams.foldSink or Streams.isNewBatch:\n" +
+        guards.mkString("\n"))
+    val streams = Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    val lines = Files.readAllLines(streams).asScala.toIndexedSeq
+    val defAt = lines.indexWhere(_.contains("def batchIds("))
+    assert(defAt >= 0, s"$streams: the batchIds reader is gone")
+    // the definition runs to the first blank line after its signature
+    val defEnd = Some(lines.indexWhere(_.trim.isEmpty, defAt))
+      .filter(_ >= 0).getOrElse(lines.size)
+    val parsers = for {
+      (line, i) <- lines.zipWithIndex
+      if line.contains("startsWith(\"batch=\")") && (i < defAt || i > defEnd)
+    } yield s"$streams:${i + 1}: ${line.trim}"
+    assert(parsers.isEmpty,
+      "batch=<id> dir names parsed outside Streams.batchIds:\n" +
+        parsers.mkString("\n"))
   }
 }

@@ -140,6 +140,49 @@ object StreamLaws extends Properties("graft.streams") {
       got == want
     }
 
+  // ---- anomalySink -----------------------------------------------------
+
+  property("anomalySink verdicts on the days the last batch touched = " +
+      "batch countAnomaly over the concatenated input, for any split") =
+    forAll(
+      Gen.listOfN(9, Gen.zip(
+        Gen.frequency(4 -> Gen.const(3), 2 -> Gen.const(4), 1 -> Gen.const(9)),
+        Gen.chooseNum(0, 2))),
+      Gen.long, Gen.chooseNum(1, 40)) { (perDay, seed, splitAt) =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      // per-day (view, buy) counts expanded to events, shuffled so the
+      // second batch re-opens days the first already counted
+      val events = new scala.util.Random(seed).shuffle(
+        perDay.zipWithIndex.flatMap { case ((nView, nBuy), i) =>
+          val t = java.sql.Timestamp.valueOf(f"2024-01-${i + 1}%02d 12:00:00")
+          Seq.fill(nView)((t, "view")) ++ Seq.fill(nBuy)((t, "buy"))
+        })
+      val cut = math.min(splitAt, events.size - 1).max(1)
+      val (b0, b1) = events.splitAt(cut)
+      val cnt = Files.createTempDirectory("law-ancnt").toString
+      val outDir = Files.createTempDirectory("law-anout").toString
+      val cp = Files.createTempDirectory("law-ancp").toString
+      val mem = MemoryStream[(java.sql.Timestamp, String)]
+      val q = Streams.anomalySink(mem.toDF().toDF("ts", "event_type"),
+        cnt, outDir, cp)
+      try {
+        mem.addData(b0: _*)
+        q.processAllAvailable()
+        mem.addData(b1: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val touched = b1.toDF("ts", "event_type")
+        .select(to_date(col("ts")).as("day")).distinct()
+      def rowsOf(df: org.apache.spark.sql.DataFrame) = df
+        .join(touched, Seq("day"), "left_semi")
+        .orderBy("day", "event_type").collect().toSeq.map(_.toSeq)
+      val got = rowsOf(spark.read.parquet(s"$outDir/batch=1"))
+      val want = rowsOf(graft.operators.Sessions.countAnomaly(
+        events.toDF("ts", "event_type")))
+      got.nonEmpty && got == want
+    }
+
   // ---- driftSink -------------------------------------------------------
 
   property("driftSink final verdict = batch ksDrift over the concatenated " +
@@ -985,6 +1028,54 @@ object StreamLaws extends Properties("graft.streams") {
       val got = spark.read.parquet(s"$auditDir/batch=1")
         .collect().head.toSeq
       got == want
+    }
+
+  property("encodingAuditSink + compactCounterPartials mid-stream: the " +
+      "cumulative audit equals batch encodingAudit, and a replayed folded " +
+      "batch id refuses to re-contribute") =
+    forAll(
+      Gen.listOfN(9, Gen.zip(Gen.oneOf("a", "b"),
+        Gen.oneOf("plain ascii", "café touché", "broken � here",
+          "ctrl\u0001char"))),
+      Gen.chooseNum(1, 8)) { (docsRaw, splitAt) =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val docs = docsRaw.zipWithIndex.map { case ((src, text), i) =>
+        (i.toLong, src, text) }
+      val cut = math.min(splitAt, docs.size - 1).max(1)
+      val (b0, b1) = docs.splitAt(cut)
+      val partials = Files.createTempDirectory("law-eacp").toString
+      val auditDir = Files.createTempDirectory("law-eaca").toString
+      val cp = Files.createTempDirectory("law-eacc").toString
+      def start(m: MemoryStream[(Long, String, String)], c: String) =
+        Streams.encodingAuditSink(m.toDF().toDF("doc_id", "source", "text"),
+          partials, auditDir, c)
+      val mem = MemoryStream[(Long, String, String)]
+      val q = start(mem, cp)
+      try { mem.addData(b0: _*); q.processAllAvailable() }
+      finally q.stop()
+      Streams.compactCounterPartials(spark, partials,
+        keyCols = Seq("source"),
+        sumCols = Seq("n_docs", "n_chars", "non_ascii_docs",
+          "non_ascii_chars", "replacement_chars", "control_chars"))
+      val q2 = start(mem, cp)
+      try { mem.addData(b1: _*); q2.processAllAvailable() }
+      finally q2.stop()
+      val want = graft.operators.TextAnalysis.encodingAudit(
+        docs.toDF("doc_id", "source", "text"))
+        .orderBy("source").collect().toSeq.map(_.toSeq)
+      val got = spark.read.parquet(s"$auditDir/batch=1")
+        .orderBy("source").collect().toSeq.map(_.toSeq)
+      // a FRESH checkpoint re-delivers b0 as batch 0 <= the fold
+      // watermark: its counts are already inside batch=-1, so landing
+      // them again would double every counter
+      def dirs() = new java.io.File(partials).listFiles()
+        .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
+      val mem2 = MemoryStream[(Long, String, String)]
+      val q3 = start(mem2, Files.createTempDirectory("law-eacc2").toString)
+      try { mem2.addData(b0: _*); q3.processAllAvailable() }
+      finally q3.stop()
+      got == want && dirs() == Set("batch=-1", "batch=1")
     }
 
   property("budgetSelectSink + compactBudgetSelectPartials: pruned " +
