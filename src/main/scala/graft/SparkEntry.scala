@@ -1,18 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import scala.util.chaining._
 
-import graft.operators.{Curation, Dedup, Graph, Layout, Multimodal, Relational, Sessions, Similarity, TextAnalysis}
-import graft.schema.Normalize
-import graft.sources.Fixtures
+import graft.queries._
 
 /**
  * Driver contract — one `queries` entry per implemented operator from
  * SURVEY.md §2 plus the LLM-pipeline extension surface, each with a
  * DuckDB-runnable `oracleSql` twin over the same parquet tables.
+ *
+ * Each query is one [[graft.queries.QueryDef]] (name, Spark plan, oracle
+ * SQL, bench flag) in a per-family object under `graft.queries`;
+ * `queries`, `oracleSql` and `benchQueries` are views of that one
+ * ordered registry.
  *
  * Determinism rules shared by every query/oracle pair:
  *   - every query ends in an explicit ORDER BY on both sides;
@@ -26,6315 +26,30 @@ import graft.sources.Fixtures
  */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Fixtures.table(s, dir, name)
-
-  /** One-time (per JVM) persisted-index build for the `*_indexed` bench
-   * queries. The default in-memory catalog starts empty in every JVM,
-   * but a previous JVM's warehouse DIRECTORY can outlive it — so before
-   * the build, clear any stale locations for ALL the index's tables
-   * (plus staged-swap leftovers), avoiding LOCATION_ALREADY_EXISTS.
-   * The index counts as present only when EVERY table exists: a
-   * half-present set (build crash) rebuilds instead of serving
-   * missing-table errors or generation skew. */
-  private def memoIndex(s: SparkSession, base: String,
-                        suffixes: Seq[String])(build: => Unit): Unit =
-    if (!suffixes.forall(sfx => s.catalog.tableExists(base + sfx))) {
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      for (sfx <- suffixes;
-           full <- Seq(sfx, sfx + "__swap_tmp", sfx + "__swap_backup")) {
-        s.sql(s"DROP TABLE IF EXISTS `$base$full`")
-        fs.delete(new org.apache.hadoop.fs.Path(wh, base + full), true)
-      }
-      build
-    }
-
-  /** events with `ts` renamed to `created_at` — the fixture stand-in for the
-   * reference's "deals" payload (SURVEY.md §5). */
-  private def deals(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").withColumnRenamed("ts", "created_at")
-
-  private val dec = DecimalType(18, 2)
-  /** Exact per-row revenue term: decimal in, decimal out. */
-  private def revenue =
-    col("l_extendedprice").cast(dec) * (lit(1).cast(dec) - col("l_discount").cast(dec))
+  /** Every query in bench order; each `bench = false` def sits beside
+   * the benched twin it is measured against. */
+  private lazy val registry: Seq[QueryDef] = {
+    val all = Seq(StarSchema.defs, Profiling.defs, ReferenceParity.defs,
+      TextStats.defs, Deduplication.defs, VectorSearch.defs, Media.defs,
+      CorpusCuration.defs, EventTime.defs, NearDupClusters.defs,
+      TextCleaning.defs, Reshaping.defs, TextScoring.defs, Splits.defs,
+      Audits.defs, Intake.defs).flatten
+    val dups = all.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
+    all
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q3_top_revenue")(spark, "/root/testdata/sf0.001")
 
-  /** Headline bench set: every registered query except the intentionally
-   * quadratic / skew-exposed exact variants, which stay oracle-grade only:
-   *   - `embedding_near_dup` / `embedding_near_dup_tight` — all-pairs
-   *     oracle twins of `embedding_near_dup_lsh` /
-   *     `embedding_near_dup_lsh_tight` (the benched banded production
-   *     paths);
-   *   - `embedding_near_dup_recall` / `embedding_near_dup_tight_recall` —
-   *     recall gates for the banded twins; contain the exact quadratic
-   *     side by definition;
-   *   - `ngram_jaccard` / `ngram_jaccard_exact` / `containment_pairs` —
-   *     Ω(Σ df²) candidate volume
-   *     even DF-capped (measured 38× superlinear at 10× dup mass,
-   *     BENCH_scaling.md); `minhash_lsh` is the near-dup pair default at
-   *     scale (same pair set to 0.014% recall, 15× faster), and the
-   *     capped containment variant shares the same counted-intersection
-   *     frame (`containment_exact` — one-sided prefix filter + exact
-   *     verify — is its benched scale path, the ppjoin relationship);
-   *   - `simhash` (uncapped) — band-bucket self-join on biased sign bits is
-   *     skew-prone (12.5 s driver-bench outlier, round 6); `simhash_capped`
-   *     (maxBucketSize = 64) is the production headline;
-   *   - `dedup_recall` — contains the brute-force exact Jaccard side by
-   *     definition (it is the recall GATE for minhash_lsh);
-   *   - `mutual_knn` / `mutual_knn_recall` — the exact O(n²) broadcast-NLJ
-   *     kNN feed and its recall gate; `mutual_knn_ivf` (cell-probed feed,
-   *     same reciprocal filter) is the benched production headliner;
-   *   - `cluster_split` — its runtime IS the already-benched
-   *     neardup_clusters pass plus a projection (double-count).
-   * None of these may ever be a bench/default path. */
-  def benchQueries: Seq[String] = Seq(
-    "q1_agg", "q3_top_revenue", "q5_region_revenue", "q7_nation_volume",
-    "q12_priority_class", "q17_small_qty_revenue", "vocab_stats",
-    "nation_agg", "topn_per_group",
-    "rollup_agg", "anti_join", "semi_join", "intersect_users", "except_users",
-    "asof_join", "asof_join_tolerance", "range_join", "profile_events",
-    "key_skew", "benford_audit", "zorder_layout", "hilbert_layout",
-    "join_cardinality", "join_advisor",
-    "robust_stats", "winsorized_stats", "value_percentiles",
-    "group_percentiles", "iqr_outliers", "mad_outliers",
-    "sampled_percentiles", "rank_stats", "group_concat",
-    "normalize", "sort_created_at", "time_range", "preview", "upsert",
-    "rollup_serve", "scd2_upsert", "scd2_snapshot", "scd2_asof",
-    "dedupe_latest", "count_rows", "profile_columns",
-    "profile_columns_sketch", "constraint_audit", "lateness_audit",
-    "trend_by_type", "cumulative_users", "cumulative_users_by_type",
-    "hash_sample", "props_extract",
-    "token_stats", "bpe_token_stats", "quality_score", "char_entropy",
-    "lang_id",
-    "classifier_auc", "calibration_curve", "fingerprint",
-    "exact_dedup", "fuzzy_join", "dedup_lines",
-    "duplicated_spans", "dedup_spans", "dedup_spans_intra",
-    "dedup_spans_full", "dup_span_runs",
-    "minhash_lsh", "ppjoin", "simhash_capped", "incremental_neardup",
-    "incremental_neardup_indexed", "incremental_embedding_neardup",
-    "incremental_embedding_neardup_indexed",
-    "pagerank", "triangle_count",
-    "topk_cosine", "mutual_knn_ivf", "hyperplane_ann", "hyperplane_ann_capped",
-    "embedding_near_dup_lsh", "embedding_near_dup_lsh_tight", "ivf_topk",
-    "ivf_topk_indexed", "ivf_autoprobe", "ivf_pq_topk_residual",
-    "ivf_pq_topk_refined", "ivf_refined_autocal",
-    "semantic_dedup", "kmeans_embed", "pq_encode", "pq_topk",
-    "ivf_pq_topk", "ivf_pq_topk_indexed", "matryoshka_topk",
-    "quantize_int8", "ndcg_quantized", "embedding_centroids",
-    "embedding_drift", "hard_negatives",
-    "embedding_outliers",
-    "payload_meta", "decode_batch", "media_resize", "frame_sample",
-    "media_ops",
-    "feature_extract",
-    "media_fingerprint",
-    "sample_stratified", "weighted_sample", "pack_sequences", "curate",
-    "cap_per_group",
-    "salted_join", "bloom_join", "corpus_shuffle", "length_buckets", "corpus_diff",
-    "dataset_card", "dataset_card_sketch", "content_fingerprint",
-    "corpus_mix", "mix_planner", "budget_select", "budget_select_prethin",
-    "chunk_documents",
-    "cdc_chunks",
-    "cdc_dedup", "upsample",
-    "sessionize", "window_agg", "sliding_window", "funnel", "attribution",
-    "retention",
-    "event_transitions", "count_anomaly", "resample_ffill", "event_lift",
-    "neardup_clusters", "neardup_dedup", "neardup_dedup_quality",
-    "containment_exact",
-    "tfidf_topterms",
-    "clean_text", "pii_redact", "nfc_normalize", "encoding_audit",
-    "quality_band", "pivot_counts", "union_ragged", "cube_agg",
-    "repetition_score", "simpson_score", "lm_score", "gopher_rules",
-    "bpe_merges",
-    "inverted_index", "topic_classify", "hash_embed", "decontaminate",
-    "quality_calibrate", "source_overlap", "ngram_novelty", "bm25_topk",
-    "semantic_decontaminate", "oov_rate", "hybrid_topk",
-    "train_val_split", "kfold_split", "fold_balance",
-    "split_leakage",
-    "top_ngrams", "dsir_weights", "zipf_audit", "heavy_hitters",
-    "ks_drift", "ks_drift_by_source", "chi2_drift", "chi2_drift_by_source",
-    "chi2_cells", "classifier_auc_by_source",
-    "annotator_agreement", "k_anonymity", "l_diversity", "t_closeness",
-    "privacy_audit",
-    "rolling_counts", "interval_overlap", "distinct_estimate",
-    "intake_pipeline", "intake_pipeline_v2", "intake_pipeline_v3")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- reference-parity surface (SURVEY.md §2) ----
-    "normalize" -> ((s, dir) =>
-      Normalize.normalize(deals(s, dir)).orderBy("event_id")),
-
-    "sort_created_at" -> ((s, dir) =>
-      Relational.sortByCreatedAt(Normalize.normalize(deals(s, dir)),
-        tieBreak = Seq("event_id"))),
-
-    "time_range" -> ((s, dir) =>
-      Relational.timeRange(t(s, dir, "events"), "ts",
-        "2024-01-10 00:00:00", "2024-01-20 00:00:00").orderBy("event_id")),
-
-    "preview" -> ((s, dir) =>
-      Relational.preview(
-        Relational.sortByCreatedAt(t(s, dir, "events"), "ts", Seq("event_id")), 5)),
-
-    "upsert" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val main = ev.filter(col("event_id") % 2 === 0)
-      val staging = ev.filter(col("event_id") % 3 === 0)
-        .withColumn("value", col("value") + 100)
-        .withColumn("event_type", lit("updated"))
-      Relational.upsertPlan(main, staging, "event_id").orderBy("event_id")
-    }),
-
-    "dedupe_latest" -> ((s, dir) =>
-      Relational.dedupeLatest(t(s, dir, "events"), "user_id", "ts",
-        tieBreak = Seq("event_id")).orderBy("user_id")),
-
-    // SCD Type 2 versioned upsert: changed attributes close the current
-    // version and open a new one; identical rows are no-ops; history
-    // accumulates with (valid_from, valid_to) ranges
-    "scd2_upsert" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val base = ev.filter(col("event_id") % 2 === 0)
-        .select("event_id", "event_type", "value")
-      val staging = ev.filter(col("event_id") % 3 === 0)
-        .select(col("event_id"), lit("updated").as("event_type"),
-          (col("value") + 100).as("value"))
-      val tbl = "graft_scd2p_" + math.abs(dir.hashCode).toString
-      val t0 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-01T00:00:00Z"))
-      val t1 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-02T00:00:00Z"))
-      memoIndex(s, tbl, Seq("")) {
-        graft.tables.Tables.loadScd2(base, tbl, t0, partitioned = true)
-        graft.tables.Tables.upsertScd2(s, staging, tbl, "event_id", t1)
-      }
-      s.table(tbl).drop("valid_to_date")
-        .orderBy("event_id", "valid_from")
-    }),
-
-    // time-travel reads of the SCD2 table: the dimension exactly as it
-    // stood at two probe instants straddling the versioned upsert
-    "scd2_snapshot" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val base = ev.filter(col("event_id") % 2 === 0)
-        .select("event_id", "event_type", "value")
-      val staging = ev.filter(col("event_id") % 3 === 0)
-        .select(col("event_id"), lit("updated").as("event_type"),
-          (col("value") + 100).as("value"))
-      val tbl = "graft_scd2p_" + math.abs(dir.hashCode).toString
-      val t0 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-01T00:00:00Z"))
-      val t1 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-02T00:00:00Z"))
-      memoIndex(s, tbl, Seq("")) {
-        graft.tables.Tables.loadScd2(base, tbl, t0, partitioned = true)
-        graft.tables.Tables.upsertScd2(s, staging, tbl, "event_id", t1)
-      }
-      val p1 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-01T12:00:00Z"))
-      val p2 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-02T12:00:00Z"))
-      graft.tables.Tables.scd2Snapshot(s, tbl, p1)
-        .withColumn("probe", lit("t0"))
-        .unionByName(graft.tables.Tables.scd2Snapshot(s, tbl, p2)
-          .withColumn("probe", lit("t1")))
-        .orderBy("probe", "event_id")
-    }),
-
-    // point-in-time lookup: each fact joins the dimension version valid
-    // AT ITS OWN event time — the anti-leakage feature-store join
-    "scd2_asof" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val base = ev.filter(col("event_id") % 2 === 0)
-        .select("event_id", "event_type", "value")
-      val staging = ev.filter(col("event_id") % 3 === 0)
-        .select(col("event_id"), lit("updated").as("event_type"),
-          (col("value") + 100).as("value"))
-      val tbl = "graft_scd2p_" + math.abs(dir.hashCode).toString
-      val t0 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-01T00:00:00Z"))
-      val t1 = java.sql.Timestamp.from(
-        java.time.Instant.parse("2030-01-02T00:00:00Z"))
-      memoIndex(s, tbl, Seq("")) {
-        graft.tables.Tables.loadScd2(base, tbl, t0, partitioned = true)
-        graft.tables.Tables.upsertScd2(s, staging, tbl, "event_id", t1)
-      }
-      val facts = ev.filter(col("event_id") % 2 === 0)
-        .select(col("event_id"),
-          when(col("event_id") % 4 === 0,
-            lit("2030-01-02 12:00:00").cast("timestamp"))
-            .otherwise(lit("2030-01-01 12:00:00").cast("timestamp"))
-            .as("probe_ts"))
-      graft.tables.Tables.scd2Lookup(s, facts, tbl, "event_id",
-        "probe_ts").orderBy("event_id")
-    }),
-
-    // materialized additive rollup: build from the base slice, fold the
-    // delta via incremental maintenance (no fact rescan), serve from the
-    // key-cardinality bucketed table — oracle = direct aggregate over
-    // ALL rows, proving base+delta additivity end-to-end
-    "rollup_serve" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("v_milli", expr("CAST(floor(value * 1000) AS BIGINT)"))
-      val base = "graft_rollup_" + math.abs(dir.hashCode).toString
-      memoIndex(s, base, Seq("")) {
-        graft.tables.Tables.writeAggTable(
-          ev.filter(col("event_id") % 4 =!= 0), base,
-          Seq("event_type"), Seq("v_milli"))
-        graft.tables.Tables.refreshAggTable(s,
-          ev.filter(col("event_id") % 4 === 0), base,
-          Seq("event_type"), Seq("v_milli"))
-      }
-      s.table(base).select(col("event_type"),
-        col("n").cast("long").as("n"),
-        expr("try_cast(sum_v_milli AS BIGINT)").as("sum_v_milli"))
-        .orderBy("event_type")
-    }),
-
-    "count_rows" -> ((s, dir) =>
-      t(s, dir, "events").agg(count(lit(1)).as("n"))),
-
-    // schema-dynamic per-column quality census: nulls, exact distincts,
-    // canonical-string min/max — one narrow columnar pass per column
-    "profile_columns" -> ((s, dir) =>
-      Relational.profileColumns(t(s, dir, "events"),
-        Seq("event_type", "user_id", "props")).orderBy("col_name")),
-
-    // the profiler's cardinality column at KMV sketch cost — even the
-    // estimate is hash-checked (k smallest reproducible hashes)
-    "profile_columns_sketch" -> ((s, dir) =>
-      Relational.profileColumnsSketch(t(s, dir, "events"),
-        Seq("event_type", "user_id", "props")).orderBy("col_name")),
-
-    // CHECK-constraint census in ONE narrow scan (all predicates share
-    // the aggregate); SQL CHECK null semantics — FALSE violates, NULL
-    // passes. value_under_100 is the intentionally-violated one.
-    "constraint_audit" -> ((s, dir) =>
-      Relational.constraintAudit(t(s, dir, "events"), Seq(
-        "value_nonnegative" -> "value >= 0",
-        "known_event_type" ->
-          "event_type IN ('click','error','purchase','signup','view')",
-        "user_id_present" -> "user_id IS NOT NULL",
-        "value_under_100" -> "value < 100"))
-        .orderBy("constraint")),
-
-    // per-source event-time freshness: newest event per feed vs the
-    // corpus newest, integer microseconds — the stopped-feed alarm
-    "lateness_audit" -> ((s, dir) =>
-      Sessions.latenessAudit(t(s, dir, "events"))
-        .orderBy("event_type")),
-
-    // deterministic mergeable uniform sample: the k smallest
-    // reproducible id hashes — shard/batch samples combine exactly
-    "hash_sample" -> ((s, dir) =>
-      Relational.hashSample(t(s, dir, "documents"), "doc_id", 50)
-        .orderBy("doc_id")),
-
-    // unique-users-to-date curve at sketch cost: per-day k-min hash
-    // pre-reduction (lossless for the estimate by the KMV merge
-    // property), triangular day union — state is k longs per day
-    "cumulative_users" -> ((s, dir) =>
-      Sessions.cumulativeDistinct(t(s, dir, "events"))
-        .orderBy("day")),
-
-    // the same curve per source — one feed's audience going flat hides
-    // inside the corpus-wide curve
-    "cumulative_users_by_type" -> ((s, dir) =>
-      Sessions.cumulativeDistinctByGroup(t(s, dir, "events"))
-        .orderBy("event_type", "day")),
-
-    // per-group OLS slope of a metric over event time, exact DECIMAL
-    // moment sums + sign-correct floored micro quotient — the
-    // is-this-metric-drifting trend monitor
-    "trend_by_type" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("x_s", expr("CAST(ts AS LONG)"))
-        .withColumn("v_milli", expr("CAST(floor(value * 1000) AS BIGINT)"))
-      Relational.groupedTrend(ev, "event_type", "x_s", "v_milli")
-        .orderBy("event_type")
-    }),
-
-    "props_extract" -> ((s, dir) =>
-      t(s, dir, "events").select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")),
-
-    // ---- relational engine queries (star schema; bench headliners) ----
-    "q1_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast(dec)).cast("double").as("sum_base_price"),
-          sum(revenue).cast("double").as("sum_disc_price"),
-          (sum(col("l_quantity").cast(dec)).cast("double") / count(lit(1)))
-            .as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q3_top_revenue" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-      t(s, dir, "lineitem")
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy("l_orderkey")
-        .agg(sum(revenue).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey")).limit(10)
-    }),
-
-    "nation_agg" -> ((s, dir) => {
-      val nat = broadcast(t(s, dir, "nation"))
-      val reg = broadcast(t(s, dir, "region"))
-      t(s, dir, "customer")
-        .join(nat, col("c_nationkey") === col("n_nationkey"))
-        .join(reg, col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("c_acctbal").cast(dec)).cast("double").as("sum_acctbal"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    "topn_per_group" -> ((s, dir) =>
-      Relational.dedupeLatest(t(s, dir, "orders"), "o_custkey", "o_orderdate",
-        tieBreak = Seq("o_orderkey"))
-        .select("o_custkey", "o_orderkey", "o_orderdate")
-        .orderBy("o_custkey")),
-
-    "q5_region_revenue" -> ((s, dir) => {
-      // 5-way join: region -> nation -> customer -> orders -> lineitem;
-      // tiny dims broadcast, fact tables shuffle on their join keys
-      val reg = broadcast(t(s, dir, "region"))
-      val nat = broadcast(t(s, dir, "nation"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(nat, col("c_nationkey") === col("n_nationkey"))
-        .join(reg, col("n_regionkey") === col("r_regionkey"))
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .groupBy("r_name")
-        .agg(sum(revenue).cast("double").as("revenue"),
-          count(lit(1)).as("n_lineitems"))
-        .orderBy("r_name")
-    }),
-
-    "q7_nation_volume" -> ((s, dir) => {
-      // TPC-H Q7-style 6-way join: shipping volume between every
-      // (supplier nation, customer nation) pair by ship year. Both
-      // nation legs and the supplier dim broadcast; the lineitem →
-      // orders → customer chain shuffles on its join keys with the
-      // shipdate filter pushed to the fact scan.
-      val nat = t(s, dir, "nation")
-      val natS = broadcast(nat.select(col("n_nationkey").as("s_nk"),
-        col("n_name").as("supp_nation")))
-      val natC = broadcast(nat.select(col("n_nationkey").as("c_nk"),
-        col("n_name").as("cust_nation")))
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(natS, col("s_nationkey") === col("s_nk"))
-        .join(natC, col("c_nationkey") === col("c_nk"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(sum(revenue).cast("double").as("revenue"),
-          count(lit(1)).as("n_lineitems"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-
-    "q12_priority_class" -> ((s, dir) =>
-      // TPC-H Q12-style: late-shipment counts split by order-priority
-      // class per return flag — one fact-fact equi-join (both sides
-      // shuffle on the order key) and a pure-integer conditional
-      // aggregate; the shipdate filter prunes at the lineitem scan
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_line_count"),
-          sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("low_line_count"))
-        .orderBy("l_returnflag")),
-
-    "q17_small_qty_revenue" -> ((s, dir) => {
-      // TPC-H Q17-style correlated aggregate: revenue from lineitems
-      // whose quantity is below 20% of their part's mean, by brand. The
-      // threshold is evaluated in integers (5·n·qty < Σqty ⟺
-      // qty < 0.2·avg — quantities are integral), so no decimal-vs-
-      // double average crosses engines. The stats aggregate and both
-      // joins all hash on l_partkey, so the join pipeline needs no
-      // re-exchange after the first (the stats branch re-scans lineitem
-      // with narrower pruning — a cheaper trade than shuffling the wide
-      // row twice); no broadcast hint — the part dim is sf-scaled, AQE
-      // decides.
-      val li = t(s, dir, "lineitem").select(col("l_partkey"),
-        col("l_quantity").cast("long").as("qty"), col("l_extendedprice"))
-      val stats = li.groupBy("l_partkey")
-        .agg(sum("qty").cast("long").as("sq"), count(lit(1)).as("n"))
-      li.join(stats, "l_partkey")
-        .filter(lit(5L) * col("n") * col("qty") < col("sq"))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n_small"),
-          sum(col("l_extendedprice").cast(dec)).cast("double")
-            .as("small_qty_revenue"))
-        .orderBy("p_brand")
-    }),
-
-    "vocab_stats" -> ((s, dir) => {
-      // corpus report: distinct vocabulary and volume per document source
-      val docs = t(s, dir, "documents")
-      docs
-        .select(col("source"), col("doc_id"),
-          explode(graft.functions.TextFns.tokens("text")).as("tok"))
-        .groupBy("source")
-        .agg(countDistinct(col("tok")).as("n_vocab"),
-          countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_tokens"))
-        .orderBy("source")
-    }),
-
-    "rollup_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    "anti_join" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey")
-        .orderBy("c_custkey")),
-
-    "semi_join" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem").filter(col("l_quantity") >= 50),
-          col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select("o_orderkey")
-        .orderBy("o_orderkey")),
-
-    "intersect_users" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      ev.filter(col("event_type") === "purchase").select("user_id")
-        .intersect(ev.filter(col("event_type") === "error").select("user_id"))
-        .orderBy("user_id")
-    }),
-
-    "except_users" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      ev.filter(col("event_type") === "signup").select("user_id")
-        .except(ev.filter(col("event_type") === "purchase").select("user_id"))
-        .orderBy("user_id")
-    }),
-
-    // ---- text analysis (documents) ----
-    "token_stats" -> ((s, dir) =>
-      TextAnalysis.tokenStats(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "bpe_token_stats" -> ((s, dir) =>
-      TextAnalysis.bpeTokenStats(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // character-distribution Shannon entropy (micro-bits) per document —
-    // the two-tailed junk filter, computed by the native codegen'd
-    // graft_char_entropy expression inside the scan projection
-    "char_entropy" -> ((s, dir) =>
-      TextAnalysis.charEntropy(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // Mann–Whitney ROC AUC of the English marker-count score against the
-    // ground-truth lang label: the eval gate run before any heuristic
-    // scorer is allowed to drop corpus mass
-    "classifier_auc" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextAnalysis.langId(docs)
-        .select(col("doc_id"), col("c_en"))
-        .join(docs.select(col("doc_id"),
-          (col("lang") === lit("en")).as("is_en")), "doc_id")
-      Curation.classifierAuc(scored, "c_en", "is_en")
-    }),
-
-    // the same scorer evaluated PER SOURCE — deployment gates check the
-    // worst slice, not the corpus average; grouped assembled cumulative
-    // pass, no single-task window
-    "classifier_auc_by_source" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextAnalysis.langId(docs)
-        .select(col("doc_id"), col("c_en"))
-        .join(docs.select(col("doc_id"), col("source"),
-          (col("lang") === lit("en")).as("is_en")), "doc_id")
-      Curation.classifierAucByGroup(scored, "c_en", "is_en", "source")
-        .orderBy("source")
-    }),
-
-    // reliability diagram for the same scorer: per-bin positive rates in
-    // integer permille — ranking power (AUC) vs magnitude calibration
-    "calibration_curve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextAnalysis.langId(docs)
-        .select(col("doc_id"), col("c_en"))
-        .join(docs.select(col("doc_id"),
-          (col("lang") === lit("en")).as("is_en")), "doc_id")
-      Curation.calibrationCurve(scored, "c_en", "is_en", buckets = 10)
-        .orderBy("bin")
-    }),
-
-    "fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // ---- drift / labeling / privacy audits ----
-    // two-sample KS drift between the even- and odd-user event streams
-    // on the milli-unit value metric: exact BIGINT cross statistic,
-    // corpus collapses to per-value counts before the ordered pass
-    "ks_drift" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("v_milli", expr("CAST(floor(value * 1000) AS BIGINT)"))
-      Curation.ksDrift(ev.filter(col("user_id") % 2 === 0),
-        ev.filter(col("user_id") % 2 === 1), "v_milli")
-    }),
-
-    // the same drift statistic sliced per event_type — the per-source
-    // monitor shape (one bad feed hides inside the corpus-wide number);
-    // grouped assembled cumulative pass, no single-task window
-    "ks_drift_by_source" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("v_milli", expr("CAST(floor(value * 1000) AS BIGINT)"))
-      Curation.ksDriftByGroup(ev.filter(col("user_id") % 2 === 0),
-        ev.filter(col("user_id") % 2 === 1), "v_milli", "event_type")
-        .orderBy("event_type")
-    }),
-
-    // chi-square drift over a CATEGORICAL domain — the language-mix
-    // monitor (KS needs an ordered domain; the category mix doesn't
-    // have one); exact integer cells, DECIMAL micro statistic
-    "chi2_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.chi2Drift(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1), "lang")
-    }),
-
-    // per-category attribution frame behind the chi2 scalar — WHICH
-    // category moved, with exact cell counts and micro contributions
-    "chi2_cells" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.chi2Cells(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1), "lang")
-        .orderBy("cat")
-    }),
-
-    // the same category-mix statistic sliced per source — one upstream
-    // feed's language mix going bad hides inside the corpus-wide number
-    "chi2_drift_by_source" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.chi2DriftByGroup(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1), "lang", "source")
-        .orderBy("source")
-    }),
-
-    // Cohen's kappa between two deterministic length raters (same
-    // metric, different thresholds -> high but imperfect agreement);
-    // exact rational (kappa_num, kappa_den) + floored micro quotient
-    "annotator_agreement" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("r1",
-          when(col("n_chars") >= 300, "long").otherwise("short"))
-        .withColumn("r2",
-          when(length(col("text")) >= 280, "long").otherwise("short"))
-      Curation.annotatorAgreement(d, "r1", "r2")
-    }),
-
-    // k-anonymity over (event_type, user cohort) quasi-identifiers at
-    // k = 8: one hash-agg to groups, re-identifiable mass in permille
-    "k_anonymity" -> ((s, dir) =>
-      Curation.kAnonymityAudit(
-        t(s, dir, "events").withColumn("cohort", col("user_id") % 200),
-        Seq("event_type", "cohort"), k = 8L)),
-
-    // l-diversity over (lang, 100-char length band) with `source` as the
-    // sensitive attribute at l = 3: the homogeneity-attack companion to
-    // k_anonymity (a big group whose rows all share one source still
-    // leaks membership)
-    "l_diversity" -> ((s, dir) =>
-      Curation.lDiversityAudit(
-        t(s, dir, "documents")
-          .withColumn("len_band", expr("n_chars DIV 100")),
-        Seq("lang", "len_band"), "source", l = 3L)),
-
-    // t-closeness over the same quasi-identifier frame: variational
-    // distance of each class's source distribution from the global one,
-    // integer-exact (cross-multiplied |·| numerators, DECIMAL DIV).
-    // t = 0.45 splits the sf0.01 class population ~16/14 flagged/clear
-    "t_closeness" -> ((s, dir) =>
-      Curation.tClosenessAudit(
-        t(s, dir, "documents")
-          .withColumn("len_band", expr("n_chars DIV 100")),
-        Seq("lang", "len_band"), "source", tMicro = 450000L)),
-
-    // the combined k/l/t privacy gate re-derived from the
-    // (classes × domain)-bounded counts frame — the exact computation
-    // the streaming privacyAuditSink folds per micro-batch
-    "privacy_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("len_band", expr("n_chars DIV 100"))
-      Curation.privacyAuditFromCounts(
-        docs.groupBy(col("lang"), col("len_band"), col("source"))
-          .agg(count(lit(1)).as("n")),
-        Seq("lang", "len_band"), "source", "n",
-        k = 8L, l = 3L, tMicro = 450000L)
-    }),
-
-    // ---- dedup (documents) ----
-    "exact_dedup" -> ((s, dir) =>
-      Dedup.exactDedup(t(s, dir, "documents")).orderBy("keep_id")),
-
-    // entity-level fuzzy self-join: customer names within 1 edit —
-    // deletion-neighborhood candidates (FastSS) + levenshtein verify
-    "fuzzy_join" -> ((s, dir) =>
-      Dedup.editDistancePairs(t(s, dir, "customer"), k = 1,
-        idCol = "c_custkey", textCol = "c_name")
-        .orderBy("doc_a", "doc_b")),
-
-    // oracle-grade only (not benched): even DF-capped, candidate volume is
-    // Ω(Σ df²) and measured 38× superlinear at 10× dup mass — minhash_lsh
-    // is the near-dup pair default at scale. Shingles seen in > 20
-    // documents are excluded from CANDIDATE GENERATION while Jaccard
-    // denominators stay pre-cap; the oracle models the cap exactly
-    "ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), n = 3, threshold = 0.5,
-        maxShingleDF = Some(20)).orderBy("doc_a", "doc_b")),
-
-    // exact all-candidates oracle twin (maxShingleDF = None): O(df²) join
-    // volume by definition — never the production default
-    "ngram_jaccard_exact" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), n = 3, threshold = 0.5,
-        maxShingleDF = None).orderBy("doc_a", "doc_b")),
-
-    // asymmetric containment (quote/boilerplate/subset detection):
-    // C(inner->outer) = |inner ∩ outer| / |inner| >= 0.8, both
-    // directions from one counted intersection; Jaccard-invisible
-    // short-in-long embeddings surface here
-    "containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(t(s, dir, "documents"), n = 3,
-        threshold = 0.8, maxShingleDF = Some(20))
-        .orderBy("doc_inner", "doc_outer")),
-
-    // the SCALE path for containment: one-sided prefix filter (inner's
-    // rarest tokens vs all tokens) + exact array-intersect verify — no
-    // recall loss, candidates track the output instead of Σ df²
-    "containment_exact" -> ((s, dir) =>
-      Dedup.containmentPairsExact(t(s, dir, "documents"), n = 3,
-        threshold = 0.8).orderBy("doc_inner", "doc_outer")),
-
-    "minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshPairs(t(s, dir, "documents"), n = 3, numHashes = 128,
-        bands = 32, threshold = 0.5).orderBy("doc_a", "doc_b")),
-
-    // prefix-filtered EXACT similarity join (AllPairs): same pair set as
-    // ngram_jaccard_exact, candidate volume bounded by rare-prefix dfs
-    // instead of all shingle dfs — the exact path that IS benchable
-    "ppjoin" -> ((s, dir) =>
-      Dedup.ppjoinPairs(t(s, dir, "documents"), n = 3, threshold = 0.5)
-        .orderBy("doc_a", "doc_b")),
-
-    // MinHash-vs-exact recall gate: the claim "minhashLshPairs finds the
-    // same pair set as the quadratic exact operator" as an oracle row —
-    // if banding ever drops a true pair at this SF, this row goes red.
-    // Oracle-only (contains the exact Jaccard side), never benched.
-    "dedup_recall" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Similarity.annRecall(
-        Dedup.minhashLshPairs(docs, n = 3, numHashes = 128, bands = 32,
-          threshold = 0.5)
-          .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b")),
-        Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5,
-          maxShingleDF = None)
-          .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b")))
-    }),
-
-    // integer PageRank over the symmetrized near-dup pair graph: the
-    // transitive "which copy is canonical" centrality signal
-    "pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, n = 3, numHashes = 128,
-        bands = 32, threshold = 0.5)
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      Graph.pageRank(edges, docs, iters = 5).orderBy("doc_id")
-    }),
-
-    // per-document triangle counts over the near-dup graph: local
-    // clique density — "replica farm" vs "one stray copy"
-    "triangle_count" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, n = 3, numHashes = 128,
-        bands = 32, threshold = 0.5)
-      Graph.triangleCounts(
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-        docs).orderBy("doc_id")
-    }),
-
-    // Watts–Strogatz local clustering: clique (1000‰) vs hub-and-spoke
-    // (0‰) duplication families; oracle-only — its cost IS the triangle
-    // pass plus a degree join (benching would double-count)
-    "clustering_coeff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, n = 3, numHashes = 128,
-        bands = 32, threshold = 0.5)
-      Graph.clusteringCoefficients(
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-        docs).orderBy("doc_id")
-    }),
-
-    // oracle-grade only (not benched): the uncapped band-bucket self-join
-    // is skew-prone on biased sign bits (round-6 driver bench: 12.5 s vs
-    // 2.1 s capped on identical fixtures) — simhash_capped is the headline.
-    "simhash" -> ((s, dir) =>
-      // maxHamming = 3 on a 64-bit signature: the Manku et al. (WWW'07)
-      // web-dedup operating point; 4x16-bit bands keep the candidate join
-      // ~20x smaller than hamming-7's 8x8-bit bands on biased sign bits
-      Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 3, n = 3,
-        threshold = 0.5).orderBy("doc_a", "doc_b")),
-
-    // bucket-size-capped variant: band buckets holding > 64 docs are
-    // dropped before the candidate self-join — the skew guard for biased
-    // sign bits (the sf0.01 fixture's two largest buckets hold 108 and 73
-    // of 500 docs; the cap prunes exactly those). The signature is fully
-    // closed-form, so the oracle recomputes the dropped buckets too and
-    // the recall trade itself is hash-checked. Pigeonhole completeness
-    // holds only uncapped — this is the high-skew production escape hatch.
-    "simhash_capped" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 3, n = 3,
-        threshold = 0.5, maxBucketSize = Some(64))
-        .orderBy("doc_a", "doc_b")),
-
-    // the incremental ingest shape: docs with doc_id % 7 = 0 arrive as the
-    // new batch; the rest is the already-signed corpus (signature index
-    // only — corpus text is never re-read). Verification is the MinHash
-    // Jaccard ESTIMATE (>= 64 of 128 components equal), recomputed exactly
-    // by the oracle from the closed-form polynomial/LCG signature chain.
-    "incremental_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpusSigs = Dedup.minhashSignatures(
-        docs.filter(col("doc_id") % 7 =!= 0), reproducible = true)
-      Dedup.incrementalNearDups(
-        docs.filter(col("doc_id") % 7 === 0), corpusSigs)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // the PERSISTED-index variant of incremental_neardup: corpus
-    // signatures are written ONCE as the co-located two-table bucketed
-    // layout (writeBandedIndex; memoized across bench passes — the build
-    // is per-corpus, the timed steady state is per-batch), then the batch
-    // joins against it with zero Exchange on the index side (DedupSpec
-    // plan assertion). Same output contract and the same oracle SQL as
-    // incremental_neardup.
-    "incremental_neardup_indexed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val base = "graft_nd_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, base, Seq("_bands", "_sigs")) {
-        Dedup.writeBandedIndex(
-          Dedup.minhashSignatures(docs.filter(col("doc_id") % 7 =!= 0)), base)
-      }
-      Dedup.incrementalNearDupsAgainstIndex(
-        Dedup.minhashSignatures(docs.filter(col("doc_id") % 7 === 0)), base)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    "embedding_near_dup" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy("vec_a", "vec_b")),
-
-    // incremental embedding near-dup: the corpus exists only as 8-byte
-    // hyperplane signatures; the batch (vec_id % 7 == 0, mirroring
-    // incremental_neardup's split) compares by signature hamming.
-    // Banding is pigeonhole-exact (bands > maxHamming), so the oracle is
-    // the direct quadratic hamming join.
-    "incremental_embedding_neardup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Dedup.incrementalEmbeddingNearDups(
-        emb.filter(col("vec_id") % 7 === 0),
-        Dedup.embeddingSignatures(emb.filter(col("vec_id") % 7 =!= 0)))
-        .orderBy("vec_a", "vec_b")
-    }),
-
-    // identical contract through the persisted bucketed signature index
-    // (the 100 TB steady-state shape: the corpus-scale side joins at its
-    // bucketing with zero Exchange) — mirrors incremental_neardup_indexed
-    "incremental_embedding_neardup_indexed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = "graft_emb_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, base, Seq("_bands", "_sigs")) {
-        Dedup.writeEmbeddingBandedIndex(
-          Dedup.embeddingSignatures(emb.filter(col("vec_id") % 7 =!= 0)),
-          base)
-      }
-      Dedup.incrementalEmbeddingNearDupsAgainstIndex(
-        Dedup.embeddingSignatures(emb.filter(col("vec_id") % 7 === 0)), base)
-        .orderBy("vec_a", "vec_b")
-    }),
-
-    // production banded twin of embedding_near_dup: hyperplane-band
-    // candidates (threshold-derived layout, 3 planes x 21 tables at 0.4)
-    // + exact cosine verify. Benched; >= 0.9 recall, gated by
-    // embedding_near_dup_recall (measured per-SF in that query's output).
-    "embedding_near_dup_lsh" -> ((s, dir) =>
-      Dedup.embeddingNearDupLsh(t(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy("vec_a", "vec_b")),
-
-    // recall/precision of the banded near-dup path vs the exact quadratic
-    // twin — oracle-only (never benched): contains the O(n²) side by
-    // definition, like dedup_recall/ann_recall/mutual_knn_recall.
-    "embedding_near_dup_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annRecall(
-        Dedup.embeddingNearDupLsh(emb, threshold = 0.4),
-        Dedup.embeddingNearDupPairs(emb, threshold = 0.4))
-    }),
-
-    // TIGHT-contract near-dup over the recall-calibration corpus (every
-    // vector plus a planted perturbed twin at cosine ~0.95-0.97): the
-    // regime production near-dup actually runs in. The exact crossJoin
-    // twin is oracle-only ground truth...
-    "embedding_near_dup_tight" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(
-        Similarity.plantNearDups(t(s, dir, "embeddings")), threshold = 0.9)
-        .orderBy("vec_a", "vec_b")),
-
-    // ...and the benched banded headliner derives its layout from the
-    // threshold (0.9 -> 9 planes x 7 tables, random-pair candidacy
-    // ~0.014 — this is where banding beats the exact crossJoin outright,
-    // measured in BENCH_scaling.md round 11) and guards skew with the
-    // occupancy-relative bucket cap (8x expected occupancy, floor 64 —
-    // cannot zero a wide layout, still culls degenerate buckets).
-    "embedding_near_dup_lsh_tight" -> ((s, dir) =>
-      Dedup.embeddingNearDupLsh(
-        Similarity.plantNearDups(t(s, dir, "embeddings")), threshold = 0.9,
-        maxBucketLoad = Some(8))
-        .orderBy("vec_a", "vec_b")),
-
-    // recall gate of the tight banded path vs its exact twin —
-    // oracle-only (contains the O(n²) side by definition)
-    "embedding_near_dup_tight_recall" -> ((s, dir) => {
-      val corpus = Similarity.plantNearDups(t(s, dir, "embeddings"))
-      Similarity.annRecall(
-        Dedup.embeddingNearDupLsh(corpus, threshold = 0.9,
-          maxBucketLoad = Some(8)),
-        Dedup.embeddingNearDupPairs(corpus, threshold = 0.9))
-    }),
-
-    // ---- similarity search (embeddings) ----
-    "topk_cosine" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // reciprocal-kNN graph: only mutually-top-k pairs survive, so hub
-    // vectors can't fabricate clusters. Exact O(n²) feed — oracle-grade
-    // baseline; the benched production headliner is mutual_knn_ivf.
-    "mutual_knn" -> ((s, dir) =>
-      Similarity.mutualKnnPairs(t(s, dir, "embeddings"), k = 10)
-        .orderBy("vec_a", "vec_b")),
-
-    // production mutual-kNN: ivfTopK self-kNN feed (cell-probed, ~1/4 of
-    // the corpus scored per query, corpus side never broadcast) + the
-    // same reciprocal filter. Recall vs the exact twin is gated by
-    // mutual_knn_recall.
-    "mutual_knn_ivf" -> ((s, dir) =>
-      Similarity.mutualKnnPairsIvf(t(s, dir, "embeddings"), k = 10,
-        nlist = 16, nprobe = 4, dim = 64).orderBy("vec_a", "vec_b")),
-
-    // recall/precision of the IVF feed vs the exact quadratic twin —
-    // oracle-only (never benched): it contains the O(n²) side by
-    // definition, like dedup_recall/ann_recall.
-    "mutual_knn_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annRecall(
-        Similarity.mutualKnnPairsIvf(emb, k = 10, nlist = 16, nprobe = 4,
-          dim = 64),
-        Similarity.mutualKnnPairs(emb, k = 10))
-    }),
-
-    "hyperplane_ann" -> ((s, dir) =>
-      Similarity.hyperplaneLshPairs(t(s, dir, "embeddings"), threshold = 0.4,
-        numPlanes = 4, numTables = 16, dim = 64).orderBy("vec_a", "vec_b")),
-
-    // bucket-size-capped variant: (table, bucket) groups holding > 48
-    // vectors are dropped before the candidate self-join — the skew guard
-    // for correlated embeddings. The cap is modeled exactly in the oracle
-    // (plane signs are a closed form), so precision is still hash-checked;
-    // only recall is traded, and only in overflowed tables.
-    "hyperplane_ann_capped" -> ((s, dir) =>
-      Similarity.hyperplaneLshPairs(t(s, dir, "embeddings"), threshold = 0.4,
-        numPlanes = 4, numTables = 16, dim = 64,
-        maxBucketSize = Some(48)).orderBy("vec_a", "vec_b")),
-
-    "quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(t(s, dir, "embeddings")).orderBy("vec_id")),
-
-    // ranking-eval of an aggressively quantized serving tier (int3,
-    // levels=7 — int8 is measured lossless on this corpus) vs the exact
-    // float ranking: per-query hits, MRR, DCG/IDCG and nDCG — metrics
-    // all integer-exact, the discount table shared verbatim with the
-    // oracle
-    "ndcg_quantized" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 10)
-      Similarity.rankingEval(
-        Similarity.bruteForceTopK(emb, qs, k = 10),
-        Similarity.quantizedCosineTopK(emb, qs, k = 10, levels = 7),
-        k = 10)
-        .orderBy("query_id")
-    }),
-
-    // contrastive hard-negative mining: nearest different-label vectors
-    "hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .orderBy("anchor_id", "rank")
-    }),
-
-    // per-label centroid-distance outliers in exact micro-unit integers
-    "embedding_outliers" -> ((s, dir) =>
-      Similarity.embeddingOutliers(t(s, dir, "embeddings"))
-        .orderBy("vec_id")),
-
-    // per-label class centroids in exact micro-unit fixed point
-    "embedding_centroids" -> ((s, dir) =>
-      Similarity.embeddingCentroids(t(s, dir, "embeddings"))
-        .orderBy("label")),
-
-    // representation drift between two corpus generations: cosine of
-    // the mean vectors as sign + cos2 micro — sqrt-free, so the whole
-    // statistic stays exact integers on both engines
-    "embedding_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.embeddingDrift(emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1))
-    }),
-
-    // LSH parameter eval: recall/precision of the capped hyperplane path
-    // vs the exact quadratic ground truth. Oracle-only (never benched) —
-    // this is the sample-sized sizing run, not a production path.
-    "ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annRecall(
-        Similarity.hyperplaneLshPairs(emb, threshold = 0.4, numPlanes = 4,
-          numTables = 16, dim = 64, maxBucketSize = Some(48)),
-        Dedup.embeddingNearDupPairs(emb, threshold = 0.4))
-    }),
-
-    "ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 10,
-        nlist = 16, nprobe = 4, dim = 64).orderBy("query_id", "rank")
-    }),
-
-    // recall-targeted nprobe calibration (round 18): the ascent's full
-    // measured curve and its choice, on an EXPLICIT 16-query workload
-    // sample (vec_id < 16 — supplying the sample keeps the entry
-    // oracle-exact: the default self-sample rule orders by xxhash64,
-    // which DuckDB cannot replicate). Target 1.0 with maxNprobe =
-    // nlist always terminates (probing every cell IS brute force), so
-    // the curve is the steps up to the first exact one — closed-form
-    // recomputable: per candidate nprobe, IVF top-5 vs brute top-5.
-    "ivf_autoprobe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.trainIvfCentroids(emb, nlist = 16, dim = 64)
-      val (np, curve) = Similarity.calibrateNprobe(emb, cents,
-        targetRecall = 1.0, k = 5, sample = 16, maxNprobe = 16,
-        queries = Some(emb.filter(col("vec_id") < 16)))
-      import s.implicits._
-      curve.map { case (n, r) => (n.toLong, r, if (n == np) 1L else 0L) }
-        .toDF("nprobe", "recall", "chosen").orderBy("nprobe")
-    }),
-
-    // the PERSISTED-index variant of ivf_topk: cell assignment + norms
-    // are paid once at index-build time (memoized across bench passes,
-    // like incremental_neardup_indexed), the per-batch probe join reads
-    // the cells table at its bucketing (SimilaritySpec plan assertion).
-    // Same centroid/probe/tie-break contract, same oracle SQL.
-    "ivf_topk_indexed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = "graft_ivf_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, base, Seq("_cells", "_centroids")) {
-        Similarity.writeIvfIndex(emb, base, nlist = 16, dim = 64)
-      }
-      Similarity.ivfTopKAgainstIndex(emb.filter(col("vec_id") < 10), base,
-        k = 10, nprobe = 4, dim = 64).orderBy("query_id", "rank")
-    }),
-
-    // spherical k-means: seed centroids + one integer-mean Lloyd round,
-    // argmax-cosine assignment; every arithmetic step closed-form in SQL
-    "kmeans_embed" -> ((s, dir) =>
-      Similarity.kmeansEmbed(t(s, dir, "embeddings"), nlist = 8, iters = 1)
-        .orderBy("vec_id")),
-
-    // product quantization: 4 subspaces x 16 seed centroids, argmin-L2
-    // codes via the MIPS identity; codebooks + scores closed-form in SQL
-    "pq_encode" -> ((s, dir) =>
-      Similarity.pqEncode(t(s, dir, "embeddings"), m = 4, k = 16, dim = 64)
-        .orderBy("vec_id")),
-
-    // ADC retrieval over PQ codes: corpus side scans 4 code columns, each
-    // query ships a micro-unit integer LUT (associative BIGINT totals)
-    "pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10), k = 10,
-        m = 4, kcent = 16, dim = 64).orderBy("query_id", "rank")
-    }),
-
-    // FAISS-IVFPQ composition: candidates from the probed IVF cells only,
-    // each scored by m integer LUT adds over PQ codes — the raw vectors
-    // are never touched at query time
-    "ivf_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), k = 10,
-        nlist = 16, nprobe = 4, m = 4, kcent = 16, dim = 64)
-        .orderBy("query_id", "rank")
-    }),
-
-    // residual IVF-PQ (IVFADC, Jégou TPAMI'11 §IV.C): codes quantize
-    // vec - raw_centroid instead of the raw vector — the variant that
-    // keeps within-cell resolution on clustered corpora (round-18 1M
-    // drill: grouped-near-dup recall 0.100 raw vs 0.763 residual at
-    // identical cost). Residual codebook seeds are the 16 vectors
-    // AFTER the centroid seed range (disjoint by contract — centroid
-    // seeds' own residuals are identically zero); scoring adds the
-    // per-probed-cell raw-centroid dot and subtracts the build-time
-    // micro-floored reconstruction correction, all associative BIGINT.
-    "ivf_pq_topk_residual" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), k = 10,
-        nlist = 16, nprobe = 4, m = 4, kcent = 16, dim = 64,
-        residual = true).orderBy("query_id", "rank")
-    }),
-
-    // two-stage IVFPQ+R: residual ADC shortlist (40) from the PQ index,
-    // exact cosine re-rank against the companion IVF index's raw
-    // vectors — the documented recovery for the residual quantizer's
-    // code-flip ceiling. Both indexes memoize; the routing tables must
-    // match (checked loudly inside the operator).
-    "ivf_pq_topk_refined" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val ivfBase = "graft_ivf_idx_" + math.abs(dir.hashCode).toString
-      val pqBase = "graft_pqres_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, ivfBase, Seq("_cells", "_centroids")) {
-        Similarity.writeIvfIndex(emb, ivfBase, nlist = 16, dim = 64)
-      }
-      memoIndex(s, pqBase, Seq("_pqcodes", "_pqmeta")) {
-        Similarity.writePqIndex(emb, pqBase, nlist = 16, m = 4,
-          kcent = 16, dim = 64, residual = true)
-      }
-      Similarity.ivfPqTopKRefined(emb.filter(col("vec_id") < 10), pqBase,
-        ivfBase, k = 10, shortlist = 40, nprobe = 4, dim = 64)
-        .orderBy("query_id", "rank")
-    }),
-
-    // joint (nprobe, shortlist) calibration for the two-stage refined
-    // path (round 19): the ascent tries every shortlist step (4..512 —
-    // the sf0.1 density needs depth past 64 to reach the target)
-    // before adding a probe — stage 2 re-ranks only queries x shortlist
-    // rows, so deepening the shortlist is near-free while another probe
-    // scans another corpus fraction. Explicit 16-query workload sample
-    // (the ivf_autoprobe contract: supplying the sample keeps the entry
-    // oracle-exact); point-estimate rule (marginZ = 0) with the 19/20
-    // target so the DuckDB twin replays acceptance in integer math.
-    // Emits the measured curve up to the accepted pair.
-    "ivf_refined_autocal" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val pqBase = "graft_pqres_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, pqBase, Seq("_pqcodes", "_pqmeta")) {
-        Similarity.writePqIndex(emb, pqBase, nlist = 16, m = 4,
-          kcent = 16, dim = 64, residual = true)
-      }
-      val (cents, books) = Similarity.pqRouting(s, pqBase)
-      val ((cnp, csh), curve) = Similarity.calibrateRefined(emb, cents,
-        books, targetRecall = 0.95, k = 4, sample = 16, maxNprobe = 16,
-        maxShortlist = 512, dim = 64,
-        queries = Some(emb.filter(col("vec_id") < 16)), residual = true,
-        marginZ = 0.0)
-      import s.implicits._
-      curve.map { case (n, sl, r) =>
-        (n.toLong, sl.toLong, r, if (n == cnp && sl == csh) 1L else 0L) }
-        .toDF("nprobe", "shortlist", "recall", "chosen")
-        .orderBy("nprobe", "shortlist")
-    }),
-
-    // the PERSISTED-index variant of ivf_pq_topk: codebooks train and
-    // the corpus encodes ONCE at writePqIndex time (memoized across
-    // bench passes); each batch collects only the nlist + m*kcent meta
-    // rows and joins the bucketed codes table. Same contract + shared
-    // ranking tail, same oracle SQL.
-    "ivf_pq_topk_indexed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = "graft_pq_idx_" + math.abs(dir.hashCode).toString
-      memoIndex(s, base, Seq("_pqcodes", "_pqmeta")) {
-        Similarity.writePqIndex(emb, base, nlist = 16, m = 4, kcent = 16,
-          dim = 64, residual = false)
-      }
-      Similarity.ivfPqTopKIndexed(emb.filter(col("vec_id") < 10), base,
-        k = 10, nprobe = 4, dim = 64).orderBy("query_id", "rank")
-    }),
-
-    // MRL two-stage retrieval: prefix-16 cosine shortlist of 40, exact
-    // full-dim re-rank of the shortlist only
-    "matryoshka_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.matryoshkaTopK(emb, emb.filter(col("vec_id") < 10), k = 10,
-        prefixDim = 16, shortlist = 40).orderBy("query_id", "rank")
-    }),
-
-    // SemDeDup: cluster-then-dedup. Deterministic end-to-end (seed
-    // centroids + exact cosine), so kept/dropped is hash-checked; the
-    // cell-size cap is modeled in the oracle like the LSH bucket caps.
-    "semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(t(s, dir, "embeddings"), threshold = 0.4,
-        nlist = 16, dim = 64, maxCellSize = Some(4096))
-        .withColumn("cell", col("cell").cast("long"))
-        .orderBy("vec_id")),
-
-    // ---- multimodal (documents; payload = utf8 bytes of text) ----
-    "payload_meta" -> ((s, dir) =>
-      Multimodal.payloadMeta(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // real javax.imageio round-trip: per-doc PNGs are encoded then decoded
-    // executor-side; dimensions/band-count/channel sums all come from the
-    // DECODED raster, and the oracle predicts them in closed form
-    "decode_batch" -> ((s, dir) =>
-      Multimodal.decodeBatch(s, t(s, dir, "documents")).toDF().orderBy("doc_id")),
-
-    "media_ops" -> ((s, dir) =>
-      Multimodal.mediaOps(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // EXECUTED raster resize: decode + nearest-neighbor resample to
-    // 24x24, channel sums over the RESIZED pixels; the oracle predicts
-    // the resampled sums closed-form (floor source mapping)
-    "media_resize" -> ((s, dir) =>
-      Multimodal.resizeBatch(s, t(s, dir, "documents")).toDF()
-        .orderBy("doc_id")),
-
-    // EXECUTED frame sampling over real concatenated-PNG containers:
-    // chunk-walk split, every 2nd of 6 frames decoded; the oracle
-    // predicts each sampled frame's raster in closed form
-    "frame_sample" -> ((s, dir) =>
-      Multimodal.frameSampleBatch(s, t(s, dir, "documents"),
-        nFrames = 6, step = 2).toDF()
-        .orderBy("doc_id", "frame_idx")),
-
-    // the mapPartitions feature-extraction surface, scalarized for the
-    // driver compare: integer bin counts ride as a comma-joined string
-    // (the quantize_int8 pattern), so the row is exact on both engines
-    "feature_extract" -> ((s, dir) =>
-      Multimodal.featureExtractBatch(s, t(s, dir, "documents")).toDF()
-        .select(col("doc_id"), col("byte_len"),
-          expr("array_join(transform(hist_counts, c -> CAST(c AS STRING)), ',')")
-            .as("hist"),
-          col("peak_bin").cast("long").as("peak_bin"))
-        .orderBy("doc_id")),
-
-    // pre-codec media dedup: quantized byte-histogram fingerprint groups
-    "media_fingerprint" -> ((s, dir) =>
-      Multimodal.mediaFingerprintDedup(s, t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // pre-join shuffle-key skew profile: the 20 heaviest user_id values
-    "key_skew" -> ((s, dir) =>
-      Relational.keySkew(t(s, dir, "events"), "user_id", k = 20)
-        .orderBy("rank")),
-
-    // KMV pre-join sizing: distinct-custkey overlap of the high-value vs
-    // low-value order slices, estimated from two 64-long sketches plus
-    // the exact-intersection eval column
-    "join_cardinality" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      Relational.kmvOverlapEstimate(
-        o.filter(col("o_totalprice") > 450000),
-        o.filter(col("o_totalprice") < 50000),
-        "o_custkey", "o_custkey", k = 64)
-    }),
-
-    // the decision layer over the sizing passes: lineitem ⋈ orders on
-    // orderkey with a deliberately tight broadcast budget, so the
-    // verdict comes from the skew/shuffle branch, not the easy one
-    "join_advisor" -> ((s, dir) =>
-      Relational.joinAdvisor(
-        t(s, dir, "lineitem"), t(s, dir, "orders"),
-        "l_orderkey", "o_orderkey",
-        broadcastMaxRows = 1000, skewPermille = 200)),
-
-    // Z-order layout: per-bucket min/max envelopes of the Morton-curve
-    // file assignment — the min-max pruning statistics a file-skipping
-    // reader would consult
-    "zorder_layout" -> ((s, dir) =>
-      Layout.zorderStats(t(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-        nBuckets = 16, bitsPerDim = 8).orderBy("bucket")),
-
-    // Hilbert-curve variant: tighter envelopes than Morton (consecutive
-    // curve positions are always grid neighbors — no Z diagonal jumps)
-    "hilbert_layout" -> ((s, dir) =>
-      Layout.hilbertStats(t(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-        nBuckets = 16, bitsPerDim = 8).orderBy("bucket")),
-
-    // 10%-trimmed per-type mean of value, in exact micro-unit integers
-    "robust_stats" -> ((s, dir) =>
-      Relational.trimmedStats(t(s, dir, "events"))
-        .orderBy("event_type")),
-
-    // clamping sibling of robust_stats: outliers clipped to the band
-    // boundaries instead of dropped — every row still counts
-    "winsorized_stats" -> ((s, dir) =>
-      Relational.winsorizedStats(t(s, dir, "events"))
-        .orderBy("event_type")),
-
-    // first-significant-digit distribution vs Benford constants: the
-    // fabricated-data / unit-mixing screen, integer permille throughout
-    "benford_audit" -> ((s, dir) =>
-      Relational.benfordAudit(t(s, dir, "events"))
-        .orderBy("event_type", "digit")),
-
-    "profile_events" -> ((s, dir) => {
-      // data-quality profile of the events table: per-column null counts,
-      // ranges, and cardinalities in one aggregate pass
-      val ev = t(s, dir, "events")
-      ev.agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("event_type").isNull, 1L).otherwise(0L)).as("null_event_type"),
-        countDistinct(col("event_type")).as("n_event_types"),
-        countDistinct(col("user_id")).as("n_users"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"),
-        min(col("ts")).as("min_ts"),
-        max(col("ts")).as("max_ts"))
-    }),
-
-    "rank_stats" -> ((s, dir) => {
-      // the full ranking-function family over a deterministic total order
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      t(s, dir, "events")
-        .filter(col("event_id") % 50 === 0) // small, stable sample
-        .select(col("event_id"), col("event_type"), col("value"))
-        .withColumn("rnk", rank().over(w).cast("long"))
-        .withColumn("drnk", dense_rank().over(w).cast("long"))
-        .withColumn("prank", percent_rank().over(w))
-        .withColumn("quartile", ntile(4).over(w).cast("long"))
-        .orderBy("event_id")
-    }),
-
-    "group_concat" -> ((s, dir) =>
-      // collection aggregate: per user, the sorted distinct event types
-      // as one string (deterministic regardless of aggregation order)
-      t(s, dir, "events")
-        .groupBy("user_id")
-        .agg(concat_ws(",", array_sort(collect_set(col("event_type"))))
-          .as("types"),
-          count(lit(1)).as("n"))
-        .orderBy("user_id")),
-
-    "value_percentiles" -> ((s, dir) =>
-      // discrete percentiles (actual data values, no interpolation — the
-      // only percentile flavor that hash-matches across engines)
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(
-          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY value)").as("p25"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").as("p50"),
-          expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY value)").as("p75"))
-        .orderBy("event_type")),
-
-    // exact AND memory-bounded percentiles: assembled integer ranks (no
-    // per-group aggregation buffer, no single-task sort), arbitrary
-    // permille set, micro-unit values
-    "group_percentiles" -> ((s, dir) =>
-      Relational.groupedPercentiles(t(s, dir, "events"))
-        .orderBy("event_type", "permille")),
-
-    // Tukey-fence outliers per group off exact integer quartiles:
-    // the boxplot monitor, sparse output (flagged rows only)
-    "iqr_outliers" -> ((s, dir) =>
-      Relational.iqrOutliers(t(s, dir, "events"))
-        .orderBy("event_type", "event_id")),
-
-    // median/MAD robust outlier flags (|modified z| > 3.5): the
-    // 50%-breakdown companion to the Tukey fences, both medians off
-    // the same assembled exact integer ranks
-    "mad_outliers" -> ((s, dir) =>
-      Relational.madOutliers(t(s, dir, "events"))
-        .orderBy("event_type", "event_id")),
-
-    // hash-sample percentiles — the scale path: the reproducible id-hash
-    // sample is recomputed exactly by the oracle, so even the "estimate"
-    // is hash-checked
-    "sampled_percentiles" -> ((s, dir) =>
-      Relational.sampledPercentiles(t(s, dir, "events"), "value",
-        "event_type", "event_id", keepPct = 10).orderBy("event_type")),
-
-    // tolerance-bounded as-of: the feature-store point-in-time shape —
-    // a signup older than 7 days is too stale to attribute
-    "asof_join_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"),
-          col("ts").as("signup_ts"), col("event_id").as("signup_event_id"))
-      Relational.asofJoin(purchases, signups, "user_id", "ts",
-        tolerance = Some("7 days")).orderBy("event_id")
-    }),
-
-    "asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"),
-          col("ts").as("signup_ts"), col("event_id").as("signup_event_id"))
-      Relational.asofJoin(purchases, signups, "user_id", "ts")
-        .orderBy("event_id")
-    }),
-
-    "range_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val windows = ev
-        .filter(col("event_type") === "signup" && col("event_id") % 20 === 0)
-        .select(col("event_id").as("window_id"), col("ts").as("w_start"),
-          expr("ts + INTERVAL 6 HOURS").as("w_end"))
-      Relational.rangeJoin(ev.select("event_id", "ts"), "ts",
-        windows, "w_start", "w_end")
-        .select("window_id", "event_id")
-        .orderBy("window_id", "event_id")
-    }),
-
-    // ---- corpus curation (documents) ----
-    "sample_stratified" -> ((s, dir) =>
-      Curation.sampleStratified(t(s, dir, "documents"), "lang",
-        rates = Map("en" -> 50), defaultRate = 20)
-        .select("doc_id", "lang").orderBy("doc_id")),
-
-    "pack_sequences" -> ((s, dir) =>
-      Curation.packSequences(t(s, dir, "documents"), budget = 512)
-        .orderBy("source", "doc_id")),
-
-    // exact weighted sampling: length-derived integer tickets, E-S
-    // reservoir order via integer ghost-copy keys (no float pow)
-    "weighted_sample" -> ((s, dir) =>
-      Curation.weightedSample(
-        t(s, dir, "documents")
-          .withColumn("w", expr("CAST(1 + n_chars div 500 AS INT)")),
-        k = 20, weightCol = "w")
-        .orderBy("source", "rank")),
-
-    "curate" -> ((s, dir) =>
-      Curation.curate(t(s, dir, "documents"), minTokens = 10,
-        maxTokens = 2000, minAlphaRatio = 0.5).orderBy("doc_id")),
-
-    "train_val_split" -> ((s, dir) =>
-      Curation.trainValSplit(t(s, dir, "documents"), valPct = 10)
-        .select("doc_id", "split").orderBy("doc_id")),
-
-    // eval-set hygiene: near-dup pairs crossing the train/val boundary
-    "split_leakage" -> ((s, dir) =>
-      Curation.splitLeakage(t(s, dir, "documents"), valPct = 10)),
-
-    // deterministic k-fold assignment (cross-validation protocol)
-    "kfold_split" -> ((s, dir) =>
-      Curation.kfoldSplit(t(s, dir, "documents"), k = 5)
-        .select("doc_id", "fold").orderBy("doc_id")),
-
-    // stratification QA of the fold assignment: per (fold, lang), the
-    // within-fold class share vs the corpus share in integer permille
-    "fold_balance" -> ((s, dir) =>
-      Curation.foldBalance(
-        Curation.kfoldSplit(t(s, dir, "documents"), k = 5),
-        "fold", "lang").orderBy("fold", "lang")),
-
-    // leakage-free split (assign whole near-dup clusters to one side);
-    // oracle-grade only: its cost IS neardup_clusters (already benched)
-    // plus a hash projection — benching it would double-count that pass
-    "cluster_split" -> ((s, dir) =>
-      Curation.clusterSplit(t(s, dir, "documents"), valPct = 10)
-        .orderBy("doc_id")),
-
-    "top_ngrams" -> ((s, dir) =>
-      Curation.topNgrams(t(s, dir, "documents"), n = 3, k = 20)),
-
-    // DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
-    // LLR of each doc against a target domain — here the corpus's
-    // lowest-named source stands in as the target, so the oracle can
-    // recompute the whole thing closed-form (micro-floored per-bucket
-    // LLRs make every weight an associative BIGINT sum)
-    "dsir_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tgtSource = docs.agg(min("source")).head().getString(0)
-      Curation.dsirWeights(docs,
-        docs.filter(col("source") === tgtSource), buckets = 1024)
-        .orderBy("doc_id")
-    }),
-
-    // Zipf rank-frequency: integer ratio vs the n_top/rank law — corpus
-    // health sibling of benford_audit, no log-log fit anywhere
-    "zipf_audit" -> ((s, dir) =>
-      TextAnalysis.zipfAudit(t(s, dir, "documents"), k = 20)
-        .orderBy("rank")),
-
-    // corpus-relative quality selection: keep percentile band [10, 90]
-    "quality_band" -> ((s, dir) =>
-      Curation.qualityBand(t(s, dir, "documents"), minPct = 10.0,
-        maxPct = 90.0).orderBy("doc_id")),
-
-    // per-source quality calibration: drop the worst 10% of EVERY source
-    "quality_calibrate" -> ((s, dir) =>
-      Curation.qualityCalibrate(t(s, dir, "documents"), dropPermille = 100)
-        .orderBy("doc_id")),
-
-    // unicode NFC canonical composition (intake stage zero)
-    "nfc_normalize" -> ((s, dir) =>
-      TextAnalysis.normalizeUnicode(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // per-source encoding health: non-ASCII mass, surviving U+FFFD
-    // replacement chars, leaked C0 controls — the transcoding-break
-    // alarm (a non-ASCII spike in an ASCII source = upstream breakage)
-    "encoding_audit" -> ((s, dir) =>
-      TextAnalysis.encodingAudit(t(s, dir, "documents"))
-        .orderBy("source")),
-
-    // exact heavy hitters (tokens over n/(k+1) of all occurrences) via a
-    // Misra-Gries candidate pass + exact recount of candidates only
-    "heavy_hitters" -> ((s, dir) =>
-      TextAnalysis.heavyHitters(t(s, dir, "documents"), k = 30)
-        .orderBy(col("n_occurrences").desc, col("token"))),
-
-    // context-window chunking: 24-token chunks, 8-token overlap
-    "chunk_documents" -> ((s, dir) =>
-      Curation.chunkDocuments(t(s, dir, "documents"), chunkTokens = 24,
-        overlapTokens = 8).orderBy("doc_id", "chunk_id")),
-
-    // content-defined chunking: boundaries from local token hashes, so
-    // an early edit shifts no later chunk (the CDC dedup property)
-    "cdc_chunks" -> ((s, dir) =>
-      Curation.cdcChunks(t(s, dir, "documents"), avgTokens = 16)
-        .orderBy("doc_id", "chunk_id")),
-
-    // chunk-level corpus dedup over CDC chunks (first occurrence wins)
-    "cdc_dedup" -> ((s, dir) =>
-      Dedup.dedupChunks(t(s, dir, "documents"), avgTokens = 16)
-        .orderBy("doc_id")),
-
-    // deterministic upsampling: src0 2.5 epochs, src1 0.5, rest 1
-    "upsample" -> ((s, dir) =>
-      Curation.upsampleCorpus(t(s, dir, "documents"),
-        weightsPermille = Map("src0" -> 2500, "src1" -> 500),
-        defaultPermille = 1000)
-        .orderBy("doc_id", "replica")),
-
-    // recipe-weighted mixing to a 3000-token budget: src0 at 300,
-    // src1 at 200, everything else at 25 permille
-    "corpus_mix" -> ((s, dir) =>
-      Curation.mixCorpus(t(s, dir, "documents"),
-        weightsPermille = Map("src0" -> 300, "src1" -> 200),
-        defaultPermille = 25, tokenBudget = 3000L)
-        .orderBy("doc_id")),
-
-    // one-row dataset card (docs/tokens/vocab/dup-rate/lang mix)
-    "dataset_card" -> ((s, dir) =>
-      Curation.datasetCard(t(s, dir, "documents"))),
-
-    // order-invariant snapshot checksum: sum of reproducible row hashes
-    // mod p — replica / swap / upsert verification by one row per side
-    "content_fingerprint" -> ((s, dir) =>
-      Relational.contentFingerprint(t(s, dir, "documents"),
-        Seq("doc_id", "lang", "source", "n_chars"))),
-
-    // the 100 TB card: vocab via the KMV sketch (k=256) — no token
-    // shuffle, <= k-long aggregation buffers, deterministic estimate
-    // the oracle recomputes from the k smallest distinct hashes
-    "dataset_card_sketch" -> ((s, dir) =>
-      Curation.datasetCardSketch(t(s, dir, "documents"))),
-
-    // recipe-feasibility report: can each source hit its budget share
-    // under the repeat cap? (the audit run before corpus_mix)
-    "mix_planner" -> ((s, dir) =>
-      Curation.mixPlanner(t(s, dir, "documents"),
-        weightsPermille = Map("src0" -> 300, "src1" -> 200),
-        defaultPermille = 25, tokenBudget = 100000L,
-        maxEpochsMilli = 4000L)
-        .orderBy("source")),
-
-    // the pick itself: best documents per source by quality score until
-    // 800 tokens per source — greedy prefix, total order (score desc,
-    // id asc), no partial documents
-    "budget_select" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextAnalysis.qualityScore(docs)
-        .select("doc_id", "n_tokens", "quality_score")
-      Curation.budgetSelect(
-        docs.select("doc_id", "source").join(scored, "doc_id"),
-        "source", "quality_score", "n_tokens", budget = 800L)
-        .orderBy("source", "pick_rank")
-    }),
-
-    // the mega-group escape, oracle-checked against the SAME SQL as
-    // budget_select: the percentile pre-thin is exact (prefix-closed
-    // cut + verified retained mass), so both variants must hash-match
-    // the one oracle
-    "budget_select_prethin" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextAnalysis.qualityScore(docs)
-        .select("doc_id", "n_tokens", "quality_score")
-      Curation.budgetSelect(
-        docs.select("doc_id", "source").join(scored, "doc_id"),
-        "source", "quality_score", "n_tokens", budget = 800L,
-        preThin = true)
-        .orderBy("source", "pick_rank")
-    }),
-
-    // snapshot diff: old = docs minus id%17==0; new = docs minus
-    // id%11==0 with id%13==0 texts edited -> added/removed/changed
-    "corpus_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val oldSnap = docs.filter(col("doc_id") % 17 =!= 0)
-      val newSnap = docs.filter(col("doc_id") % 11 =!= 0)
-        .withColumn("text", when(col("doc_id") % 13 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      Curation.corpusDiff(oldSnap, newSnap).orderBy("doc_id", "status")
-    }),
-
-    // epoch-1 training-order shuffle (reproducible hash permutation)
-    "corpus_shuffle" -> ((s, dir) =>
-      Curation.shuffleCorpus(t(s, dir, "documents"), epoch = 1)),
-
-    // padding-efficiency report: power-of-two token-length buckets
-    "length_buckets" -> ((s, dir) =>
-      Curation.lengthBuckets(t(s, dir, "documents")).orderBy("bucket")),
-
-    // per-source quota: at most 40 docs per source, lowest-hash-first
-    "cap_per_group" -> ((s, dir) =>
-      Curation.capPerGroup(t(s, dir, "documents"), "source",
-        maxPerGroup = 15).orderBy("doc_id")),
-
-    // skew-salted orders->customer equi-join (result = the plain join)
-    "salted_join" -> ((s, dir) =>
-      Relational.saltedJoin(
-        t(s, dir, "orders").select(col("o_orderkey"),
-          col("o_custkey").as("c_custkey"), col("o_totalprice")),
-        t(s, dir, "customer").select("c_custkey", "c_name"),
-        key = "c_custkey", salts = 8)
-        .orderBy("o_orderkey")),
-
-    // bloom-pre-filtered semi join: exact semi-join result (the filter
-    // only prunes shuffle volume), so the oracle is the plain EXISTS
-    "bloom_join" -> ((s, dir) =>
-      Relational.bloomSemiJoin(
-        t(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        t(s, dir, "customer").filter(col("c_acctbal") > 9000)
-          .select(col("c_custkey").as("o_custkey")),
-        key = "o_custkey")
-        .orderBy("o_orderkey")),
-
-    "intake_pipeline" -> ((s, dir) =>
-      Curation.intakePipeline(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // v2 recipe: curate -> per-source cap -> near-dup drop -> split ->
-    // shuffle key, one composed plan
-    "intake_pipeline_v2" -> ((s, dir) =>
-      Curation.intakePipelineV2(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // v3 recipe: Gopher battery + bigram-LM floor swap in as the model-
-    // based quality stages; full chain recomputed in one oracle CTE
-    "intake_pipeline_v3" -> ((s, dir) =>
-      Curation.intakePipelineV3(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "distinct_estimate" -> ((s, dir) => {
-      // KMV sketch (typed Aggregator, k=64) vs the exact distinct count,
-      // per source — the UDAF surface with a deterministic, oracle-
-      // checkable sketch (k smallest reproducible hashes)
-      val kmv = graft.functions.KmvSketch.udaf(64)
-      // (source, h) is hash-deduped FIRST (map-side combine), then both
-      // aggregates run over already-distinct hashes: same result as
-      // kmv + countDistinct in one agg, but without the Expand that a
-      // mixed distinct/non-distinct aggregate plans (which would double
-      // every exploded token row). Measured 1.8x faster at sf0.1.
-      t(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.functions.TextFns.tokens("text")).as("tok"))
-        .select(col("source"), graft.functions.TextFns.polyHash("tok").as("h"))
-        .distinct()
-        .groupBy("source")
-        .agg(kmv(col("h")).as("kmv_estimate"),
-          count(lit(1)).as("n_exact"))
-        .orderBy("source")
-    }),
-
-    // ---- event-time analytics (events) ----
-    "sessionize" -> ((s, dir) =>
-      Sessions.sessionize(t(s, dir, "events")).orderBy("event_id")),
-
-    "window_agg" -> ((s, dir) =>
-      Sessions.windowedAgg(t(s, dir, "events"), "1 day")
-        .orderBy("w_start", "event_type")),
-
-    "sliding_window" -> ((s, dir) =>
-      // overlapping windows: 1-day length sliding every 12h — each event
-      // lands in exactly 2 windows
-      Sessions.windowedAgg(t(s, dir, "events"), "1 day",
-        slide = Some("12 hours"))
-        .orderBy("w_start", "event_type")),
-
-    "rolling_counts" -> ((s, dir) =>
-      Sessions.rollingCounts(t(s, dir, "events"), windowSeconds = 86400)
-        .orderBy("event_id")),
-
-    // weekly cohort retention triangle
-    "retention" -> ((s, dir) =>
-      Sessions.retention(t(s, dir, "events"))
-        .orderBy("cohort_week", "week_offset")),
-
-    // 3-step view -> click -> purchase funnel, each step within 2 days
-    "funnel" -> ((s, dir) =>
-      Sessions.funnel(t(s, dir, "events"),
-        Seq("view", "click", "purchase"), withinSeconds = 172800L)),
-
-    // last-touch credit assignment: each purchase attributed to the
-    // user's most recent prior click/view within a 7-day lookback
-    "attribution" -> ((s, dir) =>
-      Sessions.attribution(t(s, dir, "events"))
-        .orderBy("conversion_id")),
-
-    // first-order Markov transition matrix over per-user event timelines
-    "event_transitions" -> ((s, dir) =>
-      Sessions.eventTransitions(t(s, dir, "events"))
-        .orderBy("from_type", "to_type")),
-
-    // integer-exact 3-sigma daily volume anomalies vs a trailing-7-day
-    // baseline per event type
-    "count_anomaly" -> ((s, dir) =>
-      Sessions.countAnomaly(t(s, dir, "events"))
-        .orderBy("day", "event_type")),
-
-    // market-basket lift between event types over user-day baskets
-    "event_lift" -> ((s, dir) =>
-      Sessions.eventLift(t(s, dir, "events"))
-        .orderBy("type_a", "type_b")),
-
-    // per-user daily resample with forward fill (as-of state per day)
-    "resample_ffill" -> ((s, dir) =>
-      Sessions.resampleDaily(
-        t(s, dir, "events").filter(col("user_id") % 10 === 0))
-        .orderBy("user_id", "day")),
-
-    "interval_overlap" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      def intervals(tpe: String, idAs: String, sAs: String, eAs: String) =
-        ev.filter(col("event_type") === tpe && col("event_id") % 20 === 0)
-          .select(col("event_id").as(idAs), col("ts").as(sAs),
-            expr("ts + INTERVAL 6 HOURS").as(eAs))
-      Relational.intervalOverlapJoin(
-        intervals("signup", "a_id", "a_start", "a_end"), "a_start", "a_end",
-        intervals("purchase", "b_id", "b_start", "b_end"), "b_start", "b_end")
-        .select("a_id", "b_id").orderBy("a_id", "b_id")
-    }),
-
-    // ---- dedup clustering / text ops (documents) ----
-    "neardup_clusters" -> ((s, dir) =>
-      Dedup.nearDupClusters(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // materialized dedup: cluster representatives + absorbed counts
-    "neardup_dedup" -> ((s, dir) =>
-      Dedup.nearDupDedup(t(s, dir, "documents")).orderBy("keep_id")),
-
-    // quality-aware canonicalization: per-cluster argmax(quality, -id)
-    // instead of min id — the representative a training corpus keeps
-    "neardup_dedup_quality" -> ((s, dir) =>
-      Dedup.nearDupDedupByQuality(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // C4-style corpus segment dedup; the fixtures' text is one line, so
-    // the query dedups word segments (sep = " ") — same machinery
-    "dedup_lines" -> ((s, dir) =>
-      Dedup.dedupSegments(t(s, dir, "documents"), sep = " ")
-        .orderBy("doc_id")),
-
-    // windowed exact-substring contamination stats (Lee et al. ACL'22
-    // semantics via overlapping w-token window hashes instead of a
-    // global suffix array)
-    "duplicated_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpans(t(s, dir, "documents"), w = 8)
-        .orderBy("doc_id")),
-
-    // the REWRITE of the same exact-substring semantics: later docs drop
-    // token positions covered by windows a lower doc id owns; emits the
-    // cleaned canonical text for every document
-    "dedup_spans" -> ((s, dir) =>
-      Dedup.removeDuplicatedSpans(t(s, dir, "documents"), w = 8)
-        .orderBy("doc_id")),
-
-    // the WITHIN-document half: later repeats of a window inside ONE
-    // document drop; pure scan projection (zero shuffle)
-    "dedup_spans_intra" -> ((s, dir) =>
-      Dedup.removeRepeatedSpansWithinDoc(t(s, dir, "documents"), w = 8)
-        .orderBy("doc_id")),
-
-    // the full recipe: intra collapse first (zero shuffle), then
-    // cross-doc ownership over the collapsed texts — the documented
-    // mega-document mitigation, shipped as one oracle-checked operator
-    "dedup_spans_full" -> ((s, dir) =>
-      Dedup.dedupSpansFull(t(s, dir, "documents"), w = 8)
-        .orderBy("doc_id")),
-
-    // longest consecutive duplicated run per doc — scattered boilerplate
-    // vs wholesale-copy discrimination over the same removal set
-    "dup_span_runs" -> ((s, dir) =>
-      Dedup.duplicatedSpanRuns(t(s, dir, "documents"), w = 8)
-        .orderBy("doc_id")),
-
-    "tfidf_topterms" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"), k = 5)
-        .orderBy("doc_id", "rank")),
-
-    "clean_text" -> ((s, dir) =>
-      TextAnalysis.cleanText(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // the fixture corpus contains no real PII, so the contract query
-    // plants deterministic doc_id-derived contact details in every row
-    // (identically in the oracle SQL) — the redaction paths are genuinely
-    // exercised and the counts/tags hash-checked, not vacuously green
-    "pii_redact" -> ((s, dir) =>
-      TextAnalysis.piiRedact(
-        t(s, dir, "documents").withColumn("text",
-          concat(col("text"),
-            lit(" contact u"), col("doc_id").cast("string"),
-            lit("@example.com from 10.0."),
-            (col("doc_id") % 256).cast("string"),
-            lit(".9 call 555 010 "),
-            (col("doc_id") % 9000 + 1000).cast("string"))))
-        .orderBy("doc_id")),
-
-    "repetition_score" -> ((s, dir) =>
-      TextAnalysis.repetitionScore(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // Simpson token-concentration: quadratic-weighted repetition signal
-    // (integer permille), separating boilerplate from benign repeats
-    "simpson_score" -> ((s, dir) =>
-      TextAnalysis.simpsonScore(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // in-corpus bigram LM quality scoring (perplexity-filter analogue);
-    // per-term integer micro-nat quantization keeps the mean engine-exact
-    "lm_score" -> ((s, dir) =>
-      TextAnalysis.lmScore(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // Gopher-battery quality rules; integer cross-multiplied ratios
-    "gopher_rules" -> ((s, dir) =>
-      TextAnalysis.gopherRules(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // first BPE merge-step pair counts (tokenizer-training inner loop)
-    "bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeMerges(t(s, dir, "documents"))),
-
-    // capped inverted index: bounded-state posting lists via MinKLongs
-    "inverted_index" -> ((s, dir) =>
-      TextAnalysis.invertedIndex(t(s, dir, "documents"))),
-
-    // rule-table topic tagging: broadcast keyword rules, weighted argmax
-    "topic_classify" -> ((s, dir) =>
-      TextAnalysis.topicClassify(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // hashing-trick featurization: signed bucket counts, exact integers
-    "hash_embed" -> ((s, dir) =>
-      TextAnalysis.hashEmbed(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // stand-in benchmark: the five lowest-id documents probe the corpus
-      Dedup.decontaminate(docs, docs.filter(col("doc_id") < 5))
-        .orderBy("doc_id")
-    }),
-
-    // cross-source shingle-overlap (contamination) matrix
-    "source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlap(t(s, dir, "documents"))
-        .orderBy("source_a", "source_b")),
-
-    // per-document content-originality: share of shingles unique to it
-    "ngram_novelty" -> ((s, dir) =>
-      Dedup.ngramNovelty(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // embedding-space decontamination: the five lowest-id vectors probe
-    "semantic_decontaminate" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.semanticDecontaminate(emb, emb.filter(col("vec_id") < 5))
-        .orderBy("vec_id")
-    }),
-
-    // tokenizer vocabulary coverage: per-doc OOV rate vs the corpus
-    // top-256 vocabulary
-    "oov_rate" -> ((s, dir) =>
-      TextAnalysis.oovRate(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // BM25 retrieval: every doc_id % 100 == 0 document queries the corpus
-    "bm25_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.bm25TopK(docs, docs.filter(col("doc_id") % 100 === 0),
-        k = 10).orderBy("query_id", "rank")
-    }),
-
-    // hybrid retrieval: BM25 + hash-embed cosine fused by integer RRF
-    "hybrid_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.hybridTopK(docs, docs.filter(col("doc_id") % 100 === 0),
-        k = 10, kEach = 20).orderBy("query_id", "rank")
-    }),
-
-    // ---- reshaping / multi-dim aggregation ----
-    "pivot_counts" -> ((s, dir) =>
-      Relational.pivotCounts(t(s, dir, "events"), "user_id", "event_type",
-        Seq("click", "error", "purchase", "signup", "view"))
-        .orderBy("user_id")),
-
-    "union_ragged" -> ((s, dir) => {
-      // ragged-schema concatenation — the S4/§2.7 surface: JSON pages with
-      // differing key sets align by name, missing columns go null
-      val ev = t(s, dir, "events")
-      val a = ev.filter(col("event_id") % 2 === 0)
-        .select("event_id", "user_id", "event_type")
-      val b = ev.filter(col("event_id") % 2 =!= 0)
-        .select("event_id", "value")
-      a.unionByName(b, allowMissingColumns = true).orderBy("event_id")
-    }),
-
-    "cube_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), grouping_id().cast("long").as("gid"))
-        .orderBy(col("gid"), asc_nulls_first("l_returnflag"),
-          asc_nulls_first("l_linestatus"))),
-  )
-
-  // ---------------------------------------------------------------------
-  // DuckDB oracle SQL — same semantics, same ORDER BY, same output types.
-  // ---------------------------------------------------------------------
-
-  /** DuckDB expression: whitespace tokens of `text` (empty tokens dropped,
-   * mirroring TextFns.tokens). */
-  private val toksSql =
-    "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
-
-  /** Shared DuckDB CTE chain ending in `chunked(doc_id, pos, tok,
-   * chunk_id)` — CDC token stream with boundary counts, the twin of
-   * [[graft.operators.Curation.cdcChunks]]'s internals (avgTokens = 16).
-   * Used by the cdc_chunks and cdc_dedup oracles. */
-  private lazy val cdcChunkedCte =
-    s"""toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-       |tok AS (
-       |  SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS tok
-       |  FROM toks WHERE len(t) > 0),
-       |flagged AS (
-       |  SELECT doc_id, pos, tok,
-       |    CASE WHEN ${polyHashSql("tok")} % 16 = 0 THEN 1 ELSE 0 END AS b
-       |  FROM tok),
-       |chunked AS (
-       |  SELECT doc_id, pos, tok,
-       |    COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS chunk_id
-       |  FROM flagged)""".stripMargin
-
-  /** DuckDB CTE body computing exact 3-gram Jaccard >= 0.5 pairs into a
-   * `pairs(doc_a, doc_b)` CTE — shared by the three near-dup pair operators
-   * (they differ only in candidate generation; all verify by exact Jaccard)
-   * and by the connected-components clusters oracle. */
-  private val jaccardCtes =
-    s"""toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-       |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |  generate_series(1, len(t) - 2),
-       |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-       |  FROM toks WHERE len(t) >= 3),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (SELECT doc_a, doc_b FROM inter
-       |  JOIN sizes sa ON inter.doc_a = sa.doc_id
-       |  JOIN sizes sb ON inter.doc_b = sb.doc_id
-       |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)""".stripMargin
-
-  private val jaccardPairsSql =
-    s"WITH $jaccardCtes\nSELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b"
-
-  /** BM25 CTE chain ending in `bmr(query_id, doc_id, n_hit_terms,
-   * score_micro, rank)` — shared by the bm25_topk oracle and the
-   * lexical half of hybrid_topk. The contribution expression is
-   * textually identical to [[graft.operators.TextAnalysis.bm25TopK]]'s
-   * Spark expression, so both engines floor the same IEEE double. */
-  private val bm25Ctes: String =
-    s"""qterms AS (SELECT DISTINCT doc_id AS query_id,
-       |  unnest($toksSql) AS term
-       |  FROM documents WHERE doc_id % 100 = 0),
-       |tfs AS (
-       |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-       |    SELECT doc_id, unnest($toksSql) AS term FROM documents)
-       |  WHERE term IN (SELECT term FROM qterms)
-       |  GROUP BY 1, 2),
-       |dfs AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-       |  FROM tfs GROUP BY 1),
-       |dls AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS dl
-       |  FROM documents WHERE len($toksSql) > 0),
-       |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(dl) AS BIGINT) AS total_dl FROM dls),
-       |qsel AS (SELECT query_id, term FROM (
-       |  SELECT q.query_id, q.term,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY dfs.df, q.term) AS tr
-       |  FROM qterms q JOIN dfs ON dfs.term = q.term)
-       |  WHERE tr <= 16),
-       |scored AS (
-       |  SELECT q.query_id, tfs.doc_id,
-       |    CAST(count(*) AS BIGINT) AS n_hit_terms,
-       |    CAST(sum(CAST(floor(
-       |      ((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-       |      * ((CAST(tf AS DOUBLE) * 2.2)
-       |         / (CAST(tf AS DOUBLE)
-       |            + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-       |                                    / (CAST(total_dl AS DOUBLE) / n_docs)))))
-       |      * 1000000) AS BIGINT)) AS BIGINT) AS score_micro
-       |  FROM tfs
-       |  JOIN qsel q ON q.term = tfs.term AND tfs.doc_id <> q.query_id
-       |  JOIN dfs ON dfs.term = tfs.term
-       |  JOIN dls ON dls.doc_id = tfs.doc_id
-       |  CROSS JOIN corpus
-       |  GROUP BY 1, 2),
-       |bmr AS (
-       |  SELECT query_id, doc_id, n_hit_terms, score_micro,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank
-       |  FROM scored)""".stripMargin
-
-  /** Unrolled integer PageRank over the exact near-dup pair graph
-   * (minhash at these parameters reproduces the exact pair set — same
-   * equivalence the minhash_lsh oracle relies on). Five fixed iterations
-   * as chained CTEs; every step is BIGINT floor arithmetic, so the ranks
-   * are bit-exact across engines. */
-  private val pageRankSql: String = {
-    val iterCtes = (1 to 5).map { i =>
-      s"""p$i AS (SELECT n.doc_id,
-         |  CAST(150000 + (85 * COALESCE(s.m, 0)) // 100 AS BIGINT) AS pr
-         |  FROM n LEFT JOIN (
-         |    SELECT e.dst AS doc_id, CAST(sum(p${i - 1}.pr // e.d) AS BIGINT) AS m
-         |    FROM e JOIN p${i - 1} ON e.src = p${i - 1}.doc_id
-         |    GROUP BY 1) s ON n.doc_id = s.doc_id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $jaccardCtes,
-       |ed AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |       UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM ed GROUP BY 1),
-       |e AS (SELECT ed.src, ed.dst, deg.d FROM ed JOIN deg ON ed.src = deg.src),
-       |n AS (SELECT doc_id FROM documents),
-       |p0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS pr FROM n),
-       |$iterCtes
-       |SELECT doc_id, pr AS pr_micro FROM p5 ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB greedy budget pick — ONE definition shared by the
-   * budget_select and budget_select_prethin oracles (the pre-thin is
-   * exact, so both plans must match the same SQL). */
-  private lazy val budgetSelectSql =
-    s"""WITH qs AS ($qualityScoreSql),
-       |j AS (SELECT d.doc_id, d.source, qs.n_tokens, qs.quality_score
-       |      FROM documents d JOIN qs ON qs.doc_id = d.doc_id),
-       |r AS (SELECT doc_id, source, n_tokens, quality_score,
-       |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY quality_score DESC, doc_id) AS BIGINT) AS pick_rank,
-       |    CAST(sum(n_tokens) OVER (PARTITION BY source
-       |      ORDER BY quality_score DESC, doc_id
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cost
-       |  FROM j)
-       |SELECT doc_id, source, n_tokens, quality_score, pick_rank,
-       |  cum_cost
-       |FROM r WHERE cum_cost <= 800
-       |ORDER BY source, pick_rank""".stripMargin
-
-  /** DuckDB quality-score body (no ORDER BY) — shared by the
-   * quality_score and quality_band oracles. */
-  private val qualityScoreSql =
-    s"""SELECT doc_id, n_tokens, n_stop, n_punct, n_chars, stop_ratio,
-       |  round(CAST(least(n_tokens, 200) AS DOUBLE) / 200 * 0.5
-       |        + stop_ratio * 0.3
-       |        + (1.0 - CAST(least(n_punct, 50) AS DOUBLE) / 50) * 0.2, 6) AS quality_score
-       |FROM (
-       |  SELECT doc_id, n_tokens, n_stop, n_punct, n_chars,
-       |    CASE WHEN n_tokens > 0
-       |         THEN round(n_stop / CAST(n_tokens AS DOUBLE), 6)
-       |         ELSE 0.0 END AS stop_ratio
-       |  FROM (
-       |    SELECT doc_id,
-       |      len(t) AS n_tokens,
-       |      len(list_filter(t, w -> list_contains(
-       |        ['the','a','and','of','to','in','is','it'], w))) AS n_stop,
-       |      CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS BIGINT) AS n_punct,
-       |      CAST(length(text) AS BIGINT) AS n_chars
-       |    FROM (SELECT doc_id, text, $toksSql AS t FROM documents)))""".stripMargin
-
-  /** Near-dup connected components as CTEs ending in
-   * `cl(doc_id, cluster_id)` — shared by the clusters and materialized-
-   * dedup oracles (prefix with WITH RECURSIVE). */
-  private val nearDupClusterCtes =
-    s"""$jaccardCtes,
-       |ed AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |       UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(id, r) AS (
-       |  SELECT src, dst FROM ed
-       |  UNION
-       |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
-       |cl AS (SELECT d.doc_id,
-       |  CAST(least(d.doc_id, COALESCE(min(reach.r), d.doc_id)) AS BIGINT)
-       |    AS cluster_id
-       |  FROM documents d LEFT JOIN reach ON reach.id = d.doc_id
-       |  GROUP BY d.doc_id)""".stripMargin
-
-  /** DuckDB fragment: polynomial hash of non-empty lambda variable `v`
-   * (mirrors TextFns.polyHashFragment). */
-  private def duckPolyFragment(v: String, mult: Long, mod: Long): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-    s"list_transform(generate_series(1, length($v)), " +
-    s"i -> CAST(ascii(substr($v, i, 1)) AS BIGINT))), " +
-    s"(acc, x) -> (acc * $mult + x) % $mod)"
-
-  /** DuckDB fragment: one column's KMV cardinality profile (mirrors
-   * Relational.profileColumnsSketch — k = 64 smallest distinct
-   * polynomial hashes over the non-null canonical strings). */
-  private def duckKmvColumnProfile(colName: String): String =
-    s"""SELECT '$colName' AS col_name,
-       |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-       |       ELSE 63.0 * 1000000007 / kth END AS kmv_estimate,
-       |  CAST(nd AS BIGINT) AS n_hashes
-       |FROM (SELECT count(*) AS nd,
-       |        max(CASE WHEN rn <= 64 THEN h END) AS kth
-       |      FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn
-       |            FROM (SELECT DISTINCT
-       |                ${duckPolyFragment("v", 31, 1000000007L)} AS h
-       |              FROM (SELECT DISTINCT CAST($colName AS VARCHAR) AS v
-       |                    FROM events
-       |                    WHERE $colName IS NOT NULL))))""".stripMargin
-
-  /** DuckDB fragment: 63-bit token hash (mirrors TextFns.token63Fragment). */
-  private def duckToken63(v: String): String =
-    s"(${duckPolyFragment(v, 31, 1000000007L)} " +
-    s"+ ${duckPolyFragment(v, 131, 998244353L)} * 1073741824 " +
-    s"+ (${duckPolyFragment(v, 137, 1000003L)} % 8) * 1152921504606846976)"
-
-  /** DuckDB simhash oracle: the FULL operator contract —
-   * `hamming(simhash_a, simhash_b) <= 3 AND jaccard >= 0.5` — recomputed
-   * from scratch (token hashes, bit sums, sign bits, pairwise hamming).
-   *
-   * With `cap = Some(c)` the oracle ALSO recomputes the 4 x 16-bit band
-   * buckets (bit k of block t = bits[16t + k]), drops any (band, bucket)
-   * group holding more than c docs, and intersects with the surviving
-   * candidate pairs — so the recall-only pruning of
-   * `Dedup.simhashPairs(maxBucketSize = ...)` is itself hash-checked.
-   * Uncapped, candidate membership is redundant (pigeonhole guarantees
-   * every qualifying pair is a candidate) and is omitted. */
-  private def simhashSql(cap: Option[Int]): String = {
-    val candCtes = cap match {
-      case Some(c) =>
-        s"""bands AS (SELECT doc_id, t.band,
-           |    list_sum(list_transform(generate_series(1, 16),
-           |      k -> bits[16 * t.band + k] * (1 << (k - 1)))) AS bucket
-           |  FROM bits, (SELECT unnest(generate_series(0, 3)) AS band) t),
-           |ok AS (SELECT band, bucket FROM bands
-           |  GROUP BY band, bucket HAVING count(*) <= $c),
-           |kept AS (SELECT b.doc_id, b.band, b.bucket FROM bands b
-           |  JOIN ok ON b.band = ok.band AND b.bucket = ok.bucket),
-           |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM kept a JOIN kept b
-           |  ON a.band = b.band AND a.bucket = b.bucket
-           |    AND a.doc_id < b.doc_id),
-           |""".stripMargin
-      case None => ""
-    }
-    val candJoin = if (cap.isDefined)
-      "JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b\n" else ""
-    s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-       |th AS (SELECT doc_id, list_transform(t, w -> ${duckToken63("w")}) AS hs
-       |       FROM toks),
-       |bits AS (SELECT doc_id, list_transform(generate_series(0, 63),
-       |  b -> CASE WHEN COALESCE(list_sum(list_transform(hs,
-       |         h -> CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)), 0) > 0
-       |       THEN 1 ELSE 0 END) AS bits FROM th),
-       |${candCtes}sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |  generate_series(1, len(t) - 2),
-       |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-       |  FROM toks WHERE len(t) >= 3),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |jac AS (SELECT doc_a, doc_b FROM inter
-       |  JOIN sizes sa ON inter.doc_a = sa.doc_id
-       |  JOIN sizes sb ON inter.doc_b = sb.doc_id
-       |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)
-       |SELECT j.doc_a AS doc_a, j.doc_b AS doc_b FROM jac j
-       |${candJoin}JOIN bits ba ON ba.doc_id = j.doc_a
-       |JOIN bits bb ON bb.doc_id = j.doc_b
-       |WHERE list_sum(list_transform(generate_series(1, 64),
-       |  i -> CASE WHEN ba.bits[i] <> bb.bits[i] THEN 1 ELSE 0 END)) <= 3
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
-
-  /** DuckDB scalar: reproducible polynomial hash of expression `e`
-   * (mirrors TextFns.polyHash). */
-  private def polyHashSql(e: String): String =
-    s"""CASE WHEN length($e) = 0 THEN 0 ELSE list_reduce(
-       |  list_prepend(CAST(0 AS BIGINT),
-       |    list_transform(generate_series(1, length($e)),
-       |                   i -> CAST(ascii(substr($e, i, 1)) AS BIGINT))),
-       |  (acc, x) -> (acc * 31 + x) % 1000000007) END""".stripMargin
-
-  /** DuckDB twin of incremental_neardup: the ENTIRE signature chain is
-   * closed-form — polynomial shingle hash, the 128 LCG permutation (a, b)
-   * pairs inlined below from [[graft.functions.TextFns.minhashParams]]
-   * (including its a==0 guard, by construction), polynomial band buckets —
-   * so DuckDB recomputes the exact signatures, the exact candidate set
-   * (pairs sharing a band bucket where at least one side is the NEW batch,
-   * doc_id % 7 = 0), and the exact >= 64-of-128 component-equality
-   * Jaccard estimate. Corpus x corpus pairs are excluded by contract. */
-  private val incrementalNearDupSql: String = {
-    val ps = graft.functions.TextFns.minhashParams(128)
-    val aLit = ps.map(_._1).mkString("[", ", ", "]")
-    val bLit = ps.map(_._2).mkString("[", ", ", "]")
-    s"""WITH p AS (SELECT CAST($aLit AS BIGINT[]) AS pa,
-       |                  CAST($bLit AS BIGINT[]) AS pb),
-       |toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-       |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |  generate_series(1, len(t) - 2),
-       |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-       |  FROM toks WHERE len(t) >= 3),
-       |hsets AS (SELECT doc_id, list(DISTINCT h) AS hs FROM
-       |  (SELECT doc_id, ${duckPolyFragment("s", 31, 1000000007L)} AS h
-       |   FROM sh) GROUP BY doc_id),
-       |sigs AS (SELECT doc_id, list_transform(generate_series(1, 128),
-       |    i -> list_min(list_transform(hs,
-       |      h -> (h * pa[i] + pb[i]) % 1000000007))) AS sig
-       |  FROM hsets, p),
-       |bands AS (SELECT doc_id, band,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      sig[band * 4 + 1 : band * 4 + 4]),
-       |      (acc, x) -> (acc * 1000003 + x) % 2147483647) AS bucket
-       |  FROM sigs, (SELECT unnest(generate_series(0, 31)) AS band)),
-       |cand AS (SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
-       |    greatest(a.doc_id, b.doc_id) AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bucket = b.bucket
-       |      AND a.doc_id <> b.doc_id
-       |  WHERE a.doc_id % 7 = 0)
-       |SELECT c.doc_a, c.doc_b FROM cand c
-       |JOIN sigs sa ON sa.doc_id = c.doc_a
-       |JOIN sigs sb ON sb.doc_id = c.doc_b
-       |WHERE list_sum(list_transform(generate_series(1, 128),
-       |  i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) >= 64
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
-
-  /** DuckDB scalar: sequential-order double dot product of two FLOAT[]
-   * columns — same accumulation order as VectorFns.dot. */
-  /** DuckDB 16-bin byte-histogram CTEs ending in `c(doc_id, byte_len,
-   * counts)` — shared by the feature_extract and media_near_dup oracles
-   * (hex-nibble recount of the UTF-8 payload bytes). */
-  private val histCtes: String =
-    """h AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
-      |  FROM documents),
-      |c AS (
-      |  SELECT doc_id, byte_len,
-      |    list_transform(generate_series(0, 15), b ->
-      |      len(list_filter(generate_series(1, CAST(byte_len AS INTEGER)),
-      |          i -> substr(hx, 2 * i - 1, 1) =
-      |               substr('0123456789ABCDEF', b + 1, 1)))) AS counts
-      |  FROM h)""".stripMargin
-
-  private def dotSql(a: String, b: String): String =
-    s"""list_sum(list_transform(generate_series(1, len($a)),
-       |  i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))""".stripMargin
-
-  /** The Gopher pass conjunction over `gbase` columns, parameterized by
-   * the word-count bounds — ONE definition of the rule battery's SQL,
-   * used by the gopher_rules oracle (50/100000) and the
-   * intake_pipeline_v3 oracle (20/100000). Any rule change lands in
-   * both oracles and leaves only the Scala twin to sync. */
-  private def gopherPassSql(minWords: Int, maxWords: Int): String =
-    s"""(n_words >= $minWords AND n_words <= $maxWords
-       |    AND n_words > 0 AND sum_word_len >= n_words * 3
-       |    AND sum_word_len <= n_words * 10
-       |    AND n_symbols * 10 <= n_words
-       |    AND n_alpha_words * 5 >= n_words * 4
-       |    AND n_stop_distinct >= 2)""".stripMargin
-
-  /** Shared DuckDB CTE `gbase(doc_id, n_words, sum_word_len,
-   * n_alpha_words, n_stop_distinct, n_symbols)` — the per-document
-   * integer stats the Gopher rule battery compares. Shared by
-   * gopher_rules and intake_pipeline_v3. */
-  private val gopherBaseCte =
-    s"""gbase AS (SELECT doc_id,
-       |  CAST(len(t) AS BIGINT) AS n_words,
-       |  CAST(COALESCE(list_sum(list_transform(t,
-       |    w -> CAST(length(w) AS BIGINT))), 0) AS BIGINT) AS sum_word_len,
-       |  CAST(len(list_filter(t, w -> regexp_matches(w, '[a-zA-Z]')))
-       |    AS BIGINT) AS n_alpha_words,
-       |  CAST(len(list_intersect(t,
-       |    ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'])) AS BIGINT)
-       |    AS n_stop_distinct,
-       |  CAST(len(regexp_extract_all(text, '#|\\.{3}')) AS BIGINT)
-       |    AS n_symbols
-       |  FROM (SELECT doc_id, text, $toksSql AS t FROM documents))""".stripMargin
-
-  /** Shared DuckDB CTE chain ending in `lmscore(doc_id, n_bigrams,
-   * lm_score)` — the corpus-count bigram LM with per-term micro-nat
-   * floors. Shared by lm_score and intake_pipeline_v3. */
-  private val lmScoreCtes =
-    s"""lmtoks AS (SELECT doc_id, $toksSql AS t FROM documents),
-       |lmbg AS (
-       |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-       |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-       |        FROM lmtoks WHERE len(t) >= 2)),
-       |lmc12 AS (SELECT w1, w2, count(*) AS c12 FROM lmbg GROUP BY w1, w2),
-       |lmc1 AS (SELECT w1, count(*) AS c1 FROM lmbg GROUP BY w1),
-       |lmst AS (
-       |  SELECT doc_id, count(*) AS nb,
-       |    sum(CAST(floor(ln(CAST(lmc12.c12 AS DOUBLE) / lmc1.c1) * 1e6)
-       |        AS BIGINT)) AS s
-       |  FROM lmbg JOIN lmc12 USING (w1, w2) JOIN lmc1 USING (w1)
-       |  GROUP BY doc_id),
-       |lmscore AS (
-       |  SELECT d.doc_id,
-       |    CAST(COALESCE(st.nb, 0) AS BIGINT) AS n_bigrams,
-       |    CASE WHEN st.nb > 0
-       |      THEN round(CAST(st.s AS DOUBLE) / st.nb / 1e6, 6)
-       |      ELSE 0.0 END AS lm_score
-       |  FROM documents d LEFT JOIN lmst st ON d.doc_id = st.doc_id)""".stripMargin
-
-  /** Shared DuckDB CTE chain for the product-quantization twins: seed
-   * codebooks (first-16-id subvector slices), MIPS scores for EVERY
-   * (vector, subspace, centroid), and `best(vec_id, j, cidx)` — the PQ
-   * codes. pq_encode emits the codes; pq_topk reuses `scores` for the
-   * query LUTs and `best` for the corpus side. */
-  /** The residual (IVFADC) ADC oracle CTE chain through
-   * `tot(query_id, neighbor_id, prn, adc)` — prn is the probe rank of
-   * the neighbor's cell for the query, so downstream blocks can
-   * sub-select probe depths without re-deriving the chain.
-   * Parameterized by the query-id bound and the deepest probe rank
-   * retained; [[ivfPqResidualSql]] closes it with the classic rank
-   * filter, the refined-autocal oracle grids (nprobe, shortlist) over
-   * it. */
-  private def ivfPqResidualCtes(nQ: Int, maxNprobe: Int): String =
-      s"""WITH cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS craw
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |unitc AS (
-         |  SELECT cidx, craw,
-         |    CASE WHEN nrm = 0 THEN craw
-         |         ELSE list_transform(craw, x -> x / nrm) END AS u
-         |  FROM (SELECT cidx, craw, sqrt(${dotSql("craw", "craw")}) AS nrm
-         |        FROM cents)),
-         |dists AS (
-         |  SELECT e.vec_id, c.cidx, ${dotSql("e.embedding", "c.u")} AS d
-         |  FROM embeddings e, unitc c),
-         |cells AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists) WHERE rn = 1),
-         |resid AS (
-         |  SELECT e.vec_id, ce.cell,
-         |    list_transform(generate_series(1, len(e.embedding)),
-         |      i -> CAST(e.embedding[i] AS DOUBLE) - u.craw[i]) AS r
-         |  FROM embeddings e
-         |  JOIN cells ce ON ce.vec_id = e.vec_id
-         |  JOIN unitc u ON u.cidx = ce.cell),
-         |sub AS (SELECT unnest(generate_series(1, 4)) AS j),
-         |rseeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS sidx, r
-         |  FROM (SELECT vec_id, r FROM resid ORDER BY vec_id
-         |        OFFSET 16 LIMIT 16)),
-         |rcbb AS (
-         |  SELECT sidx, j, cs, ${dotSql("cs", "cs")} * 0.5 AS bias
-         |  FROM (SELECT s.sidx, b.j,
-         |          list_slice(s.r, (b.j - 1) * 16 + 1, b.j * 16) AS cs
-         |        FROM rseeds s, sub b)),
-         |rbest AS (
-         |  SELECT vec_id, j, sidx FROM (
-         |    SELECT v.vec_id, v.j, c.sidx, row_number() OVER (
-         |      PARTITION BY v.vec_id, v.j ORDER BY
-         |        ${dotSql("v.rs", "c.cs")} - c.bias DESC, c.sidx) AS rn
-         |    FROM (SELECT r.vec_id, b.j,
-         |            list_slice(r.r, (b.j - 1) * 16 + 1, b.j * 16) AS rs
-         |          FROM resid r, sub b) v
-         |    JOIN rcbb c ON c.j = v.j) WHERE rn = 1),
-         |codep AS (
-         |  SELECT vec_id,
-         |    max(CASE WHEN j = 1 THEN sidx END) AS k1,
-         |    max(CASE WHEN j = 2 THEN sidx END) AS k2,
-         |    max(CASE WHEN j = 3 THEN sidx END) AS k3,
-         |    max(CASE WHEN j = 4 THEN sidx END) AS k4
-         |  FROM rbest GROUP BY vec_id),
-         |corr AS (
-         |  SELECT cp.vec_id,
-         |    CAST(floor((
-         |      ((${dotSql("list_slice(u.craw, 1, 16)", "b1.cs")} + b1.bias)
-         |       + (${dotSql("list_slice(u.craw, 17, 32)", "b2.cs")} + b2.bias)
-         |       + (${dotSql("list_slice(u.craw, 33, 48)", "b3.cs")} + b3.bias)
-         |       + (${dotSql("list_slice(u.craw, 49, 64)", "b4.cs")} + b4.bias))
-         |      + 0.5 * ${dotSql("u.craw", "u.craw")}) * 1000000)
-         |      AS BIGINT) AS corr
-         |  FROM codep cp
-         |  JOIN cells ce ON ce.vec_id = cp.vec_id
-         |  JOIN unitc u ON u.cidx = ce.cell
-         |  JOIN rcbb b1 ON b1.j = 1 AND b1.sidx = cp.k1
-         |  JOIN rcbb b2 ON b2.j = 2 AND b2.sidx = cp.k2
-         |  JOIN rcbb b3 ON b3.j = 3 AND b3.sidx = cp.k3
-         |  JOIN rcbb b4 ON b4.j = 4 AND b4.sidx = cp.k4),
-         |qprobe AS (
-         |  SELECT d.vec_id AS query_id, d.cidx AS cell, d.rn AS prn,
-         |    CAST(floor(${dotSql("e.embedding", "u.craw")} * 1000000)
-         |      AS BIGINT) AS qcell
-         |  FROM (SELECT vec_id, cidx, row_number() OVER (
-         |          PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |        FROM dists WHERE vec_id < $nQ) d
-         |  JOIN embeddings e ON e.vec_id = d.vec_id
-         |  JOIN unitc u ON u.cidx = d.cidx
-         |  WHERE d.rn <= $maxNprobe),
-         |qlut AS (
-         |  SELECT v.vec_id AS qid, c.j, c.sidx,
-         |    CAST(floor(${dotSql("v.qs", "c.cs")} * 1000000) AS BIGINT) AS s
-         |  FROM (SELECT e.vec_id, b.j,
-         |          list_slice(list_transform(e.embedding,
-         |            x -> CAST(x AS DOUBLE)),
-         |            (b.j - 1) * 16 + 1, b.j * 16) AS qs
-         |        FROM embeddings e, sub b WHERE e.vec_id < $nQ) v
-         |  JOIN rcbb c ON c.j = v.j),
-         |cand AS (
-         |  SELECT p.query_id, ce.vec_id AS neighbor_id, p.qcell, p.prn,
-         |    cp.k1, cp.k2, cp.k3, cp.k4
-         |  FROM qprobe p
-         |  JOIN cells ce ON ce.cell = p.cell AND ce.vec_id <> p.query_id
-         |  JOIN codep cp ON cp.vec_id = ce.vec_id),
-         |tot AS (
-         |  SELECT d.query_id, d.neighbor_id, d.prn,
-         |    d.qcell + l1.s + l2.s + l3.s + l4.s - co.corr AS adc
-         |  FROM cand d
-         |  JOIN qlut l1 ON l1.qid = d.query_id AND l1.j = 1 AND l1.sidx = d.k1
-         |  JOIN qlut l2 ON l2.qid = d.query_id AND l2.j = 2 AND l2.sidx = d.k2
-         |  JOIN qlut l3 ON l3.qid = d.query_id AND l3.j = 3 AND l3.sidx = d.k3
-         |  JOIN qlut l4 ON l4.qid = d.query_id AND l4.j = 4 AND l4.sidx = d.k4
-         |  JOIN corr co ON co.vec_id = d.neighbor_id)""".stripMargin
-
-  /** The residual (IVFADC) ADC oracle, parameterized by the rank
-   * bound so the refined twin can reuse it as a 40-deep shortlist
-   * stage. */
-  private def ivfPqResidualSql(kRank: Int): String =
-    ivfPqResidualCtes(nQ = 10, maxNprobe = 4) +
-      s"""
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY adc DESC, neighbor_id) AS rank
-         |  FROM tot)
-         |WHERE rank <= $kRank ORDER BY query_id, rank""".stripMargin
-
-  private val pqCtes =
-    s"""WITH seeds AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM (SELECT vec_id, embedding FROM embeddings
-       |        ORDER BY vec_id LIMIT 16)),
-       |sub AS (SELECT unnest(generate_series(1, 4)) AS j),
-       |cb AS (
-       |  SELECT s.cidx, b.j,
-       |    list_slice(s.v, (b.j - 1) * 16 + 1, b.j * 16) AS cs
-       |  FROM seeds s, sub b),
-       |cbb AS (SELECT cidx, j, cs,
-       |  ${dotSql("cs", "cs")} * 0.5 AS bias FROM cb),
-       |esub AS (
-       |  SELECT e.vec_id, b.j,
-       |    list_slice(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-       |      (b.j - 1) * 16 + 1, b.j * 16) AS es
-       |  FROM embeddings e, sub b),
-       |scores AS (
-       |  SELECT v.vec_id, v.j, c.cidx,
-       |    ${dotSql("v.es", "c.cs")} - c.bias AS sc
-       |  FROM esub v JOIN cbb c ON c.j = v.j),
-       |best AS (
-       |  SELECT vec_id, j, cidx FROM (
-       |    SELECT vec_id, j, cidx, row_number() OVER (
-       |      PARTITION BY vec_id, j ORDER BY sc DESC, cidx) AS rn
-       |    FROM scores) WHERE rn = 1)""".stripMargin
-
-  /** DuckDB twin of Similarity.planeComponent's mixed LCG (two rounds
-   * with an xorshift between them — the mix decorrelates planes; see
-   * the scaladoc there), producing the raw 31-bit value BEFORE the
-   * `% 2001 - 1000) / 1000.0` range mapping. Every intermediate is
-   * nonnegative and < 2^31, so no abs and no HUGEINT is needed. */
-  private def mixLcgSql(seed: String): String = {
-    val x1 = s"((1103515245 * ($seed) + 12345) % 2147483647)"
-    s"((1103515245 * xor($x1, $x1 >> 13) + 12345) % 2147483647)"
-  }
-  private val planeMixSql = mixLcgSql("p * 131 + d + 1")
-
-  /** DuckDB twin of the incremental embedding near-dup contract: the
-   * closed-form 63-plane signature packing, then the DIRECT quadratic
-   * hamming join (banding is pigeonhole-exact, so the banded paths must
-   * equal it). Shared by incremental_embedding_neardup and its
-   * bucketed-index twin. */
-  private val incrementalEmbeddingNearDupSql =
-    s"""WITH planes AS (
-       |  SELECT p, list_transform(generate_series(0, 63), d ->
-       |    ($planeMixSql % 2001 - 1000) / 1000.0) AS pv
-       |  FROM generate_series(0, 62) t(p)),
-       |bits AS (
-       |  SELECT e.vec_id,
-       |    CASE WHEN ${dotSql("e.embedding", "pl.pv")} > 0
-       |         THEN 1::BIGINT << pl.p ELSE 0 END AS bit
-       |  FROM embeddings e, planes pl),
-       |sigs AS (
-       |  SELECT vec_id, CAST(sum(bit) AS BIGINT) AS sig
-       |  FROM bits GROUP BY vec_id)
-       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |FROM sigs a JOIN sigs b ON a.vec_id < b.vec_id
-       |WHERE bit_count(xor(a.sig, b.sig)) <= 20
-       |  AND (a.vec_id % 7 = 0 OR b.vec_id % 7 = 0)
-       |ORDER BY vec_a, vec_b""".stripMargin
-
-  /** DuckDB twin of the exact all-pairs embedding near-dup (the quadratic
-   * oracle ground truth) — shared by embedding_near_dup and ann_recall. */
-  private val embeddingNearDupSql =
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings)
-       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |FROM n a JOIN n b ON a.vec_id < b.vec_id
-       |WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4
-       |ORDER BY vec_a, vec_b""".stripMargin
-
-  /** DuckDB twin of the exact mutual-kNN pair set: self-kNN both
-   * directions from one ranked CTE, kept only when reciprocal, ties on
-   * neighbor id exactly as the Spark window. Shared by mutual_knn and
-   * mutual_knn_recall (the exact side of the gate). */
-  private val mutualKnnSql =
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-       |knn AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${dotSql("q.embedding", "c.embedding")}
-       |               / (q.nrm * c.nrm) DESC, c.vec_id) AS rank
-       |  FROM n q JOIN n c ON c.vec_id <> q.vec_id)
-       |  WHERE rank <= 10)
-       |SELECT f.query_id AS vec_a, f.neighbor_id AS vec_b
-       |FROM knn f JOIN knn r
-       |  ON f.query_id = r.neighbor_id AND f.neighbor_id = r.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY vec_a, vec_b""".stripMargin
-
-  /** DuckDB twin of the IVF-fed mutual-kNN pair set: the ivf_topk CTE
-   * chain run as self-kNN (every vector probes its 4 best of 16
-   * seed-centroid cells; exact cosine ranking within probed cells), then
-   * the same reciprocal filter. Deterministic end to end — iters=0
-   * centroids are the 16 lowest-id vectors, first-max argmax ties, rank
-   * ties on neighbor id. Shared by mutual_knn_ivf and
-   * mutual_knn_recall (the approx side of the gate). */
-  private val mutualKnnIvfSql =
-    s"""WITH cents AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-       |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-       |unitc AS (
-       |  SELECT cidx, list_transform(embedding, x ->
-       |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-       |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-       |  FROM (SELECT cidx, embedding,
-       |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-       |        FROM cents)),
-       |dists AS (
-       |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-       |  FROM embeddings e, unitc u),
-       |cells AS (
-       |  SELECT vec_id, cidx AS cell FROM (
-       |    SELECT vec_id, cidx, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-       |    FROM dists) WHERE rn = 1),
-       |probes AS (
-       |  SELECT vec_id, cidx AS cell FROM (
-       |    SELECT vec_id, cidx, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-       |    FROM dists) WHERE rn <= 4),
-       |n AS (SELECT vec_id, embedding,
-       |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-       |cand AS (
-       |  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id
-       |  FROM probes p JOIN cells c ON c.cell = p.cell AND c.vec_id <> p.vec_id),
-       |knn AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |    row_number() OVER (PARTITION BY cand.query_id ORDER BY
-       |      ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-       |      cand.neighbor_id) AS rank
-       |  FROM cand
-       |  JOIN n qn ON qn.vec_id = cand.query_id
-       |  JOIN n nn ON nn.vec_id = cand.neighbor_id)
-       |  WHERE rank <= 10)
-       |SELECT f.query_id AS vec_a, f.neighbor_id AS vec_b
-       |FROM knn f JOIN knn r
-       |  ON f.query_id = r.neighbor_id AND f.neighbor_id = r.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY vec_a, vec_b""".stripMargin
-
-  /** Parameterized DuckDB twin of the hyperplane-LSH pair operators
-   * (hyperplane_ann at 4 planes x 16 tables, embedding_near_dup_lsh at
-   * 3 x 21). The plane matrix is a closed-form LCG of (plane, dim), so
-   * DuckDB recomputes the exact same packed plane sign bits, the same
-   * per-table buckets, the same candidate set, and the same
-   * cosine-verified pairs. With `cap = Some(c)` the oracle also
-   * recomputes the bucket sizes and drops any (tbl, bucket) group
-   * holding more than c vectors — mirroring Dedup.capBuckets — so the
-   * recall-only pruning is itself hash-checked. */
-  private def hyperplaneAnnSql(cap: Option[Int], numPlanes: Int = 4,
-                               numTables: Int = 16, threshold: Double = 0.4,
-                               source: String = "embeddings",
-                               extraCte: String = "",
-                               loadMult: Option[Int] = None): String = {
-    val keptCte = (cap, loadMult) match {
-      case (Some(c), _) =>
-        s"""kept AS (
-           |  SELECT b.vec_id, b.tbl, b.bucket FROM buckets b
-           |  JOIN (SELECT tbl, bucket FROM buckets
-           |        GROUP BY tbl, bucket HAVING count(*) <= $c) ok
-           |    ON b.tbl = ok.tbl AND b.bucket = ok.bucket),""".stripMargin
-      case (None, Some(mult)) =>
-        // occupancy-relative cap mirroring hyperplaneLshPairs'
-        // maxBucketLoad: size <= max(64, ceil(mult * n / 2^planes)),
-        // integer-exact on both engines
-        val nb = 1L << numPlanes
-        s"""kept AS (
-           |  SELECT b.vec_id, b.tbl, b.bucket FROM buckets b
-           |  JOIN (SELECT tbl, bucket FROM (
-           |          SELECT tbl, bucket, count(*) AS bs,
-           |            sum(count(*)) OVER (PARTITION BY tbl) AS tot
-           |          FROM buckets GROUP BY tbl, bucket)
-           |        WHERE bs <= greatest(64, ($mult * tot + ${nb - 1}) // $nb)) ok
-           |    ON b.tbl = ok.tbl AND b.bucket = ok.bucket),""".stripMargin
-      case (None, None) =>
-        "kept AS (SELECT vec_id, tbl, bucket FROM buckets),"
-    }
-    s"""WITH planes AS (
-       |  SELECT p, list_transform(generate_series(0, 63), d ->
-       |    ($planeMixSql % 2001 - 1000) / 1000.0) AS pv
-       |  FROM generate_series(0, ${numPlanes * numTables - 1}) t(p)),
-       |$extraCte
-       |bits AS (
-       |  SELECT e.vec_id, pl.p // $numPlanes AS tbl,
-       |    CASE WHEN ${dotSql("e.embedding", "pl.pv")} > 0
-       |         THEN 1 << (pl.p % $numPlanes) ELSE 0 END AS bit
-       |  FROM $source e, planes pl),
-       |buckets AS (
-       |  SELECT vec_id, tbl, CAST(sum(bit) AS BIGINT) AS bucket
-       |  FROM bits GROUP BY vec_id, tbl),
-       |$keptCte
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-       |  FROM kept a JOIN kept b
-       |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-       |n AS (SELECT vec_id, embedding,
-       |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM $source)
-       |SELECT c.va AS vec_a, c.vb AS vec_b
-       |FROM cand c
-       |JOIN n a ON a.vec_id = c.va
-       |JOIN n b ON b.vec_id = c.vb
-       |WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $threshold
-       |ORDER BY vec_a, vec_b""".stripMargin
-  }
-
-  /** DuckDB twin of Similarity.plantNearDups at the default
-   * eps = 0.0625 / idOffset = 1000000: the recall-calibration corpus
-   * (every vector plus a closed-form perturbed near-dup twin at cosine
-   * ~0.95-0.97) as a `corpus` CTE fragment. Shared by the
-   * tight-contract near-dup queries. */
-  private val plantedCorpusCte =
-    s"""corpus AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
-       |  FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 1000000 AS vec_id,
-       |    list_transform(generate_series(0, 63), d ->
-       |      CAST(embedding[d + 1] AS DOUBLE) +
-       |      0.0625 * ((${mixLcgSql("(vec_id * 8191 + d + 1) % 2147483647")}
-       |        % 2001) - 1000) / 1000.0) AS embedding
-       |  FROM embeddings),""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "normalize" ->
-      """SELECT CAST(event_id AS VARCHAR) AS event_id,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS created_at,
-        |  user_id,
-        |  COALESCE(event_type, '') AS event_type,
-        |  CAST(value AS VARCHAR) AS value,
-        |  COALESCE(props, '') AS props
-        |FROM events ORDER BY CAST(event_id AS VARCHAR)""".stripMargin,
-
-    "sort_created_at" ->
-      """SELECT CAST(event_id AS VARCHAR) AS event_id,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS created_at,
-        |  user_id,
-        |  COALESCE(event_type, '') AS event_type,
-        |  CAST(value AS VARCHAR) AS value,
-        |  COALESCE(props, '') AS props
-        |FROM events
-        |ORDER BY strftime(ts, '%Y-%m-%d %H:%M:%S'), CAST(event_id AS VARCHAR)""".stripMargin,
-
-    "time_range" ->
-      """SELECT * FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts <  TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-
-    "preview" ->
-      "SELECT * FROM events ORDER BY ts, event_id LIMIT 5",
-
-    "upsert" ->
-      """SELECT event_id, ts, user_id, event_type, value, props FROM events
-        |WHERE event_id % 2 = 0 AND event_id % 3 <> 0
-        |UNION ALL
-        |SELECT event_id, ts, user_id, 'updated' AS event_type,
-        |       value + 100 AS value, props
-        |FROM events WHERE event_id % 3 = 0
-        |ORDER BY event_id""".stripMargin,
-
-    "dedupe_latest" ->
-      """SELECT * FROM events
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id""".stripMargin,
-
-    // scd2_upsert twin: closed/kept/opened versions in closed form from
-    // the same base/staging slices and null-safe change test
-    "scd2_upsert" ->
-      """WITH base AS (SELECT event_id, event_type, value FROM events
-        |              WHERE event_id % 2 = 0),
-        |stg AS (SELECT event_id, 'updated' AS event_type,
-        |          value + 100 AS value
-        |        FROM events WHERE event_id % 3 = 0),
-        |chg AS (SELECT b.event_id FROM base b JOIN stg s USING (event_id)
-        |        WHERE b.event_type IS DISTINCT FROM s.event_type
-        |           OR b.value IS DISTINCT FROM s.value)
-        |SELECT b.event_id, b.event_type, b.value,
-        |  TIMESTAMP '2030-01-01 00:00:00' AS valid_from,
-        |  TIMESTAMP '2030-01-02 00:00:00' AS valid_to
-        |FROM base b JOIN chg USING (event_id)
-        |UNION ALL
-        |SELECT b.event_id, b.event_type, b.value,
-        |  TIMESTAMP '2030-01-01 00:00:00', NULL
-        |FROM base b LEFT JOIN chg ON b.event_id = chg.event_id
-        |WHERE chg.event_id IS NULL
-        |UNION ALL
-        |SELECT s.event_id, s.event_type, s.value,
-        |  TIMESTAMP '2030-01-02 00:00:00', NULL
-        |FROM stg s LEFT JOIN base b USING (event_id)
-        |WHERE b.event_id IS NULL OR s.event_id IN (SELECT event_id FROM chg)
-        |ORDER BY event_id, valid_from""".stripMargin,
-
-    // scd2_snapshot twin: the t0 probe sees every base row (closed
-    // versions still valid then); the t1 probe sees the merged current
-    "scd2_snapshot" ->
-      """WITH base AS (SELECT event_id, event_type, value FROM events
-        |              WHERE event_id % 2 = 0),
-        |stg AS (SELECT event_id, 'updated' AS event_type,
-        |          value + 100 AS value
-        |        FROM events WHERE event_id % 3 = 0),
-        |chg AS (SELECT b.event_id FROM base b JOIN stg s USING (event_id)
-        |        WHERE b.event_type IS DISTINCT FROM s.event_type
-        |           OR b.value IS DISTINCT FROM s.value)
-        |SELECT event_id, event_type, value, 't0' AS probe FROM base
-        |UNION ALL
-        |SELECT b.event_id, b.event_type, b.value, 't1'
-        |FROM base b LEFT JOIN chg ON b.event_id = chg.event_id
-        |WHERE chg.event_id IS NULL
-        |UNION ALL
-        |SELECT s.event_id, s.event_type, s.value, 't1'
-        |FROM stg s LEFT JOIN base b USING (event_id)
-        |WHERE b.event_id IS NULL OR s.event_id IN (SELECT event_id FROM chg)
-        |ORDER BY probe, event_id""".stripMargin,
-
-    // scd2_asof twin: the same closed-form version set, each fact
-    // joined to the version covering its own probe instant
-    "scd2_asof" ->
-      """WITH base AS (SELECT event_id, event_type, value FROM events
-        |              WHERE event_id % 2 = 0),
-        |stg AS (SELECT event_id, 'updated' AS event_type,
-        |          value + 100 AS value
-        |        FROM events WHERE event_id % 3 = 0),
-        |chg AS (SELECT b.event_id FROM base b JOIN stg s USING (event_id)
-        |        WHERE b.event_type IS DISTINCT FROM s.event_type
-        |           OR b.value IS DISTINCT FROM s.value),
-        |dim AS (
-        |  SELECT b.event_id, b.event_type, b.value,
-        |    TIMESTAMP '2030-01-01 00:00:00' AS valid_from,
-        |    TIMESTAMP '2030-01-02 00:00:00' AS valid_to
-        |  FROM base b JOIN chg USING (event_id)
-        |  UNION ALL
-        |  SELECT b.event_id, b.event_type, b.value,
-        |    TIMESTAMP '2030-01-01 00:00:00', NULL
-        |  FROM base b LEFT JOIN chg ON b.event_id = chg.event_id
-        |  WHERE chg.event_id IS NULL
-        |  UNION ALL
-        |  SELECT s.event_id, s.event_type, s.value,
-        |    TIMESTAMP '2030-01-02 00:00:00', NULL
-        |  FROM stg s LEFT JOIN base b USING (event_id)
-        |  WHERE b.event_id IS NULL
-        |     OR s.event_id IN (SELECT event_id FROM chg)),
-        |facts AS (SELECT event_id,
-        |    CASE WHEN event_id % 4 = 0
-        |      THEN TIMESTAMP '2030-01-02 12:00:00'
-        |      ELSE TIMESTAMP '2030-01-01 12:00:00' END AS probe_ts
-        |  FROM events WHERE event_id % 2 = 0)
-        |SELECT f.event_id, f.probe_ts, d.event_type, d.value
-        |FROM facts f LEFT JOIN dim d ON d.event_id = f.event_id
-        |  AND d.valid_from <= f.probe_ts
-        |  AND (d.valid_to IS NULL OR d.valid_to > f.probe_ts)
-        |ORDER BY f.event_id""".stripMargin,
-
-    // rollup_serve twin: the DIRECT aggregate over all rows — the serve
-    // path reads only the maintained base+delta rollup, so equality here
-    // proves the incremental additive fold
-    "rollup_serve" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT)
-        |    AS sum_v_milli
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "count_rows" -> "SELECT count(*) AS n FROM events",
-
-    // profile_columns twin: same canonical-string census per column
-    "profile_columns" ->
-      """WITH a AS (SELECT CAST(event_type AS VARCHAR) AS v FROM events),
-        |b AS (SELECT CAST(props AS VARCHAR) AS v FROM events),
-        |c AS (SELECT CAST(user_id AS VARCHAR) AS v FROM events)
-        |SELECT 'event_type' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(*) - count(v) AS BIGINT) AS n_null,
-        |  CAST(count(DISTINCT v) AS BIGINT) AS n_distinct,
-        |  min(v) AS min_s, max(v) AS max_s FROM a
-        |UNION ALL
-        |SELECT 'props', CAST(count(*) AS BIGINT),
-        |  CAST(count(*) - count(v) AS BIGINT),
-        |  CAST(count(DISTINCT v) AS BIGINT), min(v), max(v) FROM b
-        |UNION ALL
-        |SELECT 'user_id', CAST(count(*) AS BIGINT),
-        |  CAST(count(*) - count(v) AS BIGINT),
-        |  CAST(count(DISTINCT v) AS BIGINT), min(v), max(v) FROM c
-        |ORDER BY col_name""".stripMargin,
-
-    // profile_columns_sketch twin: the same k smallest reproducible
-    // hashes per column, so even the estimate hash-matches
-    "profile_columns_sketch" ->
-      s"""${duckKmvColumnProfile("event_type")}
-         |UNION ALL
-         |${duckKmvColumnProfile("props")}
-         |UNION ALL
-         |${duckKmvColumnProfile("user_id")}
-         |ORDER BY col_name""".stripMargin,
-
-    // constraint_audit twin: one row per CHECK predicate, FALSE
-    // violates / NULL passes, same truncating permille
-    "constraint_audit" ->
-      """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(COALESCE(sum(CASE WHEN (value >= 0) = false
-        |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS v1,
-        |  CAST(COALESCE(sum(CASE WHEN (event_type IN
-        |    ('click','error','purchase','signup','view')) = false
-        |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS v2,
-        |  CAST(COALESCE(sum(CASE WHEN (user_id IS NOT NULL) = false
-        |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS v3,
-        |  CAST(COALESCE(sum(CASE WHEN (value < 100) = false
-        |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS v4
-        |  FROM events)
-        |SELECT c.constraint, t.n_rows, c.n_violations,
-        |  CASE WHEN t.n_rows > 0
-        |    THEN n_violations * 1000 // t.n_rows END AS violations_permille
-        |FROM t, LATERAL (VALUES
-        |  ('value_nonnegative', v1), ('known_event_type', v2),
-        |  ('user_id_present', v3), ('value_under_100', v4))
-        |  AS c("constraint", n_violations)
-        |ORDER BY c.constraint""".stripMargin,
-
-    // trend_by_type twin: same HUGEINT moment sums, same sign-correct
-    // floor division
-    "trend_by_type" ->
-      """WITH m AS (SELECT event_type AS g,
-        |    CAST(epoch_us(ts) // 1000000 AS HUGEINT) AS x,
-        |    CAST(CAST(floor(value * 1000) AS BIGINT) AS HUGEINT) AS y
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |a AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * x) AS sxx, sum(x * y) AS sxy
-        |  FROM m GROUP BY g),
-        |d AS (SELECT g, n, CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS den FROM a)
-        |SELECT g AS event_type, n, TRY_CAST(den AS BIGINT) AS slope_den,
-        |  CASE WHEN den > 0 THEN CAST(num * 1000000 // den -
-        |    (CASE WHEN num < 0 AND (num * 1000000) % den <> 0
-        |     THEN 1 ELSE 0 END) AS BIGINT) END AS slope_micro
-        |FROM d ORDER BY event_type""".stripMargin,
-
-    // hash_sample twin: same k smallest reproducible hashes
-    "hash_sample" ->
-      s"""SELECT doc_id, text, lang, source, n_chars, h AS sample_hash
-         |FROM (SELECT *,
-         |    ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |      AS h
-         |  FROM documents ORDER BY h, doc_id LIMIT 50)
-         |ORDER BY doc_id""".stripMargin,
-
-    // cumulative_users twin: the k smallest hashes over the RAW union
-    // of days <= d — equal to the per-day-reduced union by the KMV
-    // merge property, so the estimates hash-match
-    "cumulative_users" ->
-      s"""WITH dh AS (SELECT DISTINCT CAST(ts AS DATE) AS day,
-         |    ${duckPolyFragment("CAST(user_id AS VARCHAR)", 31, 1000000007L)}
-         |      AS h
-         |  FROM events),
-         |tri AS (SELECT DISTINCT d.day AS day, x.h
-         |  FROM (SELECT DISTINCT day FROM dh) d
-         |  JOIN dh x ON x.day <= d.day),
-         |r AS (SELECT day, h,
-         |    row_number() OVER (PARTITION BY day ORDER BY h) AS rn
-         |  FROM tri),
-         |agg AS (SELECT day, count(*) AS nd,
-         |    max(CASE WHEN rn <= 64 THEN h END) AS kth
-         |  FROM r GROUP BY day)
-         |SELECT day,
-         |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / kth END AS kmv_estimate
-         |FROM agg ORDER BY day""".stripMargin,
-
-    // cumulative_users_by_type twin: the grouped triangular union
-    "cumulative_users_by_type" ->
-      s"""WITH dh AS (SELECT DISTINCT event_type AS g,
-         |    CAST(ts AS DATE) AS day,
-         |    ${duckPolyFragment("CAST(user_id AS VARCHAR)", 31, 1000000007L)}
-         |      AS h
-         |  FROM events),
-         |tri AS (SELECT DISTINCT d.g AS g, d.day AS day, x.h
-         |  FROM (SELECT DISTINCT g, day FROM dh) d
-         |  JOIN dh x ON x.g = d.g AND x.day <= d.day),
-         |r AS (SELECT g, day, h,
-         |    row_number() OVER (PARTITION BY g, day ORDER BY h) AS rn
-         |  FROM tri),
-         |agg AS (SELECT g, day, count(*) AS nd,
-         |    max(CASE WHEN rn <= 64 THEN h END) AS kth
-         |  FROM r GROUP BY g, day)
-         |SELECT g AS event_type, day,
-         |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / kth END AS kmv_estimate
-         |FROM agg ORDER BY event_type, day""".stripMargin,
-
-    // lateness_audit twin: per-source max event time vs the corpus
-    // max, integer microseconds
-    "lateness_audit" ->
-      """WITH per AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(max(epoch_us(ts)) AS BIGINT) AS max_ts_us
-        |  FROM events GROUP BY event_type),
-        |top AS (SELECT max(max_ts_us) AS t FROM per)
-        |SELECT per.event_type, per.n, per.max_ts_us,
-        |  CAST(top.t - per.max_ts_us AS BIGINT) AS lag_us
-        |FROM per, top ORDER BY event_type""".stripMargin,
-
-    "props_extract" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_revenue" ->
-      """SELECT l_orderkey,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey  = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "nation_agg" ->
-      """SELECT r_name, n_name, count(*) AS n_customers,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "topn_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate FROM orders
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) = 1
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lineitems
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey  = o_orderkey
-        |JOIN customer ON o_custkey   = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |    AS revenue,
-        |  count(*) AS n_lineitems
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q12_priority_class" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q17_small_qty_revenue" ->
-      """WITH q AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-        |  l_extendedprice FROM lineitem),
-        |st AS (SELECT l_partkey, CAST(sum(qty) AS BIGINT) AS sq,
-        |  CAST(count(*) AS BIGINT) AS n FROM q GROUP BY 1)
-        |SELECT p_brand, CAST(count(*) AS BIGINT) AS n_small,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS small_qty_revenue
-        |FROM q JOIN st USING (l_partkey)
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE 5 * n * qty < sq
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "vocab_stats" ->
-      """SELECT source,
-        |  count(DISTINCT tok) AS n_vocab,
-        |  count(DISTINCT doc_id) AS n_docs,
-        |  count(*) AS n_tokens
-        |FROM (SELECT source, doc_id,
-        |        unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                           w -> w <> '')) AS tok
-        |      FROM documents)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "rollup_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "anti_join" ->
-      """SELECT c_custkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "semi_join" ->
-      """SELECT o_orderkey FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_quantity >= 50)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "intersect_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase'
-        |INTERSECT
-        |SELECT user_id FROM events WHERE event_type = 'error'
-        |ORDER BY user_id""".stripMargin,
-
-    "except_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'signup'
-        |EXCEPT
-        |SELECT user_id FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id""".stripMargin,
-
-    // NB: list_sum returns HUGEINT in DuckDB — cast to BIGINT so the
-    // comparator sees int64 on both sides (pandas renders HUGEINT as float64)
-    "token_stats" ->
-      s"""SELECT doc_id,
-         |  len(t) AS n_tokens,
-         |  CAST(length(text) AS BIGINT) AS n_chars,
-         |  CAST(COALESCE(list_sum(list_transform(t, w -> CAST(length(w) AS BIGINT))), 0)
-         |       AS BIGINT) AS sum_token_len,
-         |  CASE WHEN len(t) > 0 THEN
-         |    round(COALESCE(list_sum(list_transform(t, w -> CAST(length(w) AS BIGINT))), 0)
-         |          / CAST(len(t) AS DOUBLE), 4)
-         |  END AS avg_token_len
-         |FROM (SELECT doc_id, text, $toksSql AS t FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "bpe_token_stats" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text,
-         |    '''(?:s|t|re|ve|m|ll|d)|[a-zA-Z]+|[0-9]{1,3}|[^a-zA-Z0-9''\\s]+'))
-         |    AS BIGINT) AS n_bpe,
-         |  CAST(len($toksSql) AS BIGINT) AS n_words,
-         |  CASE WHEN len($toksSql) > 0 THEN
-         |    CAST(len(regexp_extract_all(text,
-         |      '''(?:s|t|re|ve|m|ll|d)|[a-zA-Z]+|[0-9]{1,3}|[^a-zA-Z0-9''\\s]+'))
-         |      AS DOUBLE) / len($toksSql)
-         |  END AS tokens_per_word
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "quality_score" ->
-      s"$qualityScoreSql\nORDER BY doc_id",
-
-    // char_entropy: per-codepoint-class micro-floored ln terms, BIGINT
-    // sums — the same expression association as the native
-    // graft_char_entropy expression ((1e6 · (cnt/n)) · (ln(n/cnt)/ln 2))
-    "char_entropy" ->
-      """WITH ch AS (SELECT doc_id, substr(text, i, 1) AS c FROM (
-        |  SELECT doc_id, text,
-        |         unnest(generate_series(1, len(text))) AS i
-        |  FROM documents)),
-        |cnt AS (SELECT doc_id, c, CAST(count(*) AS BIGINT) AS k
-        |        FROM ch GROUP BY 1, 2),
-        |tot AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n
-        |        FROM cnt GROUP BY doc_id),
-        |term AS (SELECT cnt.doc_id,
-        |    CAST(floor((1000000 * (CAST(k AS DOUBLE) / n))
-        |               * (ln(CAST(n AS DOUBLE) / k) / ln(2.0)))
-        |      AS BIGINT) AS t
-        |  FROM cnt JOIN tot ON tot.doc_id = cnt.doc_id)
-        |SELECT d.doc_id, CAST(len(d.text) AS BIGINT) AS n_cps,
-        |  CAST(COALESCE(s.e, 0) AS BIGINT) AS entropy_micro
-        |FROM documents d LEFT JOIN (
-        |  SELECT doc_id, sum(t) AS e FROM term GROUP BY doc_id) s
-        |  ON s.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // quality_band: percentile of the same score, (score, id) ordering
-    "quality_band" ->
-      s"""WITH qs AS ($qualityScoreSql),
-         |pr AS (SELECT doc_id, quality_score,
-         |  round(percent_rank() OVER (ORDER BY quality_score, doc_id) * 100,
-         |    6) AS pct_rank FROM qs)
-         |SELECT doc_id, quality_score, pct_rank FROM pr
-         |WHERE pct_rank >= 10 AND pct_rank <= 90
-         |ORDER BY doc_id""".stripMargin,
-
-    // quality_calibrate: per-source integer ranks over the same score,
-    // BIGINT cutoff — kept is engine-invariant
-    "quality_calibrate" ->
-      s"""WITH qs AS ($qualityScoreSql),
-         |j AS (SELECT d.doc_id, d.source, qs.quality_score
-         |      FROM documents d JOIN qs ON d.doc_id = qs.doc_id),
-         |r AS (SELECT doc_id, source, quality_score,
-         |  CAST(row_number() OVER (PARTITION BY source
-         |    ORDER BY quality_score, doc_id) AS BIGINT) AS src_rank,
-         |  CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_src
-         |  FROM j)
-         |SELECT doc_id, source, quality_score, src_rank, n_src,
-         |  src_rank > CAST(floor(n_src * 100 / 1000) AS BIGINT) AS kept
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    "lang_id" ->
-      s"""SELECT doc_id, c_en, c_fr, c_es, c_de,
-         |  CASE WHEN g = 0 THEN 'und'
-         |       WHEN c_en = g THEN 'en'
-         |       WHEN c_fr = g THEN 'fr'
-         |       WHEN c_es = g THEN 'es'
-         |       WHEN c_de = g THEN 'de'
-         |  END AS lang_pred
-         |FROM (
-         |  SELECT doc_id, c_en, c_fr, c_es, c_de,
-         |         greatest(c_en, c_fr, c_es, c_de) AS g
-         |  FROM (
-         |    SELECT doc_id,
-         |      len(list_filter(t, w -> list_contains(['the','and','of','is'], w))) AS c_en,
-         |      len(list_filter(t, w -> list_contains(['le','la','et','les'], w))) AS c_fr,
-         |      len(list_filter(t, w -> list_contains(['el','los','y','las'], w))) AS c_es,
-         |      len(list_filter(t, w -> list_contains(['der','die','und','das'], w))) AS c_de
-         |    FROM (SELECT doc_id, $toksSql AS t FROM documents)))
-         |ORDER BY doc_id""".stripMargin,
-
-    // equal-width integer bins over the observed score range; bin stats
-    // in BIGINT with the same DIV arithmetic
-    "calibration_curve" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(len(list_filter($toksSql,
-         |      w -> list_contains(['the','and','of','is'], w))) AS BIGINT) AS s,
-         |    CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT)
-         |         ELSE CAST(0 AS BIGINT) END AS y
-         |  FROM documents),
-         |b AS (SELECT min(s) AS lo, max(s) AS hi FROM sc)
-         |SELECT CAST((s - lo) * 10 // (hi - lo + 1) AS BIGINT) AS bin,
-         |  min(s) AS score_lo, max(s) AS score_hi,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(y) AS BIGINT) AS n_pos,
-         |  CAST(sum(y) * 1000 // count(*) AS BIGINT) AS pos_permille
-         |FROM sc, b GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    // Mann–Whitney AUC in BIGINT: collapse to distinct scores, cumulative
-    // negatives-below via window, wins/ties identity; same integer DIV
-    "classifier_auc" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(len(list_filter($toksSql,
-         |      w -> list_contains(['the','and','of','is'], w))) AS BIGINT) AS s,
-         |    CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT)
-         |         ELSE CAST(0 AS BIGINT) END AS y
-         |  FROM documents),
-         |g AS (SELECT s, CAST(sum(y) AS BIGINT) AS p,
-         |    CAST(sum(1 - y) AS BIGINT) AS q
-         |  FROM sc GROUP BY 1),
-         |c AS (SELECT p, q,
-         |    CAST(COALESCE(sum(q) OVER (ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS cq
-         |  FROM g),
-         |a AS (SELECT CAST(sum(p) AS BIGINT) AS n_pos,
-         |    CAST(sum(q) AS BIGINT) AS n_neg,
-         |    CAST(sum(p * q) AS BIGINT) AS n_tie_pairs,
-         |    CAST(sum(p * (2 * cq + q)) AS BIGINT) AS num
-         |  FROM c)
-         |SELECT n_pos, n_neg, n_tie_pairs,
-         |  CASE WHEN n_pos > 0 AND n_neg > 0
-         |       THEN CAST(num * 1000000 // (2 * n_pos * n_neg) AS BIGINT)
-         |  END AS auc_micro
-         |FROM a""".stripMargin,
-
-    "classifier_auc_by_source" ->
-      s"""WITH sc AS (
-         |  SELECT source AS g,
-         |    CAST(len(list_filter($toksSql,
-         |      w -> list_contains(['the','and','of','is'], w))) AS BIGINT) AS s,
-         |    CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT)
-         |         ELSE CAST(0 AS BIGINT) END AS y
-         |  FROM documents),
-         |gr AS (SELECT g, s, CAST(sum(y) AS BIGINT) AS p,
-         |    CAST(sum(1 - y) AS BIGINT) AS q
-         |  FROM sc GROUP BY 1, 2),
-         |c AS (SELECT g, p, q,
-         |    CAST(COALESCE(sum(q) OVER (PARTITION BY g ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS cq
-         |  FROM gr),
-         |a AS (SELECT g, CAST(sum(p) AS BIGINT) AS n_pos,
-         |    CAST(sum(q) AS BIGINT) AS n_neg,
-         |    CAST(sum(p * q) AS BIGINT) AS n_tie_pairs,
-         |    CAST(sum(p * (2 * cq + q)) AS BIGINT) AS num
-         |  FROM c GROUP BY g)
-         |SELECT g AS source, n_pos, n_neg, n_tie_pairs,
-         |  CASE WHEN n_pos > 0 AND n_neg > 0
-         |       THEN CAST(num * 1000000 // (2 * n_pos * n_neg) AS BIGINT)
-         |  END AS auc_micro
-         |FROM a ORDER BY source""".stripMargin,
-
-    "ks_drift" ->
-      """WITH ev AS (SELECT user_id,
-        |    CAST(floor(value * 1000) AS BIGINT) AS v FROM events),
-        |ca AS (SELECT v, CAST(count(*) AS BIGINT) AS ca FROM ev
-        |       WHERE user_id % 2 = 0 AND v IS NOT NULL GROUP BY 1),
-        |cb AS (SELECT v, CAST(count(*) AS BIGINT) AS cb FROM ev
-        |       WHERE user_id % 2 = 1 AND v IS NOT NULL GROUP BY 1),
-        |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca, 0) AS ca,
-        |        COALESCE(cb, 0) AS cb
-        |      FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |c AS (SELECT CAST(sum(ca) OVER w AS HUGEINT) AS cuma,
-        |        CAST(sum(cb) OVER w AS HUGEINT) AS cumb FROM m
-        |      WINDOW w AS (ORDER BY v
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |t AS (SELECT CAST(COALESCE(sum(ca), 0) AS BIGINT) AS n_a,
-        |        CAST(COALESCE(sum(cb), 0) AS BIGINT) AS n_b,
-        |        CAST(count(*) AS BIGINT) AS n_values FROM m),
-        |agg AS (SELECT COALESCE(max(abs(
-        |          c.cuma * t.n_b - c.cumb * t.n_a)), 0) AS dc
-        |        FROM c, t)
-        |SELECT t.n_a, t.n_b, t.n_values,
-        |  TRY_CAST(agg.dc AS BIGINT) AS d_cross,
-        |  CASE WHEN t.n_a > 0 AND t.n_b > 0 THEN
-        |    CAST(agg.dc * 1000000 // (CAST(t.n_a AS HUGEINT) * t.n_b)
-        |      AS BIGINT)
-        |  END AS d_micro
-        |FROM t, agg""".stripMargin,
-
-    "ks_drift_by_source" ->
-      """WITH ev AS (SELECT event_type AS g, user_id,
-        |    CAST(floor(value * 1000) AS BIGINT) AS v FROM events),
-        |ca AS (SELECT g, v, CAST(count(*) AS BIGINT) AS ca FROM ev
-        |       WHERE user_id % 2 = 0 AND v IS NOT NULL GROUP BY 1, 2),
-        |cb AS (SELECT g, v, CAST(count(*) AS BIGINT) AS cb FROM ev
-        |       WHERE user_id % 2 = 1 AND v IS NOT NULL GROUP BY 1, 2),
-        |m AS (SELECT COALESCE(ca.g, cb.g) AS g,
-        |        COALESCE(ca.v, cb.v) AS v,
-        |        COALESCE(ca, 0) AS ca, COALESCE(cb, 0) AS cb
-        |      FROM ca FULL OUTER JOIN cb
-        |        ON ca.g = cb.g AND ca.v = cb.v),
-        |c AS (SELECT g, CAST(sum(ca) OVER w AS HUGEINT) AS cuma,
-        |        CAST(sum(cb) OVER w AS HUGEINT) AS cumb,
-        |        CAST(sum(ca) OVER wg AS HUGEINT) AS na,
-        |        CAST(sum(cb) OVER wg AS HUGEINT) AS nb FROM m
-        |      WINDOW w AS (PARTITION BY g ORDER BY v
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |      wg AS (PARTITION BY g ROWS BETWEEN UNBOUNDED PRECEDING
-        |        AND UNBOUNDED FOLLOWING)),
-        |agg AS (SELECT g, CAST(max(na) AS BIGINT) AS n_a,
-        |        CAST(max(nb) AS BIGINT) AS n_b,
-        |        CAST(count(*) AS BIGINT) AS n_values,
-        |        COALESCE(max(abs(cuma * nb - cumb * na)), 0) AS dc
-        |        FROM c GROUP BY g)
-        |SELECT g AS event_type, n_a, n_b, n_values,
-        |  TRY_CAST(dc AS BIGINT) AS d_cross,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    CAST(dc * 1000000 // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT)
-        |  END AS d_micro
-        |FROM agg ORDER BY event_type""".stripMargin,
-
-    // chi2_drift twin: same exact integer cells, same per-cell floor
-    // then micro-floor quantization (HUGEINT mirrors DECIMAL(38,0))
-    "chi2_drift" ->
-      """WITH d AS (SELECT doc_id, lang FROM documents
-        |           WHERE lang IS NOT NULL),
-        |ca AS (SELECT lang AS c, CAST(count(*) AS HUGEINT) AS ca FROM d
-        |       WHERE doc_id % 2 = 0 GROUP BY 1),
-        |cb AS (SELECT lang AS c, CAST(count(*) AS HUGEINT) AS cb FROM d
-        |       WHERE doc_id % 2 = 1 GROUP BY 1),
-        |m AS (SELECT COALESCE(ca.c, cb.c) AS c,
-        |        COALESCE(ca, CAST(0 AS HUGEINT)) AS ca,
-        |        COALESCE(cb, CAST(0 AS HUGEINT)) AS cb
-        |      FROM ca FULL OUTER JOIN cb ON ca.c = cb.c),
-        |t AS (SELECT CAST(COALESCE(sum(ca), 0) AS HUGEINT) AS na,
-        |        CAST(COALESCE(sum(cb), 0) AS HUGEINT) AS nb,
-        |        CAST(count(*) AS BIGINT) AS n_cells FROM m),
-        |s AS (SELECT COALESCE(sum(
-        |        ((m.ca * t.nb - m.cb * t.na) * (m.ca * t.nb - m.cb * t.na))
-        |          // (m.ca + m.cb)), 0) AS ss
-        |      FROM m, t)
-        |SELECT CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-        |  t.n_cells,
-        |  CASE WHEN t.na > 0 AND t.nb > 0 THEN
-        |    CAST((s.ss * 1000000) // (t.na * t.nb) AS BIGINT)
-        |  END AS chi2_micro
-        |FROM t, s""".stripMargin,
-
-    // chi2_cells twin: same merged cells and per-cell floored term,
-    // emitted per category instead of summed
-    "chi2_cells" ->
-      """WITH d AS (SELECT doc_id, lang FROM documents
-        |           WHERE lang IS NOT NULL),
-        |ca AS (SELECT lang AS c, CAST(count(*) AS HUGEINT) AS ca FROM d
-        |       WHERE doc_id % 2 = 0 GROUP BY 1),
-        |cb AS (SELECT lang AS c, CAST(count(*) AS HUGEINT) AS cb FROM d
-        |       WHERE doc_id % 2 = 1 GROUP BY 1),
-        |m AS (SELECT COALESCE(ca.c, cb.c) AS c,
-        |        COALESCE(ca, CAST(0 AS HUGEINT)) AS ca,
-        |        COALESCE(cb, CAST(0 AS HUGEINT)) AS cb
-        |      FROM ca FULL OUTER JOIN cb ON ca.c = cb.c),
-        |t AS (SELECT CAST(COALESCE(sum(ca), 0) AS HUGEINT) AS na,
-        |        CAST(COALESCE(sum(cb), 0) AS HUGEINT) AS nb FROM m)
-        |SELECT m.c AS cat, CAST(m.ca AS BIGINT) AS n_a_cat,
-        |  CAST(m.cb AS BIGINT) AS n_b_cat,
-        |  CASE WHEN t.na > 0 AND t.nb > 0 THEN
-        |    CAST((((m.ca * t.nb - m.cb * t.na) *
-        |           (m.ca * t.nb - m.cb * t.na) // (m.ca + m.cb))
-        |          * 1000000) // (t.na * t.nb) AS BIGINT)
-        |  END AS contrib_micro
-        |FROM m, t ORDER BY cat""".stripMargin,
-
-    // chi2_drift_by_source twin: per-group totals joined back, same
-    // per-cell arithmetic within each group
-    "chi2_drift_by_source" ->
-      """WITH d AS (SELECT doc_id, source, lang FROM documents
-        |           WHERE lang IS NOT NULL),
-        |ca AS (SELECT source AS g, lang AS c,
-        |         CAST(count(*) AS HUGEINT) AS ca FROM d
-        |       WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-        |cb AS (SELECT source AS g, lang AS c,
-        |         CAST(count(*) AS HUGEINT) AS cb FROM d
-        |       WHERE doc_id % 2 = 1 GROUP BY 1, 2),
-        |m AS (SELECT COALESCE(ca.g, cb.g) AS g, COALESCE(ca.c, cb.c) AS c,
-        |        COALESCE(ca, CAST(0 AS HUGEINT)) AS ca,
-        |        COALESCE(cb, CAST(0 AS HUGEINT)) AS cb
-        |      FROM ca FULL OUTER JOIN cb
-        |        ON ca.g = cb.g AND ca.c = cb.c),
-        |t AS (SELECT g, CAST(sum(ca) AS HUGEINT) AS na,
-        |        CAST(sum(cb) AS HUGEINT) AS nb FROM m GROUP BY g),
-        |s AS (SELECT m.g, CAST(count(*) AS BIGINT) AS n_cells,
-        |        max(t.na) AS na, max(t.nb) AS nb,
-        |        COALESCE(sum(
-        |          ((m.ca * t.nb - m.cb * t.na) *
-        |           (m.ca * t.nb - m.cb * t.na)) // (m.ca + m.cb)), 0) AS ss
-        |      FROM m JOIN t ON m.g = t.g GROUP BY m.g)
-        |SELECT g AS source, CAST(na AS BIGINT) AS n_a,
-        |  CAST(nb AS BIGINT) AS n_b, n_cells,
-        |  CASE WHEN na > 0 AND nb > 0 THEN
-        |    CAST((ss * 1000000) // (na * nb) AS BIGINT)
-        |  END AS chi2_micro
-        |FROM s ORDER BY source""".stripMargin,
-
-    "annotator_agreement" ->
-      """WITH l AS (SELECT
-        |    CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END AS r1,
-        |    CASE WHEN length(text) >= 280 THEN 'long' ELSE 'short' END AS r2
-        |  FROM documents),
-        |cell AS (SELECT r1, r2, CAST(count(*) AS BIGINT) AS n
-        |         FROM l GROUP BY 1, 2),
-        |m1 AS (SELECT r1, CAST(sum(n) AS BIGINT) AS m1 FROM cell GROUP BY 1),
-        |m2 AS (SELECT r2, CAST(sum(n) AS BIGINT) AS m2 FROM cell GROUP BY 1),
-        |s AS (SELECT COALESCE(sum(CAST(m1.m1 AS HUGEINT) * m2.m2), 0)
-        |        AS S FROM m1 JOIN m2 ON m1.r1 = m2.r2),
-        |t AS (SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS n_items,
-        |        CAST(COALESCE(sum(CASE WHEN r1 = r2 THEN n ELSE 0 END), 0)
-        |          AS BIGINT) AS n_agree FROM cell),
-        |r AS (SELECT t.n_items, t.n_agree,
-        |        CAST(t.n_agree AS HUGEINT) * t.n_items - s.S AS numh,
-        |        CAST(t.n_items AS HUGEINT) * t.n_items - s.S AS denh
-        |      FROM t, s)
-        |SELECT n_items, n_agree,
-        |  CASE WHEN n_items > 0
-        |       THEN CAST(CAST(n_agree AS HUGEINT) * 1000000 // n_items
-        |         AS BIGINT)
-        |  END AS po_micro,
-        |  TRY_CAST(numh AS BIGINT) AS kappa_num,
-        |  TRY_CAST(denh AS BIGINT) AS kappa_den,
-        |  CASE WHEN denh <> 0 THEN
-        |    CAST(numh * 1000000 // denh -
-        |      (CASE WHEN numh < 0 AND (numh * 1000000) % denh <> 0
-        |       THEN 1 ELSE 0 END) AS BIGINT)
-        |  END AS kappa_micro
-        |FROM r""".stripMargin,
-
-    "k_anonymity" ->
-      """WITH g AS (SELECT event_type, user_id % 200 AS cohort,
-        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-        |a AS (SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(sum(CASE WHEN n < 8 THEN 1 ELSE 0 END), 0)
-        |      AS BIGINT) AS n_below_k,
-        |    CAST(COALESCE(sum(CASE WHEN n < 8 THEN n ELSE 0 END), 0)
-        |      AS BIGINT) AS rows_at_risk FROM g)
-        |SELECT n_rows, n_groups, n_below_k, rows_at_risk,
-        |  CASE WHEN n_rows > 0
-        |       THEN CAST(rows_at_risk * 1000 // n_rows AS BIGINT)
-        |  END AS risk_permille
-        |FROM a""".stripMargin,
-
-    "l_diversity" ->
-      """WITH g AS (SELECT lang, n_chars // 100 AS len_band,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT source) AS BIGINT) AS d
-        |  FROM documents GROUP BY 1, 2),
-        |a AS (SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(sum(CASE WHEN d < 3 THEN 1 ELSE 0 END), 0)
-        |      AS BIGINT) AS n_below_l,
-        |    CAST(COALESCE(sum(CASE WHEN d < 3 THEN n ELSE 0 END), 0)
-        |      AS BIGINT) AS rows_at_risk FROM g)
-        |SELECT n_rows, n_groups, n_below_l, rows_at_risk,
-        |  CASE WHEN n_rows > 0
-        |       THEN CAST(rows_at_risk * 1000 // n_rows AS BIGINT)
-        |  END AS risk_permille
-        |FROM a""".stripMargin,
-
-    // t_closeness: the same integer-exact variational-distance identity
-    // as the Scala twin — per class Σ|n_cs·N − n_s·N_c| over present
-    // sources plus (N − Σ_present n_s)·N_c for the absent remainder,
-    // dist_micro = num·1e6 // (2·N_c·N) in HUGEINT, no doubles anywhere
-    "t_closeness" ->
-      """WITH cs AS (SELECT lang, n_chars // 100 AS len_band, source,
-        |    CAST(count(*) AS BIGINT) AS ncs
-        |  FROM documents GROUP BY 1, 2, 3),
-        |g AS (SELECT source, CAST(sum(ncs) AS BIGINT) AS ns
-        |      FROM cs GROUP BY source),
-        |tot AS (SELECT CAST(COALESCE(sum(ns), 0) AS BIGINT) AS N FROM g),
-        |cw AS (SELECT cs.*, CAST(sum(ncs) OVER (
-        |         PARTITION BY lang, len_band) AS BIGINT) AS nc FROM cs),
-        |cls AS (SELECT cw.lang, cw.len_band,
-        |    max(cw.nc) AS nc, max(tot.N) AS N,
-        |    sum(abs(CAST(cw.ncs AS HUGEINT) * tot.N
-        |            - CAST(g.ns AS HUGEINT) * cw.nc)) AS pres,
-        |    CAST(sum(g.ns) AS BIGINT) AS gsum
-        |  FROM cw JOIN g USING (source) CROSS JOIN tot
-        |  GROUP BY 1, 2),
-        |d AS (SELECT nc,
-        |    CAST((pres + CAST(N - gsum AS HUGEINT) * nc) * 1000000
-        |         // (2 * CAST(nc AS HUGEINT) * N) AS BIGINT) AS dist_micro
-        |  FROM cls)
-        |SELECT CAST(COALESCE(sum(nc), 0) AS BIGINT) AS n_rows,
-        |  CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(COALESCE(sum(CASE WHEN dist_micro > 450000 THEN 1
-        |    ELSE 0 END), 0) AS BIGINT) AS n_above_t,
-        |  CAST(COALESCE(sum(CASE WHEN dist_micro > 450000 THEN nc
-        |    ELSE 0 END), 0) AS BIGINT) AS rows_at_risk,
-        |  CASE WHEN COALESCE(sum(nc), 0) > 0
-        |       THEN CAST(COALESCE(sum(CASE WHEN dist_micro > 450000
-        |         THEN nc ELSE 0 END), 0) * 1000 // sum(nc) AS BIGINT)
-        |  END AS risk_permille,
-        |  CAST(max(dist_micro) AS BIGINT) AS max_dist_micro
-        |FROM d""".stripMargin,
-
-    // privacy_audit: the combined k/l/t gate over the same counts frame
-    // — k-anonymity (class size), l-diversity (distinct sensitive), and
-    // the t-closeness distance of the t_closeness oracle, one row
-    "privacy_audit" ->
-      """WITH cs AS (SELECT lang, n_chars // 100 AS len_band, source,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1, 2, 3),
-        |g AS (SELECT source, CAST(sum(n) AS BIGINT) AS ns
-        |      FROM cs GROUP BY source),
-        |tot AS (SELECT CAST(COALESCE(sum(ns), 0) AS BIGINT) AS N FROM g),
-        |cw AS (SELECT cs.*, CAST(sum(n) OVER (
-        |         PARTITION BY lang, len_band) AS BIGINT) AS nc FROM cs),
-        |cls AS (SELECT cw.lang, cw.len_band,
-        |    max(cw.nc) AS nc,
-        |    CAST(count(DISTINCT cw.source) AS BIGINT) AS dv,
-        |    max(tot.N) AS N,
-        |    sum(abs(CAST(cw.n AS HUGEINT) * tot.N
-        |            - CAST(g.ns AS HUGEINT) * cw.nc)) AS pres,
-        |    CAST(sum(g.ns) AS BIGINT) AS gsum
-        |  FROM cw JOIN g USING (source) CROSS JOIN tot
-        |  GROUP BY 1, 2),
-        |d AS (SELECT nc, dv,
-        |    CAST((pres + CAST(N - gsum AS HUGEINT) * nc) * 1000000
-        |         // (2 * CAST(nc AS HUGEINT) * N) AS BIGINT) AS dist_micro
-        |  FROM cls)
-        |SELECT CAST(COALESCE(sum(nc), 0) AS BIGINT) AS n_rows,
-        |  CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(COALESCE(sum(CASE WHEN nc < 8 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS n_below_k,
-        |  CAST(COALESCE(sum(CASE WHEN nc < 8 THEN nc ELSE 0 END), 0)
-        |    AS BIGINT) AS rows_below_k,
-        |  CAST(COALESCE(sum(CASE WHEN dv < 3 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS n_below_l,
-        |  CAST(COALESCE(sum(CASE WHEN dv < 3 THEN nc ELSE 0 END), 0)
-        |    AS BIGINT) AS rows_below_l,
-        |  CAST(COALESCE(sum(CASE WHEN dist_micro > 450000 THEN 1
-        |    ELSE 0 END), 0) AS BIGINT) AS n_above_t,
-        |  CAST(COALESCE(sum(CASE WHEN dist_micro > 450000 THEN nc
-        |    ELSE 0 END), 0) AS BIGINT) AS rows_above_t,
-        |  CAST(max(dist_micro) AS BIGINT) AS max_dist_micro
-        |FROM d""".stripMargin,
-
-    "fingerprint" ->
-      s"""SELECT doc_id,
-         |  ${polyHashSql("text")} AS fp_text,
-         |  ${polyHashSql("vocab")} AS fp_vocab
-         |FROM (SELECT doc_id, text,
-         |        array_to_string(list_sort(list_distinct($toksSql)), ' ') AS vocab
-         |      FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "exact_dedup" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    // fuzzy_join is verify-exact (the prefix filter is complete, the
-    // levenshtein verify exact), so the oracle is the brute-force join
-    "fuzzy_join" ->
-      """SELECT a.c_custkey AS doc_a, b.c_custkey AS doc_b,
-        |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-        |WHERE abs(length(a.c_name) - length(b.c_name)) <= 1
-        |  AND levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // dedup_lines: corpus-first-occurrence per word segment (sep = ' '),
-    // reassembled per doc; first = lowest (doc_id, position)
-    "dedup_lines" ->
-      """WITH segs AS (
-        |  SELECT doc_id,
-        |    generate_subscripts(string_split(text, ' '), 1) - 1 AS pos,
-        |    unnest(string_split(text, ' ')) AS seg
-        |  FROM documents),
-        |marked AS (
-        |  SELECT doc_id, pos, seg,
-        |    row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        |  FROM segs)
-        |SELECT doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_segments,
-        |  CAST(COALESCE(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END), 0) AS BIGINT)
-        |    AS n_kept,
-        |  COALESCE(string_agg(CASE WHEN rn = 1 THEN seg END, ' ' ORDER BY pos),
-        |    '') AS text_kept
-        |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // duplicated_spans: since round 15 the contract is the actual
-    // WINDOW TEXT (matching the rewrite twin dedup_spans — the Spark
-    // side uses an xxhash64 candidate filter and verifies text), so
-    // the oracle groups presence-in->=2-docs by the window string
-    "duplicated_spans" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |wins AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> array_to_string(array_slice(t, j, j + 7), ' '))
-         |    ELSE CAST([] AS VARCHAR[]) END) AS wt
-         |  FROM toks),
-         |dup AS (SELECT wt FROM wins GROUP BY wt
-         |        HAVING min(doc_id) <> max(doc_id)),
-         |stats AS (
-         |  SELECT w.doc_id, count(*) AS n_windows,
-         |    sum(CASE WHEN d.wt IS NOT NULL THEN 1 ELSE 0 END) AS dup_windows
-         |  FROM wins w LEFT JOIN dup d ON w.wt = d.wt GROUP BY w.doc_id)
-         |SELECT tk.doc_id,
-         |  CAST(COALESCE(s.n_windows, 0) AS BIGINT) AS n_windows,
-         |  CAST(COALESCE(s.dup_windows, 0) AS BIGINT) AS dup_windows,
-         |  CASE WHEN s.n_windows > 0
-         |    THEN round(CAST(s.dup_windows AS DOUBLE) / s.n_windows, 6)
-         |    ELSE 0.0 END AS dup_fraction
-         |FROM toks tk LEFT JOIN stats s ON tk.doc_id = s.doc_id
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    // dedup_spans: unlike detection, the REWRITE's contract is the
-    // actual WINDOW TEXT (the Spark side uses hashes only as a
-    // candidate filter and verifies text before removing) — so the
-    // oracle groups ownership by the window string itself: lowest doc
-    // id owns a duplicated window text, every other holder drops the
-    // covered 1-based positions (DuckDB list lambdas index 1-based)
-    "dedup_spans" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |wins AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> {'i': j,
-         |              'w': array_to_string(array_slice(t, j, j + 7), ' ')})
-         |    ELSE CAST([] AS STRUCT(i BIGINT, w VARCHAR)[]) END) AS s
-         |  FROM toks),
-         |w2 AS (SELECT doc_id, s.i AS i, s.w AS w FROM wins),
-         |own AS (SELECT w, min(doc_id) AS own FROM w2 GROUP BY w
-         |        HAVING min(doc_id) <> max(doc_id)),
-         |rem AS (SELECT w2.doc_id,
-         |    list(DISTINCT p) AS rem
-         |  FROM w2 JOIN own ON own.w = w2.w AND w2.doc_id <> own.own,
-         |    unnest(generate_series(w2.i, w2.i + 7)) AS u(p)
-         |  GROUP BY w2.doc_id)
-         |SELECT tk.doc_id,
-         |  CAST(len(tk.t) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(len(r.rem), 0) AS BIGINT) AS n_removed,
-         |  COALESCE(array_to_string(list_filter(tk.t, (tok, j) ->
-         |    NOT list_contains(COALESCE(r.rem, CAST([] AS BIGINT[])), j)),
-         |    ' '), '') AS clean_text
-         |FROM toks tk LEFT JOIN rem r ON r.doc_id = tk.doc_id
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    // dup_span_runs: the dedup_spans removal set per doc, reduced to
-    // the LONGEST consecutive position run (gaps-and-islands:
-    // p - row_number() is constant within a run)
-    "dup_span_runs" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |wins AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> {'i': j,
-         |              'w': array_to_string(array_slice(t, j, j + 7), ' ')})
-         |    ELSE CAST([] AS STRUCT(i BIGINT, w VARCHAR)[]) END) AS s
-         |  FROM toks),
-         |w2 AS (SELECT doc_id, s.i AS i, s.w AS w FROM wins),
-         |own AS (SELECT w, min(doc_id) AS own FROM w2 GROUP BY w
-         |        HAVING min(doc_id) <> max(doc_id)),
-         |rp AS (SELECT DISTINCT w2.doc_id, p
-         |  FROM w2 JOIN own ON own.w = w2.w AND w2.doc_id <> own.own,
-         |    unnest(generate_series(w2.i, w2.i + 7)) AS u(p)),
-         |runs AS (SELECT doc_id, count(*) AS len FROM (
-         |    SELECT doc_id, p,
-         |      p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS g
-         |    FROM rp) GROUP BY doc_id, g),
-         |best AS (SELECT doc_id, max(len) AS max_dup_run,
-         |    sum(len) AS dup_positions
-         |  FROM runs GROUP BY doc_id)
-         |SELECT tk.doc_id,
-         |  CAST(len(tk.t) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(b.dup_positions, 0) AS BIGINT) AS dup_positions,
-         |  CAST(COALESCE(b.max_dup_run, 0) AS BIGINT) AS max_dup_run
-         |FROM toks tk LEFT JOIN best b ON b.doc_id = tk.doc_id
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    // dedup_spans_intra: within ONE document, a window text's first
-    // start owns; every later occurrence drops its covered positions
-    "dedup_spans_intra" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |wins AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> {'i': j,
-         |              'w': array_to_string(array_slice(t, j, j + 7), ' ')})
-         |    ELSE CAST([] AS STRUCT(i BIGINT, w VARCHAR)[]) END) AS s
-         |  FROM toks),
-         |w2 AS (SELECT doc_id, s.i AS i, s.w AS w FROM wins),
-         |fi AS (SELECT doc_id, w, min(i) AS fi FROM w2
-         |       GROUP BY doc_id, w),
-         |rem AS (SELECT w2.doc_id,
-         |    list(DISTINCT p) AS rem
-         |  FROM w2 JOIN fi ON fi.doc_id = w2.doc_id AND fi.w = w2.w
-         |    AND w2.i <> fi.fi,
-         |    unnest(generate_series(w2.i, w2.i + 7)) AS u(p)
-         |  GROUP BY w2.doc_id)
-         |SELECT tk.doc_id,
-         |  CAST(len(tk.t) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(len(r.rem), 0) AS BIGINT) AS n_removed,
-         |  COALESCE(array_to_string(list_filter(tk.t, (tok, j) ->
-         |    NOT list_contains(COALESCE(r.rem, CAST([] AS BIGINT[])), j)),
-         |    ' '), '') AS clean_text
-         |FROM toks tk LEFT JOIN rem r ON r.doc_id = tk.doc_id
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    // dedup_spans_full: the intra chain feeding the cross chain — the
-    // same composition as the Spark operator (clean within, then dedup
-    // across). The intermediate token list is kept as a list (Spark's
-    // whitespace re-tokenization of a single-space join is the
-    // identity on it).
-    "dedup_spans_full" ->
-      s"""WITH toks0 AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |wins0 AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> {'i': j,
-         |              'w': array_to_string(array_slice(t, j, j + 7), ' ')})
-         |    ELSE CAST([] AS STRUCT(i BIGINT, w VARCHAR)[]) END) AS s
-         |  FROM toks0),
-         |w20 AS (SELECT doc_id, s.i AS i, s.w AS w FROM wins0),
-         |fi AS (SELECT doc_id, w, min(i) AS fi FROM w20
-         |       GROUP BY doc_id, w),
-         |rem0 AS (SELECT w20.doc_id,
-         |    list(DISTINCT p) AS rem
-         |  FROM w20 JOIN fi ON fi.doc_id = w20.doc_id AND fi.w = w20.w
-         |    AND w20.i <> fi.fi,
-         |    unnest(generate_series(w20.i, w20.i + 7)) AS u(p)
-         |  GROUP BY w20.doc_id),
-         |intra AS (SELECT tk.doc_id,
-         |    CAST(len(tk.t) AS BIGINT) AS n_tokens,
-         |    CAST(COALESCE(len(r.rem), 0) AS BIGINT) AS n_removed_intra,
-         |    list_filter(tk.t, (tok, j) ->
-         |      NOT list_contains(COALESCE(r.rem, CAST([] AS BIGINT[])), j))
-         |      AS t
-         |  FROM toks0 tk LEFT JOIN rem0 r ON r.doc_id = tk.doc_id),
-         |wins AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN
-         |      list_transform(generate_series(1, len(t) - 7),
-         |        j -> {'i': j,
-         |              'w': array_to_string(array_slice(t, j, j + 7), ' ')})
-         |    ELSE CAST([] AS STRUCT(i BIGINT, w VARCHAR)[]) END) AS s
-         |  FROM intra),
-         |w2 AS (SELECT doc_id, s.i AS i, s.w AS w FROM wins),
-         |own AS (SELECT w, min(doc_id) AS own FROM w2 GROUP BY w
-         |        HAVING min(doc_id) <> max(doc_id)),
-         |rem AS (SELECT w2.doc_id,
-         |    list(DISTINCT p) AS rem
-         |  FROM w2 JOIN own ON own.w = w2.w AND w2.doc_id <> own.own,
-         |    unnest(generate_series(w2.i, w2.i + 7)) AS u(p)
-         |  GROUP BY w2.doc_id)
-         |SELECT it.doc_id, it.n_tokens, it.n_removed_intra,
-         |  CAST(COALESCE(len(r.rem), 0) AS BIGINT) AS n_removed_cross,
-         |  COALESCE(array_to_string(list_filter(it.t, (tok, j) ->
-         |    NOT list_contains(COALESCE(r.rem, CAST([] AS BIGINT[])), j)),
-         |    ' '), '') AS clean_text
-         |FROM intra it LEFT JOIN rem r ON r.doc_id = it.doc_id
-         |ORDER BY it.doc_id""".stripMargin,
-
-    "ngram_jaccard_exact" -> jaccardPairsSql,
-    "minhash_lsh"         -> jaccardPairsSql,
-    "ppjoin"              -> jaccardPairsSql,
-
-    // dedup_recall: both pair frames equal the exact Jaccard set at this
-    // SF (minhash_lsh's own oracle IS jaccardPairsSql), so all three
-    // counts are the exact-pair count and recall = precision = 1.0
-    "dedup_recall" ->
-      s"""WITH $jaccardCtes,
-         |n AS (SELECT count(*) AS c FROM pairs)
-         |SELECT CAST((SELECT c FROM n) AS BIGINT) AS n_exact,
-         |  CAST((SELECT c FROM n) AS BIGINT) AS n_approx,
-         |  CAST((SELECT c FROM n) AS BIGINT) AS n_hit,
-         |  CASE WHEN (SELECT c FROM n) > 0 THEN 1.0 END AS recall,
-         |  CASE WHEN (SELECT c FROM n) > 0 THEN 1.0 END AS precision""".stripMargin,
-    "pagerank"            -> pageRankSql,
-
-    // triangles with corners x < y < z enumerated exactly once from the
-    // canonical (doc_a < doc_b) pair list, then fanned out to corners
-    "triangle_count" ->
-      s"""WITH $jaccardCtes,
-         |tri AS (SELECT p1.doc_a AS x, p1.doc_b AS y, p2.doc_b AS z
-         |  FROM pairs p1
-         |  JOIN pairs p2 ON p2.doc_a = p1.doc_b
-         |  JOIN pairs p3 ON p3.doc_a = p1.doc_a AND p3.doc_b = p2.doc_b),
-         |tn AS (SELECT x AS n FROM tri UNION ALL SELECT y FROM tri
-         |  UNION ALL SELECT z FROM tri),
-         |tc AS (SELECT n, CAST(count(*) AS BIGINT) AS t FROM tn GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(tc.t, CAST(0 AS BIGINT)) AS triangles
-         |FROM documents d LEFT JOIN tc ON d.doc_id = tc.n
-         |ORDER BY doc_id""".stripMargin,
-    "simhash"             -> simhashSql(cap = None),
-    "simhash_capped"      -> simhashSql(cap = Some(64)),
-
-    // the default (DF-capped) path: candidates only from shingles with
-    // df <= 20, but the Jaccard denominator uses PRE-CAP set sizes (matches
-    // Dedup.ngramJaccardPairs cap semantics — precision preserved, recall
-    // traded)
-    "ngram_jaccard" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |dfreq AS (SELECT s, count(*) AS c FROM sh GROUP BY s),
-         |capped AS (SELECT sh.doc_id, sh.s FROM sh
-         |  JOIN dfreq ON sh.s = dfreq.s WHERE dfreq.c <= 20),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM capped a JOIN capped b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b FROM inter
-         |JOIN sizes sa ON inter.doc_a = sa.doc_id
-         |JOIN sizes sb ON inter.doc_b = sb.doc_id
-         |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // containment_pairs twin: same capped intersections + pre-cap sizes,
-    // each direction tested against its own inner size
-    "containment_pairs" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |dfreq AS (SELECT s, count(*) AS c FROM sh GROUP BY s),
-         |capped AS (SELECT sh.doc_id, sh.s FROM sh
-         |  JOIN dfreq ON sh.s = dfreq.s WHERE dfreq.c <= 20),
-         |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-         |  FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS da, b.doc_id AS db,
-         |    CAST(count(*) AS BIGINT) AS i
-         |  FROM capped a JOIN capped b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |dirs AS (
-         |  SELECT da AS doc_inner, db AS doc_outer, i, sa.sz AS szi
-         |  FROM inter JOIN sizes sa ON inter.da = sa.doc_id
-         |  UNION ALL
-         |  SELECT db AS doc_inner, da AS doc_outer, i, sb.sz AS szi
-         |  FROM inter JOIN sizes sb ON inter.db = sb.doc_id)
-         |SELECT doc_inner, doc_outer,
-         |  CAST(i * 1000 // szi AS BIGINT) AS containment_permille
-         |FROM dirs
-         |WHERE CAST(i AS DOUBLE) >= 0.8 * szi
-         |ORDER BY doc_inner, doc_outer""".stripMargin,
-
-    // containment_exact twin: UNCAPPED intersections (the Spark side's
-    // prefix filter is lossless, so the ground truth is the full join)
-    "containment_exact" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-         |  FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS da, b.doc_id AS db,
-         |    CAST(count(*) AS BIGINT) AS i
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |dirs AS (
-         |  SELECT da AS doc_inner, db AS doc_outer, i, sa.sz AS szi
-         |  FROM inter JOIN sizes sa ON inter.da = sa.doc_id
-         |  UNION ALL
-         |  SELECT db AS doc_inner, da AS doc_outer, i, sb.sz AS szi
-         |  FROM inter JOIN sizes sb ON inter.db = sb.doc_id)
-         |SELECT doc_inner, doc_outer,
-         |  CAST(i * 1000 // szi AS BIGINT) AS containment_permille
-         |FROM dirs
-         |WHERE CAST(i AS DOUBLE) >= 0.8 * szi
-         |ORDER BY doc_inner, doc_outer""".stripMargin,
-
-    // incremental ingest: sign-once corpus index + per-batch banding,
-    // verified by the signature-estimated Jaccard — the whole chain is
-    // closed-form and recomputed here
-    "incremental_neardup" -> incrementalNearDupSql,
-
-    // identical contract through the persisted bucketed index
-    "incremental_neardup_indexed" -> incrementalNearDupSql,
-
-    "embedding_near_dup" -> embeddingNearDupSql,
-
-    // incremental embedding near-dup: signatures are the closed-form
-    // 63-plane sign packing, banding is pigeonhole-exact (21 bands >
-    // H=20), so the oracle is the DIRECT quadratic hamming join over
-    // recomputed signatures — the banded candidate path must equal it
-    "incremental_embedding_neardup" -> incrementalEmbeddingNearDupSql,
-
-    // identical contract through the persisted bucketed index
-    "incremental_embedding_neardup_indexed" ->
-      incrementalEmbeddingNearDupSql,
-
-    // banded production twin: same closed-form plane/bucket machinery at
-    // the threshold-derived 3 x 21 layout (Similarity.lshLayout(0.4)),
-    // exact-cosine verified — fully hash-checked like hyperplane_ann
-    "embedding_near_dup_lsh" ->
-      hyperplaneAnnSql(cap = None, numPlanes = 3, numTables = 21),
-
-    // tight-contract exact twin over the planted recall-calibration
-    // corpus (closed-form perturbed clones, recomputed here) — the
-    // quadratic ground truth, oracle-only
-    "embedding_near_dup_tight" ->
-      s"""WITH $plantedCorpusCte
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM corpus)
-         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-         |FROM n a JOIN n b ON a.vec_id < b.vec_id
-         |WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.9
-         |ORDER BY vec_a, vec_b""".stripMargin,
-
-    // benched tight banded headliner: threshold-derived 9 x 7 layout
-    // (lshLayout(0.9)) + occupancy-relative bucket cap, all recomputed
-    // closed-form — hash-checked including the cap behavior
-    "embedding_near_dup_lsh_tight" ->
-      hyperplaneAnnSql(cap = None, numPlanes = 9, numTables = 7,
-        threshold = 0.9, source = "corpus", extraCte = plantedCorpusCte,
-        loadMult = Some(8)),
-
-    // recall gate of the tight banded path vs its exact twin — both
-    // sides deterministic, metrics hash-checked; oracle-only
-    "embedding_near_dup_tight_recall" ->
-      s"""WITH approx AS (SELECT * FROM (
-         |${hyperplaneAnnSql(cap = None, numPlanes = 9, numTables = 7,
-             threshold = 0.9, source = "corpus", extraCte = plantedCorpusCte,
-             loadMult = Some(8))})),
-         |ex AS (SELECT * FROM (
-         |WITH $plantedCorpusCte
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM corpus)
-         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-         |FROM n a JOIN n b ON a.vec_id < b.vec_id
-         |WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.9)),
-         |hit AS (SELECT count(*) AS c FROM approx a JOIN ex e
-         |  ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b)
-         |SELECT
-         |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |  CAST((SELECT count(*) FROM approx) AS BIGINT) AS n_approx,
-         |  CAST((SELECT c FROM hit) AS BIGINT) AS n_hit,
-         |  CASE WHEN (SELECT count(*) FROM ex) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM ex)
-         |  END AS recall,
-         |  CASE WHEN (SELECT count(*) FROM approx) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM approx)
-         |  END AS precision""".stripMargin,
-
-    // recall gate of the banded twin vs the exact quadratic pair set —
-    // both sides deterministic, so the metrics are hash-checked.
-    // Oracle-only (contains the O(n²) side by definition).
-    "embedding_near_dup_recall" ->
-      s"""WITH approx AS (SELECT * FROM (
-         |${hyperplaneAnnSql(cap = None, numPlanes = 3, numTables = 21)})),
-         |ex AS (SELECT * FROM ($embeddingNearDupSql)),
-         |hit AS (SELECT count(*) AS c FROM approx a JOIN ex e
-         |  ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b)
-         |SELECT
-         |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |  CAST((SELECT count(*) FROM approx) AS BIGINT) AS n_approx,
-         |  CAST((SELECT c FROM hit) AS BIGINT) AS n_hit,
-         |  CASE WHEN (SELECT count(*) FROM ex) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM ex)
-         |  END AS recall,
-         |  CASE WHEN (SELECT count(*) FROM approx) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM approx)
-         |  END AS precision""".stripMargin,
-
-    // ann_recall: both pair sets are deterministic (closed-form planes +
-    // exact cosine), so the recall/precision metrics themselves are
-    // hash-checked. Oracle-only like embedding_near_dup — the exact side
-    // is quadratic and must never be benched.
-    "ann_recall" ->
-      s"""WITH approx AS (SELECT * FROM (${hyperplaneAnnSql(cap = Some(48))})),
-         |ex AS (SELECT * FROM ($embeddingNearDupSql)),
-         |hit AS (SELECT count(*) AS c FROM approx a JOIN ex e
-         |  ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b)
-         |SELECT
-         |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |  CAST((SELECT count(*) FROM approx) AS BIGINT) AS n_approx,
-         |  CAST((SELECT c FROM hit) AS BIGINT) AS n_hit,
-         |  CASE WHEN (SELECT count(*) FROM ex) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM ex)
-         |  END AS recall,
-         |  CASE WHEN (SELECT count(*) FROM approx) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM approx)
-         |  END AS precision""".stripMargin,
-
-    // self-kNN both directions from the same ranked CTE, kept only when
-    // reciprocal; ties broken by neighbor id exactly as the Spark window.
-    // Oracle-only from round 9: the benched headliner is mutual_knn_ivf.
-    "mutual_knn" -> mutualKnnSql,
-
-    // IVF-fed twin: probes/cells/ranking all closed-form (the ivf_topk
-    // CTE chain as self-kNN), so the approximate pair set is hash-checked
-    "mutual_knn_ivf" -> mutualKnnIvfSql,
-
-    // recall gate for the IVF feed vs the exact quadratic twin — both
-    // pair sets deterministic, so the metrics themselves are hash-checked.
-    // Oracle-only (contains the exact side by definition).
-    "mutual_knn_recall" ->
-      s"""WITH approx AS (SELECT * FROM ($mutualKnnIvfSql)),
-         |ex AS (SELECT * FROM ($mutualKnnSql)),
-         |hit AS (SELECT count(*) AS c FROM approx a JOIN ex e
-         |  ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b)
-         |SELECT
-         |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |  CAST((SELECT count(*) FROM approx) AS BIGINT) AS n_approx,
-         |  CAST((SELECT c FROM hit) AS BIGINT) AS n_hit,
-         |  CASE WHEN (SELECT count(*) FROM ex) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM ex)
-         |  END AS recall,
-         |  CASE WHEN (SELECT count(*) FROM approx) > 0 THEN
-         |    CAST((SELECT c FROM hit) AS DOUBLE) / (SELECT count(*) FROM approx)
-         |  END AS precision""".stripMargin,
-
-    "topk_cosine" ->
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-         |               c.vec_id) AS rank
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 10)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // hard_negatives: the topk_cosine oracle with the label-mismatch
-    // predicate in the join; rank-only output keeps the row integer-exact
-    "hard_negatives" ->
-      s"""WITH n AS (SELECT vec_id, label, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings)
-         |SELECT anchor_id, anchor_label, negative_id, negative_label, rank
-         |FROM (
-         |  SELECT q.vec_id AS anchor_id, q.label AS anchor_label,
-         |    c.vec_id AS negative_id, c.label AS negative_label,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-         |               c.vec_id) AS rank
-         |  FROM n q JOIN n c ON c.label <> q.label
-         |  WHERE q.vec_id < 10)
-         |WHERE rank <= 5 ORDER BY anchor_id, rank""".stripMargin,
-
-    // embedding_outliers: micro-unit centroids (the embedding_centroids
-    // fixed point), BIGINT squared distances, integer row_number cutoff
-    "embedding_outliers" ->
-      """WITH micro AS (
-        |  SELECT vec_id, label,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xm
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |ex AS (
-        |  SELECT label, generate_subscripts(xm, 1) AS pos, unnest(xm) AS x
-        |  FROM micro),
-        |agg AS (
-        |  SELECT label, pos, CAST(sum(x) AS BIGINT) AS s, count(*) AS n
-        |  FROM ex GROUP BY 1, 2),
-        |cent AS (
-        |  SELECT label,
-        |    list(CAST(floor(s / CAST(n AS DOUBLE)) AS BIGINT) ORDER BY pos) AS cm
-        |  FROM agg GROUP BY 1),
-        |d AS (
-        |  SELECT m.vec_id, m.label,
-        |    CAST(list_sum(list_transform(generate_series(1, len(m.xm)),
-        |      i -> (m.xm[i] - c.cm[i]) * (m.xm[i] - c.cm[i]))) AS BIGINT)
-        |      AS d2_micro
-        |  FROM micro m JOIN cent c USING (label)),
-        |r AS (
-        |  SELECT vec_id, label, d2_micro,
-        |    row_number() OVER (PARTITION BY label
-        |      ORDER BY d2_micro, vec_id) AS rk,
-        |    count(*) OVER (PARTITION BY label) AS n
-        |  FROM d)
-        |SELECT vec_id, label, d2_micro,
-        |  rk > n - CAST(ceil(n * 50 / 1000) AS BIGINT) AS is_outlier
-        |FROM r ORDER BY vec_id""".stripMargin,
-
-    // hyperplane_ann IS oracle-checkable despite being "approximate": the
-    // plane matrix is a closed-form LCG of (plane, dim), so DuckDB recomputes
-    // the exact same 64 plane sign bits, the same 16 x 4-bit buckets, the
-    // same candidate set, and the same cosine-verified pairs.
-    "hyperplane_ann" -> hyperplaneAnnSql(cap = None),
-
-    // capped variant: the oracle recomputes the bucket sizes too, so the
-    // recall-only pruning is itself hash-checked
-    "hyperplane_ann_capped" -> hyperplaneAnnSql(cap = Some(48)),
-
-    // ivf_topk is likewise fully deterministic with iters=0: centroids are
-    // the 16 lowest-id vectors unit-normalized, assignment is first-max
-    // argmax, probes are the 4 best cells (ties -> lower index).
-    // semantic_dedup: the whole SemDeDup chain is deterministic — seed
-    // centroids (16 lowest-id vectors, unit-normalized), first-max argmax
-    // cell assignment (same CTE as ivf_topk), cell-size cap, exact cosine
-    // within cells — so kept/dropped per vector is hash-checked.
-    "semantic_dedup" ->
-      s"""WITH cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |unitc AS (
-         |  SELECT cidx, list_transform(embedding, x ->
-         |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-         |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-         |  FROM (SELECT cidx, embedding,
-         |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |        FROM cents)),
-         |dists AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unitc u),
-         |cells AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists) WHERE rn = 1),
-         |base AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell, count(*) OVER (PARTITION BY cell) AS cs
-         |    FROM cells)
-         |  WHERE cs <= 4096),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |dropped AS (
-         |  SELECT DISTINCT b.vec_id
-         |  FROM base a JOIN base b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  JOIN n na ON na.vec_id = a.vec_id
-         |  JOIN n nb ON nb.vec_id = b.vec_id
-         |  WHERE ${dotSql("na.embedding", "nb.embedding")}
-         |          / (na.nrm * nb.nrm) >= 0.4)
-         |SELECT c.vec_id, CAST(c.cell AS BIGINT) AS cell,
-         |  (d.vec_id IS NULL) AS kept
-         |FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id
-         |ORDER BY c.vec_id""".stripMargin,
-
-    // kmeans_embed: the full Lloyd round is recomputed closed-form —
-    // seed centroids, unit-normalize, argmax-cosine assign, floored
-    // micro-unit integer means (with empty-cluster seed fallback),
-    // re-normalize, re-assign, then exact cluster sizes
-    "kmeans_embed" ->
-      s"""WITH cents0 AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-         |  FROM (SELECT vec_id, embedding FROM embeddings
-         |        ORDER BY vec_id LIMIT 8)),
-         |unit0 AS (
-         |  SELECT cidx, list_transform(embedding, x ->
-         |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-         |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-         |  FROM (SELECT cidx, embedding,
-         |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |        FROM cents0)),
-         |d0 AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unit0 u),
-         |cell0 AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM d0) WHERE rn = 1),
-         |ex AS (
-         |  SELECT c.cell, generate_subscripts(e.embedding, 1) AS pos,
-         |         unnest(e.embedding) AS x
-         |  FROM embeddings e JOIN cell0 c USING (vec_id)),
-         |mean1 AS (
-         |  SELECT cell, pos,
-         |    CAST(floor(CAST(sum(CAST(round(CAST(x AS DOUBLE) * 1000000)
-         |      AS BIGINT)) AS DOUBLE) / count(*)) AS BIGINT) AS m
-         |  FROM ex GROUP BY cell, pos),
-         |cent1raw AS (
-         |  SELECT cell AS cidx, list(m / 1000000.0 ORDER BY pos) AS c
-         |  FROM mean1 GROUP BY cell),
-         |cent1 AS (
-         |  SELECT s.cidx,
-         |    COALESCE(r.c, list_transform(s.embedding,
-         |      x -> CAST(x AS DOUBLE))) AS c
-         |  FROM cents0 s LEFT JOIN cent1raw r ON r.cidx = s.cidx),
-         |unit1 AS (
-         |  SELECT cidx, list_transform(c, x ->
-         |    CASE WHEN nrm = 0 THEN x ELSE x / nrm END) AS c
-         |  FROM (SELECT cidx, c, sqrt(${dotSql("c", "c")}) AS nrm
-         |        FROM cent1)),
-         |d1 AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unit1 u),
-         |cell1 AS (
-         |  SELECT vec_id, cidx AS cluster FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM d1) WHERE rn = 1),
-         |sizes AS (SELECT cluster, count(*) AS n FROM cell1 GROUP BY cluster)
-         |SELECT c.vec_id, CAST(c.cluster AS BIGINT) AS cluster,
-         |  CAST(s.n AS BIGINT) AS cluster_size
-         |FROM cell1 c JOIN sizes s ON s.cluster = c.cluster
-         |ORDER BY c.vec_id""".stripMargin,
-
-    // pq_encode: codebooks are slices of the first-16-id seed vectors;
-    // score = dot(sub, c) - 0.5*dot(c, c), argmax with first-max ties —
-    // identical MIPS arithmetic, so codes hash-match exactly
-    "pq_encode" ->
-      s"""$pqCtes
-         |SELECT vec_id,
-         |  string_agg(CAST(cidx AS VARCHAR), ',' ORDER BY j) AS code
-         |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    // pq_topk: ADC totals as associative BIGINT sums of the SAME floored
-    // micro-unit LUT entries (order-free), ranked with id tie-break
-    "pq_topk" ->
-      s"""$pqCtes,
-         |qsc AS (
-         |  SELECT vec_id AS qid, j, cidx,
-         |    CAST(floor(sc * 1000000) AS BIGINT) AS qs
-         |  FROM scores WHERE vec_id < 10),
-         |tot AS (
-         |  SELECT q.qid AS query_id, b.vec_id AS neighbor_id,
-         |    CAST(sum(q.qs) AS BIGINT) AS adc
-         |  FROM best b JOIN qsc q ON q.j = b.j AND q.cidx = b.cidx
-         |  WHERE b.vec_id <> q.qid
-         |  GROUP BY q.qid, b.vec_id)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY adc DESC, neighbor_id) AS rank
-         |  FROM tot)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // ivf_pq_topk: the pq_topk LUT/code CTEs composed with the ivf_topk
-    // cell/probe CTEs — candidates restricted to probed cells, scored by
-    // the micro-floored integer ADC totals
-    "ivf_pq_topk" ->
-      s"""$pqCtes,
-         |cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |unitc AS (
-         |  SELECT cidx, list_transform(embedding, x ->
-         |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-         |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-         |  FROM (SELECT cidx, embedding,
-         |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |        FROM cents)),
-         |dists AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unitc u),
-         |cells AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists) WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists WHERE vec_id < 10) WHERE rn <= 4),
-         |qsc AS (
-         |  SELECT vec_id AS qid, j, cidx,
-         |    CAST(floor(sc * 1000000) AS BIGINT) AS qs
-         |  FROM scores WHERE vec_id < 10),
-         |cand AS (
-         |  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM probes p JOIN cells c ON c.cell = p.cell AND c.vec_id <> p.vec_id),
-         |tot AS (
-         |  SELECT d.query_id, d.neighbor_id, CAST(sum(q.qs) AS BIGINT) AS adc
-         |  FROM cand d
-         |  JOIN best b ON b.vec_id = d.neighbor_id
-         |  JOIN qsc q ON q.qid = d.query_id AND q.j = b.j AND q.cidx = b.cidx
-         |  GROUP BY d.query_id, d.neighbor_id)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY adc DESC, neighbor_id) AS rank
-         |  FROM tot)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // ivf_pq_topk_residual: the IVFADC twin — residuals vs the RAW
-    // centroid, residual codebook seeded from ids 16..31 (disjoint
-    // from the centroid seed range by contract), per-row corr term
-    // (left-assoc j-terms, then + 0.5||c||² — the exact double
-    // grouping the Spark expression uses), ADC = qcell + LUT sum -
-    // corr in pure BIGINT micro-units
-    "ivf_pq_topk_residual" -> ivfPqResidualSql(10),
-
-    // ivf_refined_autocal: the residual ADC chain widened to 16
-    // queries / full probe depth, gridded over (nprobe, shortlist) in
-    // ascent order, exact-cosine re-rank per cell, recall vs brute
-    // top-4; acceptance replayed in integer math (c*20 >= d*19 is the
-    // 0.95 target) and the curve truncated at the accepted ordinal —
-    // the same rows calibrateRefined publishes
-    "ivf_refined_autocal" ->
-      (ivfPqResidualCtes(nQ = 16, maxNprobe = 16) +
-      s""",
-         |adcranked AS (
-         |  SELECT s.np, t.query_id, t.neighbor_id,
-         |    row_number() OVER (PARTITION BY s.np, t.query_id
-         |      ORDER BY t.adc DESC, t.neighbor_id) AS adcrank
-         |  FROM (SELECT unnest([1, 2, 4, 8, 16]) AS np) s
-         |  JOIN tot t ON t.prn <= s.np),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |truth AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-         |        c.vec_id) AS rank
-         |    FROM n q JOIN n c ON c.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 16) WHERE rank <= 4),
-         |grid AS (
-         |  SELECT row_number() OVER (ORDER BY np, sl) AS ord, np, sl
-         |  FROM (SELECT s.np, l.sl
-         |        FROM (SELECT unnest([1, 2, 4, 8, 16]) AS np) s,
-         |             (SELECT unnest([4, 8, 16, 32, 64, 128, 256, 512])
-         |              AS sl) l)),
-         |rer AS (
-         |  SELECT g.ord, a.query_id, a.neighbor_id,
-         |    row_number() OVER (PARTITION BY g.ord, a.query_id ORDER BY
-         |      ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-         |      a.neighbor_id) AS rr
-         |  FROM grid g
-         |  JOIN adcranked a ON a.np = g.np AND a.adcrank <= g.sl
-         |  JOIN n qn ON qn.vec_id = a.query_id
-         |  JOIN n nn ON nn.vec_id = a.neighbor_id),
-         |hits AS (
-         |  SELECT r.ord, count(*) AS c FROM rer r
-         |  JOIN truth t ON t.query_id = r.query_id
-         |    AND t.neighbor_id = r.neighbor_id
-         |  WHERE r.rr <= 4 GROUP BY r.ord),
-         |denom AS (SELECT count(*) AS d FROM truth),
-         |curve AS (
-         |  SELECT g.ord, g.np, g.sl, coalesce(h.c, 0) AS c
-         |  FROM grid g LEFT JOIN hits h ON h.ord = g.ord),
-         |pick AS (SELECT min(ord) AS ord FROM curve, denom
-         |         WHERE c * 20 >= d * 19)
-         |SELECT CAST(cu.np AS BIGINT) AS nprobe,
-         |  CAST(cu.sl AS BIGINT) AS shortlist,
-         |  CAST(cu.c AS DOUBLE) / d.d AS recall,
-         |  CAST(cu.ord = p.ord AS BIGINT) AS chosen
-         |FROM curve cu, denom d, pick p WHERE cu.ord <= p.ord
-         |ORDER BY nprobe, shortlist""".stripMargin),
-
-    // ivf_pq_topk_refined: the residual ADC oracle widened to a
-    // 40-deep shortlist, then the exact-cosine re-rank tail (the
-    // matryoshka stage-2 pattern) — the IVFPQ+R composition
-    "ivf_pq_topk_refined" ->
-      s"""WITH short AS (
-         |  SELECT query_id, neighbor_id FROM (${ivfPqResidualSql(40)})),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT s.query_id, s.neighbor_id, row_number() OVER (
-         |    PARTITION BY s.query_id ORDER BY
-         |      ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-         |      s.neighbor_id) AS rank
-         |  FROM short s
-         |  JOIN n qn ON qn.vec_id = s.query_id
-         |  JOIN n nn ON nn.vec_id = s.neighbor_id)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // matryoshka_topk: the topk_cosine oracle run twice — once over the
-    // 16-element prefix to build the 40-deep shortlist, once full-dim
-    // over shortlist members only
-    "matryoshka_topk" ->
-      s"""WITH pn AS (
-         |  SELECT vec_id, vp, sqrt(${dotSql("vp", "vp")}) AS np
-         |  FROM (SELECT vec_id, list_slice(embedding, 1, 16) AS vp
-         |        FROM embeddings)),
-         |cand AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${dotSql("q.vp", "c.vp")} / (q.np * c.np) DESC,
-         |                 c.vec_id) AS prank
-         |    FROM pn q JOIN pn c ON c.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 10)
-         |  WHERE prank <= 40),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT cand.query_id, cand.neighbor_id,
-         |    row_number() OVER (PARTITION BY cand.query_id ORDER BY
-         |      ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-         |      cand.neighbor_id) AS rank
-         |  FROM cand
-         |  JOIN n qn ON qn.vec_id = cand.query_id
-         |  JOIN n nn ON nn.vec_id = cand.neighbor_id)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "ivf_topk" ->
-      s"""WITH cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |unitc AS (
-         |  SELECT cidx, list_transform(embedding, x ->
-         |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-         |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-         |  FROM (SELECT cidx, embedding,
-         |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |        FROM cents)),
-         |dists AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unitc u),
-         |cells AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists) WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists WHERE vec_id < 10) WHERE rn <= 4),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |cand AS (
-         |  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM probes p JOIN cells c ON c.cell = p.cell AND c.vec_id <> p.vec_id)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT cand.query_id, cand.neighbor_id,
-         |    row_number() OVER (PARTITION BY cand.query_id ORDER BY
-         |      ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-         |      cand.neighbor_id) AS rank
-         |  FROM cand
-         |  JOIN n qn ON qn.vec_id = cand.query_id
-         |  JOIN n nn ON nn.vec_id = cand.neighbor_id)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // the calibration ascent's curve: per candidate nprobe, IVF top-5
-    // recall vs exact brute top-5 on the 16 explicit queries; rows up
-    // to and including the first exact step (target 1.0 early-stop),
-    // chosen marking it. Integer hit counts divide as DOUBLE — the
-    // same two BIGINTs divide to the same bits on both engines.
-    "ivf_autoprobe" ->
-      s"""WITH cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS cidx, embedding
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-         |unitc AS (
-         |  SELECT cidx, list_transform(embedding, x ->
-         |    CASE WHEN nrm = 0 THEN CAST(x AS DOUBLE)
-         |         ELSE CAST(x AS DOUBLE) / nrm END) AS c
-         |  FROM (SELECT cidx, embedding,
-         |          sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |        FROM cents)),
-         |dists AS (
-         |  SELECT e.vec_id, u.cidx, ${dotSql("e.embedding", "u.c")} AS d
-         |  FROM embeddings e, unitc u),
-         |cells AS (
-         |  SELECT vec_id, cidx AS cell FROM (
-         |    SELECT vec_id, cidx, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |    FROM dists) WHERE rn = 1),
-         |qd AS (
-         |  SELECT vec_id, cidx, row_number() OVER (
-         |    PARTITION BY vec_id ORDER BY d DESC, cidx) AS rn
-         |  FROM dists WHERE vec_id < 16),
-         |n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |truth AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-         |        c.vec_id) AS rank
-         |    FROM n q JOIN n c ON c.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 16) WHERE rank <= 5),
-         |steps AS (SELECT unnest([1, 2, 4, 8, 16]) AS np),
-         |cand AS (
-         |  SELECT s.np, p.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM steps s JOIN qd p ON p.rn <= s.np
-         |  JOIN cells c ON c.cell = p.cidx AND c.vec_id <> p.vec_id),
-         |ivftop AS (
-         |  SELECT np, query_id, neighbor_id FROM (
-         |    SELECT cand.np, cand.query_id, cand.neighbor_id,
-         |      row_number() OVER (PARTITION BY cand.np, cand.query_id ORDER BY
-         |        ${dotSql("qn.embedding", "nn.embedding")} / (qn.nrm * nn.nrm) DESC,
-         |        cand.neighbor_id) AS rank
-         |    FROM cand
-         |    JOIN n qn ON qn.vec_id = cand.query_id
-         |    JOIN n nn ON nn.vec_id = cand.neighbor_id)
-         |  WHERE rank <= 5),
-         |hits AS (
-         |  SELECT i.np, count(*) AS c FROM ivftop i
-         |  JOIN truth t ON t.query_id = i.query_id
-         |    AND t.neighbor_id = i.neighbor_id
-         |  GROUP BY i.np),
-         |denom AS (SELECT count(*) AS d FROM truth),
-         |curve AS (
-         |  SELECT s.np, coalesce(h.c, 0) AS c
-         |  FROM steps s LEFT JOIN hits h ON h.np = s.np),
-         |pick AS (SELECT min(np) AS np FROM curve, denom WHERE c = d)
-         |SELECT CAST(cu.np AS BIGINT) AS nprobe,
-         |  CAST(cu.c AS DOUBLE) / d.d AS recall,
-         |  CAST(cu.np = ch.np AS BIGINT) AS chosen
-         |FROM curve cu, denom d, pick ch
-         |WHERE cu.np <= ch.np
-         |ORDER BY nprobe""".stripMargin,
-
-    "payload_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |  sha256(text) AS checksum,
-        |  CAST(octet_length(encode(text)) % 640 + 1 AS BIGINT) AS width,
-        |  CAST(octet_length(encode(text)) % 480 + 1 AS BIGINT) AS height,
-        |  CAST(3 AS BIGINT) AS channels
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "media_ops" ->
-      """SELECT doc_id, byte_len, width, height,
-        |  round(224.0 / width, 6) AS scale_x,
-        |  round(224.0 / height, 6) AS scale_y,
-        |  CAST(CASE WHEN byte_len > 0 THEN 1 + (byte_len - 1) // 64
-        |       ELSE 0 END AS BIGINT) AS n_frames,
-        |  CASE WHEN byte_len > 0
-        |    THEN array_to_string(list_transform(
-        |      generate_series(CAST(0 AS BIGINT), byte_len - 1, 64),
-        |      x -> CAST(x AS VARCHAR)), ',')
-        |    ELSE '' END AS frame_offsets
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |    CAST(octet_length(encode(text)) % 640 + 1 AS BIGINT) AS width,
-        |    CAST(octet_length(encode(text)) % 480 + 1 AS BIGINT) AS height
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // feature_extract twin: byte i's high nibble is the hex digit at
-    // position 2i-1 of hex(payload), so the 16-bin histogram from
-    // Multimodal.featureExtractBatch ((byte & 0xff) >>> 4) is recomputable
-    // exactly; peak_bin is first-max argmax via list_position.
-    "feature_extract" ->
-      s"""WITH $histCtes
-         |SELECT doc_id, byte_len,
-         |  array_to_string(list_transform(counts, x -> CAST(x AS VARCHAR)), ',')
-         |    AS hist,
-         |  CAST(list_position(counts, list_max(counts)) - 1 AS BIGINT) AS peak_bin
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // media_fingerprint: permille-quantized histogram + length bucket as
-    // the group key; integer floor division on both sides
-    "media_fingerprint" ->
-      s"""WITH $histCtes,
-         |f AS (SELECT doc_id,
-         |  CAST(length(bin(byte_len)) AS VARCHAR) || ':' ||
-         |  array_to_string(list_transform(counts,
-         |    c -> CAST(CASE WHEN byte_len > 0
-         |              THEN (c * 1000) // byte_len ELSE 0 END AS VARCHAR)),
-         |    ',') AS fp
-         |  FROM c)
-         |SELECT doc_id, fp,
-         |  CAST(count(*) OVER (PARTITION BY fp) AS BIGINT) AS n_same,
-         |  doc_id = min(doc_id) OVER (PARTITION BY fp) AS keep
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    // robust_stats: micro-unit quantization, integer trim ranks, one
-    // floored division — no float mean/variance crosses engines
-    "robust_stats" ->
-      """WITH m AS (SELECT event_type,
-        |  CAST(round(value * 1000000) AS BIGINT) AS vm, event_id
-        |  FROM events),
-        |r AS (SELECT event_type, vm,
-        |  CAST(row_number() OVER (PARTITION BY event_type
-        |    ORDER BY vm, event_id) AS BIGINT) AS rk,
-        |  CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM m)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_total,
-        |  CAST(count(*) AS BIGINT) AS n_used,
-        |  CAST(floor(sum(vm) / CAST(count(*) AS DOUBLE)) AS BIGINT)
-        |    AS trimmed_mean_micro
-        |FROM r
-        |WHERE rk > CAST(floor(n * 100 / 1000) AS BIGINT)
-        |  AND rk <= n - CAST(floor(n * 100 / 1000) AS BIGINT)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // iqr_outliers twin: quartiles by the SAME rank arithmetic, fences
-    // by the same truncating integer division
-    "iqr_outliers" ->
-      """WITH m AS (SELECT event_type AS g, event_id,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vm FROM events),
-        |r AS (SELECT g, vm,
-        |    CAST(row_number() OVER (PARTITION BY g ORDER BY vm, event_id)
-        |      AS BIGINT) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM m),
-        |q AS (SELECT g,
-        |    max(CASE WHEN rk = greatest(1, (250 * n + 999) // 1000)
-        |        THEN vm END) AS q1,
-        |    max(CASE WHEN rk = greatest(1, (750 * n + 999) // 1000)
-        |        THEN vm END) AS q3
-        |  FROM r GROUP BY g),
-        |f AS (SELECT g, q1 - (1500 * (q3 - q1)) // 1000 AS lo,
-        |    q3 + (1500 * (q3 - q1)) // 1000 AS hi FROM q)
-        |SELECT m.g AS event_type, m.event_id,
-        |  m.vm AS value_micro, f.lo AS lo_micro, f.hi AS hi_micro
-        |FROM m JOIN f ON m.g = f.g
-        |WHERE m.vm < f.lo OR m.vm > f.hi
-        |ORDER BY event_type, event_id""".stripMargin,
-
-    // mad_outliers twin: both medians by the SAME rank arithmetic
-    // (second pass over the deviations, ties by event_id), fence by
-    // the same BIGINT multiply — no division anywhere
-    "mad_outliers" ->
-      """WITH m AS (SELECT event_type AS g, event_id,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vm FROM events),
-        |r AS (SELECT g, vm,
-        |    CAST(row_number() OVER (PARTITION BY g ORDER BY vm, event_id)
-        |      AS BIGINT) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM m),
-        |med AS (SELECT g,
-        |    max(CASE WHEN rk = greatest(1, (500 * n + 999) // 1000)
-        |        THEN vm END) AS med
-        |  FROM r GROUP BY g),
-        |d AS (SELECT m.g, m.event_id, m.vm, med.med,
-        |    abs(m.vm - med.med) AS dev
-        |  FROM m JOIN med ON m.g = med.g),
-        |r2 AS (SELECT g, event_id, dev,
-        |    CAST(row_number() OVER (PARTITION BY g ORDER BY dev, event_id)
-        |      AS BIGINT) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM d),
-        |mad AS (SELECT g,
-        |    max(CASE WHEN rk = greatest(1, (500 * n + 999) // 1000)
-        |        THEN dev END) AS mad
-        |  FROM r2 GROUP BY g)
-        |SELECT d.g AS event_type, d.event_id, d.vm AS value_micro,
-        |  d.med AS med_micro, mad.mad AS mad_micro
-        |FROM d JOIN mad ON d.g = mad.g
-        |WHERE d.dev * 1000 > 5190 * mad.mad
-        |ORDER BY event_type, event_id""".stripMargin,
-
-    // group_percentiles twin: the SAME rank arithmetic, not DuckDB's
-    // quantile built-in (engines disagree on quantile conventions)
-    "group_percentiles" ->
-      """WITH m AS (SELECT event_type AS g,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vm,
-        |    event_id AS tie FROM events),
-        |r AS (SELECT g, vm,
-        |    CAST(row_number() OVER (PARTITION BY g ORDER BY vm, tie)
-        |      AS BIGINT) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM m),
-        |p AS (SELECT CAST(unnest([0, 50, 500, 950, 990, 1000]) AS BIGINT)
-        |        AS permille)
-        |SELECT r.g AS event_type, p.permille, r.vm AS value_micro,
-        |  r.rk AS rank, r.n AS n
-        |FROM r JOIN p
-        |  ON r.rk = greatest(1, (p.permille * r.n + 999) // 1000)
-        |ORDER BY event_type, permille""".stripMargin,
-
-    // same rank CTE as robust_stats; boundary values from the kept band,
-    // all rows clamped into it, same floored micro-mean
-    "winsorized_stats" ->
-      """WITH m AS (SELECT event_type,
-        |  CAST(round(value * 1000000) AS BIGINT) AS vm, event_id
-        |  FROM events),
-        |r AS (SELECT event_type, vm,
-        |  CAST(row_number() OVER (PARTITION BY event_type
-        |    ORDER BY vm, event_id) AS BIGINT) AS rk,
-        |  CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM m),
-        |b AS (SELECT event_type,
-        |  CAST(min(vm) AS BIGINT) AS lo, CAST(max(vm) AS BIGINT) AS hi
-        |  FROM r
-        |  WHERE rk > CAST(floor(n * 100 / 1000) AS BIGINT)
-        |    AND rk <= n - CAST(floor(n * 100 / 1000) AS BIGINT)
-        |  GROUP BY event_type)
-        |SELECT r.event_type, CAST(max(n) AS BIGINT) AS n_total,
-        |  CAST(sum(CASE WHEN vm < lo THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_clipped_low,
-        |  CAST(sum(CASE WHEN vm > hi THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_clipped_high,
-        |  CAST(floor(sum(greatest(least(vm, hi), lo))
-        |    / CAST(max(n) AS DOUBLE)) AS BIGINT) AS winsorized_mean_micro
-        |FROM r JOIN b ON r.event_type = b.event_type
-        |GROUP BY r.event_type ORDER BY r.event_type""".stripMargin,
-
-    // leading digit from the decimal string form (engine-invariant),
-    // Benford expectation as floored-log constants
-    "benford_audit" ->
-      """WITH d AS (SELECT event_type,
-        |  CAST(regexp_extract(CAST(ABS(value) AS VARCHAR), '[1-9]', 0)
-        |    AS BIGINT) AS digit
-        |  FROM events WHERE value IS NOT NULL AND value <> 0),
-        |c AS (SELECT event_type, digit, CAST(count(*) AS BIGINT) AS n
-        |  FROM d GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS total
-        |  FROM c GROUP BY 1)
-        |SELECT c.event_type, c.digit, c.n,
-        |  CAST(c.n * 1000 // t.total AS BIGINT) AS permille,
-        |  CAST(CASE c.digit WHEN 1 THEN 301 WHEN 2 THEN 176 WHEN 3 THEN 124
-        |    WHEN 4 THEN 96 WHEN 5 THEN 79 WHEN 6 THEN 66 WHEN 7 THEN 57
-        |    WHEN 8 THEN 51 WHEN 9 THEN 45 ELSE 0 END AS BIGINT)
-        |    AS benford_permille,
-        |  CAST(abs(c.n * 1000 // t.total
-        |    - CASE c.digit WHEN 1 THEN 301 WHEN 2 THEN 176 WHEN 3 THEN 124
-        |      WHEN 4 THEN 96 WHEN 5 THEN 79 WHEN 6 THEN 66 WHEN 7 THEN 57
-        |      WHEN 8 THEN 51 WHEN 9 THEN 45 ELSE 0 END) AS BIGINT)
-        |    AS deviation_permille
-        |FROM c JOIN t ON c.event_type = t.event_type
-        |ORDER BY c.event_type, c.digit""".stripMargin,
-
-    // key_skew: integer permille via BIGINT floor-division on both sides
-    "key_skew" ->
-      """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total FROM c),
-        |r AS (SELECT user_id, n_rows,
-        |  CAST(row_number() OVER (ORDER BY n_rows DESC, user_id) AS BIGINT)
-        |    AS rank FROM c)
-        |SELECT user_id, n_rows,
-        |  CAST(n_rows * 1000 // total AS BIGINT) AS permille, rank
-        |FROM r CROSS JOIN t WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    // join_cardinality: both KMV sketches, the combined union sketch,
-    // and the Beyer et al. estimators recomputed in closed form (k
-    // smallest reproducible polynomial hashes via ORDER BY h LIMIT k)
-    "join_cardinality" ->
-      s"""WITH lh AS (SELECT DISTINCT
-         |    CAST((CAST(1103515245 AS HUGEINT) *
-         |      (${duckPolyFragment("CAST(o_custkey AS VARCHAR)", 31, 1000000007L)})
-         |      + 12345) % 1000000007 AS BIGINT) AS h
-         |  FROM orders WHERE o_totalprice > 450000),
-         |rh AS (SELECT DISTINCT
-         |    CAST((CAST(1103515245 AS HUGEINT) *
-         |      (${duckPolyFragment("CAST(o_custkey AS VARCHAR)", 31, 1000000007L)})
-         |      + 12345) % 1000000007 AS BIGINT) AS h
-         |  FROM orders WHERE o_totalprice < 50000),
-         |sa AS (SELECT h FROM lh ORDER BY h LIMIT 64),
-         |sb AS (SELECT h FROM rh ORDER BY h LIMIT 64),
-         |ua AS (SELECT DISTINCT h FROM
-         |  (SELECT h FROM sa UNION ALL SELECT h FROM sb)),
-         |un AS (SELECT h FROM ua ORDER BY h LIMIT 64),
-         |sc AS (SELECT
-         |  (SELECT count(*) FROM lh) AS nl,
-         |  (SELECT count(*) FROM rh) AS nr,
-         |  (SELECT count(*) FROM ua) AS nu,
-         |  (SELECT max(h) FROM sa) AS ka,
-         |  (SELECT max(h) FROM sb) AS kb,
-         |  (SELECT max(h) FROM un) AS ku,
-         |  (SELECT count(*) FROM un WHERE h IN (SELECT h FROM sa)
-         |     AND h IN (SELECT h FROM sb)) AS kint,
-         |  (SELECT count(*) FROM lh JOIN rh USING (h)) AS nx)
-         |SELECT CAST(64 AS BIGINT) AS k,
-         |  CASE WHEN nl < 64 THEN CAST(nl AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / ka END AS est_left,
-         |  CASE WHEN nr < 64 THEN CAST(nr AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / kb END AS est_right,
-         |  CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / ku END AS est_union,
-         |  CASE WHEN nu < 64 THEN CAST(kint AS DOUBLE)
-         |       ELSE CAST(kint AS DOUBLE) *
-         |         (CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-         |               ELSE 63.0 * 1000000007 / ku END) / 64
-         |  END AS est_intersection,
-         |  CAST(nx AS BIGINT) AS n_exact_intersection
-         |FROM sc""".stripMargin,
-
-    // zorder_layout: the Morton assignment in closed form — grid cells
-    // from integer bounds (// = floor div, matching Spark's `div`), bit
-    // interleave as a sum over bit positions, bucket = top-4-bit prefix
-    "zorder_layout" ->
-      """WITH b AS (
-        |  SELECT min(l_orderkey) AS minx, max(l_orderkey) AS maxx,
-        |         min(l_partkey) AS miny, max(l_partkey) AS maxy
-        |  FROM lineitem),
-        |z AS (
-        |  SELECT l_orderkey, l_partkey,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), i ->
-        |      (((((l_orderkey - minx) * 256 // (maxx - minx + 1)) >> i) & 1)
-        |        << (2 * i))
-        |      + (((((l_partkey - miny) * 256 // (maxy - miny + 1)) >> i) & 1)
-        |        << (2 * i + 1)))) AS BIGINT) AS zval
-        |  FROM lineitem, b)
-        |SELECT CAST(zval >> 12 AS BIGINT) AS bucket,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  min(l_orderkey) AS x_min, max(l_orderkey) AS x_max,
-        |  min(l_partkey) AS y_min, max(l_partkey) AS y_max
-        |FROM z GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    // Hilbert fold as a list_reduce over bit levels (MSB first) with a
-    // struct accumulator: the level index rides in the element's x slot;
-    // the quadrant digit is xor(3*rx, ry); the ry=0 branch swaps (and,
-    // when rx=1, flips against the full-grid mask 255) — bit-for-bit the
-    // graft_hilbert native loop
-    "hilbert_layout" ->
-      """WITH b AS (
-        |  SELECT min(l_orderkey) AS minx, max(l_orderkey) AS maxx,
-        |         min(l_partkey) AS miny, max(l_partkey) AS maxy
-        |  FROM lineitem),
-        |h AS (
-        |  SELECT l_orderkey, l_partkey,
-        |    (list_reduce(
-        |      list_prepend(
-        |        struct_pack(
-        |          x := CAST((l_orderkey - minx) * 256 // (maxx - minx + 1)
-        |               AS BIGINT),
-        |          y := CAST((l_partkey - miny) * 256 // (maxy - miny + 1)
-        |               AS BIGINT),
-        |          d := CAST(0 AS BIGINT)),
-        |        list_transform(generate_series(7, 0, -1), i ->
-        |          struct_pack(x := CAST(i AS BIGINT), y := CAST(0 AS BIGINT),
-        |                      d := CAST(0 AS BIGINT)))),
-        |      (acc, e) -> struct_pack(
-        |        x := CASE WHEN ((acc.y >> e.x) & 1) = 0
-        |               THEN CASE WHEN ((acc.x >> e.x) & 1) = 1
-        |                      THEN 255 - acc.y ELSE acc.y END
-        |               ELSE acc.x END,
-        |        y := CASE WHEN ((acc.y >> e.x) & 1) = 0
-        |               THEN CASE WHEN ((acc.x >> e.x) & 1) = 1
-        |                      THEN 255 - acc.x ELSE acc.x END
-        |               ELSE acc.y END,
-        |        d := acc.d + (xor(3 * ((acc.x >> e.x) & 1),
-        |                          (acc.y >> e.x) & 1) << (2 * e.x))))).d
-        |    AS hval
-        |  FROM lineitem, b)
-        |SELECT CAST(hval >> 12 AS BIGINT) AS bucket,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  min(l_orderkey) AS x_min, max(l_orderkey) AS x_max,
-        |  min(l_partkey) AS y_min, max(l_partkey) AS y_max
-        |FROM h GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "profile_events" ->
-      """SELECT count(*) AS n_rows,
-        |  CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS null_event_type,
-        |  count(DISTINCT event_type) AS n_event_types,
-        |  count(DISTINCT user_id) AS n_users,
-        |  min(value) AS min_value, max(value) AS max_value,
-        |  min(ts) AS min_ts, max(ts) AS max_ts
-        |FROM events""".stripMargin,
-
-    "rank_stats" ->
-      """SELECT event_id, event_type, value,
-        |  CAST(rank() OVER w AS BIGINT) AS rnk,
-        |  CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        |  percent_rank() OVER w AS prank,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |FROM events WHERE event_id % 50 = 0
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "group_concat" ->
-      """SELECT user_id,
-        |  COALESCE(string_agg(DISTINCT event_type, ',' ORDER BY event_type), '')
-        |    AS types,
-        |  count(*) AS n
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "value_percentiles" ->
-      """SELECT event_type,
-        |  quantile_disc(value, 0.25) AS p25,
-        |  quantile_disc(value, 0.5)  AS p50,
-        |  quantile_disc(value, 0.75) AS p75
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // sampled_percentiles: the oracle recomputes the identical 10%
-    // id-hash sample (same fold as train_val_split), then exact discrete
-    // quantiles over it — the sampling itself is hash-checked
-    "sampled_percentiles" ->
-      s"""SELECT event_type,
-         |  quantile_disc(value, 0.25) AS p25,
-         |  quantile_disc(value, 0.5)  AS p50,
-         |  quantile_disc(value, 0.75) AS p75,
-         |  CAST(count(*) AS BIGINT) AS n_sample
-         |FROM events
-         |WHERE ${duckPolyFragment("CAST(event_id AS VARCHAR)", 31, 1000000007L)}
-         |  % 100 < 10
-         |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "quantize_int8" ->
-      """SELECT vec_id,
-        |  array_to_string(list_transform(embedding,
-        |    x -> CAST(CAST(round(CAST(x AS DOUBLE) *
-        |      (CASE WHEN m > 0 THEN 127.0 / m ELSE 0.0 END)) AS INT) AS VARCHAR)),
-        |    ',') AS q,
-        |  CASE WHEN m > 0 THEN 127.0 / m ELSE 0.0 END AS scale
-        |FROM (SELECT vec_id, embedding,
-        |        list_max(list_transform(embedding,
-        |                                x -> abs(CAST(x AS DOUBLE)))) AS m
-        |      FROM embeddings)
-        |ORDER BY vec_id""".stripMargin,
-
-    // ndcg_quantized: truth = the exact float cosine top-10 (the
-    // topk_cosine body); candidate = cosine top-10 over the int8 codes
-    // (exact-integer inputs, correctly-rounded sqrt/divide — ranking
-    // engine-invariant); every metric downstream is BIGINT arithmetic
-    // over a discount table interpolated VERBATIM from
-    // Similarity.ndcgDiscountMicro, the single source of float truth
-    "ndcg_quantized" ->
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |truth AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-         |               c.vec_id) AS rank
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 10)
-         |  WHERE rank <= 10),
-         |q8 AS (SELECT vec_id, list_transform(embedding,
-         |    x -> CAST(CAST(round(CAST(x AS DOUBLE) *
-         |      (CASE WHEN m > 0 THEN 7.0 / m ELSE 0.0 END)) AS INT)
-         |      AS DOUBLE)) AS qv
-         |  FROM (SELECT vec_id, embedding,
-         |          list_max(list_transform(embedding,
-         |                                  x -> abs(CAST(x AS DOUBLE)))) AS m
-         |        FROM embeddings)),
-         |qn AS (SELECT vec_id, qv, sqrt(${dotSql("qv", "qv")}) AS nrm FROM q8),
-         |cand AS (SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY (CASE WHEN q.nrm > 0 AND c.nrm > 0
-         |        THEN ${dotSql("q.qv", "c.qv")} / (q.nrm * c.nrm)
-         |        ELSE -2.0 END) DESC, c.vec_id) AS rank
-         |  FROM qn q JOIN qn c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 10)
-         |  WHERE rank <= 10),
-         |disc(r, d) AS (VALUES ${(1 to 10).map(r =>
-             s"(${r}, ${graft.operators.Similarity.ndcgDiscountMicro(r)})")
-             .mkString(", ")}),
-         |cum(m, cd) AS (VALUES ${(0 to 10).map(m =>
-             s"(${m}, ${(1 to m).map(
-               graft.operators.Similarity.ndcgDiscountMicro).sum})")
-             .mkString(", ")}),
-         |hits AS (SELECT c.query_id, CAST(count(*) AS BIGINT) AS n_hits,
-         |    min(c.rank) AS first_r, CAST(sum(disc.d) AS BIGINT) AS dcg
-         |  FROM cand c
-         |  JOIN truth t ON t.query_id = c.query_id
-         |             AND t.neighbor_id = c.neighbor_id
-         |  JOIN disc ON disc.r = c.rank
-         |  GROUP BY c.query_id),
-         |rel AS (SELECT query_id, LEAST(count(*), 10) AS nrel
-         |        FROM truth GROUP BY query_id)
-         |SELECT rel.query_id,
-         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(COALESCE(1000000 // h.first_r, 0) AS BIGINT) AS mrr_micro,
-         |  CAST(COALESCE(h.dcg, 0) AS BIGINT) AS dcg_micro,
-         |  CAST(cum.cd AS BIGINT) AS idcg_micro,
-         |  CASE WHEN cum.cd > 0
-         |       THEN CAST(COALESCE(h.dcg, 0) * 1000 // cum.cd AS BIGINT)
-         |       ELSE 0 END AS ndcg_permille
-         |FROM rel LEFT JOIN hits h ON h.query_id = rel.query_id
-         |JOIN cum ON cum.m = rel.nrel
-         |ORDER BY rel.query_id""".stripMargin,
-
-    // embedding_centroids: same micro-unit integer sums (associative,
-    // engine-invariant), floor of the exact double quotient
-    "embedding_centroids" ->
-      """WITH ex AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |         unnest(embedding) AS x
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |agg AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-        |      AS BIGINT) AS s,
-        |    count(*) AS n
-        |  FROM ex GROUP BY label, pos)
-        |SELECT label, CAST(max(n) AS BIGINT) AS n_vectors,
-        |  string_agg(CAST(CAST(floor(s / CAST(n AS DOUBLE)) AS BIGINT)
-        |    AS VARCHAR), ',' ORDER BY pos) AS centroid_micro
-        |FROM agg GROUP BY label ORDER BY label""".stripMargin,
-
-    // embedding_drift twin: same floored micro centroids, same
-    // sqrt-free cos2 rational
-    "embedding_drift" ->
-      """WITH ex AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-        |         unnest(embedding) AS x
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |ca AS (SELECT pos,
-        |    CAST(floor(sum(CAST(round(CAST(x AS DOUBLE) * 1000000)
-        |      AS BIGINT)) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS am,
-        |    CAST(count(*) AS BIGINT) AS an
-        |  FROM ex WHERE vec_id % 2 = 0 GROUP BY pos),
-        |cb AS (SELECT pos,
-        |    CAST(floor(sum(CAST(round(CAST(x AS DOUBLE) * 1000000)
-        |      AS BIGINT)) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS bm,
-        |    CAST(count(*) AS BIGINT) AS bn
-        |  FROM ex WHERE vec_id % 2 = 1 GROUP BY pos),
-        |agg AS (SELECT CAST(max(an) AS BIGINT) AS n_a,
-        |    CAST(max(bn) AS BIGINT) AS n_b,
-        |    CAST(count(*) AS BIGINT) AS dim,
-        |    CAST(sum(am * bm) AS BIGINT) AS dot_ab,
-        |    CAST(sum(am * am) AS HUGEINT) AS aa,
-        |    CAST(sum(bm * bm) AS HUGEINT) AS bb
-        |  FROM ca JOIN cb USING (pos))
-        |SELECT n_a, n_b, dim, dot_ab,
-        |  CAST(sign(dot_ab) AS BIGINT) AS cos_sign,
-        |  CASE WHEN aa > 0 AND bb > 0 THEN
-        |    CAST((CAST(dot_ab AS HUGEINT) * dot_ab * 1000000) // (aa * bb)
-        |      AS BIGINT) END AS cos2_micro
-        |FROM agg""".stripMargin,
-
-    "asof_join" ->
-      """SELECT l.event_id, l.user_id, l.ts, r.signup_ts, r.signup_event_id
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN (SELECT user_id, ts, ts AS signup_ts,
-        |                       event_id AS signup_event_id
-        |                FROM events WHERE event_type = 'signup') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    // tolerance twin: same ASOF match, values nulled when the match is
-    // older than the 7-day freshness bound (match-then-filter — the
-    // latest right row is the only candidate either way)
-    "asof_join_tolerance" ->
-      """SELECT l.event_id, l.user_id, l.ts,
-        |  CASE WHEN l.ts <= r.ts + INTERVAL 7 DAY THEN r.signup_ts END
-        |    AS signup_ts,
-        |  CASE WHEN l.ts <= r.ts + INTERVAL 7 DAY THEN r.signup_event_id END
-        |    AS signup_event_id
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN (SELECT user_id, ts, ts AS signup_ts,
-        |                       event_id AS signup_event_id
-        |                FROM events WHERE event_type = 'signup') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "range_join" ->
-      """SELECT w.window_id, e.event_id
-        |FROM (SELECT event_id, ts FROM events) e
-        |JOIN (SELECT event_id AS window_id, ts AS w_start,
-        |             ts + INTERVAL 6 HOUR AS w_end
-        |      FROM events
-        |      WHERE event_type = 'signup' AND event_id % 20 = 0) w
-        |  ON e.ts >= w.w_start AND e.ts < w.w_end
-        |ORDER BY window_id, event_id""".stripMargin,
-
-    "sample_stratified" ->
-      s"""SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang,
-         |    ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)} % 100 AS h,
-         |    CASE WHEN lang = 'en' THEN 50 ELSE 20 END AS rate
-         |  FROM documents)
-         |WHERE h < rate ORDER BY doc_id""".stripMargin,
-
-    // weighted_sample: the whole key derivation is closed-form (clamped
-    // integer tickets, LCG-mixed polynomial hash per ghost copy, max,
-    // rank) so the selected rows hash-check exactly
-    "weighted_sample" ->
-      s"""SELECT source, doc_id, weight, rank FROM (
-         |  SELECT source, doc_id, CAST(wt AS BIGINT) AS weight,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY wk DESC, doc_id) AS BIGINT) AS rank
-         |  FROM (
-         |    SELECT source, doc_id, wt,
-         |      list_max(list_transform(generate_series(1, wt),
-         |        r -> (1103515245 * ${duckPolyFragment(
-                 "(CAST(doc_id AS VARCHAR) || ':' || CAST(r AS VARCHAR))",
-                 31, 1000000007L)} + 12345) % 1000000007)) AS wk
-         |    FROM (SELECT source, doc_id,
-         |            LEAST(GREATEST(CAST(1 + n_chars // 500 AS INT), 1), 64)
-         |              AS wt
-         |          FROM documents)))
-         |WHERE rank <= 20 ORDER BY source, rank""".stripMargin,
-
-    "nfc_normalize" ->
-      """SELECT doc_id, nfc_normalize(text) AS text_nfc,
-        |  nfc_normalize(text) <> text AS changed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // encoding_audit twin: RE2 classes are code-point-exact over UTF-8,
-    // mirroring the Spark BMP counting
-    "encoding_audit" ->
-      """WITH m AS (SELECT source, length(text) AS len,
-        |    length(text) - length(regexp_replace(text,
-        |      '[^\x00-\x7F]', '', 'g')) AS na,
-        |    length(text) - length(regexp_replace(text,
-        |      '\x{FFFD}', '', 'g')) AS re,
-        |    length(text) - length(regexp_replace(text,
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g')) AS ct
-        |  FROM documents)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(sum(len), 0) AS BIGINT) AS n_chars,
-        |  CAST(COALESCE(sum(CASE WHEN na > 0 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS non_ascii_docs,
-        |  CAST(COALESCE(sum(na), 0) AS BIGINT) AS non_ascii_chars,
-        |  CAST(COALESCE(sum(re), 0) AS BIGINT) AS replacement_chars,
-        |  CAST(COALESCE(sum(ct), 0) AS BIGINT) AS control_chars,
-        |  CASE WHEN sum(len) > 0 THEN
-        |    CAST((sum(len) - sum(na)) * 1000 // sum(len) AS BIGINT)
-        |  END AS ascii_permille
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
-
-    // heavy_hitters: the sketch is candidates-only, so the ground truth
-    // is the plain GROUP BY / HAVING at threshold n/(k+1), k=30
-    "heavy_hitters" ->
-      s"""WITH tok AS (SELECT unnest($toksSql) AS token FROM documents),
-         |tot AS (SELECT count(*) AS n FROM tok)
-         |SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences,
-         |  count(*) / CAST(any_value(tot.n) AS DOUBLE) AS share
-         |FROM tok, tot GROUP BY token
-         |HAVING count(*) * 31 > any_value(tot.n)
-         |ORDER BY n_occurrences DESC, token""".stripMargin,
-
-    // chunk_documents: 24-token windows every 16 tokens (8 overlap);
-    // DuckDB lists are 1-based and slices are inclusive
-    "chunk_documents" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, $toksSql AS t FROM documents),
-         |starts AS (
-         |  SELECT doc_id, t, unnest(generate_series(1, len(t), 16)) AS s,
-         |    generate_subscripts(generate_series(1, len(t), 16), 1) - 1
-         |      AS chunk_id
-         |  FROM tok WHERE len(t) > 0)
-         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-         |  CAST(len(t[s : least(s + 23, len(t))]) AS BIGINT)
-         |    AS n_chunk_tokens,
-         |  array_to_string(t[s : least(s + 23, len(t))], ' ') AS chunk_text
-         |FROM starts ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // cdc_chunks: the boundary hash is the identical polynomial fold, so
-    // DuckDB reproduces the exact chunk boundaries; chunk_id is the count
-    // of boundary tokens strictly before the token
-    "cdc_chunks" ->
-      s"""WITH $cdcChunkedCte
-         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-         |  CAST(count(*) AS BIGINT) AS n_chunk_tokens,
-         |  string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-         |FROM chunked GROUP BY doc_id, chunk_id
-         |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // cdc_dedup: CDC chunks + corpus-first occurrence per chunk TEXT
-    // (since round 15 — chunk identity is the text itself, not a hash;
-    // first = lowest (doc_id, chunk position)), reassembled per doc —
-    // the identical chunk boundaries AND the identical winner rule are
-    // recomputed in SQL
-    "cdc_dedup" ->
-      s"""WITH $cdcChunkedCte,
-         |chunks AS (
-         |  SELECT doc_id, chunk_id, string_agg(tok, ' ' ORDER BY pos) AS seg
-         |  FROM chunked GROUP BY doc_id, chunk_id),
-         |marked AS (
-         |  SELECT doc_id, chunk_id, seg, row_number() OVER (
-         |    PARTITION BY seg
-         |    ORDER BY doc_id, chunk_id) AS rn
-         |  FROM chunks)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |  CAST(COALESCE(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END), 0)
-         |    AS BIGINT) AS n_kept,
-         |  COALESCE(string_agg(CASE WHEN rn = 1 THEN seg END, ' '
-         |    ORDER BY chunk_id), '') AS text_kept
-         |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "upsample" ->
-      s"""WITH w AS (SELECT doc_id, source,
-         |  CASE source WHEN 'src0' THEN 2500 WHEN 'src1' THEN 500
-         |    ELSE 1000 END AS wt,
-         |  ((${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    * 1103515245 + 12345) % 2147483647) % 1000 AS h
-         |  FROM documents),
-         |n AS (SELECT doc_id, source,
-         |  (wt // 1000) + CASE WHEN h < wt % 1000 THEN 1 ELSE 0 END AS n
-         |  FROM w)
-         |SELECT doc_id, source,
-         |  CAST(unnest(generate_series(0, n - 1)) AS BIGINT) AS replica
-         |FROM n WHERE n > 0 ORDER BY doc_id, replica""".stripMargin,
-
-    // corpus_mix: same exact integer rate arithmetic — floor divisions,
-    // 1% hash buckets
-    // per-source token mass + recipe arithmetic; ceil-division for the
-    // needed epochs so feasibility is exact
-    "mix_planner" ->
-      s"""WITH tok AS (
-         |  SELECT source, CAST(len($toksSql) AS BIGINT) AS n
-         |  FROM documents),
-         |agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n) AS BIGINT) AS n_tokens,
-         |    CAST(CASE source WHEN 'src0' THEN 300 WHEN 'src1' THEN 200
-         |      ELSE 25 END AS BIGINT) AS w
-         |  FROM tok GROUP BY source),
-         |p AS (SELECT source, n_docs, n_tokens,
-         |    CAST((100000 * w) // 1000 AS BIGINT) AS target_tokens
-         |  FROM agg),
-         |q AS (SELECT source, n_docs, n_tokens, target_tokens,
-         |    CAST(CASE WHEN target_tokens = 0 THEN 0
-         |         WHEN n_tokens > 0
-         |         THEN (1000 * target_tokens + n_tokens - 1) // n_tokens
-         |         END AS BIGINT) AS needed_epochs_milli
-         |  FROM p)
-         |SELECT source, n_docs, n_tokens, target_tokens,
-         |  needed_epochs_milli,
-         |  CAST(least(needed_epochs_milli, 4000) AS BIGINT) AS epochs_milli,
-         |  CAST(least(target_tokens, (n_tokens * 4000) // 1000) AS BIGINT)
-         |    AS achieved_tokens,
-         |  needed_epochs_milli IS NOT NULL AND needed_epochs_milli <= 4000
-         |    AS feasible
-         |FROM q ORDER BY source""".stripMargin,
-
-    // budget_select: greedy best-first prefix per source under a token
-    // budget — same quality score CTE, same (score desc, id) total order
-    "budget_select" -> budgetSelectSql,
-
-    // the preThin variant shares the SAME oracle text: the percentile
-    // cut is exact by construction, so the two Spark plans must
-    // hash-match one SQL definition
-    "budget_select_prethin" -> budgetSelectSql,
-
-    "corpus_mix" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS n
-         |  FROM documents),
-         |rates AS (
-         |  SELECT source,
-         |    least(100, CASE WHEN sum(n) > 0 THEN
-         |      (100 * ((3000 * (CASE source WHEN 'src0' THEN 300
-         |                       WHEN 'src1' THEN 200 ELSE 25 END)) // 1000))
-         |        // sum(n)
-         |      ELSE 0 END) AS rate
-         |  FROM tok GROUP BY source)
-         |SELECT tok.doc_id, tok.source, tok.n AS n_tokens
-         |FROM tok JOIN rates ON tok.source = rates.source
-         |WHERE ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |  % 100 < rate
-         |ORDER BY doc_id""".stripMargin,
-
-    "dataset_card" ->
-      s"""WITH base AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(COALESCE(sum(len($toksSql)), 0) AS BIGINT) AS n_tokens,
-         |    CAST(count(DISTINCT text) AS BIGINT) AS n_distinct
-         |  FROM documents),
-         |voc AS (
-         |  SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vocab
-         |  FROM (SELECT unnest($toksSql) AS tok FROM documents)),
-         |lg AS (
-         |  SELECT string_agg(lang || ':' || CAST(c AS VARCHAR), ','
-         |                    ORDER BY lang) AS lang_counts
-         |  FROM (SELECT lang, count(*) AS c FROM documents GROUP BY lang))
-         |SELECT n_docs, n_tokens, vocab,
-         |  n_docs - n_distinct AS n_dup_docs,
-         |  CASE WHEN n_docs > 0
-         |    THEN CAST(n_docs - n_distinct AS DOUBLE) / n_docs
-         |    ELSE 0.0 END AS dup_rate,
-         |  CASE WHEN n_docs > 0
-         |    THEN CAST(n_tokens AS DOUBLE) / n_docs ELSE 0.0 END
-         |    AS mean_tokens,
-         |  lang_counts
-         |FROM base, voc, lg""".stripMargin,
-
-    // content_fingerprint twin: identical canonicalization (chr(1)
-    // separator, chr(2) null sentinel) and the same sum-mod arithmetic
-    "content_fingerprint" ->
-      s"""WITH h AS (SELECT ${duckPolyFragment(
-             "concat_ws(chr(1), CAST(doc_id AS VARCHAR), lang, source, " +
-               "CAST(n_chars AS VARCHAR))", 31, 1000000007L)} AS h
-         |  FROM documents)
-         |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(sum(CAST(h AS HUGEINT)), 0) % 1000000007
-         |    AS BIGINT) AS fingerprint
-         |FROM h""".stripMargin,
-
-    // dataset_card_sketch twin: identical card, vocab re-estimated from
-    // the 256 smallest distinct reproducible hashes (the KMV closed form)
-    "dataset_card_sketch" ->
-      s"""WITH base AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(COALESCE(sum(len($toksSql)), 0) AS BIGINT) AS n_tokens,
-         |    CAST(count(DISTINCT text) AS BIGINT) AS n_distinct
-         |  FROM documents),
-         |h AS (SELECT DISTINCT ${duckPolyFragment("tok", 31, 1000000007L)}
-         |    AS h
-         |  FROM (SELECT unnest($toksSql) AS tok FROM documents)),
-         |r AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM h),
-         |voc AS (SELECT count(*) AS nd,
-         |    max(CASE WHEN rn <= 256 THEN h END) AS kth FROM r),
-         |lg AS (
-         |  SELECT string_agg(lang || ':' || CAST(c AS VARCHAR), ','
-         |                    ORDER BY lang) AS lang_counts
-         |  FROM (SELECT lang, count(*) AS c FROM documents GROUP BY lang))
-         |SELECT n_docs, n_tokens,
-         |  CASE WHEN nd < 256 THEN CAST(nd AS DOUBLE)
-         |       ELSE 255.0 * 1000000007 / kth END AS vocab_estimate,
-         |  n_docs - n_distinct AS n_dup_docs,
-         |  CASE WHEN n_docs > 0
-         |    THEN CAST(n_docs - n_distinct AS DOUBLE) / n_docs
-         |    ELSE 0.0 END AS dup_rate,
-         |  CASE WHEN n_docs > 0
-         |    THEN CAST(n_tokens AS DOUBLE) / n_docs ELSE 0.0 END
-         |    AS mean_tokens,
-         |  lang_counts
-         |FROM base, voc, lg""".stripMargin,
-
-    "corpus_diff" ->
-      s"""WITH oldsnap AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
-         |newsnap AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 13 = 0 THEN text || ' v2' ELSE text END AS text
-         |  FROM documents WHERE doc_id % 11 <> 0)
-         |SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-         |  CASE WHEN o.doc_id IS NULL THEN 'added'
-         |       WHEN n.doc_id IS NULL THEN 'removed'
-         |       ELSE 'changed' END AS status
-         |FROM oldsnap o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id
-         |WHERE o.doc_id IS NULL OR n.doc_id IS NULL
-         |   OR ${duckToken63("o.text")} <> ${duckToken63("n.text")}
-         |ORDER BY doc_id, status""".stripMargin,
-
-    "corpus_shuffle" ->
-      s"""SELECT doc_id,
-         |  (${duckPolyFragment("CAST(doc_id AS VARCHAR) || ':e1'", 31, 1000000007L)}
-         |    * 1103515245 + 12345) % 2147483647 AS shuffle_key
-         |FROM documents ORDER BY shuffle_key, doc_id""".stripMargin,
-
-    "length_buckets" ->
-      s"""SELECT CAST(length(bin(n)) AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n) AS BIGINT) AS total_tokens,
-         |  CAST(min(n) AS BIGINT) AS min_tokens,
-         |  CAST(max(n) AS BIGINT) AS max_tokens
-         |FROM (SELECT CAST(len($toksSql) AS BIGINT) AS n FROM documents)
-         |GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // cap_per_group: at most 15 docs per source, ranked by the
-    // reproducible polynomial id hash (ties on doc_id)
-    "cap_per_group" ->
-      s"""SELECT doc_id, source FROM (
-         |  SELECT doc_id, source,
-         |    row_number() OVER (PARTITION BY source ORDER BY
-         |      ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)},
-         |      doc_id) AS rk
-         |  FROM documents)
-         |WHERE rk <= 15 ORDER BY doc_id""".stripMargin,
-
-    // salted_join: salting only changes physical distribution — the
-    // oracle is the plain inner join
-    "salted_join" ->
-      """SELECT o_orderkey, o_custkey AS c_custkey, o_totalprice, c_name
-        |FROM orders JOIN customer ON o_custkey = customer.c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // bloom_join: the Bloom filter is a no-false-negative pre-filter and
-    // the exact semi join removes its false positives — the result is
-    // EXACTLY the semi join, so the oracle is the plain EXISTS
-    "bloom_join" ->
-      """SELECT o_orderkey, o_custkey FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM customer c
-        |  WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 9000)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "kfold_split" ->
-      s"""SELECT doc_id,
-         |  CAST(${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 5 AS BIGINT) AS fold
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // fold_balance twin: same hash fold assignment, same truncating
-    // permille arithmetic over the cell frame
-    "fold_balance" ->
-      s"""WITH f AS (SELECT
-         |    CAST(${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |      % 5 AS BIGINT) AS fold, lang FROM documents),
-         |cell AS (SELECT fold, lang, CAST(count(*) AS BIGINT) AS n
-         |  FROM f GROUP BY 1, 2),
-         |ft AS (SELECT fold, CAST(sum(n) AS BIGINT) AS fn
-         |  FROM cell GROUP BY 1),
-         |ct AS (SELECT lang, CAST(sum(n) AS BIGINT) AS cn
-         |  FROM cell GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS tn FROM cell)
-         |SELECT cell.fold, cell.lang, cell.n,
-         |  CAST(cell.n * 1000 // ft.fn AS BIGINT) AS fold_permille,
-         |  CAST(ct.cn * 1000 // t.tn AS BIGINT) AS corpus_permille,
-         |  CAST(cell.n * 1000 // ft.fn - ct.cn * 1000 // t.tn AS BIGINT)
-         |    AS dev_permille
-         |FROM cell JOIN ft USING (fold) JOIN ct USING (lang), t
-         |ORDER BY fold, lang""".stripMargin,
-
-    "train_val_split" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 100 < 10 THEN 'val' ELSE 'train' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // split_leakage: near-dup pairs (exact-Jaccard ground truth — the
-    // minhash LSH pair set at these parameters) x the reproducible-hash
-    // split, aggregated to one leak-rate row
-    "split_leakage" ->
-      s"""WITH $jaccardCtes,
-         |sp AS (SELECT doc_id,
-         |  CASE WHEN ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 100 < 10 THEN 'val' ELSE 'train' END AS split FROM documents),
-         |j AS (SELECT p.doc_a, p.doc_b, sa.split AS split_a, sb.split AS split_b
-         |  FROM pairs p
-         |  JOIN sp sa ON p.doc_a = sa.doc_id
-         |  JOIN sp sb ON p.doc_b = sb.doc_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(COALESCE(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END), 0)
-         |    AS BIGINT) AS n_cross,
-         |  CASE WHEN count(*) > 0 THEN
-         |    CAST(COALESCE(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END), 0)
-         |      AS DOUBLE) / count(*)
-         |  END AS leak_rate
-         |FROM j""".stripMargin,
-
-    // the whole intake chain recomputed: exact-dedup + quality band, then
-    // 3-gram Jaccard pairs over the curated set (greedy higher-id drop),
-    // then the reproducible split
-    "intake_pipeline" ->
-      s"""WITH keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-         |tk AS (SELECT doc_id, text, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |       FROM documents),
-         |cur AS (SELECT tk.doc_id, tk.text, tk.n_tokens FROM tk
-         |  JOIN keepers ON tk.doc_id = keepers.doc_id
-         |  WHERE n_tokens BETWEEN 10 AND 2000
-         |    AND CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-         |        / greatest(length(text), 1) >= 0.5),
-         |toks AS (SELECT doc_id, $toksSql AS t FROM cur),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT doc_a, doc_b FROM inter
-         |  JOIN sizes sa ON inter.doc_a = sa.doc_id
-         |  JOIN sizes sb ON inter.doc_b = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)
-         |SELECT doc_id, n_tokens,
-         |  CASE WHEN ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 100 < 10 THEN 'val' ELSE 'train' END AS split
-         |FROM cur
-         |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |ORDER BY doc_id""".stripMargin,
-
-    // the v2 chain: cur (as intake_pipeline) -> per-source cap ->
-    // 3-gram Jaccard pairs over the CAPPED set (greedy higher-id drop)
-    // -> split + shuffle key
-    "intake_pipeline_v2" ->
-      s"""WITH keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-         |tk AS (SELECT doc_id, text, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |       FROM documents),
-         |cur AS (SELECT tk.doc_id, tk.text, tk.n_tokens FROM tk
-         |  JOIN keepers ON tk.doc_id = keepers.doc_id
-         |  WHERE n_tokens BETWEEN 10 AND 2000
-         |    AND CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-         |        / greatest(length(text), 1) >= 0.5),
-         |curd AS (SELECT cur.doc_id, d.source, cur.n_tokens, cur.text
-         |  FROM cur JOIN documents d ON cur.doc_id = d.doc_id),
-         |cap AS (SELECT doc_id, source, n_tokens, text FROM (
-         |  SELECT curd.*, row_number() OVER (PARTITION BY source ORDER BY
-         |    ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)},
-         |    doc_id) AS rk FROM curd) WHERE rk <= 15),
-         |toks AS (SELECT doc_id, $toksSql AS t FROM cap),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT doc_a, doc_b FROM inter
-         |  JOIN sizes sa ON inter.doc_a = sa.doc_id
-         |  JOIN sizes sb ON inter.doc_b = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)
-         |SELECT doc_id, source, n_tokens,
-         |  CASE WHEN ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 100 < 10 THEN 'val' ELSE 'train' END AS split,
-         |  (${duckPolyFragment("CAST(doc_id AS VARCHAR) || ':e1'", 31, 1000000007L)}
-         |    * 1103515245 + 12345) % 2147483647 AS shuffle_key
-         |FROM cap
-         |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |ORDER BY doc_id""".stripMargin,
-
-    // v3: Gopher battery (minWords=20) + LM floor (-3.4) + exact-dedup
-    // winners + per-source cap + split/shuffle key — every stage reuses
-    // the fragment its standalone oracle already validates
-    "intake_pipeline_v3" ->
-      s"""WITH $gopherBaseCte,
-         |$lmScoreCtes,
-         |gr AS (SELECT doc_id, n_words FROM gbase
-         |  WHERE ${gopherPassSql(20, 100000)}),
-         |lmk AS (SELECT doc_id, lm_score FROM lmscore
-         |  WHERE lm_score >= -3.4),
-         |keepers AS (SELECT min(doc_id) AS doc_id FROM documents
-         |  GROUP BY text),
-         |kept AS (SELECT d.doc_id, d.source, g.n_words, l.lm_score
-         |  FROM documents d
-         |  JOIN gr g ON g.doc_id = d.doc_id
-         |  JOIN lmk l ON l.doc_id = d.doc_id
-         |  WHERE d.doc_id IN (SELECT doc_id FROM keepers)),
-         |cap AS (SELECT doc_id, source, n_words, lm_score FROM (
-         |  SELECT kept.*, row_number() OVER (PARTITION BY source ORDER BY
-         |    ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)},
-         |    doc_id) AS rk FROM kept) WHERE rk <= 15)
-         |SELECT doc_id, source, n_words, lm_score,
-         |  CASE WHEN ${duckPolyFragment("CAST(doc_id AS VARCHAR)", 31, 1000000007L)}
-         |    % 100 < 10 THEN 'val' ELSE 'train' END AS split,
-         |  (${duckPolyFragment("CAST(doc_id AS VARCHAR) || ':e1'", 31, 1000000007L)}
-         |    * 1103515245 + 12345) % 2147483647 AS shuffle_key
-         |FROM cap ORDER BY doc_id""".stripMargin,
-
-    // KMV: the k-th smallest of the same reproducible hashes gives the
-    // same estimate the Aggregator computes — (k-1)*mod/h_k, exact below k
-    "distinct_estimate" ->
-      s"""WITH h AS (SELECT DISTINCT source,
-         |    ${duckPolyFragment("tok", 31, 1000000007L)} AS h
-         |  FROM (SELECT source, unnest($toksSql) AS tok FROM documents)),
-         |r AS (SELECT source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-         |  FROM h),
-         |agg AS (SELECT source, count(*) AS nd,
-         |    max(CASE WHEN rn <= 64 THEN h END) AS kth
-         |  FROM r GROUP BY source)
-         |SELECT source,
-         |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / kth END AS kmv_estimate,
-         |  nd AS n_exact
-         |FROM agg ORDER BY source""".stripMargin,
-
-    // top-k token ranks + integer ratio against n_top / rank
-    "zipf_audit" ->
-      s"""WITH c AS (SELECT tok AS term, CAST(count(*) AS BIGINT) AS n
-         |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
-         |  GROUP BY 1 ORDER BY n DESC, term ASC LIMIT 20),
-         |r AS (SELECT term, n,
-         |  CAST(row_number() OVER (ORDER BY n DESC, term ASC) AS BIGINT)
-         |    AS rank,
-         |  CAST(max(n) OVER () AS BIGINT) AS top
-         |  FROM c)
-         |SELECT rank, term, n,
-         |  CAST(n * rank * 1000 // top AS BIGINT) AS zipf_ratio_permille
-         |FROM r ORDER BY rank""".stripMargin,
-
-    "top_ngrams" ->
-      s"""SELECT s AS ngram, count(*) AS df
-         |FROM (SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(t) - 2),
-         |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM (SELECT doc_id, $toksSql AS t FROM documents)
-         |  WHERE len(t) >= 3)
-         |GROUP BY s ORDER BY df DESC, ngram ASC LIMIT 20""".stripMargin,
-
-    // dsir_weights: unigram+bigram buckets via the shared polynomial
-    // hash; per-bucket add-1 LLR micro-floored once, per-doc BIGINT sum
-    "dsir_weights" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |rawg AS (
-         |  SELECT doc_id, unnest(t) AS g FROM tk
-         |  UNION ALL
-         |  SELECT doc_id, unnest(list_transform(
-         |      generate_series(1, len(t) - 1),
-         |      i -> t[i] || ' ' || t[i+1])) AS g
-         |  FROM tk WHERE len(t) >= 2),
-         |tgtk AS (SELECT $toksSql AS t FROM documents
-         |         WHERE source = (SELECT min(source) FROM documents)),
-         |tgtg AS (
-         |  SELECT unnest(t) AS g FROM tgtk
-         |  UNION ALL
-         |  SELECT unnest(list_transform(
-         |      generate_series(1, len(t) - 1),
-         |      i -> t[i] || ' ' || t[i+1])) AS g
-         |  FROM tgtk WHERE len(t) >= 2),
-         |rb AS (SELECT doc_id,
-         |    CAST(${duckPolyFragment("g", 31, 1000000007L)} % 1024 AS INT)
-         |      AS b FROM rawg),
-         |tb AS (SELECT
-         |    CAST(${duckPolyFragment("g", 31, 1000000007L)} % 1024 AS INT)
-         |      AS b FROM tgtg),
-         |rc AS (SELECT b, count(*) AS rc FROM rb GROUP BY b),
-         |tc AS (SELECT b, count(*) AS tc FROM tb GROUP BY b),
-         |tot AS (SELECT (SELECT count(*) FROM rb) AS r_tot,
-         |               (SELECT count(*) FROM tb) AS t_tot),
-         |llr AS (SELECT gb.b,
-         |    CAST(floor((ln((COALESCE(tc.tc, 0) + 1) * (tot.r_tot + 1024))
-         |              - ln((COALESCE(rc.rc, 0) + 1) * (tot.t_tot + 1024)))
-         |         * 1000000) AS BIGINT) AS w
-         |  FROM (SELECT unnest(generate_series(0, 1023)) AS b) gb
-         |  CROSS JOIN tot
-         |  LEFT JOIN rc ON rc.b = gb.b
-         |  LEFT JOIN tc ON tc.b = gb.b),
-         |per AS (SELECT rb.doc_id, count(*) AS n_grams, sum(llr.w) AS w
-         |  FROM rb JOIN llr ON llr.b = rb.b GROUP BY rb.doc_id)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(per.n_grams, 0) AS BIGINT) AS n_grams,
-         |  CAST(COALESCE(per.w, 0) AS BIGINT) AS dsir_weight_micro
-         |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "pack_sequences" ->
-      s"""SELECT source, doc_id, n_tokens,
-         |  CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS pack_id
-         |FROM (
-         |  SELECT source, doc_id, n_tokens,
-         |    sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS cum
-         |  FROM (SELECT source, doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |        FROM documents))
-         |ORDER BY source, doc_id""".stripMargin,
-
-    "curate" ->
-      s"""WITH keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-         |tk AS (SELECT doc_id, text, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |       FROM documents)
-         |SELECT tk.doc_id, n_tokens FROM tk
-         |JOIN keepers ON tk.doc_id = keepers.doc_id
-         |WHERE n_tokens BETWEEN 10 AND 2000
-         |  AND CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-         |      / greatest(length(text), 1) >= 0.5
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    // decode_batch twin: the Spark side decodes real PNG bytes; this side
-    // predicts what the decoded raster must contain from the closed-form
-    // pattern pixel(x,y) = RGB(x, y, id mod 256) at w = 16 + id mod 17,
-    // h = 16 + id mod 13 — a hash match proves the codec round-trip
-    "decode_batch" ->
-      """SELECT doc_id,
-        |  CAST(w AS BIGINT) AS width,
-        |  CAST(h AS BIGINT) AS height,
-        |  CAST(3 AS BIGINT) AS channels,
-        |  CAST(w * h AS BIGINT) AS n_pixels,
-        |  CAST(h * (w * (w - 1) // 2) AS BIGINT) AS sum_r,
-        |  CAST(w * (h * (h - 1) // 2) AS BIGINT) AS sum_g,
-        |  CAST(w * h * (doc_id % 256) AS BIGINT) AS sum_b
-        |FROM (SELECT doc_id, 16 + doc_id % 17 AS w, 16 + doc_id % 13 AS h
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // frame_sample twin: sampled frames f in (0,2,4) of 6, blue plane
-    // advanced to (doc_id + f) mod 256 — same closed-form raster
-    // prediction as decode_batch, per frame
-    "frame_sample" ->
-      """SELECT doc_id, f AS frame_idx,
-        |  CAST(w AS BIGINT) AS width,
-        |  CAST(h AS BIGINT) AS height,
-        |  CAST(h * (w * (w - 1) // 2) AS BIGINT) AS sum_r,
-        |  CAST(w * (h * (h - 1) // 2) AS BIGINT) AS sum_g,
-        |  CAST(w * h * ((doc_id + f) % 256) AS BIGINT) AS sum_b
-        |FROM (SELECT doc_id, 16 + doc_id % 17 AS w, 16 + doc_id % 13 AS h,
-        |        CAST(unnest([0, 2, 4]) AS BIGINT) AS f
-        |      FROM documents)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // media_resize twin: nearest-neighbor with the floor mapping
-    // src = tgt * srcDim // tgtDim means resized pixel (tx, ty) is
-    // RGB(tx*w//24, ty*h//24, id % 256) — sums are list-folds over the
-    // 24-wide target range
-    "media_resize" ->
-      """SELECT doc_id,
-        |  CAST(w AS BIGINT) AS src_w,
-        |  CAST(h AS BIGINT) AS src_h,
-        |  CAST(24 AS BIGINT) AS width,
-        |  CAST(24 AS BIGINT) AS height,
-        |  CAST(576 AS BIGINT) AS n_pixels,
-        |  CAST(24 * list_sum(list_transform(range(0, 24),
-        |    tx -> (tx * w) // 24)) AS BIGINT) AS sum_r,
-        |  CAST(24 * list_sum(list_transform(range(0, 24),
-        |    ty -> (ty * h) // 24)) AS BIGINT) AS sum_g,
-        |  CAST(576 * (doc_id % 256) AS BIGINT) AS sum_b
-        |FROM (SELECT doc_id, 16 + doc_id % 17 AS w, 16 + doc_id % 13 AS h
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "sessionize" ->
-      """SELECT event_id, ts, user_id, event_type, value, props,
-        |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |FROM (
-        |  SELECT *, CASE WHEN
-        |      lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |        IS NULL
-        |      OR epoch_us(ts) - lag(epoch_us(ts)) OVER (
-        |        PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-        |    THEN 1 ELSE 0 END AS is_new
-        |  FROM events)
-        |ORDER BY event_id""".stripMargin,
-
-    "window_agg" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS w_start,
-        |  CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS w_end,
-        |  event_type, count(*) AS n_events,
-        |  count(DISTINCT user_id) AS n_users,
-        |  min(value) AS min_value, max(value) AS max_value
-        |FROM events GROUP BY 1, 2, 3
-        |ORDER BY w_start, event_type""".stripMargin,
-
-    // Spark sliding windows (L=1d, S=12h, epoch-aligned): an event at t
-    // belongs to exactly the two windows starting at floor(t/S)*S and
-    // floor(t/S)*S - S — recomputed via unnest of both starts
-    "sliding_window" ->
-      """SELECT CAST(to_timestamp(ws) AS TIMESTAMP) AS w_start,
-        |  CAST(to_timestamp(ws + 86400) AS TIMESTAMP) AS w_end,
-        |  event_type, count(*) AS n_events,
-        |  count(DISTINCT user_id) AS n_users,
-        |  min(value) AS min_value, max(value) AS max_value
-        |FROM (
-        |  SELECT unnest([(epoch_us(ts) // 1000000 // 43200) * 43200,
-        |                 (epoch_us(ts) // 1000000 // 43200) * 43200 - 43200])
-        |           AS ws,
-        |    event_type, user_id, value
-        |  FROM events)
-        |GROUP BY ws, event_type
-        |ORDER BY w_start, event_type""".stripMargin,
-
-    // epoch_us floor-division matches Spark unix_timestamp's truncation
-    "rolling_counts" ->
-      """SELECT event_id, ts, user_id, event_type, value, props,
-        |  CAST(count(*) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts) // 1000000
-        |    RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS n_trailing
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // retention: integer epoch-day-seventh weeks (engine-invariant)
-    "retention" ->
-      """WITH weeks AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    (epoch_us(ts) // 86400000000) // 7 AS w
-        |  FROM events),
-        |cohorts AS (SELECT u, min(w) AS cw FROM weeks GROUP BY u)
-        |SELECT CAST(cw AS BIGINT) AS cohort_week,
-        |  CAST(w - cw AS BIGINT) AS week_offset,
-        |  CAST(count(*) AS BIGINT) AS n_users
-        |FROM weeks JOIN cohorts USING (u)
-        |GROUP BY cw, w - cw
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-
-    // same per-user window, last_value IGNORE NULLS of the touch struct
-    // over strictly-preceding rows, microsecond gap on both engines
-    "attribution" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type, ts,
-        |    CAST(epoch_us(ts) AS BIGINT) AS tus,
-        |    last_value(CASE WHEN event_type IN ('click', 'view')
-        |        THEN struct_pack(t := CAST(epoch_us(ts) AS BIGINT),
-        |                         i := event_id,
-        |                         y := event_type) END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS lt
-        |  FROM events)
-        |SELECT event_id AS conversion_id, user_id, ts AS conversion_ts,
-        |  CASE WHEN lt IS NOT NULL AND tus - lt.t <= 604800000000
-        |       THEN lt.i END AS touch_id,
-        |  CASE WHEN lt IS NOT NULL AND tus - lt.t <= 604800000000
-        |       THEN lt.y END AS touch_type,
-        |  CASE WHEN lt IS NOT NULL AND tus - lt.t <= 604800000000
-        |       THEN tus - lt.t END AS gap_us
-        |FROM e WHERE event_type = 'purchase'
-        |ORDER BY conversion_id""".stripMargin,
-
-    // funnel: per-user earliest valid completion per step, each step
-    // strictly after the previous and within 2 days of it
-    "funnel" ->
-      """WITH s0 AS (
-        |  SELECT user_id AS u, min(ts) AS done FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s1 AS (
-        |  SELECT e.user_id AS u, min(e.ts) AS done FROM events e
-        |  JOIN s0 ON e.user_id = s0.u
-        |  WHERE e.event_type = 'click' AND e.ts > s0.done
-        |    AND e.ts <= s0.done + INTERVAL 172800 SECOND GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id AS u, min(e.ts) AS done FROM events e
-        |  JOIN s1 ON e.user_id = s1.u
-        |  WHERE e.event_type = 'purchase' AND e.ts > s1.done
-        |    AND e.ts <= s1.done + INTERVAL 172800 SECOND GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT CAST(0 AS BIGINT) AS step_idx, 'view' AS step_name,
-        |    CAST(count(*) AS BIGINT) AS n_users FROM s0
-        |  UNION ALL SELECT CAST(1 AS BIGINT), 'click',
-        |    CAST(count(*) AS BIGINT) FROM s1
-        |  UNION ALL SELECT CAST(2 AS BIGINT), 'purchase',
-        |    CAST(count(*) AS BIGINT) FROM s2)
-        |ORDER BY step_idx""".stripMargin,
-
-    // event_transitions: lead() on the same (ts, event_id) timeline order;
-    // p is one BIGINT/BIGINT division, bit-identical across engines
-    "event_transitions" ->
-      """WITH pairs AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |cnt AS (
-        |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_pairs
-        |  FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT from_type, CAST(sum(n_pairs) AS BIGINT) AS n_from
-        |  FROM cnt GROUP BY 1)
-        |SELECT cnt.from_type, cnt.to_type, cnt.n_pairs, tot.n_from,
-        |  CAST(cnt.n_pairs AS DOUBLE) / tot.n_from AS p
-        |FROM cnt JOIN tot ON cnt.from_type = tot.from_type
-        |ORDER BY 1, 2""".stripMargin,
-
-    // event_lift: distinct user-day-type baskets, integer milli lift
-    "event_lift" ->
-      """WITH baskets AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d,
-        |    event_type AS t
-        |  FROM events),
-        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_baskets
-        |  FROM (SELECT DISTINCT u, d FROM baskets)),
-        |tc AS (SELECT t, CAST(count(*) AS BIGINT) AS n
-        |  FROM baskets GROUP BY 1),
-        |pc AS (SELECT a.t AS type_a, b.t AS type_b,
-        |    CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM baskets a JOIN baskets b
-        |    ON a.u = b.u AND a.d = b.d AND a.t < b.t
-        |  GROUP BY 1, 2)
-        |SELECT pc.type_a, pc.type_b, ta.n AS n_a, tb.n AS n_b, pc.n_ab,
-        |  CAST((CAST(nb.n_baskets AS HUGEINT) * pc.n_ab * 1000)
-        |    // (CAST(ta.n AS HUGEINT) * tb.n) AS BIGINT)
-        |    AS lift_milli
-        |FROM pc
-        |JOIN tc ta ON ta.t = pc.type_a
-        |JOIN tc tb ON tb.t = pc.type_b
-        |CROSS JOIN nb
-        |ORDER BY 1, 2""".stripMargin,
-
-    // resample_ffill: same last-event-of-day pick (ts desc, event_id
-    // desc), generate_series day spine, IGNORE NULLS carry
-    "resample_ffill" ->
-      """WITH daily AS (
-        |  SELECT user_id, day, value FROM (
-        |    SELECT user_id, CAST(ts AS DATE) AS day, value,
-        |      row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |        ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events WHERE user_id % 10 = 0)
-        |  WHERE rn = 1),
-        |spine AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-        |      CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM (SELECT user_id, min(day) AS d0, max(day) AS d1
-        |        FROM daily GROUP BY 1))
-        |SELECT s.user_id, s.day,
-        |  last_value(d.value IGNORE NULLS) OVER (PARTITION BY s.user_id
-        |    ORDER BY s.day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
-        |  d.value IS NULL AS is_filled
-        |FROM spine s LEFT JOIN daily d
-        |  ON s.user_id = d.user_id AND s.day = d.day
-        |ORDER BY s.user_id, s.day""".stripMargin,
-
-    // count_anomaly: the 3-sigma test evaluated in pure BIGINT arithmetic
-    // ((n*x - S1)^2 > 9*(n*S2 - S1^2)) so the flag is engine-invariant
-    "count_anomaly" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, event_type,
-        |    CAST(count(*) AS BIGINT) AS n_events,
-        |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d
-        |  FROM events GROUP BY 1, 2, 4),
-        |st AS (
-        |  SELECT day, event_type, n_events,
-        |    CAST(count(*) OVER w AS BIGINT) AS n_baseline,
-        |    CAST(COALESCE(sum(n_events) OVER w, 0) AS BIGINT) AS s1,
-        |    CAST(COALESCE(sum(n_events * n_events) OVER w, 0) AS BIGINT) AS s2
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY d
-        |    RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING))
-        |SELECT day, event_type, n_events, n_baseline,
-        |  n_baseline > 0 AND
-        |    (n_baseline * n_events - s1) * (n_baseline * n_events - s1)
-        |      > 9 * (n_baseline * s2 - s1 * s1) AS is_anomaly
-        |FROM st ORDER BY day, event_type""".stripMargin,
-
-    "interval_overlap" ->
-      """SELECT a.event_id AS a_id, b.event_id AS b_id
-        |FROM (SELECT event_id, ts AS s, ts + INTERVAL 6 HOUR AS e
-        |      FROM events WHERE event_type = 'signup' AND event_id % 20 = 0) a
-        |JOIN (SELECT event_id, ts AS s, ts + INTERVAL 6 HOUR AS e
-        |      FROM events WHERE event_type = 'purchase' AND event_id % 20 = 0) b
-        |  ON a.s < b.e AND b.s < a.e
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // cluster-hash split: same recursive closure, split decided by the
-    // cluster id's polynomial hash (the trainValSplit rule on cluster_id)
-    "cluster_split" ->
-      s"""WITH RECURSIVE $nearDupClusterCtes
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN ${polyHashSql("CAST(cluster_id AS VARCHAR)")} % 100 < 10
-         |       THEN 'val' ELSE 'train' END AS split
-         |FROM cl ORDER BY doc_id""".stripMargin,
-
-    // exact side counts + top-key shares -> the same decision CASE
-    "join_advisor" ->
-      """WITH l AS (SELECT CAST(sum(c) AS BIGINT) AS rows,
-        |    CAST(COALESCE(max(c), 0) AS BIGINT) AS topn FROM (
-        |    SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey)),
-        |r AS (SELECT CAST(sum(c) AS BIGINT) AS rows,
-        |    CAST(COALESCE(max(c), 0) AS BIGINT) AS topn FROM (
-        |    SELECT count(*) AS c FROM orders GROUP BY o_orderkey))
-        |SELECT l.rows AS n_left, r.rows AS n_right,
-        |  CASE WHEN l.rows > 0 THEN CAST(l.topn * 1000 // l.rows AS BIGINT)
-        |       ELSE CAST(0 AS BIGINT) END AS top_share_left_permille,
-        |  CASE WHEN r.rows > 0 THEN CAST(r.topn * 1000 // r.rows AS BIGINT)
-        |       ELSE CAST(0 AS BIGINT) END AS top_share_right_permille,
-        |  CASE WHEN r.rows <= 1000 THEN 'broadcast_right'
-        |       WHEN l.rows <= 1000 THEN 'broadcast_left'
-        |       WHEN greatest(
-        |           CASE WHEN l.rows > 0 THEN l.topn * 1000 // l.rows ELSE 0 END,
-        |           CASE WHEN r.rows > 0 THEN r.topn * 1000 // r.rows ELSE 0 END)
-        |         >= 200 THEN 'salted_shuffle'
-        |       ELSE 'shuffle' END AS strategy
-        |FROM l, r""".stripMargin,
-
-    // triangle fan-out joined with symmetric degrees; same integer DIV
-    "clustering_coeff" ->
-      s"""WITH $jaccardCtes,
-         |tri AS (SELECT p1.doc_a AS x, p1.doc_b AS y, p2.doc_b AS z
-         |  FROM pairs p1
-         |  JOIN pairs p2 ON p2.doc_a = p1.doc_b
-         |  JOIN pairs p3 ON p3.doc_a = p1.doc_a AND p3.doc_b = p2.doc_b),
-         |tn AS (SELECT x AS n FROM tri UNION ALL SELECT y FROM tri
-         |  UNION ALL SELECT z FROM tri),
-         |tc AS (SELECT n, CAST(count(*) AS BIGINT) AS t FROM tn GROUP BY 1),
-         |dn AS (SELECT doc_a AS n FROM pairs
-         |  UNION ALL SELECT doc_b FROM pairs),
-         |dg AS (SELECT n, CAST(count(*) AS BIGINT) AS d FROM dn GROUP BY 1)
-         |SELECT doc.doc_id,
-         |  COALESCE(dg.d, CAST(0 AS BIGINT)) AS degree,
-         |  COALESCE(tc.t, CAST(0 AS BIGINT)) AS triangles,
-         |  CASE WHEN COALESCE(dg.d, 0) >= 2
-         |       THEN CAST(2000 * COALESCE(tc.t, 0) // (dg.d * (dg.d - 1))
-         |            AS BIGINT)
-         |       ELSE CAST(0 AS BIGINT) END AS coeff_permille
-         |FROM documents doc
-         |LEFT JOIN tc ON doc.doc_id = tc.n
-         |LEFT JOIN dg ON doc.doc_id = dg.n
-         |ORDER BY doc.doc_id""".stripMargin,
-
-    // connected components over the near-dup pair graph: transitive closure
-    // via recursive CTE, cluster id = min reachable doc id
-    "neardup_clusters" ->
-      s"""WITH RECURSIVE $nearDupClusterCtes
-         |SELECT doc_id, cluster_id FROM cl ORDER BY doc_id""".stripMargin,
-
-    // materialized dedup: one row per cluster representative
-    "neardup_dedup" ->
-      s"""WITH RECURSIVE $nearDupClusterCtes
-         |SELECT cluster_id AS keep_id, CAST(count(*) AS BIGINT) AS n_members
-         |FROM cl GROUP BY cluster_id ORDER BY keep_id""".stripMargin,
-
-    // quality-aware canonicalization: same recursive closure, keep the
-    // micro-quantized-quality argmax (ties -> lowest id) per cluster
-    "neardup_dedup_quality" ->
-      s"""WITH RECURSIVE $nearDupClusterCtes,
-         |qs AS ($qualityScoreSql),
-         |jq AS (SELECT cl.doc_id, cl.cluster_id,
-         |    CAST(round(qs.quality_score * 1000000) AS BIGINT) AS q_micro
-         |  FROM cl JOIN qs ON cl.doc_id = qs.doc_id),
-         |best AS (SELECT doc_id AS keep_id, cluster_id, n_members FROM (
-         |  SELECT doc_id, cluster_id,
-         |    row_number() OVER (PARTITION BY cluster_id
-         |      ORDER BY q_micro DESC, doc_id ASC) AS rn,
-         |    CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-         |      AS n_members
-         |  FROM jq) WHERE rn = 1)
-         |SELECT jq.doc_id, jq.cluster_id, b.keep_id,
-         |  jq.doc_id = b.keep_id AS kept, b.n_members
-         |FROM jq JOIN best b ON jq.cluster_id = b.cluster_id
-         |ORDER BY jq.doc_id""".stripMargin,
-
-    "tfidf_topterms" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, t AS term, count(*) AS tf FROM (
-         |    SELECT doc_id, unnest($toksSql) AS t FROM documents)
-         |  GROUP BY doc_id, t),
-         |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-         |SELECT doc_id, term, tf, df, score, rank FROM (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfx.df,
-         |    tf.tf / CAST(dfx.df AS DOUBLE) AS score,
-         |    row_number() OVER (PARTITION BY tf.doc_id
-         |      ORDER BY tf.tf / CAST(dfx.df AS DOUBLE) DESC, tf.term) AS rank
-         |  FROM tf JOIN dfx ON tf.term = dfx.term)
-         |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-
-    "clean_text" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    lower(text),
-        |    'https?://[^ \t\n]+', '<url>', 'g'),
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+', '<email>', 'g'),
-        |    '[0-9]+', '<num>', 'g'),
-        |    '[ \t\n]+', ' ', 'g')) AS clean
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // pii_redact twin: same deterministic PII planting, same pattern table,
-    // same application order (each count runs on the text as it stood
-    // before that category's replacement)
-    "pii_redact" ->
-      """WITH aug AS (SELECT doc_id,
-        |  text || ' contact u' || CAST(doc_id AS VARCHAR) ||
-        |  '@example.com from 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
-        |  '.9 call 555 010 ' || CAST(doc_id % 9000 + 1000 AS VARCHAR) AS t
-        |  FROM documents),
-        |s1 AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-        |    AS n_email,
-        |  regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |    '<EMAIL>', 'g') AS t FROM aug),
-        |s2 AS (SELECT doc_id, n_email,
-        |  CAST(len(regexp_extract_all(t, 'https?://[^ \t\n]+')) AS BIGINT)
-        |    AS n_url,
-        |  regexp_replace(t, 'https?://[^ \t\n]+', '<URL>', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id, n_email, n_url,
-        |  CAST(len(regexp_extract_all(t,
-        |    '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS BIGINT)
-        |    AS n_ip,
-        |  regexp_replace(t, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}',
-        |    '<IP>', 'g') AS t FROM s2),
-        |s4 AS (SELECT doc_id, n_email, n_url, n_ip,
-        |  CAST(len(regexp_extract_all(t, '\+?[0-9][0-9() .-]{6,}[0-9]'))
-        |    AS BIGINT) AS n_phone,
-        |  regexp_replace(t, '\+?[0-9][0-9() .-]{6,}[0-9]', '<PHONE>', 'g')
-        |    AS t FROM s3)
-        |SELECT doc_id, n_email, n_url, n_ip, n_phone, t AS clean
-        |FROM s4 ORDER BY doc_id""".stripMargin,
-
-    // Simpson: ordered equal-token pairs per doc from grouped counts —
-    // the run-length fold's Σ n_i(n_i−1), same integer DIV
-    "simpson_score" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |cnt AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM tk GROUP BY 1, 2),
-         |p AS (SELECT doc_id, CAST(sum(c * (c - 1)) AS BIGINT) AS pairs
-         |  FROM cnt GROUP BY 1),
-         |base AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n
-         |  FROM documents)
-         |SELECT b.doc_id, b.n AS n_tokens,
-         |  CASE WHEN b.n > 1
-         |       THEN CAST(COALESCE(p.pairs, 0) * 1000 // (b.n * (b.n - 1))
-         |            AS BIGINT)
-         |       ELSE CAST(0 AS BIGINT) END AS simpson_permille
-         |FROM base b LEFT JOIN p ON b.doc_id = p.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    "repetition_score" ->
-      s"""SELECT doc_id,
-         |  CAST(CASE WHEN len(t) >= 3 THEN len(t) - 2 ELSE 0 END AS BIGINT)
-         |    AS n_shingles,
-         |  CAST(CASE WHEN len(t) >= 3 THEN len(list_distinct(list_transform(
-         |    generate_series(1, len(t) - 2),
-         |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) ELSE 0 END AS BIGINT)
-         |    AS n_distinct,
-         |  CASE WHEN len(t) >= 3 THEN
-         |    1.0 - CAST(len(list_distinct(list_transform(
-         |      generate_series(1, len(t) - 2),
-         |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS DOUBLE)
-         |      / (len(t) - 2)
-         |  ELSE 0.0 END AS rep_ratio
-         |FROM (SELECT doc_id, $toksSql AS t FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    // gopher_rules: every ratio rule is an integer cross-multiplication,
-    // so both engines compare the same BIGINTs — no float ever forms
-    "gopher_rules" ->
-      s"""WITH $gopherBaseCte
-         |SELECT doc_id, n_words, sum_word_len, n_alpha_words,
-         |  n_stop_distinct, n_symbols,
-         |  (n_words >= 50 AND n_words <= 100000) AS rule_word_count,
-         |  (n_words > 0 AND sum_word_len >= n_words * 3
-         |    AND sum_word_len <= n_words * 10) AS rule_mean_word_len,
-         |  (n_words > 0 AND n_symbols * 10 <= n_words) AS rule_symbol_ratio,
-         |  (n_words > 0 AND n_alpha_words * 5 >= n_words * 4)
-         |    AS rule_alpha_words,
-         |  (n_stop_distinct >= 2) AS rule_stopwords,
-         |  ${gopherPassSql(50, 100000)} AS pass
-         |FROM gbase ORDER BY doc_id""".stripMargin,
-
-    // hash_embed: identical bucket/sign hashes; signed sums are exact
-    // integers, zero-filled per bucket, joined in bucket order
-    "hash_embed" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |sg AS (SELECT doc_id,
-         |    CAST(${duckPolyFragment("tok", 31, 1000000007L)} % 64 AS INT)
-         |      AS b,
-         |    CASE WHEN (${duckPolyFragment("tok", 31, 1000000007L)} // 64)
-         |      % 2 = 0 THEN 1 ELSE -1 END AS s
-         |  FROM tk),
-         |agg AS (SELECT doc_id, b, CAST(sum(s) AS BIGINT) AS v
-         |  FROM sg GROUP BY doc_id, b),
-         |filled AS (
-         |  SELECT d.doc_id, g.b, CAST(COALESCE(a.v, 0) AS BIGINT) AS v
-         |  FROM documents d
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS b) g
-         |  LEFT JOIN agg a ON a.doc_id = d.doc_id AND a.b = g.b)
-         |SELECT doc_id, string_agg(CAST(v AS VARCHAR), ',' ORDER BY b) AS vec
-         |FROM filled GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // bpe_merges: identical in-word character-pair explosion + count
-    "bpe_merges" ->
-      s"""WITH words AS (SELECT unnest($toksSql) AS w FROM documents),
-         |pairs AS (SELECT substring(w, i, 2) AS pair
-         |  FROM (SELECT w, unnest(generate_series(1, length(w) - 1)) AS i
-         |        FROM words WHERE length(w) >= 2))
-         |SELECT pair, count(*) AS cnt FROM pairs GROUP BY pair
-         |ORDER BY cnt DESC, pair LIMIT 20""".stripMargin,
-
-    // inverted_index: the MinKLongs cap (10 smallest distinct doc ids)
-    // modeled with list_sort + list_slice over the full per-term id list
-    "inverted_index" ->
-      s"""WITH posts AS (
-         |  SELECT term, doc_id, count(*) AS cnt FROM (
-         |    SELECT doc_id, unnest($toksSql) AS term FROM documents)
-         |  GROUP BY term, doc_id),
-         |agg AS (SELECT term,
-         |  CAST(count(*) AS BIGINT) AS df,
-         |  CAST(sum(cnt) AS BIGINT) AS tf_total,
-         |  array_to_string(list_slice(list_sort(list(doc_id)), 1, 10), ',')
-         |    AS postings
-         |  FROM posts GROUP BY term)
-         |SELECT term, df, tf_total, postings FROM agg
-         |WHERE df >= 5 ORDER BY term""".stripMargin,
-
-    // source_overlap: distinct (source, poly-hash) sets — the hash is the
-    // reproducible polynomial, so both engines see identical sets
-    "source_overlap" ->
-      s"""WITH toks AS (SELECT source, $toksSql AS t FROM documents),
-         |shs AS (SELECT source, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |sh AS (SELECT DISTINCT source, ${polyHashSql("s")} AS h FROM shs),
-         |sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-         |  FROM sh GROUP BY 1),
-         |inter AS (SELECT a.source AS sa, b.source AS sb,
-         |    CAST(count(*) AS BIGINT) AS c
-         |  FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT x.source AS source_a, y.source AS source_b,
-         |  x.n AS n_a, y.n AS n_b,
-         |  CAST(COALESCE(inter.c, 0) AS BIGINT) AS n_common,
-         |  CASE WHEN x.n + y.n - COALESCE(inter.c, 0) > 0 THEN
-         |    CAST(floor(1000000.0 * COALESCE(inter.c, 0)
-         |      / (x.n + y.n - COALESCE(inter.c, 0))) AS BIGINT)
-         |  ELSE 0 END AS jaccard_micro
-         |FROM sizes x JOIN sizes y ON x.source < y.source
-         |LEFT JOIN inter ON inter.sa = x.source AND inter.sb = y.source
-         |ORDER BY source_a, source_b""".stripMargin,
-
-    // semantic_decontaminate: cosine test repeated as the same IEEE tree;
-    // integer-only output
-    "semantic_decontaminate" ->
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |  sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
-         |p AS (SELECT vec_id AS pid, embedding AS pe, nrm AS pn
-         |  FROM n WHERE vec_id < 5),
-         |hits AS (
-         |  SELECT c.vec_id,
-         |    CAST(COALESCE(sum(CASE WHEN
-         |      ${dotSql("c.embedding", "p.pe")} / (c.nrm * p.pn) >= 0.7
-         |      THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_flagged_probes
-         |  FROM n c LEFT JOIN p ON c.vec_id <> p.pid
-         |  GROUP BY c.vec_id)
-         |SELECT vec_id, n_flagged_probes, n_flagged_probes = 0 AS kept
-         |FROM hits ORDER BY vec_id""".stripMargin,
-
-    // oov_rate: top-256 vocabulary with (count desc, term) ties; permille
-    // is BIGINT floor division on both sides
-    "oov_rate" ->
-      s"""WITH ex AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |vc AS (SELECT term, count(*) AS n FROM ex GROUP BY 1),
-         |v AS (SELECT term FROM vc ORDER BY n DESC, term LIMIT 256),
-         |pd AS (SELECT ex.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_oov
-         |  FROM ex LEFT JOIN v ON ex.term = v.term GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(pd.n_tokens, 0) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(pd.n_oov, 0) AS BIGINT) AS n_oov,
-         |  CASE WHEN COALESCE(pd.n_tokens, 0) > 0 THEN
-         |    CAST(pd.n_oov * 1000 // pd.n_tokens AS BIGINT)
-         |  ELSE 0 END AS oov_permille
-         |FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // ngram_novelty: same distinct-shingle poly hashes; novel = df == 1
-    "ngram_novelty" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |shs AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |sh AS (SELECT doc_id, ${polyHashSql("s")} AS h FROM shs),
-         |dfc AS (SELECT h, CAST(count(*) AS BIGINT) AS df
-         |  FROM sh GROUP BY 1),
-         |pd AS (SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |  CAST(sum(CASE WHEN dfc.df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_novel
-         |  FROM sh JOIN dfc ON sh.h = dfc.h GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(pd.n_shingles, 0) AS BIGINT) AS n_shingles,
-         |  CAST(COALESCE(pd.n_novel, 0) AS BIGINT) AS n_novel,
-         |  CASE WHEN COALESCE(pd.n_shingles, 0) > 0 THEN
-         |    CAST(pd.n_novel * 1000 // pd.n_shingles AS BIGINT)
-         |  ELSE 0 END AS novelty_permille
-         |FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // bm25_topk: the contribution expression in the shared CTE chain is
-    // textually identical to the Spark side, so both engines floor the
-    // same IEEE double
-    "bm25_topk" ->
-      s"""WITH $bm25Ctes
-         |SELECT query_id, doc_id, n_hit_terms, score_micro, rank
-         |FROM bmr WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // hybrid_topk: the bm25 chain + the hash_embed vectors as DOUBLE
-    // lists + cosine ranks, fused by integer reciprocal-rank (k = 60)
-    "hybrid_topk" ->
-      s"""WITH $bm25Ctes,
-         |tk AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |sg AS (SELECT doc_id,
-         |    CAST(${duckPolyFragment("tok", 31, 1000000007L)} % 64 AS INT)
-         |      AS b,
-         |    CASE WHEN (${duckPolyFragment("tok", 31, 1000000007L)} // 64)
-         |      % 2 = 0 THEN 1 ELSE -1 END AS s
-         |  FROM tk),
-         |agg AS (SELECT doc_id, b, CAST(sum(s) AS BIGINT) AS v
-         |  FROM sg GROUP BY doc_id, b),
-         |filled AS (
-         |  SELECT d.doc_id, g.b, CAST(COALESCE(a.v, 0) AS BIGINT) AS v
-         |  FROM documents d
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS b) g
-         |  LEFT JOIN agg a ON a.doc_id = d.doc_id AND a.b = g.b),
-         |hv AS (SELECT doc_id, list(CAST(v AS DOUBLE) ORDER BY b) AS e
-         |  FROM filled GROUP BY doc_id),
-         |nv AS (SELECT doc_id, e, sqrt(${dotSql("e", "e")}) AS nrm
-         |  FROM hv WHERE len(list_filter(e, x -> x <> 0)) > 0),
-         |cosr AS (SELECT q.doc_id AS query_id, c.doc_id AS doc_id,
-         |  CAST(row_number() OVER (PARTITION BY q.doc_id
-         |    ORDER BY ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) DESC,
-         |             c.doc_id) AS BIGINT) AS rank
-         |  FROM nv q JOIN nv c ON c.doc_id <> q.doc_id
-         |  WHERE q.doc_id % 100 = 0),
-         |fused AS (
-         |  SELECT COALESCE(b.query_id, c.query_id) AS query_id,
-         |         COALESCE(b.doc_id, c.doc_id) AS doc_id,
-         |         CAST(COALESCE(b.rank, 0) AS BIGINT) AS bm_rank,
-         |         CAST(COALESCE(c.rank, 0) AS BIGINT) AS cos_rank,
-         |         CAST(CASE WHEN b.rank IS NULL THEN 0
-         |                   ELSE 1000000 // (60 + b.rank) END
-         |            + CASE WHEN c.rank IS NULL THEN 0
-         |                   ELSE 1000000 // (60 + c.rank) END AS BIGINT)
-         |           AS rrf_micro
-         |  FROM (SELECT query_id, doc_id, rank FROM bmr WHERE rank <= 20) b
-         |  FULL JOIN (SELECT query_id, doc_id, rank FROM cosr
-         |             WHERE rank <= 20) c
-         |    ON b.query_id = c.query_id AND b.doc_id = c.doc_id)
-         |SELECT query_id, doc_id, bm_rank, cos_rank, rrf_micro, rank FROM (
-         |  SELECT query_id, doc_id, bm_rank, cos_rank, rrf_micro,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY rrf_micro DESC, doc_id) AS BIGINT) AS rank
-         |  FROM fused)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // topic_classify: identical rule table as VALUES; same argmax window
-    "topic_classify" ->
-      s"""WITH rules(term, topic, weight) AS (VALUES
-         |  ('join', 'joins', 3), ('merge', 'joins', 2), ('hash', 'joins', 1),
-         |  ('scan', 'storage', 3), ('table', 'storage', 2),
-         |  ('stream', 'streaming', 3), ('batch', 'streaming', 2),
-         |  ('window', 'streaming', 1),
-         |  ('agg', 'aggregation', 3), ('sort', 'aggregation', 2),
-         |  ('group', 'aggregation', 2),
-         |  ('vector', 'vectorized', 3), ('column', 'vectorized', 2)),
-         |toks AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |scores AS (SELECT doc_id, topic, CAST(sum(weight) AS BIGINT) AS score
-         |  FROM toks JOIN rules USING (term) GROUP BY doc_id, topic),
-         |best AS (SELECT doc_id, topic, score,
-         |  row_number() OVER (PARTITION BY doc_id
-         |                     ORDER BY score DESC, topic) AS rn
-         |  FROM scores)
-         |SELECT d.doc_id,
-         |  COALESCE(b.topic, 'unknown') AS topic_pred,
-         |  CAST(COALESCE(b.score, 0) AS BIGINT) AS score
-         |FROM documents d
-         |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // lm_score: identical MLE bigram probabilities from corpus counts;
-    // each log term is floored to integer micro-nats BEFORE the sum, so
-    // the mean is an associative integer sum + one IEEE division in both
-    // engines (a raw double avg would be summation-order-dependent)
-    "lm_score" ->
-      s"""WITH $lmScoreCtes
-         |SELECT doc_id, n_bigrams, lm_score
-         |FROM lmscore ORDER BY doc_id""".stripMargin,
-
-    "decontaminate" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |  generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-         |  FROM toks WHERE len(t) >= 3),
-         |probe AS (SELECT DISTINCT s FROM sh WHERE doc_id < 5),
-         |hits AS (SELECT sh.doc_id, count(*) AS n_hits
-         |  FROM sh JOIN probe ON sh.s = probe.s GROUP BY sh.doc_id)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(hits.n_hits, 0) AS BIGINT) AS n_hits,
-         |  COALESCE(hits.n_hits, 0) > 0 AS contaminated
-         |FROM documents d LEFT JOIN hits ON d.doc_id = hits.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "pivot_counts" ->
-      """SELECT user_id,
-        |  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-        |  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-        |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-        |  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-        |  count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "union_ragged" ->
-      """SELECT event_id, user_id, event_type, CAST(NULL AS DOUBLE) AS value
-        |FROM events WHERE event_id % 2 = 0
-        |UNION ALL
-        |SELECT event_id, CAST(NULL AS BIGINT) AS user_id,
-        |       CAST(NULL AS VARCHAR) AS event_type, value
-        |FROM events WHERE event_id % 2 <> 0
-        |ORDER BY event_id""".stripMargin,
-
-    "cube_agg" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-  ).pipe(m =>
-    // the persisted-index variants have the SAME output contract as
-    // their direct twins (same seeds, probes, tie-breaks, shared
-    // ranking tails) — one oracle, two plans
-    m + ("ivf_topk_indexed" -> m("ivf_topk")) +
-      ("ivf_pq_topk_indexed" -> m("ivf_pq_topk")))
+  /** Headline bench set, in registry order: every query not marked
+   * `bench = false`. */
+  def benchQueries: Seq[String] = registry.filter(_.bench).map(_.name)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
+  def oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracleSql).toMap
 }

@@ -2,9 +2,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name,name,...]
+  *
+  * The optional third argument filters the queries run. A filter that
+  * matches no query writes only `oracle_sql.json` (always the full
+  * name→SQL map), which is the cheap way to diff the registry between
+  * two checkouts. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: Verify <sfDir> <outDir> [comma-separated query names]")
     // optional 3rd arg: comma-separated query-name filter (local iteration
     // only — the driver always passes exactly sfDir + outDir)
     val Array(sfDir, outDir) = args.take(2)

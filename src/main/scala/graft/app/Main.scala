@@ -128,15 +128,14 @@ object Main {
    * audit ([[graft.streaming.Streams.verifySpanIndex]] /
    * [[verifyChunkIndex]]) of a live streaming dedup index against the
    * actual corpus — the operational handle for the sinks' documented
-   * composite-hash residual (the audits were test-reachable only until
-   * round 17). Prints every colliding composite (expected: none) and
-   * returns the residual count; [[main]] exits non-zero on a non-empty
-   * residual so the audit gates in a cron the same way a failed check
-   * does. Format mismatches fail loudly inside the audit itself (the
-   * round-17 `_format` gate) — an incompatible index can never report
-   * a clean zero here.
+   * composite-hash residual. Prints every colliding composite (expected:
+   * none) and returns the residual count; [[main]] exits non-zero on a
+   * non-empty residual so the audit gates in a cron the same way a
+   * failed check does. Format mismatches fail loudly inside the audit
+   * itself (the index's `_format` gate) — an incompatible index can
+   * never report a clean zero here.
    *
-   * Round 18 adds the VECTOR index kinds: `--kind ivf` recomputes a
+   * The VECTOR index kinds: `--kind ivf` recomputes a
    * bounded sample of cell assignments against the live routing table
    * ([[graft.operators.Similarity.verifyIvfIndex]] — catches
    * generation leaks and out-of-band edits), `--kind pq` checks every
@@ -163,9 +162,9 @@ object Main {
           " cal_nprobe=" +
           Similarity.calibratedNprobe(spark, c.index)
             .map(_.toString).getOrElse("(uncalibrated)") +
-          // round 20: the durable calibration CONTRACT (drives the
-          // default recalibration at retrain) and the workload
-          // fingerprint (drives the autoNprobe shift guard)
+          // the durable calibration CONTRACT (drives the default
+          // recalibration at retrain) and the workload fingerprint
+          // (drives the autoNprobe shift guard)
           " contract=" +
           Similarity.ivfCalibrationSpec(spark, c.index)
             .map(s => f"target=${s.target}%.2f,z=${s.marginZ}%.2f")
@@ -175,9 +174,9 @@ object Main {
             .isDefined) "yes" else "no"))
         Similarity.verifyIvfIndex(spark, c.index, idCol = c.idCol)
       case "pq" =>
-        // round 19: report the refined-path (nprobe, shortlist) pair
-        // and the encoding kind beside the ADC calibration — an
-        // operator diagnosing recall wants all three at a glance
+        // the refined-path (nprobe, shortlist) pair and the encoding
+        // kind beside the ADC calibration — an operator diagnosing
+        // recall wants all three at a glance
         println(s"[graft] pq index '${c.index}': gen=" +
           Similarity.pqGeneration(spark, c.index) +
           " kind=" +
@@ -190,7 +189,7 @@ object Main {
           Similarity.calibratedRefined(spark, c.index)
             .map { case (np, s) => s"(nprobe=$np,shortlist=$s)" }
             .getOrElse("(uncalibrated)") +
-          // round 20: contract + fingerprint, as for the ivf kind
+          // contract + fingerprint, as for the ivf kind
           " contract=" +
           (Similarity.pqCalibrationSpec(spark, c.index, refined = true)
             .map(s => f"refined_target=${s.target}%.2f,z=${s.marginZ}%.2f")
@@ -203,11 +202,11 @@ object Main {
             .isDefined) "yes" else "no"))
         Similarity.verifyPqIndex(spark, c.index, idCol = c.idCol)
     }
-    // round 20: optional live QUALITY replay beside the structural
-    // audit — a small held-out recall probe through the index's own
-    // serving config, so an operator can audit drift after a retrain
-    // (the persisted calibration is the build-time promise; this is
-    // the measured now)
+    // optional live QUALITY replay beside the structural audit — a
+    // small held-out recall probe through the index's own serving
+    // config, so an operator can audit drift after a retrain (the
+    // persisted calibration is the build-time promise; this is the
+    // measured now)
     if (c.recallSample > 0 && (c.kind == "ivf" || c.kind == "pq")) {
       val corpus =
         if (c.kind == "pq") Some(spark.read.parquet(c.corpus)) else None

@@ -35,20 +35,7 @@ import org.apache.spark.sql.{Column, DataFrame}
  * designed to move at most once.
  */
 private[graft] object Par {
-  // Round-22 note — INPUT-VOLUME gates were built here
-  // (`widenWhenLarge(df, sized, keys)`: engage a pin only when the
-  // operator's input size estimate clears a conf threshold), applied to
-  // the output-scale-candidate operators (editDistancePairs,
-  // minhashLshPairs, the iterative loop frames), and REMOVED after
-  // measurement: at sf0.1 the engaged pins reproduce the round-21
-  // losses, and at a 40x spot scale (where the gate engages:
-  // 9-23 MB inputs) they STILL lost 10-25% (plans/r22/SPOT_scale.md).
-  // Input size does not predict pin benefit — candidate volume PER
-  // INPUT BYTE does: quadratic-grade shapes (ppjoin prefixes,
-  // containment, dense LSH layouts) win and keep their pins via layout
-  // gates; output-scale shapes never win because their verify joins
-  // shuffle wide on their own once the data is big. Do not reintroduce
-  // an input-size gate without a spot measurement that beats this one.
+  // Input-size gates on these pins lost when measured: plans/r22/SPOT_scale.md
 
   def widen(df: DataFrame, cols: Column*): DataFrame = widenBy(df, 1, cols: _*)
 

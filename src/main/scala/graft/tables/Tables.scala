@@ -429,19 +429,27 @@ object Tables {
     loadPartitioned(spark.table(tmp), mainTable, partCol)
     val present = spark.table(tmp).select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSet
-    touched.filterNot(present.contains).foreach { v =>
-      val spec =
-        if (v == null) s"`$partCol` = null" // the Hive default partition
-        else {
-          val esc = String.valueOf(v)
-            .replace("\\", "\\\\").replace("'", "\\'")
-          s"`$partCol` = '$esc'"
-        }
-      spark.sql(s"ALTER TABLE ${q(mainTable)} DROP IF EXISTS " +
-        s"PARTITION ($spec)")
-    }
+    touched.filterNot(present.contains)
+      .foreach(v => dropPartition(spark, mainTable, Seq(partCol -> v)))
     spark.sql(s"DROP TABLE ${q(tmp)}")
     spark.catalog.refreshTable(mainTable)
+  }
+
+  /** `ALTER TABLE … DROP IF EXISTS PARTITION` for one partition, given
+   * as (column, value) pairs. A null value renders as `` `c` = null ``,
+   * which addresses the Hive default partition; a quoted `'null'`
+   * would match nothing. Other values are quoted with `\` and `'`
+   * escaped. */
+  private def dropPartition(spark: SparkSession, table: String,
+                            spec: Seq[(String, Any)]): Unit = {
+    val parts = spec.map {
+      case (c, null) => s"`$c` = null"
+      case (c, v) =>
+        val esc = String.valueOf(v).replace("\\", "\\\\").replace("'", "\\'")
+        s"`$c` = '$esc'"
+    }
+    spark.sql(s"ALTER TABLE ${q(table)} DROP IF EXISTS " +
+      s"PARTITION (${parts.mkString(", ")})")
   }
 
   /** `partCol ∈ vals` with null-aware semantics: a plain `isin` never
@@ -484,15 +492,8 @@ object Tables {
           .except(spark.table(tmp).select(pcols: _*).distinct())
           .collect()
         loadPartitioned(spark.table(tmp), mainTable, partCols.head)
-        vacated.foreach { r =>
-          val spec = partCols.zipWithIndex.map { case (c, i) =>
-            val v = String.valueOf(r.get(i))
-              .replace("\\", "\\\\").replace("'", "\\'")
-            s"`$c` = '$v'"
-          }.mkString(", ")
-          spark.sql(
-            s"ALTER TABLE ${q(mainTable)} DROP IF EXISTS PARTITION ($spec)")
-        }
+        vacated.foreach(r =>
+          dropPartition(spark, mainTable, partCols.zip(r.toSeq)))
         spark.sql(s"DROP TABLE ${q(tmp)}")
         spark.catalog.refreshTable(mainTable)
       }
@@ -818,11 +819,7 @@ object Tables {
         .map(_.substring(partitionCol.length + 1)))
       .toSeq.distinct
     val expired = values.filter(_ < keepFrom).sorted
-    expired.foreach { v =>
-      val esc = v.replace("\\", "\\\\").replace("'", "\\'")
-      spark.sql(s"ALTER TABLE ${q(table)} DROP IF EXISTS " +
-        s"PARTITION (`$partitionCol` = '$esc')")
-    }
+    expired.foreach(v => dropPartition(spark, table, Seq(partitionCol -> v)))
     if (expired.nonEmpty) spark.catalog.refreshTable(table)
     expired
   }

@@ -253,6 +253,39 @@ class TablesSpec extends SparkSpec {
     Tables.dropTable(spark, t)
   }
 
+  /** A main partitioned by (p1, p2) with key 1 in the p1 = null (Hive
+   * default) partition: the multi-column layout takes the full
+   * replaceWith rewrite, whose vacated-partition drop must address the
+   * null partition, not a literal 'null' value. */
+  private def twoColumnMain(t: String): Unit = {
+    Tables.dropTable(spark, t)
+    Seq((1L, "a", None: Option[String], "x"), (2L, "b", Some("p"), "y"))
+      .toDF("id", "v", "p1", "p2")
+      .write.format("parquet").partitionBy("p1", "p2").saveAsTable(t)
+  }
+
+  test("upsertIntoTable on a two-column partitioned main vacates a null partition") {
+    val t = "upsert_vacate_2col"
+    twoColumnMain(t)
+    val n = Tables.upsertIntoTable(spark,
+      Seq((1L, "A", "q", "x")).toDF("id", "v", "p1", "p2"), t, "id")
+    assert(n == 2L)
+    assert(rows(spark.table(t).orderBy("id").select("id", "v", "p1", "p2")) ==
+      Seq(Seq(1L, "A", "q", "x"), Seq(2L, "b", "p", "y")))
+    assert(spark.table(t)
+      .filter(org.apache.spark.sql.functions.col("p1").isNull).count() == 0L)
+    Tables.dropTable(spark, t)
+  }
+
+  test("deleteKeys on a two-column partitioned main drops a null partition") {
+    val t = "delete_vacate_2col"
+    twoColumnMain(t)
+    assert(Tables.deleteKeys(spark, Seq(1L).toDF("id"), t, "id") == 1L)
+    assert(rows(spark.table(t).select("id", "v", "p1", "p2")) ==
+      Seq(Seq(2L, "b", "p", "y")))
+    Tables.dropTable(spark, t)
+  }
+
   test("upsertIntoTable rejects duplicate staging keys") {
     Tables.dropTable(spark, "t_dup")
     Tables.loadOverwrite(Seq((1L, "a")).toDF("id", "v"), "t_dup")
