@@ -259,13 +259,16 @@ object Main {
    * returns -1 on abort-on-empty (reference :243-244 shows a dialog and
    * stops before any table is touched). */
   def run(spark: SparkSession, c: Config): Long = {
-    val df = Relational.sortByCreatedAt(
-      Normalize.normalize(fetch(spark, c)), c.tsCol)
-    if (df.isEmpty) {
+    val normalized = Normalize.normalize(fetch(spark, c))
+    // tested before the sort, and with `head(1)`: `isEmpty` runs a
+    // limit stage plus a shuffle to one task (on the sorted frame also a
+    // take-ordered sort), `head(1)` reads the first partition only
+    if (normalized.head(1).isEmpty) {
       System.err.println(s"[graft] no data fetched for range " +
         s"[${c.since.getOrElse("-inf")}, ${c.to.getOrElse("+inf")}) — aborting")
       return -1L
     }
+    val df = Relational.sortByCreatedAt(normalized, c.tsCol)
     if (c.preview) df.show(5, truncate = false)
     c.action match {
       case "load" =>

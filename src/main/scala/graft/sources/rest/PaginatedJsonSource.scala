@@ -38,7 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *  - **In-reader retry** (S2): `maxRetries` attempts per page; exhaustion
  *    THROWS (task failure → Spark task retry) instead of silently keeping
  *    partial data — documented divergence from omnichannel_to_bq.py:55-57
- *    (SURVEY.md §7.4.3).
+ *    (SURVEY.md §7.4.3). HTTP 400, 401, 403 and 404 cannot succeed on a
+ *    retry and throw at the first answer; 408, 429, 5xx and I/O errors
+ *    are retried.
  *  - **Time-range pushdown** (S3): `tsField >= X` / `tsField < Y` filters
  *    are accepted into the scan, forwarded to the remote API via the
  *    `{since}`/`{to}` URL template slots AND re-checked row-by-row in the
@@ -69,17 +71,31 @@ class PaginatedJsonSource extends TableProvider {
 object PaginatedJsonSource {
   val rawSchema: StructType = StructType(Seq(StructField("value", StringType)))
 
+  /** HTTP statuses a retry cannot turn into a page: the request itself
+   * is wrong, unauthorized, forbidden or names nothing. */
+  private val FailFastStatuses: Set[Int] = Set(400, 401, 403, 404)
+
+  /** A page fetch the API refused for good: thrown by [[fetchUrl]] and
+   * rethrown by [[retrying]] without a further attempt. It still fails
+   * the Spark task, so Spark's own task retry (`spark.task.maxFailures`,
+   * 1 in local mode) may fetch the page again. */
+  final class NonRetryableFetch(val status: Int, url: String)
+      extends java.io.IOException(s"HTTP $status from $url (not retried)")
+
   /** Generic page-fetch retry loop (reference: omnichannel_to_bq.py:38-57
-   * minus the partial-data-on-exhaustion). Public for direct unit tests. */
+   * minus the partial-data-on-exhaustion). A [[NonRetryableFetch]] is
+   * rethrown at once. Public for direct unit tests. */
   def retrying[T](maxRetries: Int, delayMs: Long)(attempt: () => T): T = {
     var tries = 0
     var last: Throwable = null
     while (tries < maxRetries) {
       try return attempt()
-      catch { case e: Exception =>
-        last = e
-        tries += 1
-        if (tries < maxRetries && delayMs > 0) Thread.sleep(delayMs)
+      catch {
+        case e: NonRetryableFetch => throw e
+        case e: Exception =>
+          last = e
+          tries += 1
+          if (tries < maxRetries && delayMs > 0) Thread.sleep(delayMs)
       }
     }
     throw new RuntimeException(
@@ -96,6 +112,15 @@ object PaginatedJsonSource {
       val conn = new java.net.URI(url).toURL.openConnection()
       conn.setConnectTimeout(timeoutMs)
       conn.setReadTimeout(timeoutMs)
+      conn match {
+        case http: java.net.HttpURLConnection =>
+          val status = http.getResponseCode
+          if (FailFastStatuses(status)) {
+            Option(http.getErrorStream).foreach(_.close())
+            throw new NonRetryableFetch(status, url)
+          }
+        case _ =>
+      }
       val in = conn.getInputStream
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }

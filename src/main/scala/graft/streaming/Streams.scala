@@ -21,9 +21,10 @@ import graft.tables.Tables
  *
  * Scale notes: windowed aggregation state is bounded by the watermark
  * (late rows beyond it are dropped and their state evicted); the
- * foreachBatch upsert reuses the batch anti-join plan, so a small
- * micro-batch broadcasts against the main table exactly like a small
- * staging batch would.
+ * foreachBatch upsert reuses the batch anti-join plan, but the planner
+ * has no size estimate for a micro-batch, so that anti-join shuffles
+ * the whole main table on every batch instead of broadcasting the
+ * batch.
  */
 object Streams {
 
@@ -148,6 +149,13 @@ object Streams {
    * per key (micro-batches can carry several updates for one key) and
    * merged into the managed table with the batch upsert — exactly-once per
    * key per batch under the default checkpointed micro-batch semantics.
+   *
+   * The sink calls the merge layer, `Tables.mergeUnique`, not
+   * `Tables.upsertIntoTable`, so it runs neither the duplicate-key guard
+   * nor the post-merge count: `dedupeLatest` keeps one row per key (one
+   * null-key row too), so the guard could never fire, and the count
+   * would be thrown away. The merge itself is the same code
+   * `Main.run upsert` runs.
    */
   def upsertSink(stream: DataFrame, table: String, key: String,
                  orderCol: String, checkpointDir: String): StreamingQuery = {
@@ -162,9 +170,8 @@ object Streams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val deduped = Relational.dedupeLatest(batch, key, orderCol)
-          Tables.upsertIntoTable(batch.sparkSession, deduped, table, key)
+          Tables.mergeUnique(batch.sparkSession, deduped, table, key)
           owner.catalog.refreshTable(table)
-          ()
         }
       }
       .start()

@@ -361,14 +361,37 @@ object Tables {
    * via `PARTITION (col = null)` — measured supported); only
    * multi-column layouts fall back to the full [[replaceWith]]
    * rewrite.
+   *
+   * Layers: this entry point guards and counts; [[mergeUnique]] merges.
+   * The guard runs only when the main exists, since the missing-main
+   * load has nothing to match against. The count is a job over the
+   * merged table. [[graft.streaming.Streams.upsertSink]] calls
+   * [[mergeUnique]] directly: its micro-batch comes out of
+   * `dedupeLatest`, which cannot hold a key twice, and it has no use
+   * for the count.
    */
   def upsertIntoTable(spark: SparkSession, staging: DataFrame,
                       mainTable: String, key: String,
                       stablePartitions: Boolean = false): Long = {
+    if (spark.catalog.tableExists(mainTable))
+      Relational.assertUniqueKeys(staging, key)
+    mergeUnique(spark, staging, mainTable, key, stablePartitions)
+    spark.table(mainTable).count()
+  }
+
+  /** The merge of [[upsertIntoTable]] without its duplicate-key guard
+   * and post-merge count. `staging` must hold each key at most once (a
+   * null key counts as one key), as `Relational.dedupeLatest` output
+   * does; a repeated key would land twice. A missing main is created by
+   * [[loadOverwrite]]; otherwise the merge is the pruned partitioned
+   * replace, [[replaceWith]] or the rename swap, as described on
+   * [[upsertIntoTable]]. */
+  private[graft] def mergeUnique(spark: SparkSession, staging: DataFrame,
+                                 mainTable: String, key: String,
+                                 stablePartitions: Boolean = false): Unit =
     if (!spark.catalog.tableExists(mainTable)) {
       loadOverwrite(staging, mainTable)
     } else {
-      Relational.assertUniqueKeys(staging, key)
       val main = spark.table(mainTable)
       import scala.jdk.CollectionConverters._
       val partCols = spark.catalog.listColumns(mainTable).collectAsList()
@@ -403,8 +426,6 @@ object Tables {
             mainTable, partCols)
       }
     }
-    spark.table(mainTable).count()
-  }
 
   /** Rewrite ONLY the `touched` partition values (all non-null) of a
    * single-column-partitioned main with `mergedTouched` — the pruned

@@ -14,8 +14,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
  * answers `{"deals": [...]}` holding the JSON objects `objects(page, hit)`
  * returns, where `hit` counts that page's requests from 1. Every request
  * served is counted, so a test can assert the API traffic a run paid for.
+ * `status(page, hit)` is the HTTP status of each answer; any status but
+ * 200 is sent with an empty body.
  */
-final class PageServer(objects: (Int, Int) => Seq[String])
+final class PageServer(objects: (Int, Int) => Seq[String],
+                       status: (Int, Int) => Int = (_, _) => 200)
     extends AutoCloseable {
   private val hits = new ConcurrentHashMap[Int, AtomicInteger]()
   private val queries = new ConcurrentLinkedQueue[Map[String, String]]()
@@ -29,10 +32,14 @@ final class PageServer(objects: (Int, Int) => Seq[String])
     queries.add(query)
     val page = query("page").toInt
     val hit = hits.computeIfAbsent(page, _ => new AtomicInteger).incrementAndGet()
-    val body = objects(page, hit)
-      .mkString("""{"deals": [""", ",", "]}").getBytes(UTF_8)
-    ex.sendResponseHeaders(200, body.length)
-    ex.getResponseBody.write(body)
+    val code = status(page, hit)
+    if (code != 200) ex.sendResponseHeaders(code, -1)
+    else {
+      val body = objects(page, hit)
+        .mkString("""{"deals": [""", ",", "]}").getBytes(UTF_8)
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+    }
     ex.close()
   })
   server.start()

@@ -114,4 +114,19 @@ class RestSourceSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("after 4 attempts"))
   }
+
+  test("a 404 page fails after one request; a 503 page is retried") {
+    val server = new PageServer((_, _) => Seq(obj(1)),
+      (page, hit) => if (page == 1) 404 else if (hit == 1) 503 else 200)
+    def fetch(page: Int): String = PaginatedJsonSource.retrying(10, 0) {
+      () => PaginatedJsonSource.fetchUrl(
+        server.url().replace("{page}", page.toString), 5000)
+    }
+    try {
+      val ex = intercept[PaginatedJsonSource.NonRetryableFetch](fetch(1))
+      assert(ex.status == 404 && server.requests == 1)
+      server.reset()
+      assert(fetch(2).contains("\"id\": 1") && server.requests == 2)
+    } finally server.close()
+  }
 }

@@ -136,6 +136,35 @@ class StreamsSpec extends SparkSpec {
     Tables.dropTable(spark, "stream_up")
   }
 
+  test("upsertSink lands one row per key from null keys and order ties") {
+    implicit val sqlCtx = spark.sqlContext
+    Tables.dropTable(spark, "stream_up_ties")
+    val mem = MemoryStream[(Option[Long], String, Timestamp)]
+    val cp = Files.createTempDirectory("cp").toString
+    val q = Streams.upsertSink(mem.toDF().toDF("id", "v", "ts"),
+      "stream_up_ties", "id", "ts", cp)
+    try {
+      mem.addData((Some(1L), "a", ts("2024-01-01 00:00:00")),
+        (Some(2L), "b", ts("2024-01-01 00:00:01")))
+      q.processAllAvailable()
+      // the merge batch: two null-key rows, and two rows of id=2 that tie
+      // on the order column
+      val tie = ts("2024-01-01 00:10:00")
+      mem.addData((None, "n1", ts("2024-01-01 00:09:00")),
+        (None, "n2", ts("2024-01-01 00:09:30")),
+        (Some(2L), "x", tie), (Some(2L), "y", tie),
+        (Some(3L), "c", ts("2024-01-01 00:11:00")))
+      q.processAllAvailable()
+      val landed = rows(spark.table("stream_up_ties").select("id", "v"))
+      assert(landed.map(_.head).sortBy(Option(_).map(_.toString)) ==
+        Seq(null, 1L, 2L, 3L), landed)
+      val byId = landed.map(r => r.head -> r(1)).toMap
+      assert(byId(null) == "n2" && byId(1L) == "a" && byId(3L) == "c")
+      assert(Set[Any]("x", "y").contains(byId(2L)), landed)
+    } finally q.stop()
+    Tables.dropTable(spark, "stream_up_ties")
+  }
+
   test("intakeSink: quality gate, first-seen near-dup admission vs batch " +
       "and corpus") {
     implicit val sqlCtx = spark.sqlContext
