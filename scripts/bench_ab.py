@@ -2,7 +2,7 @@
 """Compare the benchmark of a parent revision with the working tree, in pairs.
 
     python3 scripts/bench_ab.py --workload stream_ingest --seeds 901-910 \\
-        --parent HEAD [--workdir DIR] [--out FILE]
+        --parent HEAD [--trace-seed N] [--workdir DIR] [--out FILE]
 
 Run it from the root of a checkout. The parent is extracted with
 `git archive <rev>` and the change is a copy of the working tree (tracked
@@ -15,8 +15,10 @@ side builds itself on its first run.
 
 Prints, per end-to-end metric of BENCHMARK.json: each side's median and
 quartiles, and the pairs the change won (strictly better in the metric's
-direction). --out writes every run's result line as JSON. Nothing is
-written in this checkout.
+direction). --trace-seed N then runs `--trace 1` once per side with seed N
+and prints the per-layer metrics that locate a streaming saving (each a
+median over the run's traced units) side by side. --out writes every
+run's result line as JSON. Nothing is written in this checkout.
 """
 import argparse
 import json
@@ -59,11 +61,17 @@ def copy_working_tree(dest):
         shutil.copy2(rel, os.path.join(dest, rel))
 
 
-def run_side(root, workload, seed, seconds):
-    """One `run.py --trace 0` in `root`; its result dict, or None on failure."""
+# The per-layer metrics --trace-seed prints, in this order.
+TRACE_METRICS = ("spark.jobs", "stream.rows_per_batch",
+                 "spark.shuffle_write_bytes", "stream.upsert_batch_ms")
+
+
+def run_side(root, workload, seed, seconds, trace=False):
+    """One `run.py` in `root`; its result dict, or None on failure."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", "1" if trace else "0"],
         cwd=root, stdout=subprocess.PIPE, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -83,6 +91,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 901-910 or 901,905")
     ap.add_argument("--parent", required=True, help="git revision of the parent")
+    ap.add_argument("--trace-seed", type=int,
+                    help="after the pairs, one traced run per side with this seed")
     ap.add_argument("--workdir", help="where the two copies go (default: a new temp dir)")
     ap.add_argument("--out", help="write every run's result here as JSON")
     args = ap.parse_args()
@@ -114,10 +124,17 @@ def main():
             pair[side] = run_side(sides[side], args.workload, seed, seconds)
         runs.append(pair)
 
+    traced = {}
+    if args.trace_seed is not None:
+        for side in sides:
+            log(f"trace seed {args.trace_seed}: {side}")
+            traced[side] = run_side(sides[side], args.workload, args.trace_seed,
+                                    seconds, trace=True)
+
     if args.out:
         with open(args.out, "w") as fh:
             json.dump({"workload": args.workload, "parent": args.parent,
-                       "seconds": seconds, "runs": runs}, fh, indent=1)
+                       "seconds": seconds, "runs": runs, "trace": traced}, fh, indent=1)
 
     ok = [r for r in runs if r["parent"] and r["change"]]
     print(f"workload {args.workload}: {len(ok)} of {len(runs)} pairs completed")
@@ -125,8 +142,14 @@ def main():
         wrong = sum(1 for r in ok if not r[side]["correct"])
         failed = sum(r[side]["failed"] for r in ok)
         print(f"  {side}: {wrong} incorrect runs, {failed} failed ops")
-    if not ok:
-        return
+    if ok:
+        print_pairs(ok, better)
+    print_trace(args.trace_seed, traced)
+
+
+def print_pairs(ok, better):
+    """Each end-to-end metric's quartiles per side and the pairs won."""
+    sides = ("parent", "change")
     print(f"  {'metric':24} {'parent q1/median/q3':>30} {'change q1/median/q3':>30}  won")
     for name, direction in better.items():
         if name not in ok[0]["parent"]["metrics"]:
@@ -137,6 +160,23 @@ def main():
                   if sign * (c - p) < 0)
         cols = ["/".join(f"{v:.4g}" for v in quartiles(val[s])) for s in sides]
         print(f"  {name:24} {cols[0]:>30} {cols[1]:>30}  {won}/{len(ok)}")
+
+
+def print_trace(seed, traced):
+    """The TRACE_METRICS of the two traced runs, side by side."""
+    if seed is None:
+        return
+    if not all(traced.values()):
+        failed = [s for s, r in traced.items() if not r]
+        print(f"traced run (seed {seed}) failed: {', '.join(failed)}")
+        return
+    print(f"traced run (seed {seed}), per-layer medians:")
+    print(f"  {'metric':28} {'parent':>14} {'change':>14}")
+    for name in TRACE_METRICS:
+        vals = [traced[s]["metrics"].get(name, {}).get("value") for s in traced]
+        if None in vals:
+            continue
+        print(f"  {name:28} {vals[0]:>14.6g} {vals[1]:>14.6g}")
 
 
 if __name__ == "__main__":

@@ -1029,8 +1029,8 @@ object Dedup {
 
   /** Free the cached blocks behind a `localCheckpoint`ed frame (best-effort).
    * Dataset.unpersist only drops CacheManager entries, not checkpoint RDDs,
-   * so iterative operators must release rounds manually or pin every
-   * generation in executor storage for the query's lifetime.
+   * so iterative operators and per-batch sinks must release them manually
+   * or pin every generation in executor storage for the query's lifetime.
    *
    * Deliberately matches ONLY a frame that IS the checkpoint — a root
    * `LogicalRDD`, optionally under a single projection (the two shapes
@@ -1038,7 +1038,7 @@ object Dedup {
    * recursive walk would also unpersist any caller-owned checkpoint RDD
    * embedded upstream in the plan, and local-checkpointed RDDs cannot be
    * recomputed once their blocks are dropped. */
-  private def unpersistCheckpoint(df: DataFrame): Unit = {
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit = {
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.execution.LogicalRDD
     df.queryExecution.analyzed match {

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -21,10 +21,9 @@ import graft.tables.Tables
  *
  * Scale notes: windowed aggregation state is bounded by the watermark
  * (late rows beyond it are dropped and their state evicted); the
- * foreachBatch upsert reuses the batch anti-join plan, but the planner
- * has no size estimate for a micro-batch, so that anti-join shuffles
- * the whole main table on every batch instead of broadcasting the
- * batch.
+ * foreachBatch upsert reuses the batch anti-join plan and broadcasts a
+ * micro-batch that fits the planner's broadcast threshold, so the main
+ * table is scanned once without a shuffle.
  */
 object Streams {
 
@@ -150,6 +149,20 @@ object Streams {
    * merged into the managed table with the batch upsert — exactly-once per
    * key per batch under the default checkpointed micro-batch semantics.
    *
+   * Per batch: the deduped batch is landed once with an eager
+   * `localCheckpoint`, and the same job counts its rows through an
+   * `observe` metric, so the source and the dedupe window run once and
+   * no separate emptiness job runs (zero rows skips the merge). A batch
+   * read from one input partition is deduped in that partition, without
+   * a shuffle; a wider batch shuffles on the key as before. A
+   * micro-batch carries no size estimate, so the sink sizes the landed
+   * frame itself, rows × `schema.defaultSize`, and broadcasts it into
+   * the anti-join when that is within the session's
+   * `spark.sql.autoBroadcastJoinThreshold`, the planner's own rule: the
+   * main table is then scanned once with no shuffle. A larger batch, or
+   * a disabled threshold, keeps the shuffle join. The landed blocks are
+   * released once the merge has committed.
+   *
    * The sink calls the merge layer, `Tables.mergeUnique`, not
    * `Tables.upsertIntoTable`, so it runs neither the duplicate-key guard
    * nor the post-merge count: `dedupeLatest` keeps one row per key (one
@@ -168,11 +181,24 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val deduped = Relational.dedupeLatest(batch, key, orderCol)
-          Tables.mergeUnique(batch.sparkSession, deduped, table, key)
-          owner.catalog.refreshTable(table)
-        }
+        val s = batch.sparkSession
+        // one input partition: coalesce(1) states it, and the dedupe
+        // window's key clustering then needs no shuffle
+        val input =
+          if (batch.rdd.getNumPartitions == 1) batch.coalesce(1) else batch
+        val landedRows = new Observation()
+        val landed = Relational.dedupeLatest(input, key, orderCol)
+          .observe(landedRows, count(lit(1)).as("rows"))
+          .localCheckpoint()
+        try {
+          val rows = landedRows.get("rows").asInstanceOf[Long]
+          if (rows > 0) {
+            val fits = BigInt(rows) * landed.schema.defaultSize <=
+              s.sessionState.conf.autoBroadcastJoinThreshold
+            Tables.mergeUnique(s, landed, table, key, broadcastStaging = fits)
+            owner.catalog.refreshTable(table)
+          }
+        } finally Dedup.unpersistCheckpoint(landed)
       }
       .start()
   }
@@ -247,7 +273,8 @@ object Streams {
    * aggregate (at most k longs per group per mapper cross the shuffle);
    * persisted state is groups × k longs; the merge is an array
    * union-sort-truncate over the previous 1-partition state — no driver
-   * data path anywhere.
+   * data path anywhere. Both sketch read-backs pass the schema the sink
+   * already holds, so neither runs a parquet schema-inference job.
    */
   def distinctSink(stream: DataFrame, sketchPath: String, outPath: String,
                    checkpointDir: String, groupCol: String = "source",
@@ -271,7 +298,7 @@ object Streams {
           val merged = prev.sorted.lastOption match {
             case None => bs
             case Some(p) =>
-              s.read.parquet(s"$sketchPath/batch=$p").as("o")
+              s.read.schema(bs.schema).parquet(s"$sketchPath/batch=$p").as("o")
                 .join(bs.as("b"), Seq("grp"), "full_outer")
                 .select(col("grp"), expr(
                   s"""slice(array_sort(array_union(
@@ -281,7 +308,7 @@ object Streams {
           }
           merged.write.mode("overwrite")
             .parquet(s"$sketchPath/batch=$batchId")
-          s.read.parquet(s"$sketchPath/batch=$batchId")
+          s.read.schema(merged.schema).parquet(s"$sketchPath/batch=$batchId")
             .select(col("grp").as(groupCol),
               when(expr("size(sk)") < k,
                 expr("CAST(size(sk) AS DOUBLE)"))
@@ -1792,14 +1819,16 @@ object Streams {
   /**
    * Streaming SCD Type 2 dimension maintenance — a CDC/attribute feed
    * folds into the history-keeping table per micro-batch: the batch
-   * dedupes to latest-per-key by its event-time column (satisfying the
-   * unique-staging guard), its effective timestamp is the batch's MAX
-   * event time (event-time, so replay-stable — never the wall clock),
-   * and [[graft.tables.Tables.upsertScd2]] applies the versioned
-   * merge. At-least-once safety comes from the merge itself: a
-   * replayed batch re-stages identical attributes, and the null-safe
-   * change test makes every row a no-op — no phantom versions, no
-   * watermark file needed. Run [[graft.tables.Tables.recoverSwap]] on
+   * dedupes to latest-per-key by its event-time column, its effective
+   * timestamp is the batch's MAX event time (event-time, so
+   * replay-stable — never the wall clock), and the merge of
+   * [[graft.tables.Tables.upsertScd2]] applies the versions. The sink
+   * calls that merge without its duplicate-key guard
+   * (`Tables.mergeScd2`): the deduped batch holds each key once, so
+   * the guard's aggregate could never fire. At-least-once safety
+   * comes from the merge itself: a replayed batch re-stages identical
+   * attributes, and the null-safe change test makes every row a no-op
+   * — no phantom versions, no watermark file needed. Run [[graft.tables.Tables.recoverSwap]] on
    * restart, as with every swap-protocol table.
    *
    * Event-time monotonicity: the effective timestamp is assumed
@@ -1823,9 +1852,9 @@ object Streams {
    * advancing on it would cache a boundary the table never held and a
    * restart (which re-derives from the table) would clamp differently
    * than the no-crash path. "Wrote versions" is the merge's own return
-   * value — [[graft.tables.Tables.upsertScd2]] returns the number of
-   * opened versions, counted current-tier-bounded (never a post-merge
-   * full-table count — ADVICE r15), and every opened version carries
+   * value — the merge returns the number of opened versions, counted
+   * current-tier-bounded (never a post-merge full-table count), and
+   * every opened version carries
    * `valid_from = effective`, so `opened > 0` is exactly the advance
    * condition. A restarted sink re-initializes from the table, so a
    * replayed batch clamps against at-least the boundary it saw before
@@ -1881,7 +1910,7 @@ object Streams {
             // initial load: every row's valid_from IS effective
             boundary.set(Some(effective))
           } else {
-            val opened = graft.tables.Tables.upsertScd2(s, staging,
+            val opened = graft.tables.Tables.mergeScd2(s, staging,
               table, key, effective)
             // advance only if the merge opened versions — a no-change
             // batch leaves no valid_from = effective row, so the

@@ -385,10 +385,14 @@ object Tables {
    * does; a repeated key would land twice. A missing main is created by
    * [[loadOverwrite]]; otherwise the merge is the pruned partitioned
    * replace, [[replaceWith]] or the rename swap, as described on
-   * [[upsertIntoTable]]. */
+   * [[upsertIntoTable]]. `broadcastStaging` is passed to
+   * `Relational.upsertPlan`: a caller that has sized `staging` within the
+   * broadcast threshold sets it, because the planner has no estimate for
+   * a frame landed from a micro-batch. */
   private[graft] def mergeUnique(spark: SparkSession, staging: DataFrame,
                                  mainTable: String, key: String,
-                                 stablePartitions: Boolean = false): Unit =
+                                 stablePartitions: Boolean = false,
+                                 broadcastStaging: Boolean = false): Unit =
     if (!spark.catalog.tableExists(mainTable)) {
       loadOverwrite(staging, mainTable)
     } else {
@@ -419,10 +423,12 @@ object Tables {
           val pc = partCols.head
           val inTouched = main.filter(partValuesFilter(pc, vals))
           prunedPartitionedReplace(spark,
-            Relational.upsertPlan(inTouched, staging, key), mainTable,
+            Relational.upsertPlan(inTouched, staging, key, broadcastStaging),
+            mainTable,
             pc, vals)
         case None =>
-          replaceWith(spark, Relational.upsertPlan(main, staging, key),
+          replaceWith(spark,
+            Relational.upsertPlan(main, staging, key, broadcastStaging),
             mainTable, partCols)
       }
     }
@@ -598,6 +604,17 @@ object Tables {
   def upsertScd2(spark: SparkSession, staging: DataFrame,
                  table: String, key: String,
                  effectiveTs: java.sql.Timestamp): Long = {
+    Relational.assertUniqueKeys(staging, key)
+    mergeScd2(spark, staging, table, key, effectiveTs)
+  }
+
+  /** The merge of [[upsertScd2]] without its duplicate-key guard: the
+   * same contract checks, versioning and return. `staging` must hold
+   * each key at most once, as the `Relational.dedupeLatest` output of
+   * [[graft.streaming.Streams.scd2Sink]] does. */
+  private[graft] def mergeScd2(spark: SparkSession, staging: DataFrame,
+                               table: String, key: String,
+                               effectiveTs: java.sql.Timestamp): Long = {
     val full = spark.table(table)
     val attrCols = full.columns
       .filterNot(c => c == key || c == "valid_from" || c == "valid_to" ||
@@ -610,7 +627,6 @@ object Tables {
     require(staging.columns.toSet == (attrCols.toSet + key),
       s"staging must carry exactly the key + attribute columns " +
         s"(${(attrCols.toSet + key).toSeq.sorted.mkString(", ")})")
-    Relational.assertUniqueKeys(staging, key)
     import scala.jdk.CollectionConverters._
     val partCols = spark.catalog.listColumns(table).collectAsList()
       .asScala.filter(_.isPartition).map(_.name).toSeq

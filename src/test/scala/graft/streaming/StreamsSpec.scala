@@ -165,6 +165,145 @@ class StreamsSpec extends SparkSpec {
     Tables.dropTable(spark, "stream_up_ties")
   }
 
+  /** Runs `upsertSink` over `batches` (one micro-batch each) into a fresh
+   * `table` and returns the table's rows ordered by id, and the executed
+   * plans of the writes that hold the merge's left-anti join. The listener
+   * is registered before the stream starts: the sink's batches run in
+   * sessions cloned from this one, which copy its listeners at clone
+   * time. */
+  private def upsertRun(table: String,
+                        batches: Seq[Seq[(Long, String, Timestamp)]])
+      : (Seq[Seq[Any]], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val sqlCtx = spark.sqlContext
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        captured.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    def merges: Seq[SparkPlan] = captured.asScala.toSeq.filter(p =>
+      AqePlans.collect(p) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        case j: SortMergeJoinExec if j.joinType == LeftAnti => j
+      }.nonEmpty)
+    Tables.dropTable(spark, table)
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val cp = Files.createTempDirectory("cp").toString
+    spark.listenerManager.register(listener)
+    val q = Streams.upsertSink(mem.toDF().toDF("id", "v", "ts"),
+      table, "id", "ts", cp)
+    try {
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      // the listener bus is asynchronous: wait for every merge's plan (the
+      // first batch creates the table and has no merge)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (merges.size < batches.size - 1 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      (rows(spark.table(table).orderBy("id")), merges)
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+      Tables.dropTable(spark, table)
+    }
+  }
+
+  private object AqePlans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private val upsertBatches = Seq(
+    (1L to 200L).map(i => (i, s"v$i", ts("2024-01-01 00:00:00"))),
+    Seq((5L, "five", ts("2024-01-01 00:01:00")),
+      (201L, "new", ts("2024-01-01 00:01:00"))),
+    Seq((5L, "FIVE", ts("2024-01-01 00:02:00")),
+      (7L, "seven", ts("2024-01-01 00:02:00"))))
+
+  private val upsertExpected =
+    (1L to 201L).map(i => i -> s"v$i").toMap ++
+      Map(5L -> "FIVE", 7L -> "seven", 201L -> "new")
+
+  test("upsertSink broadcasts a small micro-batch into the merge: no " +
+      "shuffle above the main-table scan") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (landed, merges) = upsertRun("stream_up_bhj", upsertBatches)
+    assert(landed.map(r => r.head -> r(1)).toMap == upsertExpected)
+    assert(merges.size == 2, s"expected one merge per later batch:\n" +
+      merges.mkString("\n---\n"))
+    merges.foreach { p =>
+      assert(AqePlans.collect(p) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      }.size == 1, s"merge is not a broadcast left-anti join:\n$p")
+      assert(AqePlans.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"merge shuffles:\n$p")
+    }
+  }
+
+  test("upsertSink with broadcast joins disabled lands the same table " +
+      "through the shuffle join") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val conf = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "-1")
+    val (landed, merges) =
+      try upsertRun("stream_up_smj", upsertBatches)
+      finally prior match {
+        case Some(v) => spark.conf.set(conf, v)
+        case None => spark.conf.unset(conf)
+      }
+    assert(landed.map(r => r.head -> r(1)).toMap == upsertExpected)
+    assert(merges.size == 2, merges.mkString("\n---\n"))
+    merges.foreach { p =>
+      assert(AqePlans.collect(p) {
+        case j: SortMergeJoinExec if j.joinType == LeftAnti => j
+      }.size == 1, s"merge is not the shuffle join:\n$p")
+      assert(AqePlans.collect(p) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      }.isEmpty, s"merge broadcast with the threshold disabled:\n$p")
+    }
+  }
+
+  test("upsertSink releases each landed micro-batch after its merge") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (landed, _) = upsertRun("stream_up_release", upsertBatches)
+    assert(landed.size == 201)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"landed batches still persisted: ${left.values}")
+  }
+
+  test("upsertSink dedupes a key across the input partitions of one " +
+      "micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    Tables.dropTable(spark, "stream_up_parts")
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val cp = Files.createTempDirectory("cp").toString
+    // each addData is one input partition; both land in the first batch,
+    // so the latest row per key has to be found across partitions
+    mem.addData((1L, "a", ts("2024-01-01 00:00:00")),
+      (2L, "late", ts("2024-01-01 00:05:00")))
+    mem.addData((1L, "A", ts("2024-01-01 00:01:00")),
+      (2L, "early", ts("2024-01-01 00:04:00")),
+      (3L, "c", ts("2024-01-01 00:00:00")))
+    val q = Streams.upsertSink(mem.toDF().toDF("id", "v", "ts"),
+      "stream_up_parts", "id", "ts", cp)
+    try {
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      assert(rows(spark.table("stream_up_parts").select("id", "v")
+        .orderBy("id")) == Seq(Seq(1L, "A"), Seq(2L, "late"), Seq(3L, "c")))
+    } finally q.stop()
+    Tables.dropTable(spark, "stream_up_parts")
+  }
+
   test("intakeSink: quality gate, first-seen near-dup admission vs batch " +
       "and corpus") {
     implicit val sqlCtx = spark.sqlContext
