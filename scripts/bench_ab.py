@@ -16,8 +16,9 @@ side builds itself on its first run.
 Prints, per end-to-end metric of BENCHMARK.json: each side's median and
 quartiles, and the pairs the change won (strictly better in the metric's
 direction). --trace-seed N then runs `--trace 1` once per side with seed N
-and prints the per-layer metrics that locate a streaming saving (each a
-median over the run's traced units) side by side. --out writes every
+and prints the per-layer metrics that locate a streaming saving or a
+change in table writes (each a median over the run's traced units) side
+by side. --out writes every
 run's result line as JSON. Nothing is written in this checkout.
 """
 import argparse
@@ -63,7 +64,8 @@ def copy_working_tree(dest):
 
 # The per-layer metrics --trace-seed prints, in this order.
 TRACE_METRICS = ("spark.jobs", "stream.rows_per_batch",
-                 "spark.shuffle_write_bytes", "stream.upsert_batch_ms")
+                 "spark.shuffle_write_bytes", "stream.upsert_batch_ms",
+                 "tables.commands", "tables.rows_written")
 
 
 def run_side(root, workload, seed, seconds, trace=False):

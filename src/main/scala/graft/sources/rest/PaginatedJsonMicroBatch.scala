@@ -1,12 +1,9 @@
 package graft.sources.rest
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.jdk.CollectionConverters._
 
 /**
  * Micro-batch streaming over the paginated JSON API — the ingest path the
@@ -27,19 +24,6 @@ case class PageRecordOffset(consumed: Long) extends Offset {
 
 private[rest] class PaginatedJsonMicroBatch(spec: PageSpec)
     extends MicroBatchStream {
-
-  private val mapper = new ObjectMapper()
-
-  private def pageLen(page: Long): Int = {
-    val body = PaginatedJsonSource.retrying(spec.maxRetries, spec.retryDelayMs) {
-      () => PaginatedJsonSource.fetchUrl(spec.pageUrl(page), spec.timeoutMs)
-    }
-    if (body == null) 0
-    else {
-      val arr = mapper.readTree(body).get(spec.objKey)
-      if (arr == null || !arr.isArray) 0 else arr.size()
-    }
-  }
 
   override def initialOffset(): Offset = PageRecordOffset(0L)
   override def deserializeOffset(json: String): Offset =
@@ -65,7 +49,7 @@ private[rest] class PaginatedJsonMicroBatch(spec: PageSpec)
     var page = fullPagesConfirmed + 1
     var done = false
     while (!done) {
-      val len = pageLen(page)
+      val len = spec.fetchPage(page).size
       if (len > spec.count)
         throw new IllegalStateException(
           s"page $page returned $len records, more than the requested " +
@@ -114,7 +98,6 @@ private[rest] class RecordRangeReaderFactory(spec: PageSpec)
 private[rest] class RecordRangeReader(spec: PageSpec, index: Int,
                                       start: Long, end: Long)
     extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
   private val firstPage = (start / spec.count).toInt + 1
   private val lastPage = ((end - 1) / spec.count).toInt + 1
   private var page = firstPage + index
@@ -124,16 +107,7 @@ private[rest] class RecordRangeReader(spec: PageSpec, index: Int,
   private def loadPage(): Unit = {
     val p = page
     page += spec.numPartitions
-    val body = PaginatedJsonSource.retrying(spec.maxRetries, spec.retryDelayMs) {
-      () => PaginatedJsonSource.fetchUrl(spec.pageUrl(p), spec.timeoutMs)
-    }
-    val objs =
-      if (body == null) Seq.empty
-      else {
-        val arr = mapper.readTree(body).get(spec.objKey)
-        if (arr == null || !arr.isArray) Seq.empty
-        else arr.elements().asScala.toSeq
-      }
+    val objs = spec.fetchPage(p)
     val base = (p - 1).toLong * spec.count
     iter = objs.zipWithIndex.collect {
       case (node, i) if base + i >= start && base + i < end => node.toString

@@ -6,7 +6,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -189,6 +189,19 @@ private[rest] case class PageSpec(url: String, objKey: String, count: Int,
 
   private def encoded(v: Option[String]): String =
     v.fold("")(URLEncoder.encode(_, StandardCharsets.UTF_8))
+
+  @transient private lazy val mapper = new ObjectMapper()
+
+  /** Fetch page `page` (with the retry loop) and return the elements of
+   * its `objKey` array: empty for a missing page file, an envelope
+   * without the key, or a key that is not an array. */
+  def fetchPage(page: Long): Seq[JsonNode] = {
+    val body = PaginatedJsonSource.retrying(maxRetries, retryDelayMs) {
+      () => PaginatedJsonSource.fetchUrl(pageUrl(page), timeoutMs)
+    }
+    val arr = if (body == null) null else mapper.readTree(body).get(objKey)
+    if (arr == null || !arr.isArray) Seq.empty else arr.elements().asScala.toSeq
+  }
 }
 
 private[rest] class PaginatedJsonScan(tableSchema: StructType, spec: PageSpec)
@@ -226,27 +239,17 @@ private[rest] class PageReaderFactory(tableSchema: StructType, spec: PageSpec)
 private[rest] class PageReader(tableSchema: StructType, spec: PageSpec,
                                index: Int)
     extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
   private val raw = tableSchema == PaginatedJsonSource.rawSchema
   private var page = index + 1
   private var done = false
-  private var iter: Iterator[com.fasterxml.jackson.databind.JsonNode] = Iterator.empty
-  private var current: com.fasterxml.jackson.databind.JsonNode = _
+  private var iter: Iterator[JsonNode] = Iterator.empty
+  private var current: JsonNode = _
 
   private def fetchNextPage(): Unit = {
-    val body = PaginatedJsonSource.retrying(spec.maxRetries, spec.retryDelayMs) {
-      () => PaginatedJsonSource.fetchUrl(spec.pageUrl(page), spec.timeoutMs)
-    }
+    val objs = spec.fetchPage(page)
     page += spec.numPartitions
-    val objs: Seq[com.fasterxml.jackson.databind.JsonNode] =
-      if (body == null) Seq.empty
-      else {
-        val arr = mapper.readTree(body).get(spec.objKey)
-        if (arr == null || !arr.isArray) Seq.empty
-        else arr.elements().asScala.toSeq
-      }
     if (objs.size < spec.count) done = true // short or empty page = the last
-    val inRange: com.fasterxml.jackson.databind.JsonNode => Boolean =
+    val inRange: JsonNode => Boolean =
       spec.tsField match {
         case None => _ => true
         case Some(f) => node =>
@@ -261,7 +264,7 @@ private[rest] class PageReader(tableSchema: StructType, spec: PageSpec,
     if (iter.hasNext) { current = iter.next(); true } else false
   }
 
-  private def convert(node: com.fasterxml.jackson.databind.JsonNode,
+  private def convert(node: JsonNode,
                       dt: org.apache.spark.sql.types.DataType): Any = {
     import org.apache.spark.sql.types._
     if (node == null || node.isNull) null

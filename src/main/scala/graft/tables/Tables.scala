@@ -1,6 +1,7 @@
 package graft.tables
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit,
   max, min, pmod, round, shiftleft, shiftright, sum, xxhash64}
 import org.apache.spark.sql.types.StructType
@@ -233,9 +234,15 @@ object Tables {
   def loadBucketed(df: DataFrame, table: String, bucketCol: String,
                    numBuckets: Int, sorted: Boolean = true): Unit = {
     clearOrphanLocation(df.sparkSession, table)
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-    (if (sorted) w.sortBy(bucketCol) else w).saveAsTable(table)
+    bucketed(bucketCol, numBuckets, sorted)(
+      df.write.mode(SaveMode.Overwrite).format("parquet")).saveAsTable(table)
+  }
+
+  /** Bucket (and optionally sort) a writer by `bucketCol`. */
+  private def bucketed(bucketCol: String, numBuckets: Int, sorted: Boolean)(
+      w: DataFrameWriter[Row]): DataFrameWriter[Row] = {
+    val b = w.bucketBy(numBuckets, bucketCol)
+    if (sorted) b.sortBy(bucketCol) else b
   }
 
   /**
@@ -340,27 +347,28 @@ object Tables {
    * whichever is present back to `mainTable`. At no point is the only copy
    * of the data mid-overwrite.
    *
-   * Scale: on a SINGLE-column-partitioned main, the merge is PRUNED —
-   * the only partitions read and rewritten are those the staging rows
-   * land in plus those the staged keys' CURRENT rows live in. Untouched
-   * partitions are never read or rewritten (file-listing-pinned in
-   * TablesSpec), so a daily incremental merge into a date-partitioned
-   * 100 TB fact table WRITES the touched days, not the table. Finding
-   * where the staged keys currently live still READS the main's
-   * (key, partition) columns table-wide — a column-pruned scan, far
-   * cheaper than a rewrite but not partition-bounded. When the caller
-   * can promise `stablePartitions` — a key's partition value never
-   * changes, the natural contract for event-date-partitioned facts —
-   * that discovery scan is skipped entirely and the merge reads AND
-   * writes only the partitions present in staging (measured: flat in
-   * table size, BENCH_scaling.md round-14 entry). Under that promise a
-   * staged key whose current row actually lives elsewhere would be
-   * INSERTED alongside its old row instead of moved — the flag is an
-   * explicit contract, not a heuristic. Null partition values prune
-   * like any other (the null partition reads via `IS NULL` and drops
-   * via `PARTITION (col = null)` — measured supported); only
-   * multi-column layouts fall back to the full [[replaceWith]]
-   * rewrite.
+   * Scale: on a partitioned main, whatever its number of partition
+   * columns, the merge is PRUNED — the only partition tuples read and
+   * rewritten are those the staging rows land in plus those the staged
+   * keys' CURRENT rows live in. Untouched partitions are never read or
+   * rewritten (file-listing-pinned in TablesSpec), so a daily
+   * incremental merge into a date-partitioned 100 TB fact table WRITES
+   * the touched days, not the table. Finding where the staged keys
+   * currently live still READS the main's (key, partition) columns
+   * table-wide — a column-pruned scan, far cheaper than a rewrite but
+   * not partition-bounded. When the caller can promise
+   * `stablePartitions` — a key's partition value never changes, the
+   * natural contract for event-date-partitioned facts — that discovery
+   * scan is skipped entirely and the merge reads AND writes only the
+   * partitions present in staging (measured: flat in table size,
+   * BENCH_scaling.md round-14 entry). Under that promise a staged key
+   * whose current row actually lives elsewhere would be INSERTED
+   * alongside its old row instead of moved — the flag is an explicit
+   * contract, not a heuristic. Null partition values prune like any
+   * other (the null partition reads via `IS NULL` and drops via
+   * `PARTITION (col = null)` — measured supported). The touched
+   * partitions are rewritten by [[replacePartitions]] through the one
+   * stage table `<main>__part_stage`.
    *
    * Layers: this entry point guards and counts; [[mergeUnique]] merges.
    * The guard runs only when the main exists, since the missing-main
@@ -383,9 +391,10 @@ object Tables {
    * and post-merge count. `staging` must hold each key at most once (a
    * null key counts as one key), as `Relational.dedupeLatest` output
    * does; a repeated key would land twice. A missing main is created by
-   * [[loadOverwrite]]; otherwise the merge is the pruned partitioned
-   * replace, [[replaceWith]] or the rename swap, as described on
-   * [[upsertIntoTable]]. `broadcastStaging` is passed to
+   * [[loadOverwrite]]; otherwise [[replaceTouched]] rewrites the main:
+   * the rename swap when it is unpartitioned, else the touched partition
+   * tuples of any arity (empty staging touches none: a no-op), as
+   * described on [[upsertIntoTable]]. `broadcastStaging` is passed to
    * `Relational.upsertPlan`: a caller that has sized `staging` within the
    * broadcast threshold sets it, because the planner has no estimate for
    * a frame landed from a micro-batch. */
@@ -396,70 +405,106 @@ object Tables {
     if (!spark.catalog.tableExists(mainTable)) {
       loadOverwrite(staging, mainTable)
     } else {
-      val main = spark.table(mainTable)
-      import scala.jdk.CollectionConverters._
-      val partCols = spark.catalog.listColumns(mainTable).collectAsList()
-        .asScala.filter(_.isPartition).map(_.name).toSeq
-      val pruned: Option[Seq[Any]] =
-        if (partCols.size != 1) None
-        else {
-          val pc = partCols.head
-          // partitions holding the staged keys' current rows (they may
-          // vacate) ∪ partitions the staging rows land in; under the
-          // stablePartitions contract the former ⊆ the latter, so the
-          // table-wide discovery semi join is skipped
-          val touchedDf =
-            if (stablePartitions) staging.select(col(pc))
-            else main
-              .join(staging.select(col(key)).distinct(), Seq(key),
-                "left_semi")
-              .select(col(pc))
-              .union(staging.select(col(pc)))
-          Some(touchedDf.distinct().collect().map(_.get(0)).toSeq)
-        }
-      pruned match {
-        case Some(vals) if vals.isEmpty => () // empty staging: no-op
-        case Some(vals) =>
-          val pc = partCols.head
-          val inTouched = main.filter(partValuesFilter(pc, vals))
-          prunedPartitionedReplace(spark,
-            Relational.upsertPlan(inTouched, staging, key, broadcastStaging),
-            mainTable,
-            pc, vals)
-        case None =>
-          replaceWith(spark,
-            Relational.upsertPlan(main, staging, key, broadcastStaging),
-            mainTable, partCols)
+      // partitions holding the staged keys' current rows (they may
+      // vacate) ∪ partitions the staging rows land in; under the
+      // stablePartitions contract the former ⊆ the latter, so the
+      // table-wide discovery semi join is skipped
+      replaceTouched(spark, mainTable) { (main, pcols) =>
+        if (stablePartitions) staging.select(pcols: _*)
+        else main
+          .join(staging.select(col(key)).distinct(), Seq(key), "left_semi")
+          .select(pcols: _*)
+          .union(staging.select(pcols: _*))
+      } { scope =>
+        Relational.upsertPlan(scope, staging, key, broadcastStaging)
       }
     }
 
-  /** Rewrite ONLY the `touched` partition values (all non-null) of a
-   * single-column-partitioned main with `mergedTouched` — the pruned
-   * sibling of [[replaceWith]]'s partitioned branch, shared by
-   * [[upsertIntoTable]] and [[deleteKeys]]: stage the touched rows
-   * (the frame reads the main it replaces), dynamic-overwrite the
-   * partitions present, then DROP touched values the replacement no
-   * longer contains (fully-vacated partitions — leaving them would
-   * resurrect their old rows). Crash between the overwrite and the
-   * drops leaves vacated partitions stale; re-running the same
-   * upsert/delete heals (their keys are still present and re-resolve
-   * to the same touched set) — the same rerun-heals window as
-   * [[replaceWith]]'s vacated pass. */
-  private def prunedPartitionedReplace(spark: SparkSession,
-                                       mergedTouched: DataFrame,
-                                       mainTable: String, partCol: String,
-                                       touched: Seq[Any]): Unit = {
-    val tmp = suffixed(mainTable, "__prune_stage")
-    spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
-    mergedTouched.write.mode(SaveMode.Overwrite).format("parquet")
-      .partitionBy(partCol).saveAsTable(tmp)
-    loadPartitioned(spark.table(tmp), mainTable, partCol)
-    val present = spark.table(tmp).select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    touched.filterNot(present.contains)
-      .foreach(v => dropPartition(spark, mainTable, Seq(partCol -> v)))
-    spark.sql(s"DROP TABLE ${q(tmp)}")
-    spark.catalog.refreshTable(mainTable)
+  /** Rewrite the managed `table` as `rewrite(scope)` — the one path of
+   * [[mergeUnique]] and [[deleteKeys]] for every partition layout.
+   * Unpartitioned: `scope` is the whole main and the result replaces it
+   * by [[writeSwapped]]. Partitioned: `touched(main, partitionColumns)`
+   * selects the partition tuples the rewrite can change, `scope` is the
+   * main filtered to those tuples (a literal predicate over the
+   * partition columns, so the scan prunes at the partition listing), and
+   * [[replacePartitions]] replaces exactly those tuples. No touched
+   * tuple is a no-op. */
+  private def replaceTouched(spark: SparkSession, table: String)(
+      touched: (DataFrame, Seq[Column]) => DataFrame)(
+      rewrite: DataFrame => DataFrame): Unit = {
+    val main = spark.table(table)
+    val partCols = partitionColumns(spark, table)
+    if (partCols.isEmpty) writeSwapped(spark, rewrite(main), table)
+    else {
+      val tuples = partitionTuples(touched(main, partCols.map(col)))
+      if (tuples.nonEmpty)
+        replacePartitions(spark,
+          rewrite(main.filter(inPartitions(partCols, tuples))),
+          table, partCols, tuples)
+    }
+  }
+
+  /** Replace partitions of the partitioned `table` with `replacement` —
+   * the one partitioned write of every replace path. `replacement` may
+   * read the table it replaces, so it is first staged as
+   * `<table>__part_stage` (an orphan directory there, left by a dead
+   * process, is cleared first); the partitions the stage holds are then
+   * dynamic-overwritten, and each `candidates` tuple the stage does not
+   * hold is DROPPED (a fully-vacated partition would otherwise keep its
+   * old rows). A crash before the overwrite leaves the main untouched; a
+   * crash between the overwrite and the drops leaves vacated partitions
+   * stale, and re-running the same upsert/delete heals them (their keys
+   * are still present and re-resolve to the same touched set). */
+  private def replacePartitions(spark: SparkSession, replacement: DataFrame,
+                                table: String, partCols: Seq[String],
+                                candidates: Seq[Seq[Any]]): Unit = {
+    val stage = suffixed(table, "__part_stage")
+    spark.sql(s"DROP TABLE IF EXISTS ${q(stage)}")
+    clearOrphanLocation(spark, stage)
+    replacement.write.mode(SaveMode.Overwrite).format("parquet")
+      .partitionBy(partCols: _*).saveAsTable(stage)
+    loadPartitioned(spark.table(stage), table, partCols.head)
+    if (candidates.nonEmpty) {
+      val held = partitionTuples(
+        spark.table(stage).select(partCols.map(col): _*)).toSet
+      candidates.filterNot(held.contains)
+        .foreach(t => dropPartition(spark, table, partCols.zip(t)))
+    }
+    spark.sql(s"DROP TABLE ${q(stage)}")
+    spark.catalog.refreshTable(table)
+  }
+
+  /** The partition columns of a catalog table, in layout order; empty
+   * when it is unpartitioned. */
+  private def partitionColumns(spark: SparkSession,
+                               table: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    spark.catalog.listColumns(table).collectAsList().asScala
+      .filter(_.isPartition).map(_.name).toSeq
+  }
+
+  /** The distinct rows of `df`, a frame over partition columns, as
+   * value tuples — bounded by the table's partition count. */
+  private def partitionTuples(df: DataFrame): Seq[Seq[Any]] =
+    df.distinct().collect().map(_.toSeq).toSeq
+
+  /** `partCols ∈ tuples` with null-aware semantics, as a predicate over
+   * the partition columns only (so it prunes at the partition listing):
+   * tuples group by their first value, and the last column tests its
+   * values with one `isin`. A plain `isin` never matches null, so a null
+   * value (the Hive default partition) tests with `IS NULL`. */
+  private def inPartitions(partCols: Seq[String],
+                           tuples: Seq[Seq[Any]]): Column = {
+    val c = col(partCols.head)
+    if (partCols.tail.isEmpty) {
+      val vals = tuples.map(_.head).distinct
+      val nonNull = vals.filter(_ != null)
+      val base = if (nonNull.isEmpty) lit(false) else c.isin(nonNull: _*)
+      if (vals.contains(null)) base || c.isNull else base
+    } else tuples.groupBy(_.head).toSeq.map { case (v, ts) =>
+      (if (v == null) c.isNull else c === lit(v)) &&
+        inPartitions(partCols.tail, ts.map(_.tail))
+    }.reduce(_ || _)
   }
 
   /** `ALTER TABLE … DROP IF EXISTS PARTITION` for one partition, given
@@ -479,52 +524,17 @@ object Tables {
       s"PARTITION (${parts.mkString(", ")})")
   }
 
-  /** `partCol ∈ vals` with null-aware semantics: a plain `isin` never
-   * matches null, so a null touched value (the Hive default partition)
-   * adds an explicit `IS NULL` leg. */
-  private def partValuesFilter(pc: String, vals: Seq[Any]): Column = {
-    val nonNull = vals.filter(_ != null)
-    val base =
-      if (nonNull.isEmpty) lit(false) else col(pc).isin(nonNull: _*)
-    if (vals.exists(_ == null)) base || col(pc).isNull else base
-  }
-
-  /** Write a fully-merged replacement frame over a managed main:
-   * rename swap for unpartitioned mains; for partitioned mains, dynamic
-   * overwrite of the present partitions plus an explicit drop of
-   * VACATED partitions (values the replacement no longer contains) —
-   * shared by [[upsertIntoTable]] and [[deleteKeys]]. */
-  private def replaceWith(spark: SparkSession, merged: DataFrame,
-                          mainTable: String,
-                          partCols: Seq[String]): Unit = {
-    if (partCols.isEmpty) writeSwapped(spark, merged, mainTable)
-      else {
-        // partitioned main: rename swap corrupts HMS partition locations
-        // (see compactTable) — materialize the merge to a staging table,
-        // then dynamic-overwrite.
-        val tmp = suffixed(mainTable, "__upsert_stage")
-        spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
-        merged.write.mode(SaveMode.Overwrite).format("parquet")
-          .partitionBy(partCols: _*).saveAsTable(tmp)
-        // Dynamic overwrite replaces only the partitions PRESENT in the
-        // merged frame. A staging row that changes its partition-column
-        // value vacates its old partition: if nothing else lives there,
-        // the merged frame has no rows for it, the overwrite leaves it
-        // untouched, and the key would exist in two partitions. Detect
-        // vacated partitions (old values absent from merged) and drop
-        // them explicitly — both distinct frames and the collect are
-        // bounded by the table's partition count, not its rows.
-        val pcols = partCols.map(col)
-        val vacated = spark.table(mainTable).select(pcols: _*).distinct()
-          .except(spark.table(tmp).select(pcols: _*).distinct())
-          .collect()
-        loadPartitioned(spark.table(tmp), mainTable, partCols.head)
-        vacated.foreach(r =>
-          dropPartition(spark, mainTable, partCols.zip(r.toSeq)))
-        spark.sql(s"DROP TABLE ${q(tmp)}")
-        spark.catalog.refreshTable(mainTable)
-      }
-  }
+  /** Replace a managed table's whole contents with `replacement`: the
+   * rename swap ([[writeSwapped]]) when unpartitioned, else
+   * [[replacePartitions]] (a rename would break the absolute HMS
+   * partition locations, see [[compactTable]]) dropping each
+   * `candidates` tuple the replacement no longer holds. `candidates` is
+   * evaluated only for a partitioned table, since listing it is a job. */
+  private def replaceWith(spark: SparkSession, replacement: DataFrame,
+                          table: String, partCols: Seq[String],
+                          candidates: => Seq[Seq[Any]]): Unit =
+    if (partCols.isEmpty) writeSwapped(spark, replacement, table)
+    else replacePartitions(spark, replacement, table, partCols, candidates)
 
   /** The SCD2 partition column: `date_format(valid_to, 'yyyy-MM-dd')`
    * in the session timezone — null (the Hive default partition) for
@@ -627,9 +637,7 @@ object Tables {
     require(staging.columns.toSet == (attrCols.toSet + key),
       s"staging must carry exactly the key + attribute columns " +
         s"(${(attrCols.toSet + key).toSeq.sorted.mkString(", ")})")
-    import scala.jdk.CollectionConverters._
-    val partCols = spark.catalog.listColumns(table).collectAsList()
-      .asScala.filter(_.isPartition).map(_.name).toSeq
+    val partCols = partitionColumns(spark, table)
     val pruned = partCols == Seq(Scd2PartCol)
     // on the partitioned layout, filter on the PARTITION column so the
     // current tier is one pruned directory, not a full-table scan
@@ -666,7 +674,10 @@ object Tables {
       val hist = full.filter(col("valid_to").isNotNull)
       val merged = hist.select(ordered.map(col): _*)
         .unionByName(closed).unionByName(kept).unionByName(opened)
-      replaceWith(spark, merged, table, partCols)
+      // a partitioned layout other than valid_to_date: every current
+      // partition may vacate
+      replaceWith(spark, merged, table, partCols,
+        partitionTuples(full.select(partCols.map(col): _*)))
     } else {
       // PRUNED path: only two partitions change — null (current tier:
       // kept + opened) and date(effectiveTs) (newly closed versions,
@@ -674,8 +685,8 @@ object Tables {
       // must union in because dynamic overwrite REPLACES the
       // partition). Every other history partition is never touched.
       // SCD2 never vacates a partition (versions only move from the
-      // null partition into a date partition), so no vacated-drop pass
-      // is needed, unlike replaceWith's general branch.
+      // null partition into a date partition), so there are no drop
+      // candidates.
       val effDate = scd2PartValue(spark, effectiveTs)
       val sameDate = full.filter(col(Scd2PartCol) === effDate)
         .select(ordered.map(col): _*)
@@ -686,16 +697,7 @@ object Tables {
         .select(ordered.map(col): _*)
       val touched = sameDate.unionByName(withPart(closed))
         .unionByName(withPart(kept)).unionByName(withPart(opened))
-      // the touched frame READS the main table (cur + sameDate), so it
-      // must materialize to a stage before the dynamic overwrite — a
-      // crash mid-stage leaves the main untouched
-      val tmp = suffixed(table, "__scd2_stage")
-      spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
-      touched.write.mode(SaveMode.Overwrite).format("parquet")
-        .partitionBy(Scd2PartCol).saveAsTable(tmp)
-      loadPartitioned(spark.table(tmp), table, Scd2PartCol)
-      spark.sql(s"DROP TABLE ${q(tmp)}")
-      spark.catalog.refreshTable(table)
+      replacePartitions(spark, touched, table, partCols, Nil)
     }
     nOpened
   }
@@ -785,7 +787,7 @@ object Tables {
    * Staged key DELETION — the retraction half of the merge surface
    * (GDPR erasure, takedown feeds, bad-batch rollback): anti-join the
    * main table against the key set and replace it via the same
-   * crash-safe protocol as [[upsertIntoTable]] ([[replaceWith]]:
+   * crash-safe protocol as [[upsertIntoTable]] ([[replaceTouched]]:
    * rename swap, or dynamic overwrite with vacated-partition drop on
    * partitioned mains — a partition whose every row is deleted is
    * DROPPED, not left stale). Returns the remaining row count so the
@@ -794,43 +796,27 @@ object Tables {
    *
    * Scale: one anti-join shuffled on the key (broadcast when the key
    * set is small — the usual erasure-request shape) plus the rewrite.
-   * On a single-column-partitioned main the rewrite is PRUNED to the
-   * partitions that actually HOLD the doomed keys (one semi join +
-   * a partition-count-bounded distinct to find them) — a GDPR erasure
-   * of a handful of users rewrites the days those users touched, not
-   * the 100 TB table. Fully-vacated partitions drop; untouched
-   * partitions are never read or rewritten (file-listing-pinned).
-   * Null partition values prune like any other (see
-   * [[upsertIntoTable]]) — erasing a key from a [[loadScd2]]
+   * On a partitioned main, whatever its number of partition columns,
+   * the rewrite is PRUNED to the partition tuples that actually HOLD
+   * the doomed keys (one semi join + a partition-count-bounded distinct
+   * to find them) — a GDPR erasure of a handful of users rewrites the
+   * days those users touched, not the 100 TB table. Fully-vacated
+   * partitions drop; untouched partitions are never read or rewritten
+   * (file-listing-pinned). Null partition values prune like any other
+   * (see [[upsertIntoTable]]) — erasing a key from a [[loadScd2]]
    * partitioned dimension rewrites the current tier plus only the
-   * dates holding that key's closed versions. Multi-column layouts
-   * fall back to the full [[replaceWith]] rewrite.
+   * dates holding that key's closed versions. No doomed key on a
+   * partitioned main is a no-op.
    */
   def deleteKeys(spark: SparkSession, keys: DataFrame, mainTable: String,
                  key: String): Long = {
-    val main = spark.table(mainTable)
     val keySet = keys.select(col(key)).distinct()
-    import scala.jdk.CollectionConverters._
-    val partCols = spark.catalog.listColumns(mainTable).collectAsList()
-      .asScala.filter(_.isPartition).map(_.name).toSeq
-    def remainingOf(df: DataFrame) = df
-      .join(keySet, Seq(key), "left_anti")
-      // anti-join puts the key column first; realign to the table schema
-      .select(main.schema.fieldNames.map(col): _*)
-    val pruned: Option[Seq[Any]] =
-      if (partCols.size != 1) None
-      else Some(main.join(keySet, Seq(key), "left_semi")
-        .select(col(partCols.head)).distinct()
-        .collect().map(_.get(0)).toSeq)
-    pruned match {
-      case Some(vals) if vals.isEmpty => () // no doomed keys: no-op
-      case Some(vals) =>
-        val pc = partCols.head
-        prunedPartitionedReplace(spark,
-          remainingOf(main.filter(partValuesFilter(pc, vals))),
-          mainTable, pc, vals)
-      case None =>
-        replaceWith(spark, remainingOf(main), mainTable, partCols)
+    replaceTouched(spark, mainTable) { (main, pcols) =>
+      main.join(keySet, Seq(key), "left_semi").select(pcols: _*)
+    } { scope =>
+      scope.join(keySet, Seq(key), "left_anti")
+        // anti-join puts the key column first; realign to the table schema
+        .select(scope.columns.map(col): _*)
     }
     spark.table(mainTable).count()
   }
@@ -878,9 +864,11 @@ object Tables {
    * locations are absolute, so renaming a partitioned managed table
    * leaves its partitions pointing at the old paths (and dropping the
    * backup would delete data the renamed-in table now owns — measured,
-   * not theoretical). They compact via a staging table + per-partition
-   * dynamic overwrite instead: one extra data write, same crash
-   * safety (job-commit staging on the overwrite).
+   * not theoretical). They compact through [[replacePartitions]]
+   * instead — the same `<table>__part_stage` stage + per-partition
+   * dynamic overwrite as the pruned upsert, over every partition: one
+   * extra data write, same crash safety (job-commit staging on the
+   * overwrite). [[replaceWith]] picks between the two.
    */
   def compactTable(spark: SparkSession, table: String, targetFiles: Int,
                    sortCol: Option[String] = None): (Int, Int) = {
@@ -890,9 +878,7 @@ object Tables {
     // a partitioned table must stay partitioned — a plain rewrite would
     // silently flatten the layout and break partition pruning for every
     // downstream reader. targetFiles then applies PER PARTITION.
-    import scala.jdk.CollectionConverters._
-    val partCols = spark.catalog.listColumns(table).collectAsList()
-      .asScala.filter(_.isPartition).map(_.name).toSeq
+    val partCols = partitionColumns(spark, table)
     val shaped = (sortCol, partCols) match {
       case (Some(c), Seq()) =>
         df.repartitionByRange(targetFiles, col(c)).sortWithinPartitions(c)
@@ -910,16 +896,8 @@ object Tables {
         val shuffled = df.repartition((pcs.map(col) :+ bucket): _*)
         s.fold(shuffled)(c => shuffled.sortWithinPartitions(c))
     }
-    if (partCols.isEmpty) writeSwapped(spark, shaped, table)
-    else {
-      val tmp = suffixed(table, "__compact_tmp")
-      spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
-      shaped.write.mode(SaveMode.Overwrite).format("parquet")
-        .partitionBy(partCols: _*).saveAsTable(tmp)
-      loadPartitioned(spark.table(tmp), table, partCols.head)
-      spark.sql(s"DROP TABLE ${q(tmp)}")
-      spark.catalog.refreshTable(table)
-    }
+    // compaction keeps every row, so no partition vacates: no candidates
+    replaceWith(spark, shaped, table, partCols, Nil)
     (before, spark.table(table).inputFiles.length)
   }
 
@@ -953,9 +931,7 @@ object Tables {
       "bits * zCols.size must fit a positive BIGINT")
     // the rename-swap write would silently flatten a partitioned layout
     // (same constraint as compactTable's unpartitioned branch)
-    import scala.jdk.CollectionConverters._
-    require(!spark.catalog.listColumns(table).collectAsList()
-      .asScala.exists(_.isPartition),
+    require(partitionColumns(spark, table).isEmpty,
       s"zorderCompact supports unpartitioned tables only: $table")
     val df = spark.table(table)
     val before = df.inputFiles.length
@@ -1007,9 +983,7 @@ object Tables {
                      xCol: String, yCol: String,
                      targetFiles: Int, bits: Int = 16): (Int, Int) = {
     require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
-    import scala.jdk.CollectionConverters._
-    require(!spark.catalog.listColumns(table).collectAsList()
-      .asScala.exists(_.isPartition),
+    require(partitionColumns(spark, table).isEmpty,
       s"hilbertCompact supports unpartitioned tables only: $table")
     val df = spark.table(table)
     val before = df.inputFiles.length
@@ -1121,8 +1095,7 @@ object Tables {
    * BEFORE the first upsert, never concurrently with one.
    */
   def recoverSwap(spark: SparkSession, mainTable: String): Boolean = {
-    val tmp = suffixed(mainTable, "__swap_tmp")
-    val backup = suffixed(mainTable, "__swap_backup")
+    val (tmp, backup) = swapNames(mainTable)
     val hasMain = spark.catalog.tableExists(mainTable)
     val hasTmp = spark.catalog.tableExists(tmp)
     val hasBackup = spark.catalog.tableExists(backup)
@@ -1142,30 +1115,35 @@ object Tables {
     } else false
   }
 
-  /** Replace `mainTable`'s contents with `df` via write-new + rename swap
-   * (see [[upsertIntoTable]]'s protocol note: a crash between renames
-   * leaves both the new table and the backup recoverable on disk;
-   * [[recoverSwap]] is that recovery).
+  /** The swap scratch names of `table`: (`__swap_tmp`, `__swap_backup`). */
+  private def swapNames(table: String): (String, String) =
+    (suffixed(table, "__swap_tmp"), suffixed(table, "__swap_backup"))
+
+  /** Replace `mainTable`'s contents with `df` via write-new + rename swap:
+   * [[stageSwap]] then [[commitSwaps]] (see [[upsertIntoTable]]'s
+   * protocol note: a crash between renames leaves both the new table and
+   * the backup recoverable on disk; [[recoverSwap]] is that recovery).
    * UNPARTITIONED tables only — HMS partition locations do not survive
    * a table rename (see [[compactTable]]). */
   private def writeSwapped(spark: SparkSession, df: DataFrame,
                            mainTable: String): Unit = {
-    val tmp = suffixed(mainTable, "__swap_tmp")
-    val backup = suffixed(mainTable, "__swap_backup")
+    stageSwap(df, mainTable)(identity)
+    commitSwaps(spark, Seq(mainTable))
+  }
+
+  /** Write `df` as `<table>__swap_tmp`, the writer shaped by `shape`,
+   * after dropping both swap scratch tables. Orphan directories at
+   * either scratch location (no catalog entry, dead former process)
+   * would fail the CTAS or the rename after it, so they are cleared. */
+  private def stageSwap(df: DataFrame, table: String)(
+      shape: DataFrameWriter[Row] => DataFrameWriter[Row]): Unit = {
+    val spark = df.sparkSession
+    val (tmp, backup) = swapNames(table)
     spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
     spark.sql(s"DROP TABLE IF EXISTS ${q(backup)}")
-    // orphan dirs at either scratch location (no catalog entry, dead
-    // former process) would fail the CTAS / rename below
     clearOrphanLocation(spark, tmp)
     clearOrphanLocation(spark, backup)
-    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(tmp)
-    spark.sql(s"ALTER TABLE ${q(mainTable)} RENAME TO ${q(backup)}")
-    spark.sql(s"ALTER TABLE ${q(tmp)} RENAME TO ${q(mainTable)}")
-    spark.sql(s"DROP TABLE ${q(backup)}")
-    // the session's relation cache still points at the pre-swap file
-    // listing for mainTable; without a refresh the next read fails with
-    // FILE_NOT_EXIST (observed under repeated foreachBatch upserts)
-    spark.catalog.refreshTable(mainTable)
+    shape(df.write.mode(SaveMode.Overwrite).format("parquet")).saveAsTable(tmp)
   }
 
   /**
@@ -1182,24 +1160,15 @@ object Tables {
    * metadata renames.
    */
   def stageBucketedSwap(df: DataFrame, table: String, bucketCol: String,
-                        numBuckets: Int, sorted: Boolean = true): Unit = {
-    val spark = df.sparkSession
-    val tmp = suffixed(table, "__swap_tmp")
-    val backup = suffixed(table, "__swap_backup")
-    spark.sql(s"DROP TABLE IF EXISTS ${q(tmp)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${q(backup)}")
-    clearOrphanLocation(spark, tmp)
-    clearOrphanLocation(spark, backup)
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-    (if (sorted) w.sortBy(bucketCol) else w).saveAsTable(tmp)
-  }
+                        numBuckets: Int, sorted: Boolean = true): Unit =
+    stageSwap(df, table)(bucketed(bucketCol, numBuckets, sorted))
 
   /**
-   * Step 2 of the staged bucketed swap: promote every previously staged
-   * `<table>__swap_tmp` over its main via the [[writeSwapped]] rename
-   * protocol (rename main -> `backup`, tmp -> main, drop backup; bucket
-   * spec is catalog metadata and survives the rename). All data writes
+   * Step 2 of the staged swap: promote every previously staged
+   * `<table>__swap_tmp` over its main — the one rename sequence of this
+   * catalog, which [[writeSwapped]] also ends with (rename main ->
+   * `backup`, tmp -> main, drop backup, refresh; bucket spec is catalog
+   * metadata and survives the rename). All data writes
    * happened in [[stageBucketedSwap]], so the crash window here is a few
    * metadata operations per table:
    *   - within one table's swap: exactly the drilled [[recoverSwap]]
@@ -1214,13 +1183,12 @@ object Tables {
    */
   def commitSwaps(spark: SparkSession, tables: Seq[String]): Unit = {
     tables.foreach { table =>
-      require(spark.catalog.tableExists(suffixed(table, "__swap_tmp")),
+      require(spark.catalog.tableExists(swapNames(table)._1),
         s"commitSwaps: no staged swap-tmp for $table — " +
           "stageBucketedSwap every table before committing")
     }
     tables.foreach { table =>
-      val tmp = suffixed(table, "__swap_tmp")
-      val backup = suffixed(table, "__swap_backup")
+      val (tmp, backup) = swapNames(table)
       if (spark.catalog.tableExists(table))
         spark.sql(s"ALTER TABLE ${q(table)} RENAME TO ${q(backup)}")
       // first build (no main to rename away): an orphan dir at the main
@@ -1229,6 +1197,9 @@ object Tables {
       else clearOrphanLocation(spark, table)
       spark.sql(s"ALTER TABLE ${q(tmp)} RENAME TO ${q(table)}")
       spark.sql(s"DROP TABLE IF EXISTS ${q(backup)}")
+      // the session's relation cache still points at the pre-swap file
+      // listing; without a refresh the next read fails with
+      // FILE_NOT_EXIST (observed under repeated foreachBatch upserts)
       spark.catalog.refreshTable(table)
     }
   }

@@ -26,6 +26,13 @@ import org.scalatest.funsuite.AnyFunSuite
  * and then a replayed folded batch double-counts a summing tree. So the
  * guard comparison may appear once in `src/main`, and `Streams.scala`
  * may parse `batch=<id>` dir names only inside `batchIds`.
+ *
+ * Law 3: **a managed table is replaced in one place**. `Tables` owns
+ * one partition-column lookup (`partitionColumns`), one partitioned
+ * stage write (`replacePartitions`, which clears an orphan stage
+ * directory first) and one rename sequence (`commitSwaps`, plus the
+ * crash repair `recoverSwap`). A hand-copied replace drifts: the four
+ * stage copies this law replaced had lost the orphan-directory clear.
  */
 class RepoLawsSpec extends AnyFunSuite {
 
@@ -35,6 +42,21 @@ class RepoLawsSpec extends AnyFunSuite {
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .toSeq
+  }
+
+  /** Each line of `p` with its 1-based number and the name of the
+   * member `def` it sits in (the last `  def`/`  private def` line above
+   * it, at the two-space member indent of a top-level object). */
+  private def linesByDef(p: Path): Seq[(String, Int, String)] = {
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    Files.readAllLines(p).asScala.zipWithIndex
+      .scanLeft(("", 0, "")) { case ((_, _, owner), (line, i)) =>
+        val o = line match {
+          case member(name) => name
+          case _ => owner
+        }
+        (line, i + 1, o)
+      }.tail.toSeq
   }
 
   test("no lazy localCheckpoint(false, ...) anywhere in src/main") {
@@ -73,5 +95,40 @@ class RepoLawsSpec extends AnyFunSuite {
     assert(parsers.isEmpty,
       "batch=<id> dir names parsed outside Streams.batchIds:\n" +
         parsers.mkString("\n"))
+  }
+
+  test("a managed table is replaced in one place") {
+    val lookups = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("listColumns(")
+    } yield s"$p:${i + 1}: ${line.trim}"
+    val tables = Paths.get("src/main/scala/graft/tables/Tables.scala")
+    val lines = linesByDef(tables)
+    val text = lines.map(_._1).toIndexedSeq
+    val renames = lines.collect {
+      case (line, n, owner) if line.contains("RENAME TO") &&
+          !Set("commitSwaps", "recoverSwap")(owner) =>
+        s"$tables:$n ($owner): ${line.trim}"
+    }
+    // a partitioned write into a stage: `.partitionBy(` in the writer
+    // chain of a `saveAsTable(` whose target is not the caller's own
+    // `table` (the partitioned loads create the main itself)
+    val stages = lines.collect {
+      case (line, n, owner) if line.contains("saveAsTable(") &&
+          !line.contains("saveAsTable(table)") &&
+          text.slice(math.max(0, n - 4), n).exists(_.contains(".partitionBy(")) &&
+          owner != "replacePartitions" =>
+        s"$tables:$n ($owner): ${line.trim}"
+    }
+    def section(title: String, hits: Seq[String]): Seq[String] =
+      if (hits.isEmpty) Nil else title +: hits
+    val offenders =
+      section("partition columns looked up in more than one place — " +
+        "call Tables.partitionColumns:", if (lookups.size > 1) lookups else Nil) ++
+      section("a rename swap outside commitSwaps/recoverSwap — stage the " +
+        "tmp table and call commitSwaps:", renames) ++
+      section("a partitioned stage write outside replacePartitions:", stages)
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

@@ -1005,4 +1005,95 @@ class TablesSpec extends SparkSpec {
       assert(rows(spark.table("t_orphb")) == Seq(Seq(2L, "b")))
     } finally names.foreach(Tables.dropTable(spark, _))
   }
+
+  test("an orphan directory at the partitioned stage location (dead " +
+      "former process) is cleared: partitioned upsert, delete and " +
+      "compaction succeed, not LOCATION_ALREADY_EXISTS") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    def plantOrphan(table: String): Path = {
+      val loc = new Path(
+        spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new Path(loc, "part-orphan"))
+      loc
+    }
+    val t = "t_orphp"
+    val stage = s"${t}__part_stage"
+    Seq(t, stage).foreach(Tables.dropTable(spark, _))
+    try {
+      Tables.loadPartitioned(
+        Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
+          .toDF("id", "v", "day"), t, "day")
+      plantOrphan(stage)
+      assert(Tables.upsertIntoTable(spark,
+        Seq((2L, "B", "d1"), (4L, "d", "d3")).toDF("id", "v", "day"), t,
+        "id") == 4L)
+      assert(rows(spark.table(t).orderBy("id")) == Seq(
+        Seq(1L, "a", "d1"), Seq(2L, "B", "d1"), Seq(3L, "c", "d2"),
+        Seq(4L, "d", "d3")))
+      plantOrphan(stage)
+      assert(Tables.deleteKeys(spark, Seq(3L).toDF("id"), t, "id") == 3L)
+      assert(rows(spark.table(t).orderBy("id")) == Seq(
+        Seq(1L, "a", "d1"), Seq(2L, "B", "d1"), Seq(4L, "d", "d3")))
+      assert(spark.sql(s"SHOW PARTITIONS `$t`").collect()
+        .map(_.getString(0)).toSeq.sorted == Seq("day=d1", "day=d3"))
+      plantOrphan(stage)
+      val (_, after) = Tables.compactTable(spark, t, targetFiles = 1)
+      assert(after == 2) // one file in each of the two partitions
+      assert(rows(spark.table(t).orderBy("id")) == Seq(
+        Seq(1L, "a", "d1"), Seq(2L, "B", "d1"), Seq(4L, "d", "d3")))
+      assert(!spark.catalog.tableExists(stage))
+    } finally Seq(t, stage).foreach(Tables.dropTable(spark, _))
+  }
+
+  test("upsertIntoTable / deleteKeys on a two-column partitioned main " +
+      "rewrite only the touched tuple — every other tuple's files " +
+      "identical") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.hadoop.fs.Path
+    val t = "t_prune2"
+    Tables.dropTable(spark, t)
+    // five (p1, p2) tuples, two with the null (Hive default) p1
+    Seq((1L, "a", Some("p"), "x"), (2L, "b", Some("p"), "x"),
+        (3L, "c", Some("p"), "y"), (4L, "d", Some("q"), "x"),
+        (5L, "e", None: Option[String], "x"), (6L, "f", None, "y"))
+      .toDF("id", "v", "p1", "p2")
+      .write.format("parquet").partitionBy("p1", "p2").saveAsTable(t)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def census(dirs: Seq[String]): Seq[(String, Long, Long)] =
+      spark.table(t).inputFiles.toSeq
+        .filter(f => dirs.exists(d => f.contains(s"/$d/")))
+        .sorted.map { f =>
+          val st = new Path(f).getFileSystem(conf).getFileStatus(new Path(f))
+          (f, st.getModificationTime, st.getLen)
+        }
+    val nullP1 = "p1=__HIVE_DEFAULT_PARTITION__"
+    // upsert: update key 1 in (p, x) — only that tuple is rewritten
+    val others1 = Seq("p1=p/p2=y", "p1=q/p2=x", s"$nullP1/p2=x",
+      s"$nullP1/p2=y")
+    val before1 = census(others1)
+    assert(before1.size == 4)
+    Thread.sleep(1100) // mtime granularity can be 1 s on some filesystems
+    assert(Tables.upsertIntoTable(spark,
+      Seq((1L, "A", "p", "x")).toDF("id", "v", "p1", "p2"), t, "id") == 6L)
+    assert(census(others1) == before1,
+      "a two-column upsert must not rewrite tuples its keys never touch")
+    // delete: erase key 5, the only row of (null, x) — that tuple drops,
+    // every other tuple keeps its files
+    val others2 = Seq("p1=p/p2=x", "p1=p/p2=y", "p1=q/p2=x",
+      s"$nullP1/p2=y")
+    val before2 = census(others2)
+    Thread.sleep(1100)
+    assert(Tables.deleteKeys(spark, Seq(5L).toDF("id"), t, "id") == 5L)
+    assert(census(others2) == before2,
+      "a two-column delete must not rewrite tuples holding none of the keys")
+    assert(spark.table(t)
+      .filter(col("p1").isNull && col("p2") === "x").isEmpty)
+    assert(rows(spark.table(t).orderBy("id").select("id", "v", "p1", "p2")) ==
+      Seq(Seq(1L, "A", "p", "x"), Seq(2L, "b", "p", "x"),
+        Seq(3L, "c", "p", "y"), Seq(4L, "d", "q", "x"),
+        Seq(6L, "f", null, "y")))
+    Tables.dropTable(spark, t)
+  }
 }
