@@ -65,7 +65,8 @@ def copy_working_tree(dest):
 # The per-layer metrics --trace-seed prints, in this order.
 TRACE_METRICS = ("spark.jobs", "stream.rows_per_batch",
                  "spark.shuffle_write_bytes", "stream.upsert_batch_ms",
-                 "tables.commands", "tables.rows_written")
+                 "stream.fold_batch_ms", "stream.wal_commit_ms",
+                 "tables.commands", "tables.rows_written", "tables.write_s")
 
 
 def run_side(root, workload, seed, seconds, trace=False):

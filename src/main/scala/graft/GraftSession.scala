@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * The one place the engine's LOAD-BEARING session config lives. Every
  * entry point (CLI, Verify, Bench, tests, user code) must carry the
- * same four settings or parts of the library silently or loudly break:
+ * same five settings or parts of the library silently or loudly break:
  *
  *  - `spark.sql.extensions = graft.plans.GraftExtensions` — registers
  *    the native expressions (`graft_poly_hash`, `graft_dot`,
@@ -19,7 +19,17 @@ import org.apache.spark.sql.SparkSession
  *    every timestamp oracle are defined in UTC; a local-TZ session
  *    shifts parsed timestamps and breaks hash parity;
  *  - ANSI stays at the Spark 4 default (ON) — the library's arithmetic
- *    is written for it (`try_cast`, guarded divisions).
+ *    is written for it (`try_cast`, guarded divisions);
+ *  - the `file:` filesystem is `graft.io.ForkFreeLocalFileSystem`
+ *    (`FileSystem` API) and `graft.io.ForkFreeLocalFs` (`FileContext`
+ *    API, streaming checkpoints) — without `libhadoop` the stock classes
+ *    fork `chmod` for every file and directory they create and
+ *    `readlink` for every checkpoint rename, a few milliseconds each
+ *    and dozens per table write or micro-batch. Outputs are unchanged.
+ *    Hadoop's `FileSystem` cache is JVM-wide and keyed without the
+ *    config: a `file:` instance fetched before this session exists (say
+ *    `FileSystem.get` over a bare `new Configuration()`) stays the stock
+ *    class for the life of the JVM, so build the session first.
  *
  * Use [[builder]] to start from these and layer app-specific config on
  * top, or [[local]] for the common local-run shape where
@@ -37,6 +47,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** The standard local-run session: `local[cpus]` with shuffle
    * partitions sized to the core count and the UI off. */

@@ -33,6 +33,14 @@ import org.scalatest.funsuite.AnyFunSuite
  * directory first) and one rename sequence (`commitSwaps`, plus the
  * crash repair `recoverSwap`). A hand-copied replace drifts: the four
  * stage copies this law replaced had lost the orphan-directory clear.
+ *
+ * Law 4: **every session is built by `GraftSession`**. The load-bearing
+ * session config (extensions, UTC, nanosAsLong, the fork-free `file:`
+ * filesystem) is set in `GraftSession.builder()` and nowhere else, so an
+ * entry point that calls `SparkSession.builder()` itself silently runs
+ * without it — without the filesystem, for one, every file it creates
+ * forks a `chmod`. Code outside `GraftSession.scala` starts from
+ * `GraftSession.builder()` or `GraftSession.local`.
  */
 class RepoLawsSpec extends AnyFunSuite {
 
@@ -130,5 +138,20 @@ class RepoLawsSpec extends AnyFunSuite {
         "tmp table and call commitSwaps:", renames) ++
       section("a partitioned stage write outside replacePartitions:", stages)
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("every session is built by GraftSession") {
+    val comment = "^\\s*(//|/?\\*)".r
+    val offenders = for {
+      p <- mainSources
+      if p.getFileName.toString != "GraftSession.scala"
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("SparkSession.builder()") &&
+        comment.findPrefixOf(line).isEmpty
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "a session built without GraftSession misses its load-bearing config " +
+        "(see RepoLawsSpec scaladoc); start from GraftSession.builder():\n" +
+        offenders.mkString("\n"))
   }
 }

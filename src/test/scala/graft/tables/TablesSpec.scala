@@ -254,9 +254,9 @@ class TablesSpec extends SparkSpec {
   }
 
   /** A main partitioned by (p1, p2) with key 1 in the p1 = null (Hive
-   * default) partition: the multi-column layout takes the full
-   * replaceWith rewrite, whose vacated-partition drop must address the
-   * null partition, not a literal 'null' value. */
+   * default) partition: the two-column touched tuples go through the
+   * same partitioned replace as one column, whose vacated-partition
+   * drop must address the null partition, not a literal 'null' value. */
   private def twoColumnMain(t: String): Unit = {
     Tables.dropTable(spark, t)
     Seq((1L, "a", None: Option[String], "x"), (2L, "b", Some("p"), "y"))
@@ -630,7 +630,7 @@ class TablesSpec extends SparkSpec {
     val (t0, t1, t2, t3) =
       (ts("2030-01-01T00:00:00Z"), ts("2030-01-02T00:00:00Z"),
         ts("2030-01-03T00:00:00Z"), ts("2030-01-04T00:00:00Z"))
-    Seq("t_scdp", "t_scdp__scd2_stage", "t_scdu", "t_scdu__swap_tmp",
+    Seq("t_scdp", "t_scdp__part_stage", "t_scdu", "t_scdu__swap_tmp",
       "t_scdu__swap_backup").foreach(Tables.dropTable(spark, _))
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     Tables.loadScd2(base, "t_scdp", t0, partitioned = true)
@@ -691,7 +691,7 @@ class TablesSpec extends SparkSpec {
       !snapFiles.exists(f => closedDates.exists(d =>
         f.contains(s"valid_to_date=$d"))),
       "snapshot after all closures must prune closed-history partitions")
-    Seq("t_scdp", "t_scdp__scd2_stage", "t_scdu", "t_scdu__swap_tmp",
+    Seq("t_scdp", "t_scdp__part_stage", "t_scdu", "t_scdu__swap_tmp",
       "t_scdu__swap_backup").foreach(Tables.dropTable(spark, _))
   }
 
@@ -769,7 +769,7 @@ class TablesSpec extends SparkSpec {
   test("scd2Lookup validity-horizon hint: identical output, and closed " +
       "history behind the horizon prunes at the partition listing") {
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    Seq("t_scdh", "t_scdh__scd2_stage").foreach(Tables.dropTable(spark, _))
+    Seq("t_scdh", "t_scdh__part_stage").foreach(Tables.dropTable(spark, _))
     Tables.loadScd2(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "t_scdh",
       ts("2030-01-01T00:00:00Z"), partitioned = true)
     Tables.upsertScd2(spark, Seq((1L, "a2")).toDF("id", "v"), "t_scdh",
@@ -796,14 +796,14 @@ class TablesSpec extends SparkSpec {
     assert(!files.exists(_.contains("valid_to_date=2030-01-02")),
       "history behind the horizon must prune at the directory listing")
     assert(files.exists(_.contains("valid_to_date=2030-01-04")))
-    Seq("t_scdh", "t_scdh__scd2_stage").foreach(Tables.dropTable(spark, _))
+    Seq("t_scdh", "t_scdh__part_stage").foreach(Tables.dropTable(spark, _))
   }
 
   test("upsertIntoTable / deleteKeys on a partitioned main rewrite only " +
       "the touched partitions — untouched partition files identical") {
     import org.apache.spark.sql.functions.col
     import org.apache.hadoop.fs.Path
-    Seq("t_prune", "t_prune__prune_stage", "t_prune__upsert_stage")
+    Seq("t_prune", "t_prune__part_stage")
       .foreach(Tables.dropTable(spark, _))
     // four date partitions, two keys each
     val rowsIn = for (d <- 1 to 4; i <- 0 to 1)
@@ -860,7 +860,7 @@ class TablesSpec extends SparkSpec {
     // deleting keys that exist nowhere is a no-op (empty touched set)
     assert(Tables.deleteKeys(spark, Seq(999L).toDF("id"), "t_prune",
       "id") == 4L)
-    Seq("t_prune", "t_prune__prune_stage", "t_prune__upsert_stage")
+    Seq("t_prune", "t_prune__part_stage")
       .foreach(Tables.dropTable(spark, _))
   }
 
@@ -868,7 +868,7 @@ class TablesSpec extends SparkSpec {
       "staging partitions; the contract violation is the documented one") {
     import org.apache.spark.sql.functions.col
     import org.apache.hadoop.fs.Path
-    Seq("t_stab", "t_stab__prune_stage")
+    Seq("t_stab", "t_stab__part_stage")
       .foreach(Tables.dropTable(spark, _))
     val rowsIn = for (d <- 1 to 3; i <- 0 to 1)
       yield (d * 10L + i, s"v$d$i", s"2030-01-0$d")
@@ -901,7 +901,7 @@ class TablesSpec extends SparkSpec {
       Seq((10L, "MOVED", "2030-01-02")).toDF("id", "v", "day"),
       "t_stab", "id", stablePartitions = true)
     assert(spark.table("t_stab").filter(col("id") === 10L).count() == 2L)
-    Seq("t_stab", "t_stab__prune_stage")
+    Seq("t_stab", "t_stab__part_stage")
       .foreach(Tables.dropTable(spark, _))
   }
 
@@ -910,7 +910,7 @@ class TablesSpec extends SparkSpec {
       "erases a key's full version history pruned") {
     import org.apache.spark.sql.functions.col
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    Seq("t_scdr", "t_scdr__scd2_stage", "t_scdr__prune_stage")
+    Seq("t_scdr", "t_scdr__part_stage")
       .foreach(Tables.dropTable(spark, _))
     Tables.loadScd2(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "t_scdr",
       ts("2030-01-01T00:00:00Z"), partitioned = true)
@@ -951,14 +951,14 @@ class TablesSpec extends SparkSpec {
     assert(rows(spark.table("t_scdr").orderBy("id", "valid_from")
         .select("id", "v")) ==
       Seq(Seq(2L, "b"), Seq(2L, "b2"), Seq(2L, "b3")))
-    Seq("t_scdr", "t_scdr__scd2_stage", "t_scdr__prune_stage")
+    Seq("t_scdr", "t_scdr__part_stage")
       .foreach(Tables.dropTable(spark, _))
   }
 
   test("upsertIntoTable pruned path creates a brand-new partition for " +
       "staging rows whose value the table has never seen") {
     import org.apache.spark.sql.functions.col
-    Seq("t_newp", "t_newp__prune_stage").foreach(Tables.dropTable(spark, _))
+    Seq("t_newp", "t_newp__part_stage").foreach(Tables.dropTable(spark, _))
     Tables.loadPartitioned(
       Seq((1L, "a", "2030-01-01")).toDF("id", "v", "day"), "t_newp", "day")
     assert(Tables.upsertIntoTable(spark,
@@ -969,7 +969,7 @@ class TablesSpec extends SparkSpec {
     assert(spark.sql("SHOW PARTITIONS `t_newp`").collect()
       .map(_.getString(0)).toSet ==
       Set("day=2030-01-01", "day=2030-06-30"))
-    Seq("t_newp", "t_newp__prune_stage").foreach(Tables.dropTable(spark, _))
+    Seq("t_newp", "t_newp__part_stage").foreach(Tables.dropTable(spark, _))
   }
 
   test("orphan managed-table dirs (dead former process, no catalog " +
