@@ -1608,8 +1608,9 @@ object Similarity {
     // was measured against — see [[checkIvfWorkloadShift]]
     if (autoNprobe)
       checkIvfWorkloadShift(queries, baseTable, shiftGuard, idCol, vecCol)
-    ivfProbeRank(bulkCells(spark, baseTable, idCol), queries, cents, k,
-      np, idCol, vecCol, dedupCandidates = false)
+    val cells = spark.table(baseTable + "_cells").select(cellCols(idCol): _*)
+    ivfProbeRank(cells, queries, cents, k, np, idCol, vecCol,
+      dedupCandidates = false)
   }
 
   /**
@@ -1636,12 +1637,10 @@ object Similarity {
       .map(_.getSeq[Double](1).toSeq).toSeq
   }
 
-  /** The bulk `_cells` table in the probe join's column shape. */
-  private def bulkCells(spark: org.apache.spark.sql.SparkSession,
-                        baseTable: String, idCol: String): DataFrame =
-    spark.table(baseTable + "_cells")
-      .select(col(idCol).as("neighbor_id"), col("vec").as("vc"),
-        col("nrm").as("nc"), col("cell"))
+  /** The `_cells` columns in the probe join's shape. */
+  private def cellCols(idCol: String): Seq[Column] =
+    Seq(col(idCol).as("neighbor_id"), col("vec").as("vc"),
+      col("nrm").as("nc"), col("cell"))
 
   /** Shared probe-and-rank tail of the persisted-index searches: the
    * (small) query set broadcasts with its probe cells exploded, joins the
@@ -1709,16 +1708,18 @@ object Similarity {
    * [[ivfTopKAgainstIndex]] over the TIERED corpus: the bucketed bulk
    * `_cells` table plus the `batch=<id>` delta tree a
    * [[graft.streaming.Streams.ivfIngestSink]] appends — the ANN twin
-   * of the dedup `tieredPairs`. The bulk side still reads at its
-   * bucketing under the broadcast probe join (a union leg keeps its own
-   * scan); the delta side is micro-batch-scale until the next
+   * of the dedup `tieredPairs`, read by [[graft.streaming.Streams
+   * .tieredCorpus]]. The bulk side still reads at its bucketing under
+   * the broadcast probe join (a union leg keeps its own scan); the delta
+   * side is micro-batch-scale until the next
    * [[graft.streaming.Streams.compactIvfDelta]] fold. Candidates dedup
-   * on (query, neighbor) before ranking, so a vector present in BOTH
-   * tiers (the fold's crash window) cannot double-rank.
+   * on (query, neighbor) by the tiers' precedence before ranking, so a
+   * vector present in BOTH tiers (the fold's crash window) cannot
+   * double-rank.
    *
    * Concurrency: safe alongside the RUNNING sink (an in-flight batch
-   * write is invisible until committed — see the committed-file check
-   * below), but quiesce tiered QUERIES during [[graft.streaming
+   * write is invisible until committed), but quiesce tiered QUERIES
+   * during [[graft.streaming
    * .Streams.compactIvfDelta]] and during a replayed batch's rewrite:
    * both delete files a concurrently planned query may have already
    * listed (FileNotFoundException at action time) — the same
@@ -1742,36 +1743,10 @@ object Similarity {
           s"autoNprobe requested but index '$baseTable' carries no " +
             "calibration — rebuild with writeIvfIndex(targetRecall = " +
             "Some(...)) or pass an explicit nprobe"))
-    val bulk = bulkCells(spark, baseTable, idCol)
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a batch= dir can exist with only an in-flight _temporary inside
-    // (mid-first-write, or a crash there): require a COMMITTED data
-    // file, and read with the bulk table's schema so an
-    // uncommitted-only tree yields empty rows, never a
-    // schema-inference error — the tiered path must keep serving
-    // DURING ingest
-    val hasDelta = fs.exists(p) && fs.listStatus(p)
-      .filter(_.getPath.getName.startsWith("batch="))
-      .exists(d => fs.listStatus(d.getPath).exists { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
-    // precedence tags mirror compactIvfDelta's fold ordering: bulk = -1,
-    // delta = its batch id, so when an id sits in both tiers (the fold
-    // crash window) or in two delta batches (updated twice between
-    // folds) the query ranks against exactly the row the next fold
-    // keeps — the newest assignment — not a plan-dependent survivor
-    val corpus =
-      if (!hasDelta) bulk
-      else bulk.withColumn("__prec", lit(-1L)).union(
-        spark.read.schema(spark.table(baseTable + "_cells").schema)
-          .option("basePath", deltaPath).parquet(deltaPath)
-          .select(col(idCol).as("neighbor_id"), col("vec").as("vc"),
-            col("nrm").as("nc"), col("cell"),
-            col("batch").cast("long").as("__prec")))
+    val (corpus, tiered) = graft.streaming.Streams.tieredCorpus(spark,
+      baseTable + "_cells", deltaPath, cellCols(idCol))
     ivfProbeRank(corpus, queries, cents, k, np, idCol, vecCol,
-      dedupCandidates = hasDelta)
+      dedupCandidates = tiered)
   }
 
   /**
@@ -2101,7 +2076,7 @@ object Similarity {
    * Periodic retrain/rebuild of a persisted [[writePqIndex]] index that
    * has grown through a [[graft.streaming.Streams.pqIngestSink]] delta
    * tree — [[retrainIvfIndex]]'s generation protocol adapted to the PQ
-   * family's LOSSY codes (round 19):
+   * family's LOSSY codes:
    *
    *   1. fold the outstanding delta
    *      ([[graft.streaming.Streams.compactPqDelta]]) so the bulk codes
@@ -2123,7 +2098,7 @@ object Similarity {
    * DROP them from the index (the exact silent-loss class the
    * generation protocol exists to prevent).
    *
-   * CALIBRATION survives the retrain (round 20): like the `kind='res'`
+   * CALIBRATION survives the retrain: like the `kind='res'`
    * stamp, the calibration CONTRACT (target + z + sample spec, the
    * `cal_spec`/`cal_ref_spec` meta rows a calibrated [[writePqIndex]]
    * persists) is read back and RE-MEASURED against the rebuilt
@@ -2415,11 +2390,9 @@ object Similarity {
   /**
    * [[ivfPqTopKIndexed]] over the TIERED corpus: the bucketed bulk
    * `_pqcodes` table plus the `batch=<id>` delta tree a
-   * [[graft.streaming.Streams.pqIngestSink]] appends — the PQ twin of
-   * [[ivfTopKTiered]], same committed-file visibility rule, same
-   * precedence contract (bulk = -1, delta = batch id; a vector in both
-   * tiers or two batches ranks as the row the next fold keeps), same
-   * run-quiesced compaction caveat.
+   * [[graft.streaming.Streams.pqIngestSink]] appends, read by
+   * [[graft.streaming.Streams.tieredCorpus]] under [[ivfTopKTiered]]'s
+   * concurrency contract.
    */
   def ivfPqTopKTiered(queries: DataFrame, baseTable: String,
                       deltaPath: String, k: Int = 10, nprobe: Int = 4,
@@ -2439,25 +2412,11 @@ object Similarity {
     val res = pqIsResidual(spark, baseTable)
     val codeCols = (0 until m).map(j => col(s"__code$j")) ++
       (if (res) Seq(col("__corr")) else Nil)
-    val bulk = spark.table(baseTable + "_pqcodes")
-      .select(col(idCol).as("neighbor_id") +: col("cell") +: codeCols: _*)
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasDelta = fs.exists(p) && fs.listStatus(p)
-      .filter(_.getPath.getName.startsWith("batch="))
-      .exists(d => fs.listStatus(d.getPath).exists { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
-    val corpus =
-      if (!hasDelta) bulk
-      else bulk.withColumn("__prec", lit(-1L)).union(
-        spark.read.schema(spark.table(baseTable + "_pqcodes").schema)
-          .option("basePath", deltaPath).parquet(deltaPath)
-          .select(col(idCol).as("neighbor_id") +: col("cell") +:
-            codeCols :+ col("batch").cast("long").as("__prec"): _*))
+    val (corpus, tiered) = graft.streaming.Streams.tieredCorpus(spark,
+      baseTable + "_pqcodes", deltaPath,
+      col(idCol).as("neighbor_id") +: col("cell") +: codeCols)
     ivfPqAdcRank(corpus, queries, cents, books, k, np, dim / m,
-      idCol, vecCol, dedupCandidates = hasDelta, residual = res)
+      idCol, vecCol, dedupCandidates = tiered, residual = res)
   }
 
   /**

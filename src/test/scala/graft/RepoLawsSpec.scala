@@ -24,8 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * `batch=<id>` dirs, and refuse ids at or below the `_compacted_through`
  * marker. A sink that re-types that skeleton by hand can drop the guard,
  * and then a replayed folded batch double-counts a summing tree. So the
- * guard comparison may appear once in `src/main`, and `Streams.scala`
- * may parse `batch=<id>` dir names only inside `batchIds`.
+ * guard comparison may appear once in `src/main`, and `batch=<id>` dir
+ * names are parsed only inside `Streams.batchIds`, in all of `src/main`.
  *
  * Law 3: **a managed table is replaced in one place**. `Tables` owns
  * one partition-column lookup (`partitionColumns`), one partitioned
@@ -41,6 +41,17 @@ import org.scalatest.funsuite.AnyFunSuite
  * without it — without the filesystem, for one, every file it creates
  * forks a `chmod`. Code outside `GraftSession.scala` starts from
  * `GraftSession.builder()` or `GraftSession.local`.
+ *
+ * Law 5: **a streaming index's delta tier is kept in one place**. Every
+ * streaming index lands `batch=<id>` deltas beside a bucketed bulk and
+ * folds them newest-first, the reference MERGE's newest-row-wins rule.
+ * The steps of that protocol live in private helpers of `Streams`: the
+ * `_routing_gen.` generation guard (`requireDeltaGeneration`), the
+ * newest-batch precedence fold (`foldDelta`), the `__fold_tmp` stage
+ * (`foldBulkTier`), the bulk-tier join (`withBulkTier`) and the MinHash
+ * landing (`minhashBatchPairs`). Each may appear at most once in
+ * `src/main`: a second copy is a twin that drifts (the IVF and PQ copies
+ * of the guard had already grown different refusal texts).
  */
 class RepoLawsSpec extends AnyFunSuite {
 
@@ -89,17 +100,12 @@ class RepoLawsSpec extends AnyFunSuite {
       "the compactedThrough replay guard is copied — route the sink " +
         "through Streams.foldSink or Streams.isNewBatch:\n" +
         guards.mkString("\n"))
-    val streams = Paths.get("src/main/scala/graft/streaming/Streams.scala")
-    val lines = Files.readAllLines(streams).asScala.toIndexedSeq
-    val defAt = lines.indexWhere(_.contains("def batchIds("))
-    assert(defAt >= 0, s"$streams: the batchIds reader is gone")
-    // the definition runs to the first blank line after its signature
-    val defEnd = Some(lines.indexWhere(_.trim.isEmpty, defAt))
-      .filter(_ >= 0).getOrElse(lines.size)
     val parsers = for {
-      (line, i) <- lines.zipWithIndex
-      if line.contains("startsWith(\"batch=\")") && (i < defAt || i > defEnd)
-    } yield s"$streams:${i + 1}: ${line.trim}"
+      p <- mainSources
+      (line, n, owner) <- linesByDef(p)
+      if line.contains("startsWith(\"batch=\")") &&
+        !(p.getFileName.toString == "Streams.scala" && owner == "batchIds")
+    } yield s"$p:$n: ${line.trim}"
     assert(parsers.isEmpty,
       "batch=<id> dir names parsed outside Streams.batchIds:\n" +
         parsers.mkString("\n"))
@@ -138,6 +144,33 @@ class RepoLawsSpec extends AnyFunSuite {
         "tmp table and call commitSwaps:", renames) ++
       section("a partitioned stage write outside replacePartitions:", stages)
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("a streaming index's delta tier is kept in one place") {
+    val comment = "^\\s*(//|/?\\*)".r
+    // (step, its helper in Streams, a line that writes the step)
+    val steps: Seq[(String, String, String => Boolean)] = Seq(
+      ("the _routing_gen. guard match", "requireDeltaGeneration",
+        l => l.contains("readRoutingGenMarker(") && l.contains(" match")),
+      ("the newest-batch precedence fold", "foldDelta",
+        _.contains("col(\"__batch\").desc")),
+      ("the __fold_tmp stage", "foldBulkTier", _.contains("__fold_tmp")),
+      ("the requireBulkPair( tier join", "withBulkTier",
+        l => l.contains("requireBulkPair(") &&
+          !l.contains("def requireBulkPair(")),
+      ("the MinHash landing", "minhashBatchPairs",
+        _.contains("Dedup.minhashBandRows(newSigs")))
+    val code = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if comment.findPrefixOf(line).isEmpty
+    } yield (s"$p:${i + 1}: ${line.trim}", line)
+    val copied = steps.flatMap { case (step, helper, hit) =>
+      val at = code.collect { case (where, line) if hit(line) => where }
+      if (at.size <= 1) Nil
+      else s"$step is written ${at.size} times — call Streams.$helper:" +: at
+    }
+    assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
   }
 
   test("every session is built by GraftSession") {

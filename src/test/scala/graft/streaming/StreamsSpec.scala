@@ -14,6 +14,24 @@ class StreamsSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** Dirs made by [[tempDir]] during the running test. */
+  private val testDirs = scala.collection.mutable.Buffer.empty[String]
+
+  /** A fresh temp dir, deleted when the running test ends, pass or fail. */
+  private def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    testDirs += d
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      testDirs.foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+      testDirs.clear()
+    }
+
   test("windowedCounts: tumbling windows close after the watermark passes") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String)]
@@ -607,8 +625,8 @@ class StreamsSpec extends SparkSpec {
       Seq("_cells", "_centroids").foreach(sfx =>
         Tables.dropTable(spark, b + sfx)))
     Similarity.writeIvfIndex(initial, "ivfstream", nlist = 16, numBuckets = 4)
-    val delta = Files.createTempDirectory("ivfdelta").toString
-    val cp = Files.createTempDirectory("ivfcp").toString
+    val delta = tempDir("ivfdelta")
+    val cp = tempDir("ivfcp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ivfIngestSink(mem.toDF().toDF("vec_id", "embedding"),
       "ivfstream", delta, cp)
@@ -710,8 +728,8 @@ class StreamsSpec extends SparkSpec {
         Tables.dropTable(spark, b + sfx)))
     Similarity.writeIvfIndex(initial, "ivfgen", nlist = 16, numBuckets = 4)
     assert(Similarity.ivfGeneration(spark, "ivfgen") == 0L)
-    val delta = Files.createTempDirectory("ivfgendelta").toString
-    val cp = Files.createTempDirectory("ivfgencp").toString
+    val delta = tempDir("ivfgendelta")
+    val cp = tempDir("ivfgencp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val laterRows = later.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -737,7 +755,7 @@ class StreamsSpec extends SparkSpec {
         .orderBy("query_id", "rank")) == want)
     // STALE SINK: a rebuild under a running sink must fail its next
     // batch loudly (the assignments would point into dead centroids)
-    val cp2 = Files.createTempDirectory("ivfgencp2").toString
+    val cp2 = tempDir("ivfgencp2")
     val mem2 = MemoryStream[(Long, Seq[Float])]
     val q2 = Streams.ivfIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
       "ivfgen", delta, cp2)
@@ -758,7 +776,6 @@ class StreamsSpec extends SparkSpec {
       Streams.compactIvfDelta(spark, delta, "ivfgen", numBuckets = 4)
     }
     assert(ex2.getMessage.contains("dead centroids"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("ivfgen", "ivfgenfull").foreach(b =>
       Seq("_cells", "_centroids").foreach(sfx =>
         Tables.dropTable(spark, b + sfx)))
@@ -785,8 +802,8 @@ class StreamsSpec extends SparkSpec {
       kcent = 16, dim = 64, numBuckets = 4)
     assert(Similarity.pqGeneration(spark, "pqgen") == 0L)
     assert(Similarity.pqIsResidual(spark, "pqgen"))
-    val delta = Files.createTempDirectory("pqgendelta").toString
-    val cp = Files.createTempDirectory("pqgencp").toString
+    val delta = tempDir("pqgendelta")
+    val cp = tempDir("pqgencp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val laterRows = later.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -824,7 +841,7 @@ class StreamsSpec extends SparkSpec {
         dim = 64).orderBy("query_id", "rank")) == want)
     // STALE SINK: a retrain under a running sink must fail the sink's
     // next batch loudly (its captured codebooks are a dead generation)
-    val cp2 = Files.createTempDirectory("pqgencp2").toString
+    val cp2 = tempDir("pqgencp2")
     val mem2 = MemoryStream[(Long, Seq[Float])]
     val q2 = Streams.pqIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
       "pqgen", delta, cp2)
@@ -837,7 +854,6 @@ class StreamsSpec extends SparkSpec {
       assert(ex.toString.contains("rebuilt under this sink"),
         s"expected the stale-sink refusal, got: $ex")
     } finally q2.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("pqgen", "pqgenfull").foreach(b =>
       Seq("_pqcodes", "_pqmeta").foreach(sfx =>
         Tables.dropTable(spark, b + sfx)))
@@ -877,8 +893,8 @@ class StreamsSpec extends SparkSpec {
     val pair0 = Similarity.calibratedRefined(spark, "pqcal")
     assert(pair0.nonEmpty)
     // stream 100 more vectors, then retrain WITHOUT restating anything
-    val delta = Files.createTempDirectory("pqcaldelta").toString
-    val cp = Files.createTempDirectory("pqcalcp").toString
+    val delta = tempDir("pqcaldelta")
+    val cp = tempDir("pqcalcp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val laterRows = later.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -926,8 +942,8 @@ class StreamsSpec extends SparkSpec {
     assert(Similarity.ivfCalibrationSpec(spark, "ivfcal")
       .contains(Similarity.CalSpec(0.6, 0.0, 4, 16, 16, None)))
     assert(Similarity.calibratedNprobe(spark, "ivfcal").nonEmpty)
-    val delta2 = Files.createTempDirectory("ivfcaldelta").toString
-    val cp2 = Files.createTempDirectory("ivfcalcp").toString
+    val delta2 = tempDir("ivfcaldelta")
+    val cp2 = tempDir("ivfcalcp")
     val mem2 = MemoryStream[(Long, Seq[Float])]
     val q2 = Streams.ivfIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
       "ivfcal", delta2, cp2)
@@ -943,8 +959,6 @@ class StreamsSpec extends SparkSpec {
       "retrain must re-measure cal_nprobe from the stored target")
     assert(rows(Similarity.ivfTopKAgainstIndex(queries, "ivfcal", k = 4,
       autoNprobe = true).orderBy("query_id", "rank")).nonEmpty)
-    Seq(delta, delta2).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     Seq("_pqcodes", "_pqmeta").foreach(s =>
       Tables.dropTable(spark, "pqcal" + s))
     Seq("_cells", "_centroids").foreach { s =>
@@ -964,14 +978,13 @@ class StreamsSpec extends SparkSpec {
       nlist = 16, numBuckets = 4)
     // an orphan tree: batch dirs present, no _routing_gen marker (the
     // partially-cleaned state a dead sink can leave behind)
-    val delta = Files.createTempDirectory("ivforphdelta").toString
+    val delta = tempDir("ivforphdelta")
     spark.table("ivforph_cells").limit(2)
       .write.mode("overwrite").parquet(s"$delta/batch=0")
     val ex = intercept[IllegalStateException] {
       Streams.compactIvfDelta(spark, delta, "ivforph", numBuckets = 4)
     }
     assert(ex.getMessage.contains("no routing-generation marker"), ex)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("_cells", "_centroids").foreach(sfx =>
       Tables.dropTable(spark, "ivforph" + sfx))
     // PQ twin
@@ -980,14 +993,13 @@ class StreamsSpec extends SparkSpec {
     Similarity.writePqIndex(emb.filter(col("vec_id") < 100), "pqorph",
       nlist = 16, m = 4, kcent = 16, dim = 64, numBuckets = 4,
       residual = false)
-    val delta2 = Files.createTempDirectory("pqorphdelta").toString
+    val delta2 = tempDir("pqorphdelta")
     spark.table("pqorph_pqcodes").limit(2)
       .write.mode("overwrite").parquet(s"$delta2/batch=0")
     val ex2 = intercept[IllegalStateException] {
       Streams.compactPqDelta(spark, delta2, "pqorph", numBuckets = 4)
     }
     assert(ex2.getMessage.contains("no routing-generation marker"), ex2)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta2))
     Seq("_pqcodes", "_pqmeta").foreach(sfx =>
       Tables.dropTable(spark, "pqorph" + sfx))
   }
@@ -1002,8 +1014,8 @@ class StreamsSpec extends SparkSpec {
       Tables.dropTable(spark, "ivfstale" + sfx))
     Similarity.writeIvfIndex(emb.filter(col("vec_id") < 100), "ivfstale",
       nlist = 16, numBuckets = 4)
-    val delta = Files.createTempDirectory("ivfstaledelta").toString
-    val cp = Files.createTempDirectory("ivfstalecp").toString
+    val delta = tempDir("ivfstaledelta")
+    val cp = tempDir("ivfstalecp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val someRows = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -1021,7 +1033,7 @@ class StreamsSpec extends SparkSpec {
     // a restarted sink must NOT stamp gen 1 over the gen-0 tree — that
     // would launder the stale assignments past compactIvfDelta's guard
     val mem2 = MemoryStream[(Long, Seq[Float])]
-    val cp2 = Files.createTempDirectory("ivfstalecp2").toString
+    val cp2 = tempDir("ivfstalecp2")
     val ex = intercept[IllegalStateException] {
       Streams.ivfIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
         "ivfstale", delta, cp2)
@@ -1032,7 +1044,6 @@ class StreamsSpec extends SparkSpec {
       Streams.compactIvfDelta(spark, delta, "ivfstale", numBuckets = 4)
     }
     assert(ex2.getMessage.contains("dead centroids"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("_cells", "_centroids").foreach(sfx =>
       Tables.dropTable(spark, "ivfstale" + sfx))
   }
@@ -2051,35 +2062,44 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val emb = graft.sources.Fixtures.table(spark, "/root/testdata/sf0.001",
       "embeddings").select("vec_id", "embedding")
-    Seq("_cells", "_centroids").foreach(sfx =>
-      Tables.dropTable(spark, "ivforphan" + sfx))
-    Similarity.writeIvfIndex(emb.filter(col("vec_id") < 100), "ivforphan",
-      nlist = 16, numBuckets = 4)
-    val delta = Files.createTempDirectory("ivforphandelta").toString
-    val cp = Files.createTempDirectory("ivforphancp").toString
-    val mem = MemoryStream[(Long, Seq[Float])]
     val someRows = emb.filter(col("vec_id") >= 100 && col("vec_id") < 105)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val q = Streams.ivfIngestSink(mem.toDF().toDF("vec_id", "embedding"),
-      "ivforphan", delta, cp)
-    try { mem.addData(someRows: _*); q.processAllAvailable() }
-    finally q.stop()
-    // delete the marker, leaving the unfolded batch dirs orphaned
-    new java.io.File(delta).listFiles()
-      .filter(_.getName.startsWith("_routing_gen."))
-      .foreach(f => assert(f.delete()))
-    assert(new java.io.File(delta).listFiles()
-      .exists(_.getName.startsWith("batch=")))
-    val mem2 = MemoryStream[(Long, Seq[Float])]
-    val cp2 = Files.createTempDirectory("ivforphancp2").toString
-    val ex = intercept[IllegalStateException] {
-      Streams.ivfIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
-        "ivforphan", delta, cp2)
+    // the same steps for each ANN family: stream a batch, delete the
+    // marker, and restart the sink over the orphaned batch dirs
+    def orphanRefused(base: String, tables: Seq[String])(build: => Unit)
+                     (sink: (org.apache.spark.sql.DataFrame, String, String) =>
+                       org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      tables.foreach(sfx => Tables.dropTable(spark, base + sfx))
+      build
+      val delta = tempDir(base + "delta")
+      val cp = tempDir(base + "cp")
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = sink(mem.toDF().toDF("vec_id", "embedding"), delta, cp)
+      try { mem.addData(someRows: _*); q.processAllAvailable() }
+      finally q.stop()
+      // delete the marker, leaving the unfolded batch dirs orphaned
+      new java.io.File(delta).listFiles()
+        .filter(_.getName.startsWith("_routing_gen."))
+        .foreach(f => assert(f.delete()))
+      assert(new java.io.File(delta).listFiles()
+        .exists(_.getName.startsWith("batch=")))
+      val mem2 = MemoryStream[(Long, Seq[Float])]
+      val cp2 = tempDir(base + "cp2")
+      val ex = intercept[IllegalStateException] {
+        sink(mem2.toDF().toDF("vec_id", "embedding"), delta, cp2)
+      }
+      assert(ex.getMessage.contains("no routing-generation marker"), ex)
+      tables.foreach(sfx => Tables.dropTable(spark, base + sfx))
     }
-    assert(ex.getMessage.contains("no routing-generation marker"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
-    Seq("_cells", "_centroids").foreach(sfx =>
-      Tables.dropTable(spark, "ivforphan" + sfx))
+    orphanRefused("ivforphan", Seq("_cells", "_centroids"))(
+      Similarity.writeIvfIndex(emb.filter(col("vec_id") < 100), "ivforphan",
+        nlist = 16, numBuckets = 4))(
+      Streams.ivfIngestSink(_, "ivforphan", _, _))
+    orphanRefused("pqorphan", Seq("_pqcodes", "_pqmeta"))(
+      Similarity.writePqIndex(emb.filter(col("vec_id") < 100), "pqorphan",
+        nlist = 16, m = 4, kcent = 16, dim = 64, numBuckets = 4,
+        residual = false))(
+      Streams.pqIngestSink(_, "pqorphan", _, _, dim = 64))
   }
 
   test("pqIngestSink generation guards: rebuild-under-sink fails the next " +
@@ -2094,8 +2114,8 @@ class StreamsSpec extends SparkSpec {
     Similarity.writePqIndex(emb.filter(col("vec_id") < 100), "pqstale",
       nlist = 16, m = 4, kcent = 16, dim = 64, numBuckets = 4,
       residual = false)
-    val delta = Files.createTempDirectory("pqstaledelta").toString
-    val cp = Files.createTempDirectory("pqstalecp").toString
+    val delta = tempDir("pqstaledelta")
+    val cp = tempDir("pqstalecp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val someRows = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -2111,7 +2131,7 @@ class StreamsSpec extends SparkSpec {
       residual = false)
     assert(Similarity.pqGeneration(spark, "pqstale") == 1L)
     val mem2 = MemoryStream[(Long, Seq[Float])]
-    val cp2 = Files.createTempDirectory("pqstalecp2").toString
+    val cp2 = tempDir("pqstalecp2")
     val ex = intercept[IllegalStateException] {
       Streams.pqIngestSink(mem2.toDF().toDF("vec_id", "embedding"),
         "pqstale", delta, cp2, dim = 64)
@@ -2121,7 +2141,6 @@ class StreamsSpec extends SparkSpec {
       Streams.compactPqDelta(spark, delta, "pqstale", numBuckets = 4)
     }
     assert(ex2.getMessage.contains("dead centroids"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("_pqcodes", "_pqmeta").foreach(sfx =>
       Tables.dropTable(spark, "pqstale" + sfx))
   }
@@ -2138,8 +2157,8 @@ class StreamsSpec extends SparkSpec {
     Similarity.writePqIndex(emb.filter(col("vec_id") < 100), "pqres",
       nlist = 16, m = 4, kcent = 16, dim = 64, numBuckets = 4,
       residual = true)
-    val delta = Files.createTempDirectory("pqresdelta").toString
-    val cp = Files.createTempDirectory("pqrescp").toString
+    val delta = tempDir("pqresdelta")
+    val cp = tempDir("pqrescp")
     val mem = MemoryStream[(Long, Seq[Float])]
     val newRows = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -2159,7 +2178,6 @@ class StreamsSpec extends SparkSpec {
       k = 10, nprobe = 16, dim = 64).orderBy("query_id", "rank"))
     assert(tiered == folded && tiered.nonEmpty,
       "tiered residual query must equal the post-fold indexed query")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(delta))
     Seq("_pqcodes", "_pqmeta").foreach(sfx =>
       Tables.dropTable(spark, "pqres" + sfx))
   }
