@@ -476,21 +476,51 @@ object Dedup {
     shingleSets(docs, idCol, n, textCol, reproducible)
       .select(col(idCol), expr(s"graft_minhash(hs, $numHashes)").as("sig"))
 
-  /** Closed-form band bucket of a signature slice: a polynomial combine of
-   * the `r` components (mod 2^31-1) instead of Murmur3, so the oracle can
-   * recompute bucket membership. Collisions only ADD candidates, which the
-   * estimate verify then filters — identical output semantics. */
-  private def bandBuckets(sigs: DataFrame, bands: Int, r: Int,
-                          idCol: String): DataFrame = {
-    val bandStructs = (0 until bands).map { j =>
-      struct(lit(j).as("band"),
-        expr(s"""aggregate(slice(sig, ${j * r + 1}, $r),
-                |  CAST(0 AS BIGINT),
-                |  (acc, x) -> (acc * 1000003 + x) % 2147483647)""".stripMargin)
-          .as("bucket"))
-    }
-    sigs.select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  /** One signature family of the banded signature index: how a signature
+   * slices into (idCol, band, bucket) rows, when two signatures `sa`/`sb`
+   * match, and the names of the pair columns it emits. The index write
+   * ([[writeBandedSigIndex]]), the against-index probe
+   * ([[pairsAgainstIndex]]) and the delta pair step ([[pairsAgainstDelta]])
+   * are written once over it, for MinHash ([[minhashFamily]]) and
+   * hyperplane ([[hyperplaneFamily]]) signatures alike. */
+  private[graft] final case class SigFamily(idCol: String,
+                                            bandRows: DataFrame => DataFrame,
+                                            matches: Column,
+                                            pairCols: (String, String)) {
+    /** [[bandRows]] plus the fused `bb` join key of the bucketed index:
+     * band · 2³¹ + bucket. Both families' buckets stay below 2³¹, so the
+     * fusion is collision-free and the pair join runs on ONE 8-byte
+     * bucketable column. */
+    def fusedBandRows(sigs: DataFrame): DataFrame =
+      bandRows(sigs).withColumn("bb", fusedBucket)
+  }
+
+  private def fusedBucket: Column =
+    col("band").cast("long") * lit(1L << 31) + col("bucket")
+
+  /** MinHash signatures ([[minhashSignatures]]): `bands` slices of
+   * `numHashes / bands` components, each bucketed by a closed-form
+   * polynomial combine (mod 2³¹−1) instead of Murmur3, so the oracle can
+   * recompute bucket membership — collisions only ADD candidates, which
+   * the verify filters. A pair matches when the estimated Jaccard, the
+   * share of equal components, reaches `estThreshold`. */
+  private[graft] def minhashFamily(numHashes: Int, bands: Int, idCol: String,
+                                   estThreshold: Double = 0.5): SigFamily = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val r = numHashes / bands
+    val minMatches = math.ceil(estThreshold * numHashes).toInt
+    SigFamily(idCol,
+      _.select(col(idCol), explode(array((0 until bands).map { j =>
+        struct(lit(j).as("band"),
+          expr(s"""aggregate(slice(sig, ${j * r + 1}, $r),
+                  |  CAST(0 AS BIGINT),
+                  |  (acc, x) -> (acc * 1000003 + x) % 2147483647)""".stripMargin)
+            .as("bucket"))
+      }: _*)).as("bb"))
+        .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket")),
+      expr("aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1, 0)), 0, " +
+        s"(acc, v) -> acc + v) >= $minMatches"),
+      ("doc_a", "doc_b"))
   }
 
   /**
@@ -512,11 +542,8 @@ object Dedup {
    * side — join against the banded index, and in the uncapped path that
    * candidate join is the ONLY pass over the index: at a steady corpus
    * this is the difference between O(batch) and O(corpus) work per
-   * ingest. `maxBucketSize` caps skewed buckets exactly like the batch
-   * operators (sized over the full post-batch population, which is what
-   * makes the cap exact and costs the one extra aggregate pass); only the
-   * new side needs the bucket filter — pairs can only form in buckets the
-   * new side still holds, so the index side stays unfiltered.
+   * ingest. `maxBucketSize` caps skewed buckets by their full post-batch
+   * population ([[pairsAgainstDelta]]).
    */
   def incrementalNearDups(newDocs: DataFrame, corpusSigs: DataFrame,
                           estThreshold: Double = 0.5, n: Int = 3,
@@ -538,12 +565,9 @@ object Dedup {
                                   numHashes: Int = 128, bands: Int = 32,
                                   idCol: String = "doc_id",
                                   maxBucketSize: Option[Int] = None): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    incrementalNearDupsPrebanded(
-      newSigs, bandBuckets(newSigs, bands, r, idCol),
-      corpusSigs, bandBuckets(corpusSigs, bands, r, idCol),
-      estThreshold, numHashes, idCol, maxBucketSize)
+    val family = minhashFamily(numHashes, bands, idCol, estThreshold)
+    pairsAgainstDelta(family, newSigs, family.bandRows(newSigs), corpusSigs,
+      family.bandRows(corpusSigs), maxBucketSize)
   }
 
   /** Banded (id, band, bucket) rows for a signature table — the
@@ -553,10 +577,8 @@ object Dedup {
    * O(batch) and O(corpus) banding work per ingest). Must be built with
    * the same `numHashes`/`bands` as the batches that will join it. */
   def minhashBandRows(sigs: DataFrame, numHashes: Int = 128,
-                      bands: Int = 32, idCol: String = "doc_id"): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    bandBuckets(sigs, bands, numHashes / bands, idCol)
-  }
+                      bands: Int = 32, idCol: String = "doc_id"): DataFrame =
+    minhashFamily(numHashes, bands, idCol).bandRows(sigs)
 
   /** [[incrementalNearDupsFromSigs]] with BOTH sides' band rows supplied
    * by the caller (e.g. read back from a persisted band index) — the
@@ -568,59 +590,81 @@ object Dedup {
                                    estThreshold: Double = 0.5,
                                    numHashes: Int = 128,
                                    idCol: String = "doc_id",
-                                   maxBucketSize: Option[Int] = None): DataFrame = {
-    val minMatches = math.ceil(estThreshold * numHashes).toInt
-    val nb = newBands.select(col(idCol), col("band"), col("bucket"))
-    val allBands = corpusBands.select(col(idCol), col("band"), col("bucket"))
-      .union(nb)
+                                   maxBucketSize: Option[Int] = None): DataFrame =
+    // both sides arrive banded, so the family's own slicing (one band
+    // here) is never called
+    pairsAgainstDelta(minhashFamily(numHashes, 1, idCol, estThreshold),
+      newSigs, newBands, corpusSigs, corpusBands, maxBucketSize)
+
+  /**
+   * The delta pair step of the banded signature index: `newSigs` against
+   * `corpusSigs` plus themselves, from both sides' band rows (idCol, band,
+   * bucket). Emits the family's pair columns, least id first, where at
+   * least one side is new: new×corpus plus new×new pairs, never
+   * corpus×corpus (those were found when the corpus itself was ingested).
+   * Corpus and batch ids are disjoint by contract (a batch re-ingesting
+   * corpus ids belongs to upsert, not dedup), so both unions are plain.
+   *
+   * `maxBucketSize` caps skewed buckets like the batch operators, sized
+   * over the FULL post-batch population (what makes the cap exact; it
+   * costs one aggregate pass over all band rows). Only the new side needs
+   * the bucket filter: pairs can only form in buckets the new side still
+   * holds.
+   */
+  private[graft] def pairsAgainstDelta(family: SigFamily, newSigs: DataFrame,
+                                       newBands: DataFrame,
+                                       corpusSigs: DataFrame,
+                                       corpusBands: DataFrame,
+                                       maxBucketSize: Option[Int]): DataFrame = {
+    val id = col(family.idCol)
+    val nb = newBands.select(id, col("band"), col("bucket"))
+    val allBands = corpusBands.select(id, col("band"), col("bucket")).union(nb)
     val newKept = maxBucketSize match {
       case None => nb
       case Some(c) =>
-        // cap sees the bucket's FULL post-batch size
         val kept = allBands.groupBy("band", "bucket")
           .agg(count(lit(1)).as("__bs")).filter(col("__bs") <= c)
           .select("band", "bucket")
         nb.join(kept, Seq("band", "bucket"), "left_semi")
     }
-    val cand = newKept.select(col(idCol).as("a"), col("band"), col("bucket"))
-      .join(allBands.select(col(idCol).as("b"), col("band"), col("bucket")),
+    val cand = newKept.select(id.as("a"), col("band"), col("bucket"))
+      .join(allBands.select(id.as("b"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    // corpus and batch ids are disjoint by contract (a batch re-ingesting
-    // corpus ids would belong to upsert, not dedup) — plain union, no
-    // array-shuffling distinct
-    val allSigs = corpusSigs.select(col(idCol), col("sig"))
-      .union(newSigs.select(col(idCol), col("sig")))
+    val allSigs = corpusSigs.select(id, col("sig"))
+      .union(newSigs.select(id, col("sig")))
+    val (pa, pb) = family.pairCols
     cand
-      .join(allSigs.select(col(idCol).as("a"), col("sig").as("sa")), "a")
-      .join(allSigs.select(col(idCol).as("b"), col("sig").as("sb")), "b")
-      .withColumn("__m", expr(
-        "aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"))
-      .filter(col("__m") >= minMatches)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
+      .join(allSigs.select(id.as("a"), col("sig").as("sa")), "a")
+      .join(allSigs.select(id.as("b"), col("sig").as("sb")), "b")
+      .filter(family.matches)
+      .select(col("a").as(pa), col("b").as(pb))
   }
 
-  /** Fused (band, bucket) join key: band · 2³¹ + bucket. [[bandBuckets]]
-   * buckets are mod 2³¹−1, so the fusion is collision-free and the pair
-   * join can run on ONE 8-byte bucketable column. */
-  private def fusedBucket: Column =
-    col("band").cast("long") * lit(1L << 31) + col("bucket")
+  /** Persist a MinHash signature index through [[writeBandedSigIndex]]. */
+  def writeBandedIndex(sigs: DataFrame, baseTable: String,
+                       numHashes: Int = 128, bands: Int = 32,
+                       numBuckets: Int = 32,
+                       idCol: String = "doc_id"): Unit =
+    writeBandedSigIndex(minhashFamily(numHashes, bands, idCol), sigs,
+      baseTable, numBuckets)
 
   /**
-   * Persist a MinHash signature index as the CO-LOCATED two-table layout a
+   * Persist a signature index as the CO-LOCATED two-table layout a
    * 100 TB incremental dedup wants on disk:
    *   - `<base>_bands`: (idCol, band, bucket, bb) bucketed by `bb` (the
    *     fused band-bucket key) — the candidate-join side;
-   *   - `<base>_sigs`:  (idCol, sig) bucketed by `idCol` — the
-   *     estimate-verify side.
+   *   - `<base>_sigs`:  (idCol, sig) bucketed by `idCol` — the verify
+   *     side.
    * Both are hash-bucketed managed tables, so every future batch joins
-   * against them with NO Exchange on the index side: the batch's band
-   * rows shuffle into the index's bucketing (batch-sized), the index
-   * itself — the 100 TB side — is read in place. Writing costs one
-   * shuffle per table; it is paid once per corpus, not once per batch.
+   * against them with NO Exchange on the index side
+   * ([[pairsAgainstIndex]]): the batch's band rows shuffle into the
+   * index's bucketing (batch-sized), the index itself — the 100 TB side —
+   * is read in place. Writing costs one shuffle per table; it is paid
+   * once per corpus, not once per batch.
    *
    * Rewrites go through the staged swap ([[graft.tables.Tables
    * .stageBucketedSwap]] both tables, then one [[graft.tables.Tables
@@ -629,27 +673,36 @@ object Dedup {
    * metadata renames — recover with [[graft.tables.Tables.recoverSwap]]
    * on both tables, then re-run the fold that called this.
    */
-  def writeBandedIndex(sigs: DataFrame, baseTable: String,
-                       numHashes: Int = 128, bands: Int = 32,
-                       numBuckets: Int = 32,
-                       idCol: String = "doc_id"): Unit = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val banded = bandBuckets(sigs, bands, numHashes / bands, idCol)
-      .withColumn("bb", fusedBucket)
-    graft.tables.Tables.stageBucketedSwap(banded, baseTable + "_bands",
-      "bb", numBuckets)
+  private def writeBandedSigIndex(family: SigFamily, sigs: DataFrame,
+                                  baseTable: String, numBuckets: Int): Unit = {
+    graft.tables.Tables.stageBucketedSwap(family.fusedBandRows(sigs),
+      baseTable + "_bands", "bb", numBuckets)
     graft.tables.Tables.stageBucketedSwap(
-      sigs.select(col(idCol), col("sig")), baseTable + "_sigs", idCol,
-      numBuckets)
+      sigs.select(col(family.idCol), col("sig")), baseTable + "_sigs",
+      family.idCol, numBuckets)
     graft.tables.Tables.commitSwaps(sigs.sparkSession,
       Seq(baseTable + "_bands", baseTable + "_sigs"))
   }
 
+  /** [[incrementalNearDupsFromSigs]] against a PERSISTED
+   * [[writeBandedIndex]] index, through [[pairsAgainstIndex]]: the same
+   * output contract, but the corpus never re-bands and never shuffles.
+   * `includeNewPairs = false` leaves out the new×new pairs (a caller
+   * that finds them elsewhere). */
+  def incrementalNearDupsAgainstIndex(newSigs: DataFrame, baseTable: String,
+                                      estThreshold: Double = 0.5,
+                                      numHashes: Int = 128, bands: Int = 32,
+                                      idCol: String = "doc_id",
+                                      maxBucketSize: Option[Int] = None,
+                                      includeNewPairs: Boolean = true): DataFrame =
+    pairsAgainstIndex(minhashFamily(numHashes, bands, idCol, estThreshold),
+      newSigs, baseTable, maxBucketSize, includeNewPairs)
+
   /**
-   * [[incrementalNearDupsFromSigs]] against a PERSISTED [[writeBandedIndex]]
-   * index — identical output contract (new×corpus plus new×new pairs,
-   * MinHash-estimate verified), different physical plan: the corpus never
-   * re-bands and never shuffles.
+   * The against-index probe of the banded signature index: the pairs of
+   * [[pairsAgainstDelta]] with the corpus read from a PERSISTED
+   * [[writeBandedSigIndex]] index — the corpus never re-bands and never
+   * shuffles.
    *
    * Plan shape (the part a 1000-executor cluster cares about):
    *   - new×corpus candidates: batch band rows ⋈ `<base>_bands` on the
@@ -659,32 +712,28 @@ object Dedup {
    *     co-located on the index side; only the batch-sized candidate frame
    *     shuffles;
    *   - new×new pairs and all new-side signature joins run on the
-   *     batch-sized frames.
+   *     batch-sized frames, broadcast.
    *
    * `maxBucketSize` is the same skew guard as every other candidate path
-   * (a degenerate band bucket in the index — a shared-vocabulary slice —
-   * makes the `bb` join quadratic, and AQE skew-join measurably never
-   * engages for these joins): buckets whose FULL post-batch population
-   * exceeds the cap are dropped from the new side before the candidate
-   * join. Sizing costs one aggregate over the index rows in buckets the
-   * batch touches — the index is semi-joined down to the batch's bucket
-   * set first (batch-sized, broadcast), so the index side still never
-   * shuffles and the sizing pass is O(batch-touched buckets), not
-   * O(index).
+   * (a degenerate band bucket in the index makes the `bb` join quadratic,
+   * and AQE skew-join measurably never engages for these joins): buckets
+   * whose FULL post-batch population exceeds the cap are dropped from the
+   * new side before the candidate join. Sizing costs one aggregate over
+   * the index rows in buckets the batch touches — the index is
+   * semi-joined down to the batch's bucket set first (batch-sized,
+   * broadcast), so the index side still never shuffles. Dropping a bucket
+   * trades recall only; for hyperplane signatures it also gives up the
+   * pigeonhole exactness.
    */
-  def incrementalNearDupsAgainstIndex(newSigs: DataFrame, baseTable: String,
-                                      estThreshold: Double = 0.5,
-                                      numHashes: Int = 128, bands: Int = 32,
-                                      idCol: String = "doc_id",
-                                      maxBucketSize: Option[Int] = None,
-                                      includeNewPairs: Boolean = true): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
+  private[graft] def pairsAgainstIndex(family: SigFamily, newSigs: DataFrame,
+                                       baseTable: String,
+                                       maxBucketSize: Option[Int],
+                                       includeNewPairs: Boolean): DataFrame = {
+    val id = col(family.idCol)
     val spark = newSigs.sparkSession
-    val minMatches = math.ceil(estThreshold * numHashes).toInt
     val idxBands = spark.table(baseTable + "_bands")
     val idxSigs = spark.table(baseTable + "_sigs")
-    val allNewBands = bandBuckets(newSigs, bands, numHashes / bands, idCol)
-      .withColumn("bb", fusedBucket)
+    val allNewBands = family.fusedBandRows(newSigs)
     val newBands = maxBucketSize match {
       case None => allNewBands
       case Some(c) =>
@@ -697,8 +746,7 @@ object Dedup {
         // a != b shield protects.
         val touched = allNewBands.select("bb").distinct()
         val idxSizes = idxBands.join(broadcast(touched), Seq("bb"), "left_semi")
-          .join(broadcast(newSigs.select(col(idCol))), Seq(idCol),
-            "left_anti")
+          .join(broadcast(newSigs.select(id)), Seq(family.idCol), "left_anti")
           .groupBy("bb").agg(count(lit(1)).as("__ni"))
         val newSizes = allNewBands.groupBy("bb").agg(count(lit(1)).as("__nn"))
         val kept = newSizes.join(idxSizes, Seq("bb"), "left_outer")
@@ -706,47 +754,38 @@ object Dedup {
           .select("bb")
         allNewBands.join(broadcast(kept), Seq("bb"), "left_semi")
     }
-    val estOk = expr(
-      "aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1, 0)), 0, " +
-        s"(acc, v) -> acc + v) >= $minMatches")
-    // new × corpus: a is always the batch side, b the index side — the
-    // disjoint-ids contract means no least/greatest reshuffle is needed
-    // until the final ordering projection. The a != b guard is the replay
-    // shield for the streaming tiers: a micro-batch replayed AFTER its
-    // docs were folded into the bucketed bulk meets its own copies here,
-    // and a self-pair would read as a rejection of the doc by itself.
-    val candCorpus = newBands.select(col(idCol).as("a"), col("bb"))
-      .join(idxBands.select(col(idCol).as("b"), col("bb")), "bb")
-      .filter(col("a") =!= col("b"))
-      .select("a", "b").distinct()
-    val vCorpus = candCorpus
-      .join(broadcast(newSigs.select(col(idCol).as("a"), col("sig").as("sa"))),
-        "a")
-      .join(idxSigs.select(col(idCol).as("b"), col("sig").as("sb")), "b")
-      .filter(estOk)
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"))
-    // replay shield part 2: when batch and index OVERLAP (the replayed-
-    // after-fold case the a != b guard targets), a pair with BOTH members
-    // in both tiers survives candCorpus in both orientations and collapses
-    // to duplicate rows after least/greatest — and can ALSO re-emit from
-    // the new x new branch. The final distinct makes the contract
-    // self-contained (batch-sized frame, callers need no extra dedup).
-    if (!includeNewPairs) vCorpus.distinct()
-    else {
-      val candNew = newBands.select(col(idCol).as("a"), col("bb"))
-        .join(newBands.select(col(idCol).as("b"), col("bb")), "bb")
-        .filter(col("a") < col("b"))
+    // a is always the batch side
+    def candidates(other: DataFrame, keep: Column): DataFrame =
+      newBands.select(id.as("a"), col("bb"))
+        .join(other.select(id.as("b"), col("bb")), "bb")
+        .filter(keep)
         .select("a", "b").distinct()
-      val vNew = candNew
-        .join(broadcast(newSigs.select(col(idCol).as("a"), col("sig").as("sa"))),
-          "a")
-        .join(broadcast(newSigs.select(col(idCol).as("b"), col("sig").as("sb"))),
-          "b")
-        .filter(estOk)
-        .select(col("a").as("doc_a"), col("b").as("doc_b"))
-      vCorpus.union(vNew).distinct()
-    }
+    def newSide(i: String, s: String): DataFrame =
+      broadcast(newSigs.select(id.as(i), col("sig").as(s)))
+    def verified(cand: DataFrame, bSigs: DataFrame): DataFrame =
+      cand.join(newSide("a", "sa"), "a").join(bSigs, "b")
+        .filter(family.matches)
+    val (pa, pb) = family.pairCols
+    // new × corpus: the disjoint-ids contract means no least/greatest
+    // reshuffle is needed until the final ordering projection. The a != b
+    // guard is the replay shield for the streaming tiers: a micro-batch
+    // replayed AFTER its rows were folded into the bucketed bulk meets
+    // its own copies here, and a self-pair would read as a rejection of
+    // the row by itself.
+    val vCorpus = verified(candidates(idxBands, col("a") =!= col("b")),
+      idxSigs.select(id.as("b"), col("sig").as("sb")))
+      .select(least(col("a"), col("b")).as(pa),
+        greatest(col("a"), col("b")).as(pb))
+    // replay shield part 2: when batch and index OVERLAP, a pair with BOTH
+    // members in both tiers survives the new × corpus candidates in both
+    // orientations and collapses to duplicate rows after least/greatest —
+    // and can ALSO re-emit from the new × new branch. The final distinct
+    // makes the contract self-contained (batch-sized frame, callers need
+    // no extra dedup).
+    if (!includeNewPairs) vCorpus.distinct()
+    else vCorpus.union(
+      verified(candidates(newBands, col("a") < col("b")), newSide("b", "sb"))
+        .select(col("a").as(pa), col("b").as(pb))).distinct()
   }
 
   /**
@@ -1803,61 +1842,49 @@ object Dedup {
       embeddingSignatures(newEmb, totalPlanes, dim, idCol, vecCol),
       corpusSigs, maxHamming, numBands, totalPlanes, idCol, maxBucketSize)
 
-  /** (id, band, bucket) rows of a packed-signature table: `numBands`
-   * bit slices per signature. Shared by the in-memory, streaming, and
-   * bucketed-table incremental embedding paths. */
-  private def embeddingBandRows(sigs: DataFrame, numBands: Int,
-                                totalPlanes: Int, idCol: String): DataFrame = {
+  /** Hyperplane signatures ([[embeddingSignatures]]): `numBands` bit
+   * slices of `totalPlanes / numBands` bits each; a pair matches when the
+   * signature hamming distance is at most `maxHamming`. Banding is
+   * pigeonhole-exact only while `maxHamming < numBands`, so that is
+   * required. */
+  private[graft] def hyperplaneFamily(numBands: Int, totalPlanes: Int,
+                                      idCol: String,
+                                      maxHamming: Int): SigFamily = {
+    require(totalPlanes % numBands == 0,
+      "totalPlanes must divide into numBands")
+    require(maxHamming < numBands,
+      s"pigeonhole exactness needs maxHamming < numBands " +
+      s"(got H=$maxHamming, bands=$numBands)")
     val r = totalPlanes / numBands
     val mask = (1L << r) - 1
-    sigs.select(col(idCol), explode(array((0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"CAST(shiftright(sig, ${b * r}) & $mask AS INT)").as("bucket"))
-    }: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
+    SigFamily(idCol,
+      _.select(col(idCol), explode(array((0 until numBands).map { b =>
+        struct(lit(b).as("band"),
+          expr(s"CAST(shiftright(sig, ${b * r}) & $mask AS INT)").as("bucket"))
+      }: _*)).as("bb"))
+        .select(col(idCol), col("bb.band").as("band"),
+          col("bb.bucket").as("bucket")),
+      expr(s"bit_count(sa ^ sb) <= $maxHamming"),
+      ("vec_a", "vec_b"))
   }
 
-  /**
-   * Persist a hyperplane-signature index as the CO-LOCATED two-table
-   * layout — the embedding twin of [[writeBandedIndex]]:
-   * `<base>_bands` (idCol, band, bucket, bb) bucketed by the fused
-   * band-bucket key, `<base>_sigs` (idCol, sig) bucketed by id. Future
-   * batches join against both with NO Exchange on the index side
-   * ([[incrementalEmbeddingNearDupsAgainstIndex]]); the bucketing
-   * shuffle is paid once per corpus, not once per batch. Rewrites go
-   * through the staged two-table swap — same crash protocol as
-   * [[writeBandedIndex]].
-   */
+  /** Persist a hyperplane-signature index through
+   * [[writeBandedSigIndex]]; [[incrementalEmbeddingNearDupsAgainstIndex]]
+   * probes it. */
   def writeEmbeddingBandedIndex(sigs: DataFrame, baseTable: String,
                                 numBands: Int = 21, totalPlanes: Int = 63,
                                 numBuckets: Int = 32,
-                                idCol: String = "vec_id"): Unit = {
-    require(totalPlanes % numBands == 0,
-      "totalPlanes must divide into numBands")
-    val banded = embeddingBandRows(sigs, numBands, totalPlanes, idCol)
-      .withColumn("bb", fusedBucket)
-    graft.tables.Tables.stageBucketedSwap(banded, baseTable + "_bands",
-      "bb", numBuckets)
-    graft.tables.Tables.stageBucketedSwap(
-      sigs.select(col(idCol), col("sig")), baseTable + "_sigs", idCol,
-      numBuckets)
-    graft.tables.Tables.commitSwaps(sigs.sparkSession,
-      Seq(baseTable + "_bands", baseTable + "_sigs"))
-  }
+                                idCol: String = "vec_id"): Unit =
+    // the write only bands; H = 0 passes the pigeonhole check at any
+    // band count
+    writeBandedSigIndex(hyperplaneFamily(numBands, totalPlanes, idCol, 0),
+      sigs, baseTable, numBuckets)
 
-  /**
-   * [[incrementalEmbeddingNearDupsFromSigs]] against a PERSISTED
-   * [[writeEmbeddingBandedIndex]] index — identical output contract
-   * (new x corpus plus new x new pairs, exact popcount verify,
-   * pigeonhole-exact banding), different physical plan: the corpus
-   * never re-bands and never shuffles. Plan shape mirrors
-   * [[incrementalNearDupsAgainstIndex]]: batch band rows join
-   * `<base>_bands` AT ITS BUCKETING on the fused `bb` key, candidate
-   * verify joins `<base>_sigs` co-located on the id; only batch-sized
-   * frames shuffle. The a != b guard shields a batch replayed after
-   * its vectors were folded into the index.
-   */
+  /** [[incrementalEmbeddingNearDupsFromSigs]] against a PERSISTED
+   * [[writeEmbeddingBandedIndex]] index, through [[pairsAgainstIndex]]:
+   * the same output contract (exact popcount verify, pigeonhole-exact
+   * banding when uncapped), but the corpus never re-bands and never
+   * shuffles. */
   def incrementalEmbeddingNearDupsAgainstIndex(newSigs: DataFrame,
                                                baseTable: String,
                                                maxHamming: Int = 20,
@@ -1865,69 +1892,9 @@ object Dedup {
                                                totalPlanes: Int = 63,
                                                idCol: String = "vec_id",
                                                includeNewPairs: Boolean = true,
-                                               maxBucketSize: Option[Int] = None): DataFrame = {
-    require(totalPlanes % numBands == 0,
-      "totalPlanes must divide into numBands")
-    require(maxHamming < numBands,
-      s"pigeonhole exactness needs maxHamming < numBands " +
-      s"(got H=$maxHamming, bands=$numBands)")
-    val spark = newSigs.sparkSession
-    val idxBands = spark.table(baseTable + "_bands")
-    val idxSigs = spark.table(baseTable + "_sigs")
-    val allNewBands = embeddingBandRows(newSigs, numBands, totalPlanes, idCol)
-      .withColumn("bb", fusedBucket)
-    // same skew guard as the token-space AgainstIndex: cap a bucket's
-    // FULL post-batch population, sized only over buckets the batch
-    // touches (batch-sized broadcast semi-join — the index side still
-    // never shuffles). Dropping a bucket trades recall only, and BREAKS
-    // the pigeonhole-exactness contract — reach for it when an
-    // incoherent corpus floods the 3-bit bands, not by default.
-    val newBands = maxBucketSize match {
-      case None => allNewBands
-      case Some(c) =>
-        // replay-overlap ids excluded from the index count, as in
-        // incrementalNearDupsAgainstIndex
-        val touched = allNewBands.select("bb").distinct()
-        val idxSizes = idxBands.join(broadcast(touched), Seq("bb"), "left_semi")
-          .join(broadcast(newSigs.select(col(idCol))), Seq(idCol),
-            "left_anti")
-          .groupBy("bb").agg(count(lit(1)).as("__ni"))
-        val newSizes = allNewBands.groupBy("bb").agg(count(lit(1)).as("__nn"))
-        val kept = newSizes.join(idxSizes, Seq("bb"), "left_outer")
-          .filter(col("__nn") + coalesce(col("__ni"), lit(0L)) <= c)
-          .select("bb")
-        allNewBands.join(broadcast(kept), Seq("bb"), "left_semi")
-    }
-    val verifyOk = expr(s"bit_count(sa ^ sb) <= $maxHamming")
-    val candCorpus = newBands.select(col(idCol).as("a"), col("bb"))
-      .join(idxBands.select(col(idCol).as("b"), col("bb")), "bb")
-      .filter(col("a") =!= col("b"))
-      .select("a", "b").distinct()
-    val vCorpus = candCorpus
-      .join(broadcast(newSigs.select(col(idCol).as("a"), col("sig").as("sa"))),
-        "a")
-      .join(idxSigs.select(col(idCol).as("b"), col("sig").as("sb")), "b")
-      .filter(verifyOk)
-      .select(least(col("a"), col("b")).as("vec_a"),
-        greatest(col("a"), col("b")).as("vec_b"))
-    // final distinct = self-contained replay shield for overlapping
-    // batch/index ids (see incrementalNearDupsAgainstIndex)
-    if (!includeNewPairs) vCorpus.distinct()
-    else {
-      val candNew = newBands.select(col(idCol).as("a"), col("bb"))
-        .join(newBands.select(col(idCol).as("b"), col("bb")), "bb")
-        .filter(col("a") < col("b"))
-        .select("a", "b").distinct()
-      val vNew = candNew
-        .join(broadcast(newSigs.select(col(idCol).as("a"), col("sig").as("sa"))),
-          "a")
-        .join(broadcast(newSigs.select(col(idCol).as("b"), col("sig").as("sb"))),
-          "b")
-        .filter(verifyOk)
-        .select(col("a").as("vec_a"), col("b").as("vec_b"))
-      vCorpus.union(vNew).distinct()
-    }
-  }
+                                               maxBucketSize: Option[Int] = None): DataFrame =
+    pairsAgainstIndex(hyperplaneFamily(numBands, totalPlanes, idCol,
+      maxHamming), newSigs, baseTable, maxBucketSize, includeNewPairs)
 
   /** [[incrementalEmbeddingNearDups]] with the batch already signed —
    * the streaming shape, where the sink signs once, persists, and reads
@@ -1939,36 +1906,9 @@ object Dedup {
                                            totalPlanes: Int = 63,
                                            idCol: String = "vec_id",
                                            maxBucketSize: Option[Int] = None): DataFrame = {
-    require(totalPlanes % numBands == 0,
-      "totalPlanes must divide into numBands")
-    require(maxHamming < numBands,
-      s"pigeonhole exactness needs maxHamming < numBands " +
-      s"(got H=$maxHamming, bands=$numBands)")
-    val nb = embeddingBandRows(newSigs, numBands, totalPlanes, idCol)
-    val allBands =
-      embeddingBandRows(corpusSigs, numBands, totalPlanes, idCol).union(nb)
-    val newKept = maxBucketSize match {
-      case None => nb
-      case Some(c) =>
-        val kept = allBands.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__bs")).filter(col("__bs") <= c)
-          .select("band", "bucket")
-        nb.join(kept, Seq("band", "bucket"), "left_semi")
-    }
-    val cand = newKept.select(col(idCol).as("a"), col("band"), col("bucket"))
-      .join(allBands.select(col(idCol).as("b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val allSigs = corpusSigs.select(col(idCol), col("sig"))
-      .union(newSigs.select(col(idCol), col("sig")))
-    cand
-      .join(allSigs.select(col(idCol).as("a"), col("sig").as("sa")), "a")
-      .join(allSigs.select(col(idCol).as("b"), col("sig").as("sb")), "b")
-      .filter(expr(s"bit_count(sa ^ sb) <= $maxHamming"))
-      .select(col("a").as("vec_a"), col("b").as("vec_b"))
+    val family = hyperplaneFamily(numBands, totalPlanes, idCol, maxHamming)
+    pairsAgainstDelta(family, newSigs, family.bandRows(newSigs), corpusSigs,
+      family.bandRows(corpusSigs), maxBucketSize)
   }
 
   def embeddingNearDupPairs(emb: DataFrame, threshold: Double = 0.4,

@@ -1466,9 +1466,7 @@ object Similarity {
       if (vs.isEmpty) None
       else Some(vs.size.toDouble +: deciles(nearestCentroidCos(vs, cents)))
     }
-    val cells = withIvfCell(corpus, cents, vecCol)
-      .select(col(idCol), col(vecCol).as("vec"),
-        VectorFns.norm(vecCol).as("nrm"), col("__cell").as("cell"))
+    val cells = ivfDeltaAssign(corpus, cents, idCol, vecCol)
     import spark.implicits._
     // generation marker: every rebuild bumps `gen`, so ingest sinks and
     // delta folds that captured the PREVIOUS routing table can detect
@@ -1992,7 +1990,6 @@ object Similarity {
                    maxShortlist: Int = 256,
                    marginZ: Double = 1.645): Unit = {
     val spark = corpus.sparkSession
-    val dsub = dim / m
     val cents = trainIvfCentroids(corpus, nlist, dim, iters = 0, idCol,
       vecCol)
     val books =
@@ -2021,18 +2018,8 @@ object Similarity {
         if (vs.isEmpty) None
         else Some((vs.size, deciles(nearestCentroidCos(vs, cents))))
       }
-    val assigned = withIvfCell(corpus, cents, vecCol)
-    val coded0 =
-      if (residual)
-        withResidualCorr(
-          withPqCodes(assigned.withColumn("__rawcents", typedLit(cents))
-              .withColumn("__res", expr(residualExpr(vecCol))),
-            books, dsub, "__res"),
-          books, dsub)
-      else withPqCodes(assigned, books, dsub, vecCol)
-    val coded = coded0.select(col(idCol) +: col("__cell").as("cell") +:
-      (0 until m).map(j => col(s"__code$j")) ++:
-      (if (residual) Seq(col("__corr")) else Nil): _*)
+    val coded = pqDeltaAssign(corpus, cents, books, dim, idCol, vecCol,
+      residual)
     val gen =
       if (spark.catalog.tableExists(baseTable + "_pqmeta"))
         pqGeneration(spark, baseTable) + 1
@@ -2684,10 +2671,6 @@ object Similarity {
     // tight layout (0.9-threshold: 7 x 2^-9 = 0.014) has output-scale
     // candidates where the extra exchanges are a net loss — measured
     // both ways in round 21.
-    // math.pow, not (1L << numPlanes): the require() above permits
-    // numPlanes up to 64 (at numTables = 1), where the long shift wraps
-    // (<< 64 = 1) or goes negative (<< 63) and would misclassify the
-    // sparsest possible layout as dense (ADVICE r21)
     val dense = numTables.toDouble / math.pow(2.0, numPlanes) >= 0.5
     val a0 = base.select(col("tbl"), col("bucket"), col(idCol).as("a"))
     val a = if (dense) Par.widen(a0, col("tbl"), col("bucket")) else a0

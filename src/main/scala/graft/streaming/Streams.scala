@@ -363,22 +363,24 @@ object Streams {
   }
 
   /**
-   * Near-dup pairs of the current batch against BOTH index tiers — the
-   * one candidate/verify plan shared by [[nearDupSink]], [[intakeSink]]
-   * and [[clustersSink]]:
-   *   - DELTA tier: the `batch=<id>` parquet trees (batches since the
-   *     last compaction; the whole index when never compacted) via
-   *     [[Dedup.incrementalNearDupsPrebanded]] — O(batch x delta), and
-   *     delta stays micro-batch-sized once compaction runs on cadence;
+   * Near-dup pairs of the current batch against BOTH tiers of a banded
+   * signature index — the one candidate/verify plan of [[nearDupSink]],
+   * [[intakeSink]], [[clustersSink]] and [[embeddingNearDupSink]], for
+   * the signature `family`:
+   *   - DELTA tier: `corpusSigs`/`corpusBands`, the `batch=<id>` parquet
+   *     trees but the batch's own ([[otherBatches]]; the whole index when
+   *     never compacted) via [[Dedup.pairsAgainstDelta]] — O(batch x
+   *     delta), and delta stays micro-batch-sized once compaction runs on
+   *     cadence. The MinHash sinks pass their persisted bands tree; the
+   *     embedding sink bands its signature delta;
    *   - BULK tier (when `bucketedBase` is set and the tables exist): the
-   *     [[Dedup.writeBandedIndex]] managed tables via
-   *     [[Dedup.incrementalNearDupsAgainstIndex]] — the corpus-scale
-   *     side joins AT ITS BUCKETING, zero Exchange on the index side
-   *     (plan-asserted in StreamsSpec), with new x new pairs left to the
-   *     delta call so the union never double-reports them.
-   * The tiers hold disjoint documents by the compaction protocol; the
-   * final distinct covers the crash window where a fold wrote the bulk
-   * tables but had not yet pruned the corresponding delta partitions
+   *     bucketed `_bands`/`_sigs` tables of a fold via
+   *     [[Dedup.pairsAgainstIndex]] — the corpus-scale side joins AT ITS
+   *     BUCKETING, zero Exchange on the index side (plan-asserted in
+   *     StreamsSpec), with new x new pairs left to the delta call.
+   * The tiers hold disjoint rows by the compaction protocol; the final
+   * distinct covers the crash window where a fold wrote the bulk tables
+   * but had not yet pruned the corresponding delta partitions
    * (batch-sized frame, so the insurance is cheap).
    *
    * `maxBucketSize` is evaluated per tier (each call sizes only its own
@@ -386,44 +388,32 @@ object Streams {
    * tripping it until compaction unifies it — recall-only slack in the
    * window between folds, same contract direction as every other cap.
    */
-  private[streaming] def tieredPairs(s: SparkSession, indexPath: String,
-                                     bandsPath: String, newSigs: DataFrame,
-                                     newBands: DataFrame, batchId: Long,
+  private[streaming] def tieredPairs(s: SparkSession, family: Dedup.SigFamily,
+                                     newSigs: DataFrame, newBands: DataFrame,
+                                     corpusSigs: DataFrame,
+                                     corpusBands: DataFrame,
                                      bucketedBase: Option[String],
-                                     estThreshold: Double, numHashes: Int,
-                                     bands: Int, idCol: String,
-                                     maxBucketSize: Option[Int]): DataFrame =
-    withBulkTier(s, bucketedBase,
-      Dedup.incrementalNearDupsPrebanded(newSigs, newBands,
-        otherBatches(s, indexPath, batchId),
-        otherBatches(s, bandsPath, batchId), estThreshold, numHashes, idCol,
-        maxBucketSize))(base =>
-      Dedup.incrementalNearDupsAgainstIndex(newSigs, base, estThreshold,
-        numHashes, bands, idCol, maxBucketSize, includeNewPairs = false))
-
-  /** The delta tier a micro-batch pairs against: every `batch=<id>`
-   * partition under `path` but the batch's own, so a replayed batch
-   * never pairs against its earlier write. */
-  private def otherBatches(s: SparkSession, path: String,
-                           batchId: Long): DataFrame =
-    s.read.option("basePath", path).parquet(path)
-      .filter(col("batch") =!= batchId).drop("batch")
-
-  /** The tier join of the signature indexes ([[tieredPairs]],
-   * [[embeddingNearDupSink]]): `deltaPairs`, plus the pairs `bulkPairs`
-   * finds in the bulk tables of `bucketedBase` once a fold has written
-   * them, distinct over the union (the fold's crash window). */
-  private def withBulkTier(s: SparkSession, bucketedBase: Option[String],
-                           deltaPairs: DataFrame)
-                          (bulkPairs: String => DataFrame): DataFrame =
+                                     maxBucketSize: Option[Int]): DataFrame = {
+    val deltaPairs = Dedup.pairsAgainstDelta(family, newSigs, newBands,
+      corpusSigs, corpusBands, maxBucketSize)
     bucketedBase match {
       case Some(base) =>
         requireBulkPair(s, base)
         if (s.catalog.tableExists(base + "_bands"))
-          deltaPairs.union(bulkPairs(base)).distinct()
+          deltaPairs.union(Dedup.pairsAgainstIndex(family, newSigs, base,
+            maxBucketSize, includeNewPairs = false)).distinct()
         else deltaPairs
       case None => deltaPairs
     }
+  }
+
+  /** The delta tier a micro-batch pairs against: every `batch=<id>`
+   * partition under `path` but the batch's own, so a replayed batch
+   * never pairs against its earlier write. */
+  private[streaming] def otherBatches(s: SparkSession, path: String,
+                                      batchId: Long): DataFrame =
+    s.read.option("basePath", path).parquet(path)
+      .filter(col("batch") =!= batchId).drop("batch")
 
   /** One micro-batch of the MinHash index protocol that [[nearDupSink]],
    * [[clustersSink]] and [[intakeSink]] share: check the index format,
@@ -452,10 +442,11 @@ object Streams {
     Dedup.minhashBandRows(newSigs, numHashes, bands, idCol)
       .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
     reconcileBands(s, indexPath, bandsPath, numHashes, bands, idCol, batchId)
-    val newBands = s.read.parquet(s"$bandsPath/batch=$batchId")
-    (newSigs, tieredPairs(s, indexPath, bandsPath, newSigs, newBands,
-      batchId, bucketedBase, estThreshold, numHashes, bands, idCol,
-      maxBucketSize))
+    val family = Dedup.minhashFamily(numHashes, bands, idCol, estThreshold)
+    (newSigs, tieredPairs(s, family, newSigs,
+      s.read.parquet(s"$bandsPath/batch=$batchId"),
+      otherBatches(s, indexPath, batchId), otherBatches(s, bandsPath, batchId),
+      bucketedBase, maxBucketSize))
   }
 
   /** The bulk tier is a two-table set (`_bands`/`_sigs`) replaced via the
@@ -534,7 +525,8 @@ object Streams {
    * index-partition protocol), and the batch's near-dup pairs against
    * the accumulated signature index (plus itself) are computed by
    * signature hamming — corpus vectors are never re-read, never even
-   * stored by the sink. Banding inside the pair step is
+   * stored by the sink. The batch pairs through the MinHash sinks'
+   * [[tieredPairs]] with the hyperplane family; uncapped, its banding is
    * pigeonhole-exact against the hamming contract
    * ([[Dedup.incrementalEmbeddingNearDupsFromSigs]]).
    *
@@ -573,13 +565,11 @@ object Streams {
             .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
           // read back: one signing pass per vector, ever
           val newSigs = s.read.parquet(s"$indexPath/batch=$batchId")
-          withBulkTier(s, bucketedBase,
-            Dedup.incrementalEmbeddingNearDupsFromSigs(newSigs,
-              otherBatches(s, indexPath, batchId), maxHamming, numBands,
-              totalPlanes, idCol, maxBucketSize))(base =>
-            Dedup.incrementalEmbeddingNearDupsAgainstIndex(newSigs, base,
-              maxHamming, numBands, totalPlanes, idCol,
-              includeNewPairs = false))
+          val corpusSigs = otherBatches(s, indexPath, batchId)
+          val family =
+            Dedup.hyperplaneFamily(numBands, totalPlanes, idCol, maxHamming)
+          tieredPairs(s, family, newSigs, family.bandRows(newSigs), corpusSigs,
+            family.bandRows(corpusSigs), bucketedBase, maxBucketSize)
             .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
         }
       }

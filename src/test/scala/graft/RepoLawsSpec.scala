@@ -48,10 +48,20 @@ import org.scalatest.funsuite.AnyFunSuite
  * The steps of that protocol live in private helpers of `Streams`: the
  * `_routing_gen.` generation guard (`requireDeltaGeneration`), the
  * newest-batch precedence fold (`foldDelta`), the `__fold_tmp` stage
- * (`foldBulkTier`), the bulk-tier join (`withBulkTier`) and the MinHash
+ * (`foldBulkTier`), the bulk-tier join (`tieredPairs`) and the MinHash
  * landing (`minhashBatchPairs`). Each may appear at most once in
  * `src/main`: a second copy is a twin that drifts (the IVF and PQ copies
  * of the guard had already grown different refusal texts).
+ *
+ * Law 6: **a banded signature index is kept in one place**. MinHash and
+ * hyperplane signatures share one index: a `Dedup.SigFamily` says how a
+ * signature bands and when two match, and the rest is written once — the
+ * fused `bb` key (`SigFamily.fusedBandRows`), the `_bands` stage write
+ * (`Dedup.writeBandedSigIndex`) and the one call `Streams` makes into an
+ * against-index probe (`Streams.tieredPairs`). Each may appear at most
+ * once in `src/main`, comment lines excluded: the two copies this law
+ * replaced had drifted (the embedding sink's bulk tier dropped
+ * `maxBucketSize`).
  */
 class RepoLawsSpec extends AnyFunSuite {
 
@@ -146,30 +156,64 @@ class RepoLawsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
-  test("a streaming index's delta tier is kept in one place") {
+  /** A non-comment `src/main` line: `file:line: text`, its file name,
+   * its text and the text of the line after it. */
+  private case class CodeLine(where: String, file: String, text: String,
+                              next: String)
+
+  private def codeLines: Seq[CodeLine] = {
     val comment = "^\\s*(//|/?\\*)".r
-    // (step, its helper in Streams, a line that writes the step)
-    val steps: Seq[(String, String, String => Boolean)] = Seq(
-      ("the _routing_gen. guard match", "requireDeltaGeneration",
-        l => l.contains("readRoutingGenMarker(") && l.contains(" match")),
-      ("the newest-batch precedence fold", "foldDelta",
-        _.contains("col(\"__batch\").desc")),
-      ("the __fold_tmp stage", "foldBulkTier", _.contains("__fold_tmp")),
-      ("the requireBulkPair( tier join", "withBulkTier",
-        l => l.contains("requireBulkPair(") &&
-          !l.contains("def requireBulkPair(")),
-      ("the MinHash landing", "minhashBatchPairs",
-        _.contains("Dedup.minhashBandRows(newSigs")))
-    val code = for {
+    for {
       p <- mainSources
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      lines = Files.readAllLines(p).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
       if comment.findPrefixOf(line).isEmpty
-    } yield (s"$p:${i + 1}: ${line.trim}", line)
-    val copied = steps.flatMap { case (step, helper, hit) =>
-      val at = code.collect { case (where, line) if hit(line) => where }
+    } yield CodeLine(s"$p:${i + 1}: ${line.trim}", p.getFileName.toString,
+      line, lines.lift(i + 1).getOrElse(""))
+  }
+
+  /** The (step, its one helper, a line that writes the step) entries
+   * written more than once, each with every site. */
+  private def copiedSteps(steps: Seq[(String, String, CodeLine => Boolean)])
+      : Seq[String] = {
+    val code = codeLines
+    steps.flatMap { case (step, helper, hit) =>
+      val at = code.filter(hit).map(_.where)
       if (at.size <= 1) Nil
-      else s"$step is written ${at.size} times — call Streams.$helper:" +: at
+      else s"$step is written ${at.size} times — call $helper:" +: at
     }
+  }
+
+  test("a streaming index's delta tier is kept in one place") {
+    val copied = copiedSteps(Seq(
+      ("the _routing_gen. guard match", "Streams.requireDeltaGeneration",
+        l => l.text.contains("readRoutingGenMarker(") &&
+          l.text.contains(" match")),
+      ("the newest-batch precedence fold", "Streams.foldDelta",
+        _.text.contains("col(\"__batch\").desc")),
+      ("the __fold_tmp stage", "Streams.foldBulkTier",
+        _.text.contains("__fold_tmp")),
+      ("the requireBulkPair( tier join", "Streams.tieredPairs",
+        l => l.text.contains("requireBulkPair(") &&
+          !l.text.contains("def requireBulkPair(")),
+      ("the MinHash landing", "Streams.minhashBatchPairs",
+        _.text.contains("Dedup.minhashBandRows(newSigs"))))
+    assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
+  }
+
+  test("a banded signature index is kept in one place") {
+    val probeCall = """Dedup\.\w*AgainstIndex\(""".r
+    val copied = copiedSteps(Seq(
+      ("the fused bb key", "SigFamily.fusedBandRows",
+        l => l.text.contains("fusedBucket") &&
+          !l.text.contains("def fusedBucket")),
+      ("a stageBucketedSwap( onto baseTable + \"_bands\"",
+        "Dedup.writeBandedSigIndex",
+        l => l.text.contains("stageBucketedSwap(") &&
+          (l.text + l.next).contains("baseTable + \"_bands\"")),
+      ("a Streams call into an against-index probe", "Streams.tieredPairs",
+        l => l.file == "Streams.scala" &&
+          probeCall.findFirstIn(l.text).isDefined)))
     assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
   }
 

@@ -458,6 +458,25 @@ class DedupSpec extends SparkSpec {
       graft.tables.Tables.dropTable(spark, "nd_cap_bands")
       graft.tables.Tables.dropTable(spark, "nd_cap_sigs")
     }
+    // the hyperplane family, same shape: 9 indexed clone vectors + 1
+    val ones = Array.fill(64)(1.0f)
+    val esigs = Dedup.embeddingSignatures(
+      (1L to 9L).map(i => (i, ones)).toDF("vec_id", "embedding"))
+    val ebatch = Dedup.embeddingSignatures(
+      Seq((10L, ones)).toDF("vec_id", "embedding"))
+    graft.tables.Tables.dropTable(spark, "emb_cap_bands")
+    graft.tables.Tables.dropTable(spark, "emb_cap_sigs")
+    Dedup.writeEmbeddingBandedIndex(esigs, "emb_cap", numBuckets = 4)
+    try {
+      assert(rows(Dedup.incrementalEmbeddingNearDupsAgainstIndex(ebatch,
+        "emb_cap", maxBucketSize = Some(9))).isEmpty)
+      val kept = rows(Dedup.incrementalEmbeddingNearDupsAgainstIndex(ebatch,
+        "emb_cap", maxBucketSize = Some(10)).orderBy("vec_a"))
+      assert(kept == (1L to 9L).map(i => Seq(i, 10L)))
+    } finally {
+      graft.tables.Tables.dropTable(spark, "emb_cap_bands")
+      graft.tables.Tables.dropTable(spark, "emb_cap_sigs")
+    }
   }
 
   test("incrementalNearDups: bucket cap sees the post-batch bucket size") {
@@ -473,6 +492,17 @@ class DedupSpec extends SparkSpec {
     val kept = rows(Dedup.incrementalNearDups(batch, sigs, textCol = "body",
       maxBucketSize = Some(10)).orderBy("doc_a"))
     assert(kept == (1L to 9L).map(i => Seq(i, 10L)))
+    // the hyperplane family, same shape: 9 corpus clone vectors + 1
+    val ones = Array.fill(64)(1.0f)
+    val esigs = Dedup.embeddingSignatures(
+      (1L to 9L).map(i => (i, ones)).toDF("vec_id", "embedding"))
+    val ebatch = Dedup.embeddingSignatures(
+      Seq((10L, ones)).toDF("vec_id", "embedding"))
+    assert(rows(Dedup.incrementalEmbeddingNearDupsFromSigs(ebatch, esigs,
+      maxBucketSize = Some(9))).isEmpty)
+    val ekept = rows(Dedup.incrementalEmbeddingNearDupsFromSigs(ebatch, esigs,
+      maxBucketSize = Some(10)).orderBy("vec_a"))
+    assert(ekept == (1L to 9L).map(i => Seq(i, 10L)))
   }
 
   test("graft_del1_keys: variant-count dedup and cross-string key equality") {

@@ -588,8 +588,10 @@ class StreamsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val frame = Streams.tieredPairs(spark, idx, idx + "__bands", newSigs,
-        newBands, 1L, Some("ndbulk"), 0.5, 128, 32, "doc_id", None)
+      val frame = Streams.tieredPairs(spark,
+        graft.operators.Dedup.minhashFamily(128, 32, "doc_id"), newSigs,
+        newBands, Streams.otherBatches(spark, idx, 1L),
+        Streams.otherBatches(spark, idx + "__bands", 1L), Some("ndbulk"), None)
       assert(rows(frame.orderBy("doc_a", "doc_b")) ==
         Seq(Seq(1L, 4L), Seq(2L, 4L)))
       val plan = frame.queryExecution.executedPlan match {
@@ -1229,9 +1231,11 @@ class StreamsSpec extends SparkSpec {
     graft.operators.Dedup.minhashBandRows(sigs)
       .write.mode("overwrite").parquet(s"${idx}__bands/batch=9")
     intercept[IllegalStateException] {
-      Streams.tieredPairs(spark, idx, idx + "__bands", sigs,
-        graft.operators.Dedup.minhashBandRows(sigs), 9L, Some("ndheal"),
-        0.5, 128, 32, "doc_id", None)
+      Streams.tieredPairs(spark,
+        graft.operators.Dedup.minhashFamily(128, 32, "doc_id"), sigs,
+        graft.operators.Dedup.minhashBandRows(sigs),
+        Streams.otherBatches(spark, idx, 9L),
+        Streams.otherBatches(spark, idx + "__bands", 9L), Some("ndheal"), None)
     }
     // drop the probe partitions so the re-fold sees only real batches
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -1271,8 +1275,10 @@ class StreamsSpec extends SparkSpec {
     val newSigs = spark.read.parquet(s"$idx/batch=0")
     val newBands = graft.operators.Dedup.minhashBandRows(newSigs)
     newBands.write.mode("overwrite").parquet(s"${idx}__bands/batch=0")
-    def pairs() = Streams.tieredPairs(spark, idx, idx + "__bands", newSigs,
-      newBands, 0L, Some("ndhalf"), 0.5, 128, 32, "doc_id", None)
+    def pairs() = Streams.tieredPairs(spark,
+      graft.operators.Dedup.minhashFamily(128, 32, "doc_id"), newSigs,
+      newBands, Streams.otherBatches(spark, idx, 0L),
+      Streams.otherBatches(spark, idx + "__bands", 0L), Some("ndhalf"), None)
     Tables.dropTable(spark, "ndhalf_bands")
     Tables.dropTable(spark, "ndhalf_sigs")
     // neither table: fine — delta-only is the pre-first-fold state
@@ -1356,6 +1362,44 @@ class StreamsSpec extends SparkSpec {
     } finally q2.stop()
     Tables.dropTable(spark, "embulk_bands")
     Tables.dropTable(spark, "embulk_sigs")
+  }
+
+  test("embeddingNearDupSink tiered: maxBucketSize caps the bulk tier " +
+      "after a fold") {
+    implicit val sqlCtx = spark.sqlContext
+    val ones = (0 until 64).map(_ => 1.0f)
+    // three clones land and fold; a fourth clone then meets them in the
+    // bulk tier, where every band bucket it holds has 4 members
+    def resumedPairs(cap: Int): Seq[Seq[Any]] = {
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val idx = Files.createTempDirectory("ecapidx").toString
+      val pairs = Files.createTempDirectory("ecappairs").toString
+      val cp = Files.createTempDirectory("ecapcp").toString
+      Seq("ecap_bands", "ecap_sigs").foreach(Tables.dropTable(spark, _))
+      def start() = Streams.embeddingNearDupSink(
+        mem.toDF().toDF("vec_id", "embedding"), idx, pairs, cp,
+        maxHamming = 5, maxBucketSize = Some(cap),
+        bucketedBase = Some("ecap"))
+      val q1 = start()
+      try {
+        mem.addData((1L, ones), (2L, ones), (3L, ones))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      Streams.compactEmbeddingIndexBucketed(spark, idx, "ecap",
+        numBuckets = 4)
+      val q2 = start()
+      try {
+        mem.addData((4L, ones))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      Seq("ecap_bands", "ecap_sigs").foreach(Tables.dropTable(spark, _))
+      rows(spark.read.parquet(pairs).filter(col("vec_b") === 4L)
+        .select("vec_a", "vec_b").orderBy("vec_a"))
+    }
+    // post-batch bucket size 4: a cap of 3 drops every bucket, a cap of
+    // 4 keeps them all
+    assert(resumedPairs(3).isEmpty)
+    assert(resumedPairs(4) == (1L to 3L).map(i => Seq(i, 4L)))
   }
 
   test("tiered index crash window: docs in BOTH tiers produce no duplicate " +
